@@ -104,8 +104,6 @@ def main():
     ap.add_argument("--seed", required=True, type=int)
     ap.add_argument("--seconds", required=True, type=float)
     ap.add_argument("--trace", required=True, choices=("0", "1"))
-    ap.add_argument("--record-fingerprints", action="store_true",
-                    help="query_mix: write the output fingerprints instead of checking them")
     a = ap.parse_args()
 
     for need in ("build.sbt", os.path.join("src", "main", "scala", "graft")):
@@ -115,7 +113,6 @@ def main():
     classpath = build()
     tmp = os.path.join(WORK, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    expected = os.path.join(HERE, "expected", "query_mix_fingerprints.json")
     cmd = ["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
     cmd += [
         "-Xmx3g",
@@ -126,10 +123,10 @@ def main():
         "-cp", classpath,
         "graft.perfbench.Main",
         "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-        "--trace", a.trace, "--work", WORK, "--expected", expected,
+        "--trace", a.trace, "--work", WORK,
+        "--data", os.path.join(HERE, "data", "sf0.01"),
+        "--manifest", os.path.join(HERE, "expected", "verify_manifest_sf0.01.jsonl"),
     ]
-    if a.record_fingerprints:
-        cmd += ["--record", expected]
     try:
         code, out = run_group(cmd, RUN_TIMEOUT_S, cwd=WORK, stdout=subprocess.PIPE, text=True)
     except subprocess.TimeoutExpired:

@@ -36,6 +36,12 @@ final class CronWorkload(spark: SparkSession, seed: Long, cores: Int,
   private val serverDeltas = mutable.ArrayBuffer.empty[Map[String, Long]]
   /** PATCH sub-requests per returned row, per checked window. */
   private val subRequestsPerRow = mutable.ArrayBuffer.empty[Double]
+  /** Traced windows: peak RDD storage `runFrom` adds (bytes), persisted
+    * RDDs left once the window's frames are unpersisted, and the
+    * `PatchSink.writePatchFile` time (s) and bytes of the window's flags.
+    */
+  private val cachePeaks, leakedRdds, patchFileS, patchFileBytes =
+    mutable.ArrayBuffer.empty[Double]
 
   def describe: String =
     s"$streams streams sampled every ${rates.mkString("/")} s, $windows distinct 15-min windows " +
@@ -91,7 +97,9 @@ final class CronWorkload(spark: SparkSession, seed: Long, cores: Int,
       c.count()
       c
     }
-    val (flagged, _) = tracer.span("qc.runFrom")(QcMain.runFrom(spark, src, cfg))
+    val ((flagged, _), cachePeak) =
+      tracer.storagePeak(tracer.span("qc.runFrom")(QcMain.runFrom(spark, src, cfg)))
+    if (tracer.enabled) cachePeaks += cachePeak.toDouble
     tracer.span("patch.http") {
       PatchSink.httpBatchSink(flagged.withColumn(Obs.QcFlag, col("flag")), server.batchUrl)
     }
@@ -110,13 +118,30 @@ final class CronWorkload(spark: SparkSession, seed: Long, cores: Int,
 
   def op(i: Int, tracer: Tracer): OpSample = {
     val before = server.counters
-    val (flagged, wall, cpu) = Harness.timed(tracer.inTrace(s"window-$i")(runWindow(i, tracer)))
+    val persistedBefore = Harness.persistedRdds(spark)
+    val ((flagged, wall, cpu), sched) = tracer.counted(
+      Harness.timed(tracer.inTrace(s"window-$i")(runWindow(i, tracer))))
     val after = server.counters
     serverDeltas += after.map { case (k, v) => k -> (v - before(k)) }
     check(i, flagged)
-    flagged.unpersist()
+    if (tracer.enabled) tracer.inTrace(s"window-$i")(writePatchFile(i, flagged, tracer))
+    flagged.unpersist(blocking = true)
+    if (tracer.enabled) leakedRdds += (Harness.persistedRdds(spark) - persistedBefore).toDouble
     System.gc() // as Bench does between queries: each window starts from the same heap
-    OpSample(wall, cpu, rowsPerWindow(i % windows))
+    OpSample(wall, cpu, rowsPerWindow(i % windows), sched)
+  }
+
+  /** The `PatchSink.writePatchFile` layer: the window's flags to a file,
+    * as a `qc_historical` backfill writes them.
+    */
+  private def writePatchFile(i: Int, flagged: DataFrame, tracer: Tracer): Unit = {
+    val dir = new java.io.File(workDir, s"patch-file/window-$i")
+    val (_, s, _) = Harness.timed(tracer.span("patch.file") {
+      PatchSink.writePatchFile(flagged.withColumn(Obs.QcFlag, col("flag")), dir.getPath)
+    })
+    patchFileS += s
+    patchFileBytes += Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.isFile).map(_.length).sum.toDouble
   }
 
 
@@ -164,34 +189,16 @@ final class CronWorkload(spark: SparkSession, seed: Long, cores: Int,
       "sta.http_gets" -> perWindow("gets"),
       "sta.pages" -> perWindow("pages"),
       "sta.bytes_in_mb" -> perWindow("bytes_out", 1e6),
-      "sta.retries" -> perWindow("5xx"),
+      "sta.retries" -> perWindow("repeats"),
       "patch.http_s" -> median(tracer.durationPerTrace("patch.http")),
       "patch.http_posts" -> perWindow("posts"),
       "patch.bytes_out_mb" -> perWindow("bytes_in", 1e6))
-    val qc = tracer.inTrace("qc-profile")(Harness.qcLayers(spark, tracer, ctx.listener,
-      source(0), cfg, new java.io.File(workDir, "patch-file")))
-    val dense = tracer.inTrace("dense-profile")(denseLayers(tracer))
-    val ab = Harness.listenerAb(ctx, pairs = 1) {
-      val (f, wall, _) = Harness.timed(runWindow(1, new Tracer(false)))
-      f.unpersist()
-      server.takeServed(); server.takeBatches()
-      wall
-    }
-    sched ++ sta ++ qc ++ dense ++ Map("patch.sub_requests_per_row" -> median(subRequestsPerRow.toSeq),
-      "trace.listener_on_off_ratio" -> ab)
-  }
-
-  /** Direct calls into the `ops` window kernels on the dense history a
-    * `qc_historical` backfill loads: 3 streams at 1 Hz over 20 min, so
-    * the 10-min outlier frames hold 600 rows.
-    */
-  private def denseLayers(tracer: Tracer): Map[String, Double] = {
-    val dense = ShipTrack.generate(seed, 3, 1200, rates = Seq(1))
-    val obs = dense.toDataFrame(spark, cores)
-      .withColumn("t_us", unix_micros(col(Obs.Time))).cache()
-    obs.count()
-    try Harness.opsLayers(tracer, obs, dense.independentId, dense.dependentId)
-    finally obs.unpersist()
+    val qc = tracer.inTrace("qc-profile")(Harness.qcLayers(spark, tracer, source(0), cfg)) ++
+      Map("qc.cache_mb" -> median(cachePeaks.toSeq) / 1e6,
+        "qc.leaked_rdds" -> median(leakedRdds.toSeq),
+        "patch.file_s" -> median(patchFileS.toSeq),
+        "patch.file_mb" -> median(patchFileBytes.toSeq) / 1e6)
+    sched ++ sta ++ qc ++ Map("patch.sub_requests_per_row" -> median(subRequestsPerRow.toSeq))
   }
 
   def close(): Unit = if (server != null) server.stop()

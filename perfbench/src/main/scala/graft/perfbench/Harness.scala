@@ -2,8 +2,10 @@ package graft.perfbench
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One timed unit of a workload: a cron window, a backfill pass or a query. */
-final case class OpSample(wallS: Double, cpuS: Double, rows: Long)
+/** One timed unit of a workload: a cron window or a query. `sched` holds
+  * the scheduler counts of the timed part in a traced run.
+  */
+final case class OpSample(wallS: Double, cpuS: Double, rows: Long, sched: SchedCounts)
 
 /** A benchmark workload. The harness calls [[prepare]] several times (each
   * call replaces the inputs of the one before), [[warmUp]] once, then
@@ -51,6 +53,23 @@ object Harness {
     val t0 = System.nanoTime()
     val v = body
     (v, (System.nanoTime() - t0) / 1e9, cpuSeconds - c0)
+  }
+
+  /** This machine's cumulative CPU ticks from `/proc/stat`: (stolen, all),
+    * where stolen ticks are those the hypervisor gave to other machines.
+    */
+  def cpuTicks: (Long, Long) = {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    try {
+      val t = src.getLines().next().trim.split("\\s+").slice(1, 9).map(_.toLong)
+      (if (t.length == 8) t(7) else 0L, t.sum)
+    } finally src.close()
+  }
+
+  /** Share of the CPU ticks between two [[cpuTicks]] readings that were stolen. */
+  def stolenShare(from: (Long, Long), to: (Long, Long)): Double = {
+    val all = to._2 - from._2
+    if (all <= 0) 0.0 else (to._1 - from._1).toDouble / all
   }
 
   private val referenceSink = new java.util.concurrent.atomic.AtomicLong
@@ -141,6 +160,22 @@ object Harness {
     median(on.result()) / median(off.result())
   }
 
+  /** Direct calls into the `ops` window kernels on the dense history a
+    * `qc_historical` backfill loads: a seeded track of 3 streams at 1 Hz
+    * over 20 min, so the 10-min outlier frames hold 600 rows.
+    */
+  def backfillOpsLayers(spark: SparkSession, tracer: Tracer, seed: Long,
+                        slices: Int): Map[String, Double] = {
+    import graft.core.Obs
+    import org.apache.spark.sql.functions._
+    val dense = ShipTrack.generate(seed, 3, 1200, rates = Seq(1))
+    val obs = dense.toDataFrame(spark, slices)
+      .withColumn("t_us", unix_micros(col(Obs.Time))).cache()
+    obs.count()
+    try opsLayers(tracer, obs, dense.independentId, dense.dependentId)
+    finally obs.unpersist()
+  }
+
   /** Direct calls into the `ops` window kernels on a cached observations
     * frame that already carries `t_us`; each timed to a noop sink.
     */
@@ -180,18 +215,14 @@ object Harness {
   /** The QC layers of `QcMain.runFrom` on one input, measured from outside:
     *  - `qc.<pass>_s`: self time of each pass, as the difference between
     *    noop writes of cumulative prefixes (stab, +geo, +kin, +value) over
-    *    the same cached input, as `tools/QcProfile` does; the dependent
-    *    pass is timed over the cached value pass, as `runFrom` runs it;
-    *  - `qc.plan_s`: time to force the physical plan of the whole chain;
-    *  - `qc.cache_mb`: peak RDD storage memory while `runFrom` runs;
-    *  - `qc.leaked_rdds`: persisted RDDs left once the returned frame is
-    *    unpersisted;
-    *  - `patch.file_s` / `patch.file_mb`: `PatchSink.writePatchFile` of the
-    *    returned frame into `patchDir`.
+    *    the same cached input, as `tools/QcProfile` does. `runFrom` caches
+    *    the value pass before the dependent pass reads it three times, so
+    *    the value prefix's write fills that cache, and the dependent pass
+    *    is timed over it;
+    *  - `qc.plan_s`: time to force the physical plan of the whole chain.
     */
-  def qcLayers(spark: SparkSession, tracer: Tracer, listener: SchedListener,
-               obsIn: DataFrame, cfg: graft.pipeline.QcMain.Config,
-               patchDir: java.io.File): Map[String, Double] = {
+  def qcLayers(spark: SparkSession, tracer: Tracer, obsIn: DataFrame,
+               cfg: graft.pipeline.QcMain.Config): Map[String, Double] = {
     import graft.core.Obs
     import graft.pipeline.QcMain
     import org.apache.spark.sql.functions._
@@ -210,12 +241,10 @@ object Harness {
       (System.nanoTime() - t0) / 1e9
     }
     val passes = Seq("stab", "geo", "kin", "value")
-    val cumulative = passes.zip(chain()).map { case (n, df) => timedNoop(s"qc.prefix.$n", df) }
+    val prefixes = chain().take(passes.size)
+    val valueCached = prefixes.last.cache()
+    val cumulative = passes.zip(prefixes).map { case (n, df) => timedNoop(s"qc.prefix.$n", df) }
     val self = passes.indices.map(i => cumulative(i) - (if (i == 0) 0.0 else cumulative(i - 1)))
-    // runFrom caches the value pass before the dependent pass reads it
-    // three times; time the dependent pass over that cache the same way
-    val valueCached = chain()(3).cache()
-    valueCached.count()
     val dependentS = timedNoop("qc.pass.dependent", QcMain.dependentPass(valueCached, cfg))
     valueCached.unpersist(blocking = true)
     val planS = {
@@ -225,23 +254,7 @@ object Harness {
       (System.nanoTime() - t0) / 1e9
     }
     obs.unpersist(blocking = true)
-
-    val before = persistedRdds(spark)
-    SchedListener.drain(spark.sparkContext)
-    listener.resetPeak()
-    val (flagged, _) = tracer.span("qc.runFrom")(QcMain.runFrom(spark, obsIn, cfg))
-    SchedListener.drain(spark.sparkContext)
-    val cacheMb = listener.peakStorageBytes / 1e6
-    val (_, fileS, _) = timed(tracer.span("patch.file") {
-      graft.sources.PatchSink.writePatchFile(
-        flagged.withColumn(Obs.QcFlag, col("flag")), patchDir.getPath)
-    })
-    val fileMb = Option(patchDir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.isFile).map(_.length).sum / 1e6
-    flagged.unpersist(blocking = true)
-    val leaked = persistedRdds(spark) - before
     passes.zip(self).map { case (n, s) => s"qc.${n}_s" -> s }.toMap ++ Map(
-      "qc.dependent_s" -> dependentS, "qc.plan_s" -> planS, "qc.cache_mb" -> cacheMb,
-      "qc.leaked_rdds" -> leaked.toDouble, "patch.file_s" -> fileS, "patch.file_mb" -> fileMb)
+      "qc.dependent_s" -> dependentS, "qc.plan_s" -> planS)
   }
 }

@@ -23,10 +23,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    samples (BAD, spatial outlier) and the 20 min of warm-up rows
   *    after each outage (BAD, stabilization).
   *
-  * Value faults and GPS jumps sit at fixed offsets in each 15-min block,
-  * so every cron window sees them; a spike sits 10-14 min into its block
-  * on one of the densest streams, so its trailing z-score frame holds
-  * enough rows to reach |z| > 3.
+  * Each 15-min block of the track holds one out-of-range value (1-14 min
+  * in), one GPS jump (11-14 min in) and one spike (10-14 min in, on one of
+  * the densest streams). A cron window spans 900 s, so it holds one fault
+  * of each kind. Windows start `dt_stabilization` (1200 s) after the track
+  * starts, 300 s into a block, so a spike lands 300-540 s into its window
+  * and its trailing z-score frame holds enough rows to reach |z| > 3.
   */
 object ShipTrack {
 
@@ -41,7 +43,7 @@ object ShipTrack {
   val OutageLenSec = 1020
   private def gcd(a: Int, b: Int): Int = if (b == 0) a else gcd(b, a % b)
 
-  /** 2024-06-01T00:00:00Z: windows align to the 15-min grid. */
+  /** 2024-06-01T00:00:00Z, on the 15-min grid; blocks start on it. */
   val DefaultT0Us = 1717200000L * 1000000L
 
   final case class StreamSpec(id: Long, dtSec: Int, base: Double, amp: Double,

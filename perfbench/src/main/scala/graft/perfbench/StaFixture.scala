@@ -5,7 +5,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.io.ByteArrayOutputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Loopback SensorThings (FROST-shaped) server over a generated track, on
@@ -17,6 +17,11 @@ import java.util.concurrent.atomic.AtomicLong
   *    and links the next page through `@iot.nextLink` with `$skip`.
   *  - `POST <base>/$batch` acknowledges a JSON batch and keeps its body for
   *    the output checks.
+  *
+  * It counts requests, pages, bytes each way, 5xx responses and repeat
+  * GETs: a GET of a `$filter`/`$skip` already served in the same window is
+  * a client retry (`StaHttp` retries a GET after a connection error or a
+  * non-2xx status).
   *
   * Every observation's JSON is rendered once at construction, so serving
   * a page costs a binary search and a copy.
@@ -43,9 +48,13 @@ final class StaFixture(track: ShipTrack.Track, pageSize: Int, threads: Int) {
       .getBytes(UTF_8)
   }
 
-  private val gets, pages, posts, bytesOut, bytesIn, errors5xx = new AtomicLong
+  private val gets, pages, posts, bytesOut, bytesIn, errors5xx, repeats = new AtomicLong
   /** Row ranges `[from, until)` served, in track row numbers. */
   private val served = new ConcurrentLinkedQueue[(Int, Int)]()
+  /** Query strings (`$filter`, `$skip`) asked for since the last [[takeServed]]:
+    * asking for one again is a client retry, counted in `repeats`.
+    */
+  private val asked = ConcurrentHashMap.newKeySet[String]()
   private val batchBodies = new ConcurrentLinkedQueue[Array[Byte]]()
 
   private val pool = Executors.newFixedThreadPool(threads)
@@ -125,7 +134,9 @@ final class StaFixture(track: ShipTrack.Track, pageSize: Int, threads: Int) {
   server.createContext("/FROST-Server/v1.1/Datastreams", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = try {
       gets.incrementAndGet()
-      val (code, body) = page(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
+      val query = Option(ex.getRequestURI.getRawQuery).getOrElse("")
+      if (!asked.add(query)) repeats.incrementAndGet()
+      val (code, body) = page(query)
       respond(ex, code, body)
     } finally ex.close()
   })
@@ -143,10 +154,15 @@ final class StaFixture(track: ShipTrack.Track, pageSize: Int, threads: Int) {
   /** Counter values, for per-window deltas. */
   def counters: Map[String, Long] = Map("gets" -> gets.get, "pages" -> pages.get,
     "posts" -> posts.get, "bytes_out" -> bytesOut.get, "bytes_in" -> bytesIn.get,
-    "5xx" -> errors5xx.get)
+    "5xx" -> errors5xx.get, "repeats" -> repeats.get)
 
-  /** Drain what the server recorded since the last call. */
-  def takeServed(): Seq[(Int, Int)] = Iterator.continually(served.poll()).takeWhile(_ != null).toSeq
+  /** Drain what the server recorded since the last call; a window's
+    * requests start a new set for the retry count.
+    */
+  def takeServed(): Seq[(Int, Int)] = {
+    asked.clear()
+    Iterator.continually(served.poll()).takeWhile(_ != null).toSeq
+  }
   def takeBatches(): Seq[Array[Byte]] =
     Iterator.continually(batchBodies.poll()).takeWhile(_ != null).toSeq
 
