@@ -46,7 +46,13 @@ object Bench {
     Seq("org.apache.spark.storage", "org.apache.spark.ContextCleaner")
       .foreach(l => org.apache.logging.log4j.core.config.Configurator
         .setLevel(l, org.apache.logging.log4j.Level.OFF))
-    // JVM/codegen warmup so the first measured query isn't charged for it
+    // warm the JVM (JIT, class loading), the scheduler and the code
+    // generator itself so the first measured query isn't charged for
+    // them. The classes compiled here are not the queries' own: each
+    // query compiles its generated classes when it first runs, and a
+    // later rep reuses them only while the codegen cache (2048 classes,
+    // Sessions.builder) still holds them — bench_full.json's
+    // "codegen_compiles" gives the count per rep
     spark.range(1000000L).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()
     // optional comma-separated name filter for targeted re-measures
@@ -79,10 +85,14 @@ object Bench {
     // per query: all successful rep times + the last error (if any rep failed)
     val times = scala.collection.mutable.Map[String, List[Double]]()
       .withDefaultValue(Nil)
+    // per query: generated classes compiled in each rep, latest first
+    val compiles = scala.collection.mutable.Map[String, List[Long]]()
+      .withDefaultValue(Nil)
     val errs = scala.collection.mutable.Map[String, String]()
     val totals = (1 to reps).map { _ =>
       val repResults = names.map { name =>
         val t0 = System.nanoTime()
+        val c0 = graft.core.Sessions.codegenCompiles
         // noop sink: forces FULL materialization of every output column —
         // .count() would let Catalyst prune the computed columns and time
         // only the scan/shuffle skeleton
@@ -93,6 +103,7 @@ object Bench {
           } catch { case e: Throwable =>
             Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}") }
         val dt = (System.nanoTime() - t0) / 1e9
+        compiles(name) = (graft.core.Sessions.codegenCompiles - c0) :: compiles(name)
         spark.catalog.clearCache() // operators cache internal frames; drop between queries
         // backstop for RDD-level persists clearCache can't see (the
         // final checkpoint an iterative op returns stays leased to its
@@ -159,8 +170,14 @@ object Bench {
     // map; the file JSON keeps the full forms
     val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
     val full = s"""{"metric":"total","value":${f3(totals.min)},"unit":"sec","reps":$reps,"totals":$totalsJson,"queries":$qs,"errors":$errJson,"sf":"$sfDir","out":"$outFile"}"""
+    // the file alone also carries each query's codegen compiles per rep
+    // (the full stdout line below keeps its shape)
+    val compilesJson = names.map { n =>
+      s"\"" + n + "\":" + compiles(n).reverse.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val fileJson = full.dropRight(1) + s""","codegen_compiles":$compilesJson}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      fileJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Exception =>
       System.err.println(s"bench: could not write $outFile: $e") }
     // Two stdout lines, ordered for a bounded capture window read from

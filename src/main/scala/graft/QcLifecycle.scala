@@ -31,10 +31,13 @@ object QcLifecycle {
     val patchDir = java.nio.file.Files
       .createTempDirectory("graft_qc_patch_").toString
     val t0 = System.nanoTime()
+    val c0 = graft.core.Sessions.codegenCompiles
     val (flagged, ph) = QcMain.runFrom(spark, obsIn, cfg,
       patchOut = Some(patchDir))
     val nRows = flagged.count()
     val wallSec = (System.nanoTime() - t0) / 1e9
+    // generated classes the run compiled (a static counter: no job)
+    val codegenCompiles = graft.core.Sessions.codegenCompiles - c0
     val hist = flagged.groupBy(col("flag")).count().collect()
       .map(r => s""""${r.getByte(0)}":${r.getLong(1)}""").sorted
       .mkString("{", ",", "}")
@@ -50,7 +53,8 @@ object QcLifecycle {
       s""""total_qc_sec":${f2(ph.totalQcSec)},""" +
       s""""patch_sec":${f2(ph.patchSec)},""" +
       s""""total_sec":${f2(ph.totalSec)},""" +
-      s""""wall_sec":${f2(wallSec)},"flag_hist":$hist}"""
+      s""""wall_sec":${f2(wallSec)},"codegen_compiles":$codegenCompiles,""" +
+      s""""flag_hist":$hist}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json)
     println(json)
   }

@@ -37,6 +37,26 @@ object Sessions {
       // partitioning changes; results are identical.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
+      // JVM-wide cache of compiled generated classes (default 100). One
+      // QcMain.runFrom window (60 streams, stabilization and a dependent
+      // pair) compiles ~180 classes; one pass of q_pagerank,
+      // dd_winnow_pairs, w2_zscore and w4_spatial_outlier ~118. At 100
+      // the LRU evicts a window's classes before the next same-shaped
+      // window asks for them, so a cron session recompiled all of them
+      // every window; at 2048 a steady-state window compiles none, with
+      // room for configs with many more dependent pairs. Static conf:
+      // Spark sizes CodeGenerator's cache from it once, when that class
+      // first loads, so it is set here, where every entry point's session
+      // is built, and not in any one entry point.
+      .config("spark.sql.codegen.cache.maxEntries", 2048)
+
+  /** Generated classes this JVM has compiled so far: the count of Spark's
+    * codegen compile-time histogram. Read twice around a run for the
+    * number of classes the run compiled (a cache hit compiles none); it
+    * reads a static counter and submits no job.
+    */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Spark's spillable on-disk state store for Structured Streaming. */
   val RocksDbProvider =

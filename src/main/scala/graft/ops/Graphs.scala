@@ -274,8 +274,10 @@ object Graphs {
     * corpus scale, so no hint; AQE may still choose broadcast when
     * small), one groupBy (dst, label) whose map-side partials absorb
     * hot-community skew, and one |V|-scale argmin via min(struct) — no
-    * window, no sort. Each round's labels are eagerly localCheckpoint'ed
-    * (the same geometric-lineage trap as [[kcoreRounds]]).
+    * window, no sort. Rounds build one lazy plan, each referencing its
+    * predecessor once. The labels of every `checkpointEvery`-th round
+    * are localCheckpoint'ed to bound the lineage at high round counts,
+    * and so are the final round's (the result has several consumers).
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
                        checkpointEvery: Int = 8): DataFrame = {

@@ -51,12 +51,6 @@ object QcMain {
           patchOut: Option[String] = None): (DataFrame, PhaseTimes) =
     runFrom(spark, StaJson.readResponse(spark, staJsonPath), cfg, patchOut)
 
-  /** The same lifecycle from an already-loaded observations frame (the
-    * long schema both [[StaJson.readResponse]] and the live
-    * `graft.sources.sta` HTTP source produce) — the entry the live
-    * transport composes with: source pushdown happens in the PLAN of
-    * `obsIn` before this cache materializes it.
-    */
   /** §3.1 step 4 — stabilization pass: per configured independent
     * stream, BAD during warm-up after long outages; worst-wins
     * re-merged onto the full frame by observation id (reference
@@ -213,6 +207,12 @@ object QcMain {
         .drop("dep_flag")
     }
 
+  /** The same lifecycle from an already-loaded observations frame (the
+    * long schema both [[StaJson.readResponse]] and the live
+    * `graft.sources.sta` HTTP source produce) — the entry the live
+    * transport composes with: source pushdown happens in the PLAN of
+    * `obsIn` before this cache materializes it.
+    */
   def runFrom(spark: SparkSession, obsIn: DataFrame, cfg: Config,
               patchOut: Option[String] = None): (DataFrame, PhaseTimes) = {
     val t0 = System.nanoTime()

@@ -9,6 +9,7 @@ import org.apache.spark.sql.sources.{Filter, GreaterThan, In, LessThan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.SparkSession
 
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
@@ -24,14 +25,17 @@ import scala.jdk.CollectionConverters._
   *  - time / stream filters → `$filter=phenomenonTime gt X and lt Y`,
   *    `datastream_id in (…)` (reference `filter_cfg_to_query`,
   *    `src/main.py:328-331`, pinned `tests/test_config.py:23-28`)
-  *  - one input partition per (datastream, page) → parallel paged fetch
-  *    replaces the reference's thread pool.
+  *  - http transport: one paged fetch per datastream id
+  *    (`$filter=… and Datastream/id eq k`), dealt round-robin over at
+  *    most `defaultParallelism` input partitions; each partition runs
+  *    its streams' fetches one after another, so the Spark tasks
+  *    replace the reference's thread pool.
   *
-  * Zero-egress environment: the "transport" reads captured response JSON
-  * files from the `path` option (one response per file). The pushdown
-  * compilation and partition planning — the parts that matter — are real
-  * and unit-tested; swapping the transport for HTTP is localized in
-  * [[StaPartitionReader]].
+  * Two transports: "file" reads captured response JSON from the `path`
+  * option (one response per file, one partition per file) and enforces
+  * the pushed filters row by row; "http" GETs the `path` collection URL
+  * with the compiled `$filter`, follows `@iot.nextLink` paging and
+  * retries 5xx ([[StaHttp]]).
   *
   * Usage: `spark.read.format("graft.sources.sta").option("path", dir).load()`
   */
@@ -128,9 +132,9 @@ object StaSource {
   *   `path` is the collection URL, standard `@iot.nextLink` paging,
   *   bounded retries).
   * @param datastreams with http transport: comma-separated datastream ids
-  *   — one input partition per id (the Spark-task replacement for the
-  *   reference's fetch thread pool); absent = one partition for the
-  *   whole collection.
+  *   — one paged fetch per id, grouped into at most `defaultParallelism`
+  *   input partitions (see [[StaScan.planInputPartitions]]); absent = one
+  *   partition for the whole collection.
   */
 class StaTable(path: String, transport: String = "file",
                datastreams: Option[String] = None) extends Table with SupportsRead {
@@ -174,33 +178,52 @@ class StaScan(path: String, required: StructType, odataFilter: String,
     s"StaScan(transport=$transport, odataFilter=[$odataFilter], " +
       s"select=[${StaSource.compileSelect(required)}])"
 
-  /** File transport: one partition per captured response file. HTTP
-    * transport: one partition per datastream id (each task runs its own
-    * paged fetch — the reference's per-datastream threads become Spark
-    * tasks), or a single whole-collection partition when no ids given.
+  /** File transport: one partition per captured response file.
+    *
+    * HTTP transport: one paged fetch per datastream id, each with its
+    * own `Datastream/id eq k` filter. The fetches are dealt round-robin
+    * over `min(#ids, defaultParallelism)` partitions, and a partition
+    * runs its fetches one after another. Only `defaultParallelism` tasks
+    * run at once anyway, so the fetch concurrency is that of one
+    * partition per id, while every stage over the scanned rows schedules
+    * at most one task per core instead of one per stream. Without ids:
+    * a single whole-collection partition. Plans from the options alone:
+    * nothing is fetched and no job runs here.
     */
   override def planInputPartitions(): Array[InputPartition] =
     if (transport == "http") {
       val ids = datastreams.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       if (ids.isEmpty)
-        Array(StaPartition(path, odataFilter, pushedFilters, http = true))
-      else ids.map { id =>
-        val idClause = s"Datastream/id eq $id"
-        val f = if (odataFilter.isEmpty) idClause else s"$odataFilter and $idClause"
-        StaPartition(path, f, pushedFilters, http = true): InputPartition
-      }.toArray
+        Array(StaPartition(path, Seq(odataFilter), pushedFilters, http = true))
+      else {
+        val filters = ids.map { id =>
+          val idClause = s"Datastream/id eq $id"
+          if (odataFilter.isEmpty) idClause else s"$odataFilter and $idClause"
+        }
+        val n = math.min(filters.size,
+          SparkSession.active.sparkContext.defaultParallelism)
+        Array.tabulate[InputPartition](n) { k =>
+          StaPartition(path, filters.indices.filter(_ % n == k).map(filters),
+            pushedFilters, http = true)
+        }
+      }
     } else {
       val dir = new java.io.File(path)
       val files =
         if (dir.isDirectory) dir.listFiles().filter(_.getName.endsWith(".json")).map(_.getPath)
         else Array(path)
-      files.sorted.map(f => StaPartition(f, odataFilter, pushedFilters): InputPartition)
+      files.sorted.map(f => StaPartition(f, Seq.empty, pushedFilters): InputPartition)
     }
   override def createReaderFactory(): PartitionReaderFactory =
     new StaReaderFactory(required)
 }
 
-case class StaPartition(file: String, odataFilter: String,
+/** @param file a captured response file, or the collection URL (http)
+  * @param odataFilters http: the compiled `$filter` of each paged fetch
+  *   this partition runs, in order ("" = the unfiltered collection);
+  *   empty for a file
+  */
+case class StaPartition(file: String, odataFilters: Seq[String],
                         pushed: Seq[Filter] = Seq.empty,
                         http: Boolean = false) extends InputPartition
 
@@ -209,9 +232,10 @@ class StaReaderFactory(required: StructType) extends PartitionReaderFactory {
     new StaPartitionReader(p.asInstanceOf[StaPartition], required)
 }
 
-/** Parses one captured STA response and yields flattened rows. The HTTP
-  * transport (paged GET with retry, reference `get_with_retry`
-  * `src/main.py:107`) would replace `scala.io.Source.fromFile` here.
+/** Yields the flattened rows of one partition: one captured STA response
+  * (file transport), or the pages of each of the partition's fetches in
+  * turn (http transport: paged GET with retry, reference `get_with_retry`
+  * `src/main.py:107`).
   */
 class StaPartitionReader(p: StaPartition, required: StructType)
     extends PartitionReader[InternalRow] {
@@ -305,10 +329,9 @@ class StaPartitionReader(p: StaPartition, required: StructType)
   private val rows: Iterator[InternalRow] =
     if (p.http) {
       val sep = if (p.file.contains("?")) "&" else "?"
-      val url =
-        if (p.odataFilter.isEmpty) p.file
-        else s"${p.file}$sep%24filter=${StaHttp.enc(p.odataFilter)}"
-      httpPages(url).flatMap(parse)
+      p.odataFilters.iterator.flatMap { f =>
+        httpPages(if (f.isEmpty) p.file else s"${p.file}$sep%24filter=${StaHttp.enc(f)}")
+      }.flatMap(parse)
     } else parse(mapper.readTree(new java.io.File(p.file)))
 
   private var current: InternalRow = _

@@ -324,12 +324,14 @@ class PlanShapeSpec extends SparkSpec {
     // scale: (a) the orders x lineitem construction is NEVER re-derived
     // in the final action (zero FileScans), (b) the leaf count is
     // exactly the round structure's reference count — iters x (e +
-    // nodes) + the rank-0 seed = 3*2 + 1 = 7 — so an accidentally
+    // nodes) + the rank-0 seed = 2*iters + 1 — so an accidentally
     // un-materialized construction (which would re-plan the trade graph
     // per arm) fails loudly.
+    val iters = 3 // q_pagerank's PageRank.ranks(…, iters = 3)
+    val expected = 2 * iters + 1
     val scans = "Scan ExistingRDD".r.findAllIn(p).size
-    assert(!p.contains("FileScan") && scans == 7,
-      s"expected 7 checkpoint scans and no raw-table re-read, got $scans:\n$p")
+    assert(!p.contains("FileScan") && scans == expected,
+      s"expected $expected checkpoint scans and no raw-table re-read, got $scans:\n$p")
   }
 
   test("cusum: ONE data exchange serves every window layer") {

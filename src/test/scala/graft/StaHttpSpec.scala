@@ -11,8 +11,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 /** S1/S4 live-transport tests against an in-JVM loopback HTTP server:
   * paged GET (`@iot.nextLink`) with retry on 5xx, per-datastream
-  * partition fan-out, server-side `$filter` + reader-side pushed-filter
-  * enforcement, and the `$batch` PATCH write-back (reference
+  * fetches grouped into at most one partition per core, server-side
+  * `$filter` + reader-side pushed-filter enforcement, and the `$batch`
+  * PATCH write-back (reference
   * `get_with_retry` src/main.py:107-118, `get_all_data` 350-364,
   * `patch_qc_flags` 854-859).
   */
@@ -74,6 +75,14 @@ class StaHttpSpec extends SparkSpec {
                |"@iot.nextLink":"$base?page=2&${StaHttp.enc("$filter=Datastream/id eq 1")}"}""".stripMargin
           case Some(1L) => s"""{"Datastreams":[${dsJson(1, ds1page2)}]}"""
           case Some(2L) => s"""{"Datastreams":[${dsJson(2, ds2obs)}]}"""
+          // datastreams 3+: obs k*100+1 on page 1, and for even k a second
+          // page with obs k*100+2
+          case Some(k) if !page2 =>
+            val link = s"$base?page=2&" + StaHttp.enc("$filter=Datastream/id eq " + k)
+            val next = if (k % 2 == 0) s""","@iot.nextLink":"$link"""" else ""
+            s"""{"Datastreams":[${dsJson(k, Seq(obsJson(k * 100 + 1, "2024-01-01T02:00:00Z", k.toDouble)))}]$next}"""
+          case Some(k) =>
+            s"""{"Datastreams":[${dsJson(k, Seq(obsJson(k * 100 + 2, "2024-01-01T02:10:00Z", k + 0.5)))}]}"""
           case _ => s"""{"Datastreams":[${dsJson(1, ds1page1 ++ ds1page2)},${dsJson(2, ds2obs)}]}"""
         }
         respond(ex, 200, body)
@@ -101,6 +110,36 @@ class StaHttpSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
       assert(rows.map(_._1).toSeq == Seq(11L, 12L, 13L, 21L, 22L)) // both pages, both streams
       assert(rows.filter(_._2 == 1L).map(_._3).sum == 6.0)
+    }
+  }
+
+  test("http transport: more datastreams than cores share one partition " +
+    "per core, each stream's pages fetched once") {
+    val ids = (1 to 10).map(_.toLong)
+    def read(base: String, ids: Seq[Long]) = spark.read.format("graft.sources.sta")
+      .option("path", base).option("transport", "http")
+      .option("datastreams", ids.mkString(",")).load()
+      .select(Obs.IotId, Obs.DatastreamId, Obs.Result)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+    withServer { (base, _, _, urls) =>
+      val grouped = read(base, ids)
+      val parts = grouped.rdd.getNumPartitions
+      assert(parts <= 4 && parts == math.min(ids.size, spark.sparkContext.defaultParallelism),
+        s"$parts partitions for ${ids.size} datastreams")
+      val groupedRows = rows(grouped)
+      // each page URL twice: the fixture's one 503, then its one 200
+      val groupedUrls = urls.toArray.map(_.toString).groupBy(identity).map {
+        case (u, hits) => u -> hits.length }
+      assert(groupedUrls.values.forall(_ == 2), s"repeated GETs: $groupedUrls")
+      urls.clear()
+      val perStream = ids.flatMap(id => rows(read(base, Seq(id)))).sortBy(_._1)
+      assert(groupedRows == perStream)
+      assert(groupedRows.map(_._2).distinct.size == ids.size)
+      // the same pages as the per-stream reads, which page every
+      // `Datastream/id eq k` URL including the second pages
+      assert(groupedUrls.keySet == urls.toArray.map(_.toString).toSet)
+      assert(groupedUrls.size == ids.size + 1 + ids.count(k => k > 2 && k % 2 == 0))
     }
   }
 
