@@ -43,9 +43,6 @@ object Obs {
     */
   def epochUs(ts: Column): Column = unix_micros(ts.cast("timestamp"))
 
-  /** Epoch seconds as fractional double (for rates: gradient, velocity). */
-  def epochSec(ts: Column): Column = epochUs(ts).cast("double") / 1e6
-
   /** Epoch-µs derivation for the RAW events `ts` column — the single
     * place the schema dispatch lives (production + tests share it, so
     * the epoch axis cannot drift between them). The driver's

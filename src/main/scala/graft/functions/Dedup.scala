@@ -595,15 +595,6 @@ object Dedup {
   /** 32-bit portable base hash of a string column. */
   def baseHash(c: Column): Column = conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  def minhashSignature(text: Column, k: Int = MinhashK): Column = {
-    val sh = shingles(text)
-    val hs = transform(sh, s => baseHash(s))
-    array((0 until k).map { i =>
-      array_min(transform(hs, h =>
-        pmod(h * hashCoeffA(i) + hashCoeffB(i), lit(MinhashP))))
-    }: _*)
-  }
-
   /** LSH banding: split the K-wide signature into `bands` bands of
     * K/bands rows each; band key = md5 of the joined band values. Docs
     * sharing any (band_idx, band_key) are near-dup candidates — the

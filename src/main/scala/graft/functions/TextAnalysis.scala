@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, language id, quality scoring, fingerprinting. All are
-  * pure Column expressions (codegen'd, no UDFs) over a `text` column —
+  * built from Column expressions (codegen'd, no UDFs) over a `text` column —
   * at 100 TB these run map-side with zero shuffle.
   */
 object TextAnalysis {
@@ -95,19 +95,6 @@ object TextAnalysis {
     size(filter(wsTokens(text), t => array_contains(arr, t)))
   }
 
-  /** Language-ID: argmax of per-language stopword hits; ties and zero hits
-    * resolve to "und" (undetermined). Deterministic: languages compared in
-    * sorted order, strictly-greater wins.
-    */
-  def langId(text: Column): Column = {
-    val langs = Stopwords.keys.toSeq.sorted
-    val hits = langs.map(l => l -> stopwordHits(text, Stopwords(l)))
-    val best = hits.foldLeft((lit("und"), lit(0))) { case ((bl, bh), (l, h)) =>
-      (when(h > bh, lit(l)).otherwise(bl), when(h > bh, h).otherwise(bh))
-    }
-    best._1
-  }
-
   /** Tiny per-language character-trigram profiles for the n-gram
     * language-ID heuristic (the classic Cavnar-Trenkle shape, minimal
     * deterministic instantiation).
@@ -126,30 +113,12 @@ object TextAnalysis {
   def substrCount(text: Column, g: String): Column =
     (length(text) - length(replace(text, lit(g), lit("")))) / g.length
 
-  /** Language-ID via character-trigram profile hits (n-gram heuristic):
-    * argmax of Σ trigram occurrences over the normalized text; ties and
-    * zero hits resolve to "und". Deterministic: languages compared in
-    * sorted order, strictly-greater wins — same fold as [[langId]].
-    */
-  def langIdNgram(text: Column): Column = {
-    val norm = normalized(text)
-    val langs = TrigramProfiles.keys.toSeq.sorted
-    val hits = langs.map(l =>
-      l -> TrigramProfiles(l).map(g => substrCount(norm, g)).reduce(_ + _))
-    val best = hits.foldLeft((lit("und"), lit(0))) { case ((bl, bh), (l, h)) =>
-      (when(h > bh, lit(l)).otherwise(bl), when(h > bh, h).otherwise(bh))
-    }
-    best._1
-  }
-
-  // ---- DataFrame variants with hit counts materialized ONCE -------------
-  // The Column-form argmax folds above duplicate each per-language count
-  // subtree ~2^|langs| times (every fold step references the running best
-  // twice), and CollapseProject re-inlines any intermediate projection —
-  // so each count's regex split / HOF filter runs up to 16× per row.
-  // These variants pin the counts behind EvalOnce columns (blocking the
-  // collapse) and fold over cheap attribute references instead. Same
-  // values, same oracle SQL — only the evaluation count drops.
+  // The language-ID and quality operators pin each per-language count
+  // behind an EvalOnce column and fold over attribute references: an
+  // argmax fold references the running best twice per step, so folding
+  // over the count expressions themselves would copy each count's regex
+  // split / HOF filter up to 2^|langs| times per row, and
+  // CollapseProject re-inlines any plain intermediate projection.
 
   private def argmaxOverCols(langs: Seq[String], hitCol: String => Column): Column =
     langs.foldLeft((lit("und"), lit(0))) { case ((bl, bh), l) =>
@@ -157,7 +126,10 @@ object TextAnalysis {
         when(hitCol(l) > bh, hitCol(l)).otherwise(bh))
     }._1
 
-  /** [[langId]] with per-language stopword counts evaluated once. */
+  /** Language-ID: argmax of per-language stopword hits; zero hits resolve
+    * to "und" (undetermined). Deterministic: languages compared in sorted
+    * order, strictly-greater wins, so a tie goes to the first language.
+    */
   def langIdOnto(df: DataFrame, out: String, text: Column): DataFrame = {
     val langs = Stopwords.keys.toSeq.sorted
     val withHits = langs.foldLeft(df)((d, l) =>
@@ -166,8 +138,9 @@ object TextAnalysis {
       .drop(langs.map(l => s"__sw_$l"): _*)
   }
 
-  /** [[langIdNgram]] with the normalization and per-language trigram
-    * counts evaluated once.
+  /** Language-ID via character-trigram profile hits (n-gram heuristic):
+    * argmax of Σ trigram occurrences over the normalized text; zero hits
+    * resolve to "und". Same sorted strictly-greater fold as [[langIdOnto]].
     */
   def langIdNgramOnto(df: DataFrame, out: String, text: Column): DataFrame = {
     val langs = TrigramProfiles.keys.toSeq.sorted
@@ -179,8 +152,11 @@ object TextAnalysis {
       .drop("__lin_norm" +: langs.map(l => s"__tg_$l"): _*)
   }
 
-  /** [[qualityScore]] with the token count and stopword count evaluated
-    * once (the Column form pays the regex token split 3×).
+  /** Quality score in [0,1]: blend of length band, alpha ratio, stopword
+    * ratio, and mean word length band — the shape of a classic heuristic
+    * document-quality filter (Gopher/C4-style rules), deterministic and
+    * SQL-expressible. The token count feeds three terms, so it is
+    * evaluated once.
     */
   def qualityScoreOnto(df: DataFrame, out: String, text: Column): DataFrame = {
     val n = col("__q_n")
@@ -198,27 +174,9 @@ object TextAnalysis {
       .drop("__q_n", "__q_sw")
   }
 
-  /** Quality score in [0,1]: blend of length band, alpha ratio, stopword
-    * ratio, and mean word length band — the shape of a classic heuristic
-    * document-quality filter (Gopher/C4-style rules), deterministic and
-    * SQL-expressible.
-    */
-  def qualityScore(text: Column): Column = {
-    val n = wsTokenCount(text).cast("double")
-    val chars = length(text).cast("double")
-    val alpha = length(regexp_replace(text, "[^A-Za-z]", "")).cast("double")
-    val sw = stopwordHits(text, Stopwords("en")).cast("double")
-    val meanWordLen = chars / greatest(n, lit(1.0))
-    val lenOk = when(n >= 5 && n <= 10000, lit(1.0)).otherwise(lit(0.0))
-    val alphaRatio = alpha / greatest(chars, lit(1.0))
-    val swRatio = least(sw / greatest(n, lit(1.0)) * 10.0, lit(1.0))
-    val wordLenOk = when(meanWordLen >= 2.0 && meanWordLen <= 12.0, lit(1.0)).otherwise(lit(0.0))
-    round((lenOk + alphaRatio + swRatio + wordLenOk) / 4.0, 6)
-  }
-
   /** Rule-based hard quality filter (Gopher-style — Rae et al. 2021
     * table A1's shape): per-document boolean verdicts for each rule
-    * plus the combined keep decision. Unlike [[qualityScore]]'s soft
+    * plus the combined keep decision. Unlike [[qualityScoreOnto]]'s soft
     * blend, these are the hard gates a corpus pipeline applies before
     * any scoring: word-count band, mean-word-length band, minimum
     * stopword evidence (a proxy for "is natural language at all"),

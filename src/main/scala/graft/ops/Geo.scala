@@ -426,19 +426,6 @@ object Geo {
   def gridElevationFrom(grid: Grid, lat: Column, lon: Column): Column =
     exprCol(GridElevationExpr(colExpr(lat), colExpr(lon), grid))
 
-  /** First-match-wins classification against a driver-side polygon list
-    * (bbox guard, then native PIP on the literal ring). Right-sized for
-    * moderate polygon sets (the SeaVox regional table); for thousands of
-    * polygons use [[classifyByPolygonTable]].
-    */
-  def classifyPolyRegions(lat: Column, lon: Column,
-                          regions: Seq[(String, Array[Double])]): Column =
-    regions.foldRight(lit(null).cast("string")) { case ((name, ring), acc) =>
-      val (latMin, latMax, lonMin, lonMax) = ringBbox(ring)
-      when(lat >= latMin && lat <= latMax && lon >= lonMin && lon <= lonMax &&
-        pointInPolygonCol(lat, lon, typedLit(ring.toSeq)), lit(name)).otherwise(acc)
-    }
-
   /** Classification against a polys frame (any size): broadcast the
     * polygons, bbox-prefilter the nested-loop join, native PIP on the
     * candidates, lowest `priority` wins per point ("lowest level found",

@@ -49,19 +49,6 @@ final case class QcCheck(
 
 object QcCheck {
 
-  /** Apply a sequence of checks to `df`, threading the flag column through
-    * worst-wins merges, and (optionally) retaining each check's verdict as
-    * `bool_<label>` for reuse by later stages (reference keeps
-    * `bool_series` for the outlier mask reuse, `src/main.py:657,676`).
-    */
-  def applyAll(df: DataFrame, flagCol: String, checks: Seq[QcCheck],
-               keepVerdicts: Boolean = false): DataFrame = {
-    checks.foldLeft(df) { (d, c) =>
-      val merged = d.withColumn(flagCol, c.mergedInto(col(flagCol)))
-      if (keepVerdicts) merged.withColumn(s"bool_${c.label}", c.verdict) else merged
-    }
-  }
-
   /** Per-check flagged-row counts in ONE aggregate pass
     * (reference `update_flag_history_series` audit, `src/main.py:544-870`,
     * which recounts per check — here a single `sum(cast(bool))` job).

@@ -16,48 +16,22 @@ import org.apache.spark.sql.functions._
   */
 object WindowKernels {
 
-  def streamWindow(partCols: Seq[String] = Seq(Obs.DatastreamId),
-                   timeCol: String = Obs.Time): WindowSpec =
-    Window.partitionBy(partCols.map(col): _*).orderBy(col(timeCol))
-
   /** W1 — np.gradient parity (reference `calc_gradient_results`, call
     * `src/main.py:518`, pinned `tests/test_qc.py:446-510`): second-order
     * central differences with non-uniform spacing in the interior,
     * one-sided differences at the partition edges. d(result)/d(time),
-    * time in seconds. Pure lag/lead arithmetic — no UDF.
+    * time in seconds. Pure lag/lead arithmetic — no UDF. Adds column
+    * `out`.
     *
     * Interior (np.gradient non-uniform formula):
     *   hs = t0 - t_prev, hd = t_next - t0
     *   f' = (hs²·f_next + (hd² − hs²)·f0 − hd²·f_prev) / (hs·hd·(hs + hd))
-    */
-  def gradient(value: Column, timeSec: Column, w: WindowSpec): Column = {
-    val fPrev = lag(value, 1).over(w)
-    val fNext = lead(value, 1).over(w)
-    val tPrev = lag(timeSec, 1).over(w)
-    val tNext = lead(timeSec, 1).over(w)
-    val hs = timeSec - tPrev
-    val hd = tNext - timeSec
-    val central = (hs * hs * fNext + (hd * hd - hs * hs) * value - hd * hd * fPrev) /
-      (hs * hd * (hs + hd))
-    val forwardEdge = (fNext - value) / hd   // first row of a stream
-    val backwardEdge = (value - fPrev) / hs  // last row of a stream
-    // degenerate zero spacing (duplicate timestamps) => null, not an ANSI
-    // divide error (the reference fixtures include 1 ns dt cases)
-    when(fPrev.isNull && fNext.isNull, lit(null).cast("double"))
-      .when(fPrev.isNull, when(hd =!= 0.0, forwardEdge))
-      .when(fNext.isNull, when(hs =!= 0.0, backwardEdge))
-      .otherwise(when(hs =!= 0.0 && hd =!= 0.0, central))
-  }
-
-  /** [[gradient]] as a DataFrame transform that materializes the four
-    * base lag/lead columns ONCE. The Column form's when-chain references
-    * fPrev/fNext/tPrev/tNext ~10× total and Spark does not dedupe
-    * identical window expressions, so it evaluates ~10 offset window
-    * functions per row where 4 suffice. lag/lead are O(1) per row —
-    * this is a constant-factor cut, but the gradient runs inside the QC
-    * value pass on every observation (the sf10 century row), where the
-    * window stage is the lifecycle's dominant cost. Identical
-    * arithmetic and null semantics; only the evaluation count drops.
+    *
+    * The four base lag/lead columns are materialized once: the when-chain
+    * references each of them several times, and Spark does not dedupe
+    * identical window expressions, so inlining them would evaluate ~10
+    * offset window functions per row where 4 suffice. The gradient runs
+    * inside the QC value pass on every observation.
     */
   def gradientOnto(df: DataFrame, out: String, value: Column,
                    timeSec: Column, w: WindowSpec): DataFrame = {
@@ -72,8 +46,10 @@ object WindowKernels {
     val hd = tNext - timeSec
     val central = (hs * hs * fNext + (hd * hd - hs * hs) * value - hd * hd * fPrev) /
       (hs * hd * (hs + hd))
-    val forwardEdge = (fNext - value) / hd
-    val backwardEdge = (value - fPrev) / hs
+    val forwardEdge = (fNext - value) / hd   // first row of a stream
+    val backwardEdge = (value - fPrev) / hs  // last row of a stream
+    // degenerate zero spacing (duplicate timestamps) => null, not an ANSI
+    // divide error (the reference fixtures include 1 ns dt cases)
     d.withColumn(out,
         when(fPrev.isNull && fNext.isNull, lit(null).cast("double"))
           .when(fPrev.isNull, when(hd =!= 0.0, forwardEdge))
@@ -106,34 +82,22 @@ object WindowKernels {
     * `tests/test_qc.py:671-679`; pandas `rolling("60min")` is trailing).
     * Frame in exact integer microseconds so the window set matches a
     * DuckDB `RANGE BETWEEN INTERVAL ... PRECEDING AND CURRENT ROW`.
-    */
-  /** @param includeCurrent true = pandas `rolling('60min')` default
+    * Adds column `out`; a zero-variance window gives null.
+    *
+    * The stddev and mean are materialized once: the stddev is both the
+    * zero guard and the divisor, and Spark does not dedupe identical
+    * window expressions, so an inline form would pay three sliding
+    * aggregates per row. With Spark's O(frame-size) recompute per row,
+    * that is the dominant cost on dense streams (the w8 hot-stream bench
+    * line).
+    *
+    * @param includeCurrent true = pandas `rolling('60min')` default
     *   (window includes the row being scored); false = exclude the
     *   current row (`closed='left'`), so a spike cannot inflate its own
     *   window's σ and mask itself. The reference's library behavior on
     *   the 6,000-row outlier fixture is only reproducible with
     *   exclusion (see ZscoreFixtureSpec); its exact artifact handling
     *   at stream starts is [unpinned] — SURVEY §7.4.5.
-    */
-  def zscore(value: Column, epochUs: Column, windowSec: Long,
-             partCols: Seq[String] = Seq(Obs.DatastreamId),
-             includeCurrent: Boolean = true): Column = {
-    val hi = if (includeCurrent) 0L else -1L
-    val w = Window.partitionBy(partCols.map(col): _*).orderBy(epochUs)
-      .rangeBetween(-windowSec * 1000000L, hi)
-    val sd = stddev_samp(value).over(w)
-    // zero-variance window => no opinion (null), and keeps ANSI mode from
-    // raising DIVIDE_BY_ZERO on constant series
-    when(sd =!= 0.0, (value - avg(value).over(w)) / sd)
-  }
-
-  /** [[zscore]] as a DataFrame transform that materializes each window
-    * aggregate ONCE. The Column form necessarily references the stddev
-    * expression twice (guard + divisor) and Spark does not dedupe
-    * identical window expressions, so it pays three sliding aggregates
-    * per row; with Spark's O(frame-size) recompute per row, that is the
-    * dominant cost on dense streams (the w8 hot-stream bench line).
-    * Identical arithmetic and output — only the evaluation count drops.
     */
   def zscoreOnto(df: DataFrame, out: String, value: Column, epochUs: Column,
                  windowSec: Long, partCols: Seq[String] = Seq(Obs.DatastreamId),
@@ -143,6 +107,8 @@ object WindowKernels {
       .rangeBetween(-windowSec * 1000000L, hi)
     df.withColumn("__z_sd", stddev_samp(value).over(w))
       .withColumn("__z_m", avg(value).over(w))
+      // zero-variance window => no opinion (null), and keeps ANSI mode from
+      // raising DIVIDE_BY_ZERO on constant series
       .withColumn(out,
         when(col("__z_sd") =!= 0.0, (value - col("__z_m")) / col("__z_sd")))
       .drop("__z_sd", "__z_m")
@@ -711,36 +677,6 @@ object WindowKernels {
         col("r.n_pairs").as("n_pairs"), col("r.acf_ppm").as("acf_ppm"))
   }
 
-  /** Rolling cross-stream correlation: streams pair as (2k, 2k+1), their
-    * observations align on fixed time buckets (first observation per
-    * bucket, (t, tie)-deterministic), and each aligned pair carries the
-    * signed square of the rolling Pearson correlation over the last
-    * `windowRows` buckets —
-    *
-    *   r²_signed = sign(num) · num² · 10⁶ DIV (denx · deny)
-    *   num = n·Σxy − Σx·Σy, denx = n·Σx² − (Σx)², deny likewise
-    *
-    * — the sqrt-free monotone form of r the assortativity/ACF family
-    * already uses (sign and magnitude of r are fully recoverable;
-    * thresholding r ≥ c ≡ r²_signed ≥ c²). Values quantize micro →
-    * CENTI (DIV 10⁴) before the sums, and every product — per-row x·y
-    * included — runs in DECIMAL(38,0) ≡ HUGEINT, so no intermediate can
-    * overflow 64-bit (which under ANSI errored the query at
-    * |v_centi| ≳ 3.8e8); every division truncates identically in both
-    * engines, so rows replay bit-exactly. Exactness envelope: the
-    * covariance terms need |n·Σxy − Σx·Σy| ≲ 1e16 (window variance, not
-    * raw magnitude — a mean of 10⁹ centi with small spread is exact);
-    * past it both engines raise their 128-bit overflow loudly.
-    *
-    * Scale shape: one row_number window keyed (stream, bucket) for the
-    * per-bucket representative, then the two halves align via ONE
-    * conditional-aggregate pivot on (pair, bucket) — a self-JOIN
-    * formulation measured as two full source scans with the whole rep
-    * subtree duplicated per side (plans don't reuse across differing
-    * parity filters); the pivot reads the source once — and one
-    * pair-keyed window for the six rolling sums. Never a cross-stream
-    * product.
-    */
   /** Hour-of-day seasonal profile + strength per stream — the classic
     * additive decomposition v = level + seasonal(hod) + residual with
     * integer means (level = Σv DIV n; seasonal = per-hour mean − level)
@@ -795,6 +731,36 @@ object WindowKernels {
         (-col("pk.ns")).as("peak_seasonal_micro"))
   }
 
+  /** Rolling cross-stream correlation: streams pair as (2k, 2k+1), their
+    * observations align on fixed time buckets (first observation per
+    * bucket, (t, tie)-deterministic), and each aligned pair carries the
+    * signed square of the rolling Pearson correlation over the last
+    * `windowRows` buckets —
+    *
+    *   r²_signed = sign(num) · num² · 10⁶ DIV (denx · deny)
+    *   num = n·Σxy − Σx·Σy, denx = n·Σx² − (Σx)², deny likewise
+    *
+    * — the sqrt-free monotone form of r the assortativity/ACF family
+    * already uses (sign and magnitude of r are fully recoverable;
+    * thresholding r ≥ c ≡ r²_signed ≥ c²). Values quantize micro →
+    * CENTI (DIV 10⁴) before the sums, and every product — per-row x·y
+    * included — runs in DECIMAL(38,0) ≡ HUGEINT, so no intermediate can
+    * overflow 64-bit (which under ANSI errored the query at
+    * |v_centi| ≳ 3.8e8); every division truncates identically in both
+    * engines, so rows replay bit-exactly. Exactness envelope: the
+    * covariance terms need |n·Σxy − Σx·Σy| ≲ 1e16 (window variance, not
+    * raw magnitude — a mean of 10⁹ centi with small spread is exact);
+    * past it both engines raise their 128-bit overflow loudly.
+    *
+    * Scale shape: one row_number window keyed (stream, bucket) for the
+    * per-bucket representative, then the two halves align via ONE
+    * conditional-aggregate pivot on (pair, bucket) — a self-JOIN
+    * formulation measured as two full source scans with the whole rep
+    * subtree duplicated per side (plans don't reuse across differing
+    * parity filters); the pivot reads the source once — and one
+    * pair-keyed window for the six rolling sums. Never a cross-stream
+    * product.
+    */
   def rollingPairCorr(df: DataFrame, keyCol: String, tsUsCol: String,
                       vMicroCol: String, tieBreakCol: String,
                       bucketUs: Long = 60000000L, windowRows: Int = 8,

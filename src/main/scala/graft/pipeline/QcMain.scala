@@ -161,12 +161,6 @@ object QcMain {
             lit(cfg.gradientBounds._1), lit(cfg.gradientBounds._2)),
           Flags.ProbablyBad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc))
           .mergedInto(col("flag")))
-    // zscoreOnto, not the Column-form zscore: the guard+divisor form
-    // pays THREE O(frame) sliding aggregates per row (Spark does not
-    // dedupe identical window expressions); materializing mean/stddev
-    // once drops that to two with bit-identical arithmetic — on the
-    // sf10 century row this window chain is the lifecycle's dominant
-    // cost (round-14 verdict #5)
     WindowKernels.zscoreOnto(graded, "zscore",
         when(col("flag") <= Flags.ProbablyGood, col(Obs.Result)),
         col("t_us"), cfg.zscoreWindowSec)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Obs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One declared query: the Spark implementation plus (optionally) the
@@ -72,14 +73,14 @@ object Q {
     * integer-rational coordinate synthesis, epoch µs time).
     */
   val ObsCte: String =
-    """obs AS (
+    s"""obs AS (
       |  SELECT event_id AS iot_id,
       |         value AS result,
       |         epoch_us(ts) AS t_us,
       |         user_id AS datastream_id,
       |         event_type AS observation_type,
-      |         ((event_id * 37) % 1000 - 500) / 1000.0 * 0.5 + 51.2 AS lat,
-      |         ((event_id * 53) % 1000 - 500) / 1000.0 * 0.5 + 2.9 AS lon
+      |         ${Obs.synthLatSql("event_id")} AS lat,
+      |         ${Obs.synthLonSql("event_id")} AS lon
       |  FROM events)""".stripMargin
 
   /** Shared SQL fragment: the per-stream QC bounds config (literal

@@ -61,8 +61,6 @@ object QueriesQcEvents {
     // and joined flag_z back on iot_id: a full shuffle join keyed on the
     // highest-cardinality column.) Bad rows get a null z-input → null
     // zscore → onNan = NoQc, contributing nothing to worst-wins.
-    // zscoreOnto = same arithmetic with mean/stddev materialized once
-    // (the Column form pays three O(frame) sliding aggregates per row)
     WindowKernels.zscoreOnto(withGrad, "zscore",
         when(col("flag12") <= Flags.ProbablyGood, col(Obs.Result)),
         col("t_us"), 21600L)
@@ -792,9 +790,9 @@ object QueriesQcEvents {
 
     // W1 — np.gradient parity per stream
     QDef("w1_gradient",
-      (s, dir) => obs(s, dir).select(col(Obs.IotId),
-        round(WindowKernels.gradient(col(Obs.Result),
-          col("t_us").cast("double") / 1e6, wStream), 6).as("gradient")),
+      (s, dir) => WindowKernels.gradientOnto(obs(s, dir), "__g",
+          col(Obs.Result), col("t_us").cast("double") / 1e6, wStream)
+        .select(col(Obs.IotId), round(col("__g"), 6).as("gradient")),
       Some(s"""WITH ${Q.ObsCte}
               |SELECT iot_id, round(${WindowKernels.gradientSql("result", "(t_us / 1000000.0)",
                 "PARTITION BY datastream_id ORDER BY t_us, iot_id")}, 6) + 0.0e0 AS gradient

@@ -110,7 +110,7 @@ object QueriesText {
     s"len(list_filter($rawTokensSql, x -> list_contains($lst, x)))"
   }
 
-  /** quality score (mirrors TextAnalysis.qualityScore / the t_langid_quality
+  /** quality score (mirrors TextAnalysis.qualityScoreOnto / the t_langid_quality
     * oracle's inline form — same four components, same fold).
     */
   private val qualitySql: String = {
@@ -185,8 +185,6 @@ object QueriesText {
     // language id (stopword + char-trigram heuristics) + quality score
     QDef("t_langid_quality",
       (s, dir) => {
-        // the *Onto forms evaluate each per-language count once; the
-        // Column-fold forms re-run the splits/replaces up to 2^langs ×
         val d0 = Q.table(s, dir, "documents")
         val d1 = TextAnalysis.langIdOnto(d0, "lang_id", col("text"))
         val d2 = TextAnalysis.langIdNgramOnto(d1, "lang_id_ngram", col("text"))

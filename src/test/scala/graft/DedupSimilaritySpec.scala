@@ -408,9 +408,34 @@ class DedupSimilaritySpec extends SparkSpec with Matchers {
   }
 
   test("text metrics: token counts and langid are deterministic") {
-    val m = docs.select(TextAnalysis.wsTokenCount($"text").as("n"),
-      TextAnalysis.langId($"text").as("l")).orderBy($"n".desc).collect()
-    assert(m(0).getInt(0) == 9 && m(0).getString(1) == "en")
+    // German, French, a stopword tie (es 2 = en 2: the first language in
+    // sorted order wins), a stopword-free doc the trigrams still place,
+    // and a doc whose stopword ratio stays under the quality clamp
+    val more = Seq(
+      (6L, "der hund und die katze sind nicht hier"),
+      (7L, "les chats et les chiens de la maison"),
+      (8L, "y el gato of the"),
+      (9L, "consulting station"),
+      (10L, "the northern lights shimmer above quiet frozen lakes during long winter nights"))
+      .toDF("doc_id", "text")
+    val withLang = TextAnalysis.langIdOnto(docs.union(more), "l", $"text")
+    val withNgram = TextAnalysis.langIdNgramOnto(withLang, "lg", $"text")
+    val m = TextAnalysis.qualityScoreOnto(withNgram, "q", $"text")
+      .select($"doc_id", TextAnalysis.wsTokenCount($"text").as("n"), $"l", $"lg", $"q")
+      .orderBy($"doc_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3), r.getDouble(4)))
+    // (doc, tokens, stopword lang, trigram lang, quality)
+    m.toSeq shouldBe Seq(
+      (1L, 9, "en", "en", 0.953488),
+      (2L, 9, "en", "en", 0.948864),
+      (3L, 9, "en", "en", 0.955556),
+      (4L, 8, "en", "en", 0.968182),
+      (5L, 1, "und", "und", 0.5),
+      (6L, 8, "de", "de", 0.703947),
+      (7L, 8, "fr", "fr", 0.701389),
+      (8L, 5, "en", "en", 0.9375),
+      (9L, 2, "und", "en", 0.486111),
+      (10L, 12, "en", "en", 0.923077))
   }
 
   test("winnow overlap pairs: wholesale containment found where jaccard fails") {

@@ -25,16 +25,14 @@ class PartitioningSpec extends SparkSpec {
     val df = (0 until 500).map(i => (i.toLong, i * 10000000L, math.sin(i / 10.0) * 50))
       .toDF("id", "t_us", "v")
     val wFull = Window.partitionBy(lit(1)).orderBy($"t_us")
-    val expected = df
-      .withColumn("g", WindowKernels.gradient($"v", $"t_us".cast("double") / 1e6, wFull))
+    val expected = WindowKernels.gradientOnto(df, "g", $"v", $"t_us".cast("double") / 1e6, wFull)
       .select($"id", $"g").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
     // chunk into 60 s pieces with 20 s overlap: gradient needs 1 neighbor
     // row of context on each side; 20 s covers 2 cadence steps
     val chunked = Partitioning.chunkWithOverlap(df, $"t_us", 60000000L, 20000000L)
     val wChunk = Window.partitionBy($"__chunk").orderBy($"t_us")
-    val got = chunked
-      .withColumn("g", WindowKernels.gradient($"v", $"t_us".cast("double") / 1e6, wChunk))
+    val got = WindowKernels.gradientOnto(chunked, "g", $"v", $"t_us".cast("double") / 1e6, wChunk)
       .filter(!$"is_context") // context rows exist only to feed lag/lead
       .select($"id", $"g").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
@@ -54,14 +52,13 @@ class PartitioningSpec extends SparkSpec {
       .withColumn("t_us", unix_micros(col(Obs.Time)))
       .withColumn("skew_id",
         when(col(Obs.DatastreamId) % 2 === 0, lit(-1L)).otherwise(col(Obs.DatastreamId)))
-    val plain = o.withColumn("z",
-      WindowKernels.zscore(col(Obs.Result), $"t_us", 21600L, partCols = Seq("skew_id")))
+    val plain = WindowKernels.zscoreOnto(o, "z", col(Obs.Result), $"t_us", 21600L,
+        partCols = Seq("skew_id"))
       .select(col(Obs.IotId), $"z").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
     val chunked = Partitioning.chunkWithOverlap(o, $"t_us", 43200000000L, 21600000000L)
-    val got = chunked.withColumn("z",
-      WindowKernels.zscore(col(Obs.Result), $"t_us", 21600L,
-        partCols = Seq("skew_id", "__chunk")))
+    val got = WindowKernels.zscoreOnto(chunked, "z", col(Obs.Result), $"t_us", 21600L,
+        partCols = Seq("skew_id", "__chunk"))
       .filter(!$"is_context").select(col(Obs.IotId), $"z").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
     assert(got.size == plain.size)

@@ -18,7 +18,7 @@ class WindowKernelsSpec extends SparkSpec with Matchers {
 
   private def gradOf(t: Seq[Double], f: Seq[Double]): Seq[Double] = {
     val df = t.zip(f).map { case (ti, fi) => (1L, ti, fi) }.toDF("ds", "t", "f")
-    df.withColumn("g", WindowKernels.gradient($"f", $"t", w))
+    WindowKernels.gradientOnto(df, "g", $"f", $"t", w)
       .orderBy($"t").select($"g").collect().map(_.getDouble(0)).toSeq
   }
 
@@ -41,8 +41,8 @@ class WindowKernelsSpec extends SparkSpec with Matchers {
   }
 
   test("gradient: single-row stream => null") {
-    val df = Seq((1L, 0.0, 5.0)).toDF("ds", "t", "f")
-      .withColumn("g", WindowKernels.gradient($"f", $"t", w))
+    val df = WindowKernels.gradientOnto(
+      Seq((1L, 0.0, 5.0)).toDF("ds", "t", "f"), "g", $"f", $"t", w)
     assert(df.collect()(0).isNullAt(3))
   }
 
@@ -52,8 +52,9 @@ class WindowKernelsSpec extends SparkSpec with Matchers {
     val v = Seq(10.0, 12.0, 14.0, 100.0)
     val df = tUs.zip(v).map { case (t, x) => (1L, t, x) }
       .toDF(Obs.DatastreamId, "t_us", "x")
-    val got = df.select(WindowKernels.zscore($"x", $"t_us", 1800L).as("z"))
-      .collect().map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
+    val got = WindowKernels.zscoreOnto(df, "z", $"x", $"t_us", 1800L)
+      .orderBy($"t_us").select($"z").collect()
+      .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
     // row0: single row => stddev null => NaN/null
     assert(got(0).isNaN)
     // row1: mean 11, sd sqrt(2) => (12-11)/1.414..
@@ -423,25 +424,33 @@ class WindowKernelsSpec extends SparkSpec with Matchers {
     assert(got(3L).exists(t => t._2 > 10 * 6), "negative side accumulates")
   }
 
-  test("gradientOnto: bit-identical to the Column form on irregular multi-stream data") {
-    // two streams, non-uniform dt, duplicate timestamps (degenerate
-    // spacing => null), single-row stream, and null-value rows — every
-    // branch of the when-chain
+  test("gradientOnto: np.gradient on irregular streams, null on zero dt") {
+    // four streams: non-uniform dt, duplicate timestamps (degenerate
+    // spacing => null) in the interior and at both edges, a NaN value,
+    // and a single-row stream — every branch of the when-chain. Ordered
+    // by (t, f) so the duplicate-timestamp rows have a fixed order.
+    // Expected: NumPy 1.26 `np.gradient(f, t)` over each row's neighbours.
     val rows = Seq(
       (1L, 0.0, 2.0), (1L, 1.0, 3.5), (1L, 3.0, 1.0), (1L, 3.0, 4.0),
       (1L, 4.5, -2.0), (1L, 9.0, 0.5),
       (2L, 0.0, 1.0), (2L, 2.0, Double.NaN), (2L, 5.0, 9.0),
-      (3L, 7.0, 42.0))
-    val df = rows.toDF("ds", "t", "f")
-    val a = df.withColumn("g", WindowKernels.gradient($"f", $"t", w))
-      .select($"ds", $"t", $"f", $"g")
-    val b = WindowKernels.gradientOnto(df, "g", $"f", $"t", w)
-      .select($"ds", $"t", $"f", $"g")
-    def canon(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => (r.getLong(0), r.getDouble(1),
-        if (r.isNullAt(3)) "null"
-        else java.lang.Double.doubleToLongBits(r.getDouble(3)).toString))
-        .sortBy(x => (x._1, x._2)).toSeq
-    canon(a) shouldBe canon(b)
+      (3L, 7.0, 42.0),
+      (4L, 0.0, 1.0), (4L, 0.0, 2.0))
+    val wTf = Window.partitionBy($"ds").orderBy($"t", $"f")
+    val got = WindowKernels.gradientOnto(rows.toDF("ds", "t", "f"), "g", $"f", $"t", wTf)
+      .orderBy($"ds", $"t", $"f").select($"g").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+    val expected: Seq[Option[Double]] = Seq(
+      Some(1.5), Some(0.5833333333333334), None, None,  // forward edge, central, hd = 0, hs = 0
+      Some(-2.861111111111111), Some(0.5555555555555556), // central, backward edge
+      Some(Double.NaN), Some(Double.NaN), Some(Double.NaN), // NaN propagates
+      None,                                               // single-row stream
+      None, None)                                         // zero spacing at both edges
+    got.size shouldBe expected.size
+    got.zip(expected).foreach {
+      case (Some(g), Some(e)) if e.isNaN => assert(g.isNaN, s"$g vs NaN")
+      case (Some(g), Some(e)) => g shouldBe e +- 1e-12
+      case (g, e) => g shouldBe e
+    }
   }
 }

@@ -43,9 +43,9 @@ class ZscoreFixtureSpec extends SparkSpec {
         StructField("feature_id", LongType))))
       .csv(fixture)
     assert(df.count() == 6000)
-    val z = df.withColumn("t_us", unix_micros(col("phenomenonTime")))
-      .withColumn("zscore", WindowKernels.zscore(col("result"), col("t_us"), 3600L,
-        includeCurrent = false))
+    val withUs = df.withColumn("t_us", unix_micros(col("phenomenonTime")))
+    val z = WindowKernels.zscoreOnto(withUs, "zscore", col("result"), col("t_us"), 3600L,
+      includeCurrent = false)
     val outliers = z.filter(
         coalesce(QcCheck.outOfRange(col("zscore"), lit(-25.0), lit(25.0)), lit(false)))
       .select(col("iot_id"), col("result"), col("datastream_id"))
@@ -60,8 +60,7 @@ class ZscoreFixtureSpec extends SparkSpec {
     // pandas-default inclusive windows mask the spikes (only the extreme
     // one survives its own σ inflation) — documents why the default
     // matters for outlier hunting
-    val inclusive = df.withColumn("t_us", unix_micros(col("phenomenonTime")))
-      .withColumn("zscore", WindowKernels.zscore(col("result"), col("t_us"), 3600L))
+    val inclusive = WindowKernels.zscoreOnto(withUs, "zscore", col("result"), col("t_us"), 3600L)
       .filter(coalesce(QcCheck.outOfRange(col("zscore"), lit(-25.0), lit(25.0)), lit(false)))
     assert(inclusive.count() == 1)
 
