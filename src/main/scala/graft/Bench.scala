@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.ExecMetrics
+import graft.core.Util.jsonString
 
 /** Headline timing line for the driver. NOTE on index-backed queries:
   * per-query MIN over reps means rep 1 absorbs any persisted-index
@@ -16,36 +17,12 @@ object Bench {
     // whole suite N times and report per-query MIN (the load-robust
     // estimate of the code's actual cost) plus every rep's total
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    // The bench contract is ONE parseable stdout line; everything a WARN
-    // logger dumps to stderr (WindowExec multi-KB plan trees, codegen
-    // fallbacks, AQE re-plans) fights the driver's ~2 KB tail capture.
-    // Targeted logger silencing survived five rounds of whack-a-mole
-    // (r12's tail still opened mid-window-plan), so take the verdict's
-    // blunt instrument: root logger to ERROR for the whole bench JVM,
-    // set BEFORE the session exists so no startup WARN escapes either.
-    org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-      org.apache.logging.log4j.Level.ERROR)
+    // Logging: the stdout contract is one parseable JSON line, so every
+    // logger that would flood stderr is set in tools/log4j2-quiet.properties,
+    // which `sbt runMain` and tools/bench_java.sh load
     val spark = graft.core.Sessions.local()
-    spark.sparkContext.setLogLevel("ERROR")
-    // root=ERROR still lets ONE multi-KB dump through: CodeGenerator
-    // logs the whole generated source + janino stack at ERROR when a
-    // wholestage method exceeds the JVM's 64 KB limit (the deep Horner
-    // geodesic chain in the kinematics plans does this; Spark falls
-    // back to interpreted execution for that stage — documented,
-    // correctness-neutral). That dump IS the tail noise that kept
-    // BENCH unparseable for five rounds; silence the logger for the
-    // bench session, the fallback behavior itself is unchanged.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
-      org.apache.logging.log4j.Level.OFF)
-    // The inter-query System.gc() (below) triggers ContextCleaner async
-    // block removal, and BlockManager logs removal races AT ERROR — a
-    // multi-KB stack trace per occurrence (the exact head of the r13
-    // tail capture). Cleanup failures on a noop-sink bench are benign:
-    // the blocks are already unreferenced. OFF for the bench session.
-    Seq("org.apache.spark.storage", "org.apache.spark.ContextCleaner")
-      .foreach(l => org.apache.logging.log4j.core.config.Configurator
-        .setLevel(l, org.apache.logging.log4j.Level.OFF))
+    // per-query execution counts and slowest stages, for bench_full.json
+    val metrics = ExecMetrics.install(spark.sparkContext)
     // warm the JVM (JIT, class loading), the scheduler and the code
     // generator itself so the first measured query isn't charged for
     // them. The classes compiled here are not the queries' own: each
@@ -85,12 +62,19 @@ object Bench {
     // per query: all successful rep times + the last error (if any rep failed)
     val times = scala.collection.mutable.Map[String, List[Double]]()
       .withDefaultValue(Nil)
-    // per query: generated classes compiled in each rep, latest first
-    val compiles = scala.collection.mutable.Map[String, List[Long]]()
+    // per query, latest rep first, as JSON: generated classes compiled,
+    // execution counts, and persisted RDDs the inter-query sweep found
+    def perRep() = scala.collection.mutable.Map[String, List[String]]()
       .withDefaultValue(Nil)
+    val (compiles, execs, swept) = (perRep(), perRep(), perRep())
+    // per query: the slowest stages of its last rep, as a JSON array
+    val slowest = scala.collection.mutable.Map[String, String]()
     val errs = scala.collection.mutable.Map[String, String]()
     val totals = (1 to reps).map { _ =>
       val repResults = names.map { name =>
+        // both reads wait for the listener bus, outside the timed part
+        metrics.takeStages()
+        val e0 = metrics.snapshot()
         val t0 = System.nanoTime()
         val c0 = graft.core.Sessions.codegenCompiles
         // noop sink: forces FULL materialization of every output column —
@@ -103,14 +87,19 @@ object Bench {
           } catch { case e: Throwable =>
             Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}") }
         val dt = (System.nanoTime() - t0) / 1e9
-        compiles(name) = (graft.core.Sessions.codegenCompiles - c0) :: compiles(name)
+        compiles(name) = (graft.core.Sessions.codegenCompiles - c0).toString :: compiles(name)
+        execs(name) = (metrics.snapshot() - e0).json :: execs(name)
+        slowest(name) = metrics.takeStages().sortBy(-_.wallMs).take(5)
+          .map(_.json).mkString("[", ",", "]")
         spark.catalog.clearCache() // operators cache internal frames; drop between queries
         // backstop for RDD-level persists clearCache can't see (the
         // final checkpoint an iterative op returns stays leased to its
         // caller by design — here the caller is done with it): between
-        // queries nothing is mid-flight, so sweep them all
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // queries nothing is mid-flight, so sweep them all, counting
+        // what the sweep finds
+        val persisted = spark.sparkContext.getPersistentRDDs.values
+        swept(name) = persisted.size.toString :: swept(name)
+        persisted.foreach(_.unpersist(blocking = false))
         // Spark's ContextCleaner reclaims broadcast/shuffle/RDD state only
         // when the driver-side references are GC'd — and a 48 g heap can
         // run a 200-query suite without a single full GC, so cleaner work
@@ -118,8 +107,7 @@ object Bench {
         // pressure (measured: t_kappa 1.05 s standalone vs 10.92 s as
         // query ~170 of a REPS=1 suite). One explicit GC between queries
         // keeps per-query times faithful to their standalone cost.
-        // Opt-out: SPARK_GRAFT_BENCH_NOGC=1.
-        if (!sys.env.contains("SPARK_GRAFT_BENCH_NOGC")) System.gc()
+        System.gc()
         err match {
           case None => times(name) = dt :: times(name)
           case Some(e) => errs(name) = e
@@ -146,16 +134,10 @@ object Bench {
       val v = times(n) match { case Nil => -1.0; case ts => ts.min }
       s"\"" + n + "\":" + f3(v)
     }.mkString("{", ",", "}")
-    // full JSON string escaping (AnalysisException messages span lines —
+    // errors are escaped in full (AnalysisException messages span lines —
     // a raw \n would break the one-line metric contract)
-    def jstr(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val errJson = errs.toSeq.sortBy(_._1)
-      .map { case (k, e) => s"\"" + k + "\":\"" + jstr(e) + "\"" }
+      .map { case (k, e) => jsonString(k) + ":" + jsonString(e) }
       .mkString("{", ",", "}")
     val totalsJson = totals.map(f3).mkString("[", ",", "]")
     // headline value = the best complete run; per-query mins may come
@@ -170,12 +152,16 @@ object Bench {
     // map; the file JSON keeps the full forms
     val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
     val full = s"""{"metric":"total","value":${f3(totals.min)},"unit":"sec","reps":$reps,"totals":$totalsJson,"queries":$qs,"errors":$errJson,"sf":"$sfDir","out":"$outFile"}"""
-    // the file alone also carries each query's codegen compiles per rep
+    // the file alone also carries, per query, each rep's codegen compiles,
+    // execution counts and swept RDDs, and the last rep's slowest stages
     // (the full stdout line below keeps its shape)
-    val compilesJson = names.map { n =>
-      s"\"" + n + "\":" + compiles(n).reverse.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val fileJson = full.dropRight(1) + s""","codegen_compiles":$compilesJson}"""
+    def perQuery(v: String => String): String =
+      names.map(n => jsonString(n) + ":" + v(n)).mkString("{", ",", "}")
+    def everyRep(m: String => List[String]): String =
+      perQuery(n => m(n).reverse.mkString("[", ",", "]"))
+    val fileJson = full.dropRight(1) +
+      s""","codegen_compiles":${everyRep(compiles)},"exec":${everyRep(execs)}""" +
+      s""","slowest_stages":${perQuery(slowest)},"swept_rdds":${everyRep(swept)}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       fileJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Exception =>
@@ -197,7 +183,7 @@ object Bench {
     val errPart = errs.toSeq.sortBy(_._1).headOption match {
       case None => ""
       case Some((k, e)) =>
-        s""","first_error":{"${jstr(k)}":"${jstr(e.take(200))}"}"""
+        s""","first_error":{${jsonString(k)}:${jsonString(e.take(200))}}"""
     }
     println(s"""{"metric":"total","value":${f3(totals.min)},"unit":"sec","nqueries":${names.size},"nerrors":${errs.size}$errPart,"sf":"$sfShort","out":"$outFile"}""")
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Obs
+import graft.core.{ExecMetrics, Obs}
 import graft.ops.Geo
 import graft.pipeline.QcMain
 import org.apache.spark.sql.functions._
@@ -20,16 +20,15 @@ object QcLifecycle {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outFile = if (args.length > 1) args(1) else "qc_lifecycle.json"
-    org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-      org.apache.logging.log4j.Level.ERROR)
     val spark = graft.core.Sessions.local()
-    spark.sparkContext.setLogLevel("ERROR")
+    val metrics = ExecMetrics.install(spark.sparkContext)
 
     val obsIn = Obs.eventsAsObservations(spark, sfDir)
     val cfg = configFor(obsIn)
 
     val patchDir = java.nio.file.Files
       .createTempDirectory("graft_qc_patch_").toString
+    val e0 = metrics.snapshot()
     val t0 = System.nanoTime()
     val c0 = graft.core.Sessions.codegenCompiles
     val (flagged, ph) = QcMain.runFrom(spark, obsIn, cfg,
@@ -38,6 +37,8 @@ object QcLifecycle {
     val wallSec = (System.nanoTime() - t0) / 1e9
     // generated classes the run compiled (a static counter: no job)
     val codegenCompiles = graft.core.Sessions.codegenCompiles - c0
+    // jobs, stages, tasks, shuffle, spill and executor time of the run
+    val exec = metrics.snapshot() - e0
     val hist = flagged.groupBy(col("flag")).count().collect()
       .map(r => s""""${r.getByte(0)}":${r.getLong(1)}""").sorted
       .mkString("{", ",", "}")
@@ -54,6 +55,7 @@ object QcLifecycle {
       s""""patch_sec":${f2(ph.patchSec)},""" +
       s""""total_sec":${f2(ph.totalSec)},""" +
       s""""wall_sec":${f2(wallSec)},"codegen_compiles":$codegenCompiles,""" +
+      s""""exec":${exec.json},""" +
       s""""flag_hist":$hist}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json)
     println(json)
@@ -62,10 +64,10 @@ object QcLifecycle {
   /** The lifecycle's standard config: per-stream config over every
     * stream present — the shape the reference's ~60-datastream
     * config.yaml takes, derived here so the same command works at any
-    * SF. Shared with [[graft.tools.QcProfile]] so stage attribution
-    * profiles exactly the benched chain.
+    * SF. perfbench's `Harness.qcLayers` times the cumulative stage
+    * prefixes of [[QcMain]] over its own windows.
     */
-  def configFor(obsIn: org.apache.spark.sql.DataFrame): QcMain.Config = {
+  private def configFor(obsIn: org.apache.spark.sql.DataFrame): QcMain.Config = {
     val ids = obsIn.select(col(Obs.DatastreamId)).distinct()
       .collect().map(_.getLong(0)).sorted
     QcMain.Config(

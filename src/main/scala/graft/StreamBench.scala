@@ -28,10 +28,7 @@ object StreamBench {
     val sfDir = if (args.length > 0) args(0) else "/tmp/graft_sf1b"
     val nBatches = if (args.length > 1) args(1).toInt else 20
     val outFile = if (args.length > 2) args(2) else "stream_bench.json"
-    org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-      org.apache.logging.log4j.Level.ERROR)
     val spark = Sessions.local()
-    spark.sparkContext.setLogLevel("ERROR")
     Sessions.useRocksDbStateStore(spark)
     import spark.implicits._
 

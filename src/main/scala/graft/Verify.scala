@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.Util.jsonString
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -18,23 +19,11 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = graft.core.Sessions.local()
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // swap-aware oracle selection: above DeclaredBruteSwap the five
     // geometry-swapping queries emit their IVF-PQ-serve oracle, so a
     // scaled run can't report false mismatches against the brute form
     val oracleJson = SparkEntry.oracleSqlFor(spark, sfDir)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
 
     val manifestPath = Paths.get(s"$outDir/verify_manifest.jsonl")
@@ -56,10 +45,10 @@ object Verify {
         // not the in-memory frame — catches writer-side type surprises
         val fp = graft.core.Canon.fingerprint(spark.read.parquet(s"$outDir/$name"))
         val dt = (System.nanoTime() - t0) / 1e9
-        record(s"""{"name":${q(name)},"rows":${fp.rows},"schema":${q(fp.schema)},"fp":"${fp.fp}","sec":${"%.2f".format(dt)}}""")
+        record(s"""{"name":${jsonString(name)},"rows":${fp.rows},"schema":${jsonString(fp.schema)},"fp":"${fp.fp}","sec":${"%.2f".format(dt)}}""")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        record(s"""{"name":${q(name)},"error":${q(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}")}}""")
+        record(s"""{"name":${jsonString(name)},"error":${jsonString(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}")}}""")
       }
     }
     // Optional intra-suite parallelism (Spark schedules concurrent jobs

@@ -99,9 +99,10 @@ object Sessions {
     *     bookkeeping from the hot put path (observability trade,
     *     recoverable from state-store files offline).
     *
-    * Measured by [[graft.tools.ProfileStreamDedup]]; the resulting
-    * sf10 row lives in BASELINE.md. Trigger SIZE is the other half of
-    * the budget — see [[graft.streaming.StreamingDedup.minBatchRows]].
+    * Chosen by a four-lever sweep at sf10 recorded in BASELINE.md;
+    * [[graft.StreamBench]]'s `dedup_tuned` row re-measures it with
+    * survivor parity. Trigger SIZE is the other half of the budget —
+    * see [[graft.streaming.StreamingDedup.minBatchRows]].
     */
   def tuneStatefulIngest(spark: SparkSession, stateParts: Int): Unit = {
     spark.conf.set("spark.sql.shuffle.partitions", stateParts)
@@ -110,9 +111,6 @@ object Sessions {
       "trackTotalNumberOfRows", "false")
   }
 
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
-    val s = builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession =
+    builder(s"local[$cpus]", cpus.toInt).getOrCreate()
 }

@@ -51,8 +51,8 @@ object StreamingDedup {
     * commit. Inverting for a target rate `tau` < R gives the MINIMUM
     * batch size, and dividing by the ingest rate gives the trigger
     * interval to configure. The reference point for C and R at sf10
-    * lives in BASELINE.md's streaming rows (measured by
-    * [[graft.tools.ProfileStreamDedup]]).
+    * lives in BASELINE.md's streaming rows (re-measured by
+    * [[graft.StreamBench]]'s `dedup_tuned` row).
     */
   def minBatchRows(coreRowsPerSec: Double, commitSec: Double,
                    targetRowsPerSec: Double): Long = {

@@ -26,10 +26,7 @@ object IndexBuildCost {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-      org.apache.logging.log4j.Level.ERROR)
     val spark = Sessions.local()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val tmp = java.nio.file.Files.createTempDirectory("graft_ixcost_").toString
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

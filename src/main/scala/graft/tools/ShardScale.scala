@@ -19,15 +19,7 @@ object ShardScale {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ShardScale <sfDir> <nShards> <ixDir>")
     val (sfDir, nShards, ix) = (args(0), args(1).toInt, args(2))
-    org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-      org.apache.logging.log4j.Level.ERROR)
     val spark = graft.core.Sessions.local()
-    spark.sparkContext.setLogLevel("ERROR")
-    // same one-line-stdout contract as Bench: the 64 KB-method codegen
-    // fallback dump is the only multi-KB emitter left at root=ERROR
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
-      org.apache.logging.log4j.Level.OFF)
     def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
     def f3(v: Double): String = "%.3f".format(v)
 

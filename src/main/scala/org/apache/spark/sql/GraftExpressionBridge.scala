@@ -1,15 +1,28 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge between user-facing [[Column]]s and Catalyst [[Expression]]s.
-  * Spark 4's classic API gates both directions behind `private[sql]`
+import scala.reflect.ClassTag
+
+/** Bridge to the Spark internals graft needs, which Spark keeps
+  * package-private. Spark 4's classic API gates Column ↔ Catalyst
+  * [[Expression]] conversion behind `private[sql]`
   * (`classic.ExpressionUtils`); graft's custom native expressions
-  * (e.g. `graft.functions.LshBucketExpr`) need them to participate in
-  * the DataFrame API. Standard extension-library technique: a tiny
-  * same-package shim, no behavior of its own.
+  * (e.g. `graft.functions.LshBucketExpr`) need both directions to
+  * participate in the DataFrame API. The listener bus is
+  * `private[spark]`; `graft.core.ExecMetrics` finds its listener on it
+  * and waits for it to drain. Standard extension-library technique: a
+  * tiny same-package shim, no behavior of its own.
   */
 object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Waits until every listener has seen every event posted so far. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  def listenersOf[T <: SparkListenerInterface : ClassTag](sc: SparkContext): Seq[T] =
+    sc.listenerBus.findListenersByClass[T]()
 }

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Round-end gate: the same four signals every round, one PASS/FAIL line.
+# Round-end gate: the same five signals every round, one PASS/FAIL line.
 #
 #   bash tools/round_gate.sh [sfDir] [outDir]
 #
@@ -7,10 +7,13 @@
 #   1. correctness — graft.Verify at sfDir + tools/compare.py (strict
 #      exact-value DuckDB compare) AND tools/manifest_check.py (the
 #      fingerprint reconstruction path the driver can fall back to)
-#   2. tests       — sbt test (full ScalaTest suite)
-#   3. perfbench   — cd perfbench && sbt test: compiles the benchmark
+#   2. bench smoke — graft.Bench on w2_zscore, 1 rep, at sfDir: the last
+#      stdout line parses as JSON and bench_full.json's
+#      exec.w2_zscore[0].jobs > 0 (the execution-metrics listener ran)
+#   3. tests       — sbt test (full ScalaTest suite)
+#   4. perfbench   — cd perfbench && sbt test: compiles the benchmark
 #      against the current program APIs and runs its specs
-#   4. scale gate  — tools/ratio_table.py --gate against the recorded
+#   5. scale gate  — tools/ratio_table.py --gate against the recorded
 #      decade base, IF a fresh scaled-run artifact is supplied via
 #      GATE_SCALED_JSON (skipped otherwise: the decade sweep is hours,
 #      not a per-commit cost)
@@ -24,7 +27,7 @@ cd "$(dirname "$0")/.."
 declare -a RESULTS=()
 fail=0
 
-echo "[round_gate] 1/4 correctness: Verify @ $SF_DIR -> $OUT_DIR"
+echo "[round_gate] 1/5 correctness: Verify @ $SF_DIR -> $OUT_DIR"
 if sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" > /tmp/round_gate_verify.log 2>&1 \
    && python3 tools/compare.py "$SF_DIR" "$OUT_DIR" > /tmp/round_gate_compare.log 2>&1 \
    && python3 tools/manifest_check.py "$SF_DIR" "$OUT_DIR" > /tmp/round_gate_manifest.log 2>&1; then
@@ -34,7 +37,29 @@ else
   fail=1
 fi
 
-echo "[round_gate] 2/4 tests: sbt test"
+echo "[round_gate] 2/5 bench smoke: Bench w2_zscore, 1 rep @ $SF_DIR"
+SMOKE_OUT=/tmp/round_gate_bench_full.json
+rm -f "$SMOKE_OUT"
+if SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_BENCH_ONLY=w2_zscore \
+     SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_BENCH_OUT="$SMOKE_OUT" \
+     sbt -batch "runMain graft.Bench" > /tmp/round_gate_bench.log 2>/tmp/round_gate_bench.err \
+   && python3 - "$SMOKE_OUT" /tmp/round_gate_bench.log > /tmp/round_gate_bench_check.log 2>&1 <<'EOF'
+import json, sys
+full = json.load(open(sys.argv[1]))
+lines = [l for l in open(sys.argv[2]).read().splitlines() if l.strip()]
+json.loads(lines[-1])
+jobs = full["exec"]["w2_zscore"][0]["jobs"]
+assert jobs > 0, f"exec.w2_zscore[0].jobs = {jobs}"
+print(f"w2_zscore jobs={jobs}")
+EOF
+then
+  RESULTS+=("bench=PASS($(tail -1 /tmp/round_gate_bench_check.log | tr -d '\n'))")
+else
+  RESULTS+=("bench=FAIL(see /tmp/round_gate_bench{,_check}.log)")
+  fail=1
+fi
+
+echo "[round_gate] 3/5 tests: sbt test"
 if sbt -batch test > /tmp/round_gate_test.log 2>&1; then
   RESULTS+=("tests=PASS($(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_gate_test.log | tail -1))")
 else
@@ -42,7 +67,7 @@ else
   fail=1
 fi
 
-echo "[round_gate] 3/4 perfbench: cd perfbench && sbt test"
+echo "[round_gate] 4/5 perfbench: cd perfbench && sbt test"
 if (cd perfbench && sbt -batch test) > /tmp/round_gate_perfbench.log 2>&1; then
   RESULTS+=("perfbench=PASS($(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_gate_perfbench.log | tail -1))")
 else
@@ -51,7 +76,7 @@ else
 fi
 
 if [ -n "${GATE_SCALED_JSON:-}" ]; then
-  echo "[round_gate] 4/4 scale gate: ratio drift vs recorded decade base"
+  echo "[round_gate] 5/5 scale gate: ratio drift vs recorded decade base"
   BASE="${GATE_BASE_JSON:-bench_artifacts_r14/bench_full_sf01_swept.json}"
   REF="${GATE_REF_JSON:-bench_artifacts_r14/b_sf1_r14_swept.json}"
   if python3 tools/ratio_table.py --gate "$BASE" "$REF" "$GATE_SCALED_JSON" \
