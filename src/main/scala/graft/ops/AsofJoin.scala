@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Flags
+import graft.core.{Flags, Frames}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,49 +48,52 @@ object AsofJoin {
     require(toleranceUs > 0, "tolerance must be positive")
 
     // unique, DETERMINISTIC row tag so duplicate left rows survive the
-    // candidate dedup (and stage retries reproduce identical tags)
-    val lTagged = leftIdCol match {
-      case Some(id) => left.withColumn("__lid", col(id))
+    // candidate dedup (and stage retries reproduce identical tags); each
+    // left row explodes to its three candidate buckets in the same
+    // projection
+    val bucket = floor(col(leftTimeUs) / toleranceUs).cast("long")
+    val lCandidates = explode(array(Seq(-1L, 0L, 1L).map(lit(_) + bucket): _*))
+    val lBucketed = leftIdCol match {
+      case Some(id) =>
+        Frames.withColumns(left, Seq("__lid" -> col(id), "__bucket" -> lCandidates))
       case None =>
         // no natural id: tag = all columns + an index among exact
         // duplicates (identical rows are interchangeable, so the
         // duplicate numbering being permutation-unstable is harmless)
         val allCols = left.columns.map(col)
-        left.withColumn("__dup_rn",
+        val numbered = left.withColumn("__dup_rn",
           row_number().over(Window.partitionBy(allCols: _*).orderBy(lit(1))))
-          .withColumn("__lid", struct(allCols :+ col("__dup_rn"): _*))
-          .drop("__dup_rn")
+        Frames.withColumns(numbered, Seq(
+            "__lid" -> struct(allCols :+ col("__dup_rn"): _*),
+            "__bucket" -> lCandidates),
+          drop = Seq("__dup_rn"))
     }
-    val lBucketed = lTagged
-      .withColumn("__boff", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .withColumn("__bucket",
-        col("__boff") + floor(col(leftTimeUs) / toleranceUs).cast("long"))
-      .drop("__boff")
     // the right time column is always carried (bucketing + tiebreak need
     // it), even when the caller doesn't ask for it in rightCols
     val carried = (rightCols :+ rightTimeUs).distinct
-    val rRenamed = carried.foldLeft(right) { (d, c) =>
-      d.withColumnRenamed(c, s"$rightPrefix$c")
-    }.withColumn("__bucket", floor(col(s"$rightPrefix$rightTimeUs") / toleranceUs).cast("long"))
+    val rTime = col(s"$rightPrefix$rightTimeUs")
+    val rRenamed = right
+      .withColumnsRenamed(carried.map(c => c -> s"$rightPrefix$c").toMap)
+      .withColumn("__bucket", floor(rTime / toleranceUs).cast("long"))
 
-    val joined = lBucketed.join(rRenamed, keys :+ "__bucket", "left")
-      .withColumn("__dt", abs(col(leftTimeUs) - col(s"$rightPrefix$rightTimeUs")))
-      .withColumn("__ok", col("__dt") <= toleranceUs)
+    val dt = abs(col(leftTimeUs) - rTime)
+    val joined = Frames.withColumns(lBucketed.join(rRenamed, keys :+ "__bucket", "left"),
+      Seq("__dt" -> dt, "__ok" -> (dt <= toleranceUs)))
 
     // keep, per left row, the best in-tolerance candidate (or none)
     val tieBreak: Seq[Column] =
       Seq(when(coalesce(col("__ok"), lit(false)), lit(0)).otherwise(lit(1)), // in-tolerance first
-        col("__dt"), col(s"$rightPrefix$rightTimeUs")) ++
+        col("__dt"), rTime) ++
         rightIdCol.map(c => col(s"$rightPrefix$c")).toSeq
     val w = Window.partitionBy(col("__lid"))
       .orderBy(tieBreak.map(_.asc_nulls_last): _*)
+    val matched = col("__ok") === true
     joined.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .withColumn("__matched", col("__ok") === true)
       // null out right columns of out-of-tolerance best candidates
       .select(left.columns.map(col) ++
-        rightCols.map(c => when(col("__matched"), col(s"$rightPrefix$c")).as(s"$rightPrefix$c")) :+
-        coalesce(col("__matched"), lit(false)).as("asof_matched"): _*)
+        rightCols.map(c => when(matched, col(s"$rightPrefix$c")).as(s"$rightPrefix$c")) :+
+        coalesce(matched, lit(false)).as("asof_matched"): _*)
   }
 
   /** J2 — dependent-quantity flag propagation: copy the independent's flag

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Flags, Obs}
+import graft.core.{Flags, Frames, Obs}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,11 +44,13 @@ object SpatialOutlier {
         (lo + hi) / 2.0
       } else percentile_approx(c, lit(0.5), lit(10000)).over(w)
     val maxDistM = maxDxDt * windowSec
-    df.withColumn("median_lat", med(lat))
-      .withColumn("median_lon", med(lon))
-      .withColumn("dist_to_median_m",
-        Geo.haversineM(lat, lon, col("median_lat"), col("median_lon")))
-      .withColumn("is_spatial_outlier", col("dist_to_median_m") > maxDistM)
+    val medians = Frames.withColumns(df, Seq("median_lat" -> med(lat), "median_lon" -> med(lon)))
+    // the verdict repeats the distance expression rather than reading its
+    // column: one projection instead of two, the same value
+    val dist = Geo.haversineM(lat, lon, col("median_lat"), col("median_lon"))
+    Frames.withColumns(medians, Seq(
+      "dist_to_median_m" -> dist,
+      "is_spatial_outlier" -> (dist > maxDistM)))
   }
 
   def asCheck(): QcCheck =

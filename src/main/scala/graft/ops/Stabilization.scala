@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Flags, Obs}
+import graft.core.{Flags, Frames, Obs}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,36 +38,38 @@ object Stabilization {
     val w = Window.partitionBy(partCols.map(col): _*).orderBy(col(timeCol))
     val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
 
-    val d1 = df
-      .withColumn("within_limits", result > rangeMin && result < rangeMax)
-      .withColumn("dt_sec", timeSec - lag(timeSec, 1).over(w))
-      .withColumn("cum_sec", coalesce(sum(col("dt_sec")).over(wRun), lit(0.0)))
+    // one projection per window-dependency level: a level starts where
+    // a window reads an earlier window's result
+    val d1 = Frames.withColumns(df, Seq(
+      "within_limits" -> (result > rangeMin && result < rangeMax),
+      "dt_sec" -> (timeSec - lag(timeSec, 1).over(w))))
+    val d2 = d1.withColumn("cum_sec", coalesce(sum(col("dt_sec")).over(wRun), lit(0.0)))
 
     // time since last in-limits row: cum - ffill(cum where within); null
     // while no in-limits row has been seen yet (down since data start).
     // ffill of a monotonically-nondecreasing series == running max — written
     // as `max(when(...))` so the exact same formula is plain ANSI SQL.
-    val d2 = d1.withColumn("last_up_cum",
-        max(when(col("within_limits"), col("cum_sec"))).over(wRun))
-      .withColumn("time_down_sec", col("cum_sec") - col("last_up_cum"))
+    val d3 = d2.withColumn("last_up_cum",
+      max(when(col("within_limits"), col("cum_sec"))).over(wRun))
 
     // long-outage markers; the first row of each stream is one by fiat
-    val d3 = d2.withColumn("outage_marker",
-        col("time_down_sec") > maxAllowedDowntimeSec ||
-          col("time_down_sec").isNull || lag(timeSec, 1).over(w).isNull)
-      .withColumn("last_outage_cum",
-        max(when(col("outage_marker"), col("cum_sec"))).over(wRun))
-      .withColumn("time_up_since_sec", col("cum_sec") - col("last_outage_cum"))
+    val timeDown = col("cum_sec") - col("last_up_cum")
+    val d4 = Frames.withColumns(d3, Seq(
+      "time_down_sec" -> timeDown,
+      "outage_marker" -> (timeDown > maxAllowedDowntimeSec ||
+        timeDown.isNull || lag(timeSec, 1).over(w).isNull)))
+    val d5 = d4.withColumn("last_outage_cum",
+      max(when(col("outage_marker"), col("cum_sec"))).over(wRun))
 
     // consecutive-run ids (reference `block_id = (WITHIN != lag(WITHIN)).cumsum()`)
     val changed = (col("within_limits") =!=
       lag(col("within_limits"), 1).over(w)).cast("long")
-    val d4 = d3.withColumn("block_id",
-      coalesce(sum(coalesce(changed, lit(1L))).over(wRun), lit(0L)))
-
-    d4.withColumn("stab_flag",
-        when(col("time_up_since_sec") < dtStabilizationSec, lit(Flags.Bad))
-          .otherwise(lit(Flags.NoQc)).cast("tinyint"))
-      .drop("last_up_cum", "last_outage_cum", "outage_marker")
+    val timeUpSince = col("cum_sec") - col("last_outage_cum")
+    Frames.withColumns(d5, Seq(
+        "time_up_since_sec" -> timeUpSince,
+        "block_id" -> coalesce(sum(coalesce(changed, lit(1L))).over(wRun), lit(0L)),
+        "stab_flag" -> when(timeUpSince < dtStabilizationSec, lit(Flags.Bad))
+          .otherwise(lit(Flags.NoQc)).cast("tinyint")),
+      drop = Seq("last_up_cum", "last_outage_cum", "outage_marker"))
   }
 }

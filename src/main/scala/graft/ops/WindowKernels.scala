@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Obs
+import graft.core.{Frames, Obs}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -35,11 +35,11 @@ object WindowKernels {
     */
   def gradientOnto(df: DataFrame, out: String, value: Column,
                    timeSec: Column, w: WindowSpec): DataFrame = {
-    val d = df
-      .withColumn("__g_fp", lag(value, 1).over(w))
-      .withColumn("__g_fn", lead(value, 1).over(w))
-      .withColumn("__g_tp", lag(timeSec, 1).over(w))
-      .withColumn("__g_tn", lead(timeSec, 1).over(w))
+    val d = Frames.withColumns(df, Seq(
+      "__g_fp" -> lag(value, 1).over(w),
+      "__g_fn" -> lead(value, 1).over(w),
+      "__g_tp" -> lag(timeSec, 1).over(w),
+      "__g_tn" -> lead(timeSec, 1).over(w)))
     val (fPrev, fNext, tPrev, tNext) =
       (col("__g_fp"), col("__g_fn"), col("__g_tp"), col("__g_tn"))
     val hs = timeSec - tPrev
@@ -50,12 +50,12 @@ object WindowKernels {
     val backwardEdge = (value - fPrev) / hs  // last row of a stream
     // degenerate zero spacing (duplicate timestamps) => null, not an ANSI
     // divide error (the reference fixtures include 1 ns dt cases)
-    d.withColumn(out,
+    Frames.withColumns(d, Seq(out ->
         when(fPrev.isNull && fNext.isNull, lit(null).cast("double"))
           .when(fPrev.isNull, when(hd =!= 0.0, forwardEdge))
           .when(fNext.isNull, when(hs =!= 0.0, backwardEdge))
-          .otherwise(when(hs =!= 0.0 && hd =!= 0.0, central)))
-      .drop("__g_fp", "__g_fn", "__g_tp", "__g_tn")
+          .otherwise(when(hs =!= 0.0 && hd =!= 0.0, central))),
+      drop = Seq("__g_fp", "__g_fn", "__g_tp", "__g_tn"))
   }
 
   /** Same gradient as SQL text over a window clause `wOver` (e.g.
@@ -105,13 +105,14 @@ object WindowKernels {
     val hi = if (includeCurrent) 0L else -1L
     val w = Window.partitionBy(partCols.map(col): _*).orderBy(epochUs)
       .rangeBetween(-windowSec * 1000000L, hi)
-    df.withColumn("__z_sd", stddev_samp(value).over(w))
-      .withColumn("__z_m", avg(value).over(w))
-      // zero-variance window => no opinion (null), and keeps ANSI mode from
-      // raising DIVIDE_BY_ZERO on constant series
-      .withColumn(out,
-        when(col("__z_sd") =!= 0.0, (value - col("__z_m")) / col("__z_sd")))
-      .drop("__z_sd", "__z_m")
+    val d = Frames.withColumns(df, Seq(
+      "__z_sd" -> stddev_samp(value).over(w),
+      "__z_m" -> avg(value).over(w)))
+    // zero-variance window => no opinion (null), and keeps ANSI mode from
+    // raising DIVIDE_BY_ZERO on constant series
+    Frames.withColumns(d, Seq(out ->
+        when(col("__z_sd") =!= 0.0, (value - col("__z_m")) / col("__z_sd"))),
+      drop = Seq("__z_sd", "__z_m"))
   }
 
   /** W3 — dt / velocity / acceleration from a time-sorted track (reference
@@ -132,19 +133,20 @@ object WindowKernels {
     // window expressions, so a distance formula that references
     // lag(lat)/lag(lon) many times (the polynomial portable distance
     // expands each ~15×) would compute that many window columns per row
-    val withPrev = df
-      .withColumn("__prev_lat", lag(lat, 1).over(w))
-      .withColumn("__prev_lon", lag(lon, 1).over(w))
-      .withColumn("__prev_t_us", lag(timeUs, 1).over(w))
+    val withPrev = Frames.withColumns(df, Seq(
+      "__prev_lat" -> lag(lat, 1).over(w),
+      "__prev_lon" -> lag(lon, 1).over(w),
+      "__prev_t_us" -> lag(timeUs, 1).over(w)))
     val dt = (timeUs - col("__prev_t_us")).cast("double") / 1e6
     val dist = distM(col("__prev_lat"), col("__prev_lon"), lat, lon)
-    val withV = withPrev
-      .withColumn("dt_sec", dt)
-      .withColumn("velocity_ms", when(dt =!= 0.0, dist / dt))
-    withV.withColumn("acceleration_ms2",
-      when(col("dt_sec") =!= 0.0,
-        (col("velocity_ms") - lag(col("velocity_ms"), 1).over(w)) / col("dt_sec")))
-      .drop("__prev_lat", "__prev_lon", "__prev_t_us")
+    val withV = Frames.withColumns(withPrev, Seq(
+      "dt_sec" -> dt,
+      "velocity_ms" -> when(dt =!= 0.0, dist / dt)))
+    // acceleration reads the velocity's lag: its own projection
+    Frames.withColumns(withV, Seq("acceleration_ms2" ->
+        when(col("dt_sec") =!= 0.0,
+          (col("velocity_ms") - lag(col("velocity_ms"), 1).over(w)) / col("dt_sec"))),
+      drop = Seq("__prev_lat", "__prev_lon", "__prev_t_us"))
   }
 
   /** Kinematics threshold checks (reference `get_bool_exceed_max_velocity`

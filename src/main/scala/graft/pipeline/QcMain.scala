@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import graft.core.{Flags, Obs, QcConfig}
+import graft.core.{Flags, Frames, Obs, QcConfig}
 import graft.ops._
 import graft.sources.{PatchSink, StaJson}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,10 +17,19 @@ import org.apache.spark.sql.functions._
   * audit counts; independent checks merge worst-wins (associative, so
   * Catalyst may reorder them), while the semantic orderings —
   * z-score over still-good rows, velocity over outlier-free rows —
-  * are preserved by explicit filters (SURVEY §7.4.6).
+  * are preserved by a conditional window input and a window partition
+  * (SURVEY §7.4.6). Each pass builds its columns with one projection
+  * per window-dependency level ([[graft.core.Frames]]).
   */
 object QcMain {
 
+  /** The reference's six phase wall-times of one run, in seconds.
+    * `regionSec` brackets the geo pass, which runs no action: the passes
+    * only build the plan, and their work executes inside the value
+    * pass's materializing count, charged to `rangesSec`. So `regionSec`
+    * measures plan construction only, until phase time is attributed
+    * to the jobs each pass runs (ROADMAP B).
+    */
   final case class PhaseTimes(dfConstructionSec: Double, regionSec: Double,
                               rangesSec: Double, totalQcSec: Double,
                               patchSec: Double, totalSec: Double)
@@ -70,9 +79,9 @@ object QcMain {
         col("st_min"), col("st_max"), col("st_down_us"), col("st_stab_us"),
         partCols = Seq(Obs.DatastreamId), timeCol = "t_us")
         .select(col(Obs.IotId), col("stab_flag"))
-      obs.join(flaggedSub, Seq(Obs.IotId), "left")
-        .withColumn(Obs.QcFlag, Flags.worstWins(col(Obs.QcFlag), col("stab_flag")))
-        .drop("stab_flag")
+      Frames.withColumns(obs.join(flaggedSub, Seq(Obs.IotId), "left"),
+        Seq(Obs.QcFlag -> Flags.worstWins(col(Obs.QcFlag), col("stab_flag"))),
+        drop = Seq("stab_flag"))
     }
 
   /** §3.1 steps 5-7a — geo pass: region classify + null-region/
@@ -83,17 +92,21 @@ object QcMain {
     * over feature_id expresses the fold with no extra join.
     */
   private[graft] def geoPass(afterStab: DataFrame, cfg: Config): DataFrame = {
-    val withRegion = afterStab
-      .withColumn("region", Geo.classifyRegion(col(Obs.Lat), col(Obs.Long_), cfg.regions))
-      .withColumn("elev", Geo.gridElevation(col(Obs.Lat), col(Obs.Long_)))
+    // the per-feature fold reads the region and elevation expressions
+    // themselves, so all three columns are one projection
+    val region = Geo.classifyRegion(col(Obs.Lat), col(Obs.Long_), cfg.regions)
+    val elev = Geo.gridElevation(col(Obs.Lat), col(Obs.Long_))
     val geoChecks = Seq(
-      Geo.nullRegionCheck(col("region")),
-      Geo.mainlandCheck(col("region")),
-      Geo.depthCheck(col("elev"), cfg.depthThreshold))
+      Geo.nullRegionCheck(region),
+      Geo.mainlandCheck(region),
+      Geo.depthCheck(elev, cfg.depthThreshold))
     val perRowGeoFlag = geoChecks.map(_.flagCol).reduce(Flags.worstWins(_, _))
     val wFeature = Window.partitionBy(col(Obs.FeatureId))
-    val geoFlagged = withRegion
-      .withColumn(Obs.QcFlagFeature, max(perRowGeoFlag).over(wFeature))
+    val withFeature = Frames.withColumns(afterStab, Seq(
+      "region" -> region,
+      "elev" -> elev,
+      Obs.QcFlagFeature -> max(perRowGeoFlag).over(wFeature)))
+    val geoFlagged = withFeature
       .withColumn("flag", Flags.worstWins(col(Obs.QcFlag), col(Obs.QcFlagFeature)))
     SpatialOutlier(geoFlagged, col(Obs.Lat), col(Obs.Long_),
       col("t_us"), cfg.outlierWindowSec, cfg.outlierMaxDxDt,
@@ -107,29 +120,30 @@ object QcMain {
     * 395-435). Only the kinematic *inputs* exclude spatial outliers —
     * the outlier rows themselves stay in the frame, already flagged BAD
     * above, and reach the sink (reference keeps them in df_all and
-    * patches them, src/main.py:611-660,854-859): the flags computed on
-    * the clean subset are re-joined onto the full frame by observation
-    * id.
+    * patches them, src/main.py:611-660,854-859).
+    *
+    * One branch: the window partitions by (stream, is-outlier), so the
+    * lag/lead of a clean row runs over exactly the stream's clean rows
+    * — the sequence a filter to the clean subset would give — and only
+    * clean rows take the kinematic flags. The input is already
+    * hash-partitioned by stream, which satisfies that clustering: a
+    * sort, no exchange, and the upstream is planned and run once.
     */
   private[graft] def kinPass(withOutlier: DataFrame, cfg: Config): DataFrame = {
-    val w = Window.partitionBy(col(Obs.DatastreamId)).orderBy(col("t_us"), col(Obs.IotId))
+    val isOut = coalesce(col("is_spatial_outlier"), lit(false))
+    val w = Window.partitionBy(col(Obs.DatastreamId), isOut)
+      .orderBy(col("t_us"), col(Obs.IotId))
     val kinChecks =
       cfg.maxVelocityMs.map(m => QcCheck("max_velocity",
         WindowKernels.exceedsOnEitherEndpoint(col("velocity_ms"), m, w), Flags.Bad)).toSeq ++
       cfg.maxAccelerationMs2.map(m => QcCheck("max_acceleration",
         WindowKernels.exceedsOnEitherEndpoint(col("acceleration_ms2"), m, w), Flags.Bad)).toSeq
     if (kinChecks.isEmpty) withOutlier else {
-      val isOut = coalesce(col("is_spatial_outlier"), lit(false))
-      val clean = withOutlier.filter(!isOut)
-      val kin0 = WindowKernels.velocityAcceleration(clean, w,
+      val kin = WindowKernels.velocityAcceleration(withOutlier, w,
         col(Obs.Lat), col(Obs.Long_), col("t_us"))
-      val kinFlagged = kinChecks.foldLeft(kin0) { (d, c) =>
-        d.withColumn("flag", c.mergedInto(col("flag")))
-      }.drop("dt_sec", "velocity_ms", "acceleration_ms2")
-      // union (not a join back on iot_id): both branches are narrow maps
-      // over the cached frame, and the next window pass re-shuffles by
-      // stream anyway — no extra shuffle for re-attaching outlier rows
-      kinFlagged.unionByName(withOutlier.filter(isOut))
+      val kinFlag = kinChecks.foldLeft(col("flag"))((f, c) => c.mergedInto(f))
+      Frames.withColumns(kin, Seq("flag" -> when(!isOut, kinFlag).otherwise(col("flag"))),
+        drop = Seq("dt_sec", "velocity_ms", "acceleration_ms2"))
     }
   }
 
@@ -148,29 +162,26 @@ object QcMain {
         .toDF(Obs.DatastreamId, "qc_range_min", "qc_range_max")
     }
     val withConf = QcConfig.joinOnto(kinematics, confDf)
-    val ranged = withConf.withColumn("flag",
-      QcCheck("range",
-        QcCheck.outOfRange(col(Obs.Result), col("qc_range_min"), col("qc_range_max")),
-        Flags.Bad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc))
-        .mergedInto(col("flag")))
-    val graded = WindowKernels.gradientOnto(ranged, "gradient",
+    val range = QcCheck("range",
+      QcCheck.outOfRange(col(Obs.Result), col("qc_range_min"), col("qc_range_max")),
+      Flags.Bad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc))
+    val gradient = QcCheck("gradient",
+      QcCheck.outOfRange(col("gradient"),
+        lit(cfg.gradientBounds._1), lit(cfg.gradientBounds._2)),
+      Flags.ProbablyBad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc))
+    val zscore = QcCheck("zscore",
+      QcCheck.outOfRange(col("zscore"),
+        lit(cfg.zscoreBounds._1), lit(cfg.zscoreBounds._2)),
+      Flags.ProbablyBad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc))
+    // range and gradient merge in one projection after the gradient;
+    // the z-score reads the merged flag, so it starts the next level
+    val graded = WindowKernels.gradientOnto(withConf, "gradient",
         col(Obs.Result), col("t_us").cast("double") / 1e6, w)
-      .withColumn("flag",
-        QcCheck("gradient",
-          QcCheck.outOfRange(col("gradient"),
-            lit(cfg.gradientBounds._1), lit(cfg.gradientBounds._2)),
-          Flags.ProbablyBad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc))
-          .mergedInto(col("flag")))
+      .withColumn("flag", gradient.mergedInto(range.mergedInto(col("flag"))))
     WindowKernels.zscoreOnto(graded, "zscore",
         when(col("flag") <= Flags.ProbablyGood, col(Obs.Result)),
         col("t_us"), cfg.zscoreWindowSec)
-      .withColumn("flag_z",
-        QcCheck("zscore",
-          QcCheck.outOfRange(col("zscore"),
-            lit(cfg.zscoreBounds._1), lit(cfg.zscoreBounds._2)),
-          Flags.ProbablyBad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc)).flagCol)
-      .withColumn("flag", Flags.worstWins(col("flag"), col("flag_z")))
-      .drop("flag_z")
+      .withColumn("flag", Flags.worstWins(col("flag"), zscore.flagCol))
   }
 
   /** §3.1 step 8 — dependent pass: per config entry, as-of propagate
@@ -189,16 +200,13 @@ object QcMain {
         rightCols = Seq("i_id", "i_t_us", "i_result", "i_flag"),
         rightIdCol = Some("i_id"), leftIdCol = Some(Obs.IotId))
       val base = AsofJoin.propagateFlag(col("flag"), col("r_i_flag"), dep.flagWhenMissing)
-      val withSecondary = dep.secondaryRange match {
-        case Some((lo, hi)) =>
-          matched.withColumn("flag",
-            AsofJoin.secondaryValueCheck(base, col("r_i_result"), lo, hi))
-        case None => matched.withColumn("flag", base)
+      val depFlag = dep.secondaryRange match {
+        case Some((lo, hi)) => AsofJoin.secondaryValueCheck(base, col("r_i_result"), lo, hi)
+        case None => base
       }
-      val newDepFlags = withSecondary.select(col(Obs.IotId), col("flag").as("dep_flag"))
-      d.join(newDepFlags, Seq(Obs.IotId), "left")
-        .withColumn("flag", coalesce(col("dep_flag"), col("flag")))
-        .drop("dep_flag")
+      val newDepFlags = matched.select(col(Obs.IotId), depFlag.as("dep_flag"))
+      Frames.withColumns(d.join(newDepFlags, Seq(Obs.IotId), "left"),
+        Seq("flag" -> coalesce(col("dep_flag"), col("flag"))), drop = Seq("dep_flag"))
     }
 
   /** The same lifecycle from an already-loaded observations frame (the
@@ -233,13 +241,16 @@ object QcMain {
     valueFlagged.cache().count() // close the "ranges" phase before dependents
     val rangesSecMeasured = secsSince(tRanges0)
 
-    val flagged = dependentPass(valueFlagged, cfg).cache()
+    // the dependent pass reads the value cache as a leaf relation: its
+    // operations analyze one node, not the value chain three times over
+    val flagged = dependentPass(GraftExpressionBridge.cachedLeaf(valueFlagged), cfg).cache()
     flagged.count()
     // flagged is now materialized in its own cache; the intermediate
     // stage caches only existed to build it — release them so a
     // long-lived session (the cron/streaming shape) doesn't accumulate
     // storage. The RETURNED frame stays cached and is caller-owned:
-    // unpersist it when done.
+    // unpersist it after its last use (its plan reads the released value
+    // cache, which a recompute would fill again).
     obs.unpersist()
     valueFlagged.unpersist()
     val rangesSec = rangesSecMeasured

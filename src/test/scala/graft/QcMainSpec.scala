@@ -102,4 +102,124 @@ class QcMainSpec extends SparkSpec {
     assert(first > 100, s"first window compiled only $first classes")
     assert(compiles(1) == 0)
   }
+
+  /** One 40-minute window of three streams at a one-minute cadence,
+    * built in memory, with every edge case the passes have to get right
+    * in one place:
+    *  - 601 (independent, stabilized): values out of limits for 7 min
+    *    (an outage longer than the allowed 5), then a 10-min warm-up;
+    *    spatial outliers on two consecutive rows (25, 26);
+    *  - 602 (dependent on 601, 20-s tolerance): each row 5 s after its
+    *    601 partner, plus one row 30 s from any 601 row (no partner);
+    *  - 603: spatial outliers on its first and its last row, two rows at
+    *    the same timestamp, a null-lat row, a 560-m jump in one minute
+    *    (a velocity fault, not a spatial outlier) and a value spike.
+    */
+  private def edgeCaseWindow(): (org.apache.spark.sql.DataFrame, QcMain.Config) = {
+    import org.apache.spark.sql.Row
+    val t0 = java.time.Instant.parse("2024-03-01T00:00:00Z")
+    def row(ds: Long, id: Long, sec: Long, v: Double,
+            lat: java.lang.Double, lon: Double, feature: Long): Row =
+      Row(id, v, java.sql.Timestamp.from(t0.plusSeconds(sec)), Flags.NoQc, ds,
+        "p", "u", lon, lat, feature)
+    def trackLat(i: Int): Double = 51.2 + i * 8e-4
+    def trackLon(i: Int): Double = 2.9 + i * 5e-4
+    val s601 = (0 until 40).map { i =>
+      val v = if (i >= 10 && i < 17) 25.0 else 10.0 + (i * 7 % 11) * 0.4
+      val dLat = if (i == 25 || i == 26) 0.1 else 0.0
+      row(601, 6010000L + i, 60L * i, v, trackLat(i) + dLat, trackLon(i), 6010000L + i)
+    }
+    val s602 = (0 until 40).map { i =>
+      row(602, 6020000L + i, 60L * i + 5, 8.0 + (i * 5 % 13) * 0.5,
+        trackLat(i), trackLon(i), 6010000L + i)
+    } :+ row(602, 6020040L, 60L * 33 + 30, 9.0, trackLat(33), trackLon(33), 6020040L)
+    val s603 = (0 until 40).map { i =>
+      val sec = if (i == 13) 60L * 12 else 60L * i // rows 12 and 13 share a timestamp
+      val v = if (i == 8) 28.0 else 12.0 + (i * 3 % 7) * 0.3
+      val lat: java.lang.Double =
+        if (i == 0) trackLat(i) + 0.1
+        else if (i == 39) trackLat(i) - 0.15
+        else if (i == 20) null
+        else if (i >= 30) trackLat(i) + 0.005 // the jump at row 30
+        else trackLat(i)
+      row(603, 6030000L + i, sec, v, lat, trackLon(i), 6030000L + i)
+    }
+    val rows = s601 ++ s602 ++ s603
+    val obs = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3), graft.core.Obs.schema)
+    val cfg = QcMain.Config(
+      rangeBounds = Map(601L -> (3.0, 21.0), 602L -> (4.0, 19.0), 603L -> (0.0, 30.0)),
+      gradientBounds = (-0.05, 0.05), zscoreBounds = (-2.5, 2.5),
+      regions = Seq(Geo.BoxRegion("NORTH SEA", "SOUTHERN BIGHT", 51.1, 51.45, 2.8, 3.1)),
+      depthThreshold = 25.0,
+      stabilization = Seq(graft.core.StabilizationConf(601L, 3.0, 21.0,
+        dtStabilizationSec = 600L, maxAllowedDowntimeSec = 300L)),
+      dependents = Seq(graft.core.DependentConf(independentId = 601L,
+        dependentId = 602L, dtToleranceUs = 20000000L,
+        secondaryRange = Some((4.5, 18.5)))))
+    (obs, cfg)
+  }
+
+
+  test("runFrom's flags, gradients and z-scores on the edge-case window are pinned") {
+    val (obs, cfg) = edgeCaseWindow()
+    val (flagged, _) = QcMain.runFrom(spark, obs, cfg)
+    try {
+      val byId = flagged.select(col("iot_id"), col("flag"),
+          coalesce(col("is_spatial_outlier"), lit(false)))
+        .collect().map(r => r.getLong(0) -> (r.getByte(1), r.getBoolean(2))).toMap
+      // the fixture reaches every case it is meant to
+      assert(byId.collect { case (id, (_, true)) => id }.toSet ==
+        Set(6030000L, 6030039L, 6010025L, 6010026L))
+      assert(byId(6020040L)._1 == Flags.Bad) // dependent row with no partner
+      assert(byId(6010018L)._1 == Flags.Bad) // stabilization warm-up
+      assert(byId(6030030L)._1 == Flags.Bad) // velocity jump
+      assert(byId.values.groupBy(_._1).map { case (f, v) => f -> v.size } ==
+        Map(Flags.Good -> 56, Flags.ProbablyGood -> 1, Flags.ProbablyBad -> 4, Flags.Bad -> 60))
+      assert(flagged.columns.mkString(",") ==
+        "iot_id,datastream_id,result,phenomenonTime,qc_rank,observation_type,units," +
+        "long,lat,feature_id,t_us,region,elev,qc_flag_feature,flag,median_lat," +
+        "median_lon,dist_to_median_m,is_spatial_outlier,qc_range_min,qc_range_max," +
+        "gradient,zscore")
+      // recorded before the passes were regrouped into fewer projections
+      // and the kinematics lost its second branch: the same rows, flags,
+      // gradients and z-scores, bit for bit
+      assert(graft.core.Canon.fingerprint(
+          flagged.select(col("iot_id"), col("flag"), col("gradient"), col("zscore"))) ==
+        graft.core.Canon.Fingerprint(121,
+          "flag:int,gradient:float,iot_id:int,zscore:float", "6a3624566701ee64"))
+    } finally flagged.unpersist()
+  }
+
+  test("the value pass runs each exchange once, the window in few jobs") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    val (obs, cfg) = edgeCaseWindow()
+    val metrics = graft.core.ExecMetrics.install(spark.sparkContext)
+    val e0 = metrics.snapshot()
+    val (flagged, _) = QcMain.runFrom(spark, obs, cfg)
+    val jobs = (metrics.snapshot() - e0).jobs
+    try {
+      object Aqe extends AdaptiveSparkPlanHelper
+      // the returned frame's cached plan scans the value pass's cache;
+      // that cache's plan is the value pass as it ran
+      val flaggedPlan = spark.sharedState.cacheManager
+        .lookupCachedData(flagged.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .get.cachedRepresentation.cachedPlan
+      val valuePlans = Aqe.collect(flaggedPlan) { case s: InMemoryTableScanExec => s.relation }
+        .map(_.cachedPlan).distinct
+      assert(valuePlans.size == 1)
+      val exchanges = Aqe.collect(valuePlans.head) {
+        case e: Exchange => e: SparkPlan
+        case r: ReusedExchangeExec => r.child
+      }
+      assert(exchanges.nonEmpty)
+      val twins = exchanges.groupBy(_.canonicalized).values.filter(_.size > 1)
+      assert(twins.isEmpty, s"exchanges planned twice: ${twins.map(_.head.nodeName)}")
+      // 20 while the kinematics ran as two branches
+      assert(jobs <= 16, s"runFrom ran $jobs jobs")
+    } finally flagged.unpersist()
+  }
 }

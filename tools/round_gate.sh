@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Round-end gate: the same five signals every round, one PASS/FAIL line.
+# Round-end gate: the same six signals every round, one PASS/FAIL line.
 #
 #   bash tools/round_gate.sh [sfDir] [outDir]
 #
@@ -10,10 +10,14 @@
 #   2. bench smoke — graft.Bench on w2_zscore, 1 rep, at sfDir: the last
 #      stdout line parses as JSON and bench_full.json's
 #      exec.w2_zscore[0].jobs > 0 (the execution-metrics listener ran)
-#   3. tests       — sbt test (full ScalaTest suite)
-#   4. perfbench   — cd perfbench && sbt test: compiles the benchmark
+#   3. lifecycle smoke — graft.QcLifecycle over the sf0.01 tables (the
+#      paper's whole QC chain): its exec.jobs is at most LIFECYCLE_MAX_JOBS
+#      and its flag_hist equals LIFECYCLE_FLAG_HIST, both recorded below
+#      (skipped when sfDir is not an sf0.01 directory)
+#   4. tests       — sbt test (full ScalaTest suite)
+#   5. perfbench   — cd perfbench && sbt test: compiles the benchmark
 #      against the current program APIs and runs its specs
-#   5. scale gate  — tools/ratio_table.py --gate against the recorded
+#   6. scale gate  — tools/ratio_table.py --gate against the recorded
 #      decade base, IF a fresh scaled-run artifact is supplied via
 #      GATE_SCALED_JSON (skipped otherwise: the decade sweep is hours,
 #      not a per-commit cost)
@@ -24,10 +28,16 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="${2:-/tmp/round_gate_verify}"
 cd "$(dirname "$0")/.."
 
+# QcLifecycle at sf0.01: 23 jobs while the kinematics ran as two
+# branches, 19 once it became one; the flag histogram is the one
+# every version of the chain has produced
+LIFECYCLE_MAX_JOBS=19
+LIFECYCLE_FLAG_HIST='{"1":4330,"4":5670}'
+
 declare -a RESULTS=()
 fail=0
 
-echo "[round_gate] 1/5 correctness: Verify @ $SF_DIR -> $OUT_DIR"
+echo "[round_gate] 1/6 correctness: Verify @ $SF_DIR -> $OUT_DIR"
 if sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" > /tmp/round_gate_verify.log 2>&1 \
    && python3 tools/compare.py "$SF_DIR" "$OUT_DIR" > /tmp/round_gate_compare.log 2>&1 \
    && python3 tools/manifest_check.py "$SF_DIR" "$OUT_DIR" > /tmp/round_gate_manifest.log 2>&1; then
@@ -37,7 +47,7 @@ else
   fail=1
 fi
 
-echo "[round_gate] 2/5 bench smoke: Bench w2_zscore, 1 rep @ $SF_DIR"
+echo "[round_gate] 2/6 bench smoke: Bench w2_zscore, 1 rep @ $SF_DIR"
 SMOKE_OUT=/tmp/round_gate_bench_full.json
 rm -f "$SMOKE_OUT"
 if SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_BENCH_ONLY=w2_zscore \
@@ -59,7 +69,31 @@ else
   fail=1
 fi
 
-echo "[round_gate] 3/5 tests: sbt test"
+if [ "$(basename "$SF_DIR")" = "sf0.01" ]; then
+  echo "[round_gate] 3/6 lifecycle smoke: QcLifecycle @ $SF_DIR"
+  LC_OUT=/tmp/round_gate_qc_lifecycle.json
+  rm -f "$LC_OUT"
+  if sbt -batch "runMain graft.QcLifecycle $SF_DIR $LC_OUT" > /tmp/round_gate_lifecycle.log 2>&1 \
+     && python3 - "$LC_OUT" "$LIFECYCLE_MAX_JOBS" "$LIFECYCLE_FLAG_HIST" \
+          > /tmp/round_gate_lifecycle_check.log 2>&1 <<'EOF'
+import json, sys
+line = json.load(open(sys.argv[1]))
+jobs, hist = line["exec"]["jobs"], line["flag_hist"]
+assert jobs <= int(sys.argv[2]), f"exec.jobs = {jobs} > {sys.argv[2]}"
+assert hist == json.loads(sys.argv[3]), f"flag_hist = {hist}"
+print(f"jobs={jobs} flag_hist={json.dumps(hist, separators=(',', ':'))}")
+EOF
+  then
+    RESULTS+=("lifecycle=PASS($(tail -1 /tmp/round_gate_lifecycle_check.log | tr -d '\n'))")
+  else
+    RESULTS+=("lifecycle=FAIL(see /tmp/round_gate_lifecycle{,_check}.log)")
+    fail=1
+  fi
+else
+  RESULTS+=("lifecycle=SKIPPED(pinned at sf0.01)")
+fi
+
+echo "[round_gate] 4/6 tests: sbt test"
 if sbt -batch test > /tmp/round_gate_test.log 2>&1; then
   RESULTS+=("tests=PASS($(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_gate_test.log | tail -1))")
 else
@@ -67,7 +101,7 @@ else
   fail=1
 fi
 
-echo "[round_gate] 4/5 perfbench: cd perfbench && sbt test"
+echo "[round_gate] 5/6 perfbench: cd perfbench && sbt test"
 if (cd perfbench && sbt -batch test) > /tmp/round_gate_perfbench.log 2>&1; then
   RESULTS+=("perfbench=PASS($(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_gate_perfbench.log | tail -1))")
 else
@@ -76,7 +110,7 @@ else
 fi
 
 if [ -n "${GATE_SCALED_JSON:-}" ]; then
-  echo "[round_gate] 5/5 scale gate: ratio drift vs recorded decade base"
+  echo "[round_gate] 6/6 scale gate: ratio drift vs recorded decade base"
   BASE="${GATE_BASE_JSON:-bench_artifacts_r14/bench_full_sf01_swept.json}"
   REF="${GATE_REF_JSON:-bench_artifacts_r14/b_sf1_r14_swept.json}"
   if python3 tools/ratio_table.py --gate "$BASE" "$REF" "$GATE_SCALED_JSON" \
