@@ -64,10 +64,11 @@ object QcLifecycle {
   /** The lifecycle's standard config: per-stream config over every
     * stream present — the shape the reference's ~60-datastream
     * config.yaml takes, derived here so the same command works at any
-    * SF. perfbench's `Harness.qcLayers` times the cumulative stage
+    * SF. [[StreamBench]]'s `qc` row streams with the same config.
+    * perfbench's `Harness.qcLayers` times the cumulative stage
     * prefixes of [[QcMain]] over its own windows.
     */
-  private def configFor(obsIn: org.apache.spark.sql.DataFrame): QcMain.Config = {
+  private[graft] def configFor(obsIn: org.apache.spark.sql.DataFrame): QcMain.Config = {
     val ids = obsIn.select(col(Obs.DatastreamId)).distinct()
       .collect().map(_.getLong(0)).sorted
     QcMain.Config(

@@ -1,8 +1,9 @@
 package graft
 
-import graft.core.{Obs, Sessions}
+import graft.core.{ExecMetrics, Obs, Sessions}
+import graft.pipeline.QcMain
 import graft.streaming.{IncrementalQc, StreamingDedup}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming-tier throughput bench (round-14 verdict #5): drive the two
@@ -11,14 +12,17 @@ import org.apache.spark.sql.functions._
   * table has a streaming row instead of only correctness pins.
   *
   *   - [[IncrementalQc]]: the reference's cron-cadence incremental QC
-  *     (AvailableNow, stateless — overlap re-reads, state never lives
-  *     in the stream)
+  *     (AvailableNow, [[QcMain.runFrom]] per micro-batch with
+  *     [[QcLifecycle]]'s config, stateless), over events staged as
+  *     contiguous time slices; the `qc` row carries the stream's
+  *     execution metrics (`exec`)
   *   - [[StreamingDedup.withinWatermark]]: watermark-bounded exact
   *     dedup (RocksDB state store, state ∝ rate × horizon)
   *
   * Usage: `SPARK_GRAFT_CPUS=32 sbt 'runMain graft.StreamBench
   * /tmp/graft_sf1b 20 out.json'` — stages the sf dir's events/documents
-  * as N-file directories, streams them as ~N micro-batches via
+  * as N-file directories, streams the events as N AvailableNow passes of
+  * one file each and the documents as ~N micro-batches via
   * maxFilesPerTrigger=1, and prints ONE compact JSON line (same stdout
   * contract as [[Bench]]).
   */
@@ -30,22 +34,19 @@ object StreamBench {
     val outFile = if (args.length > 2) args(2) else "stream_bench.json"
     val spark = Sessions.local()
     Sessions.useRocksDbStateStore(spark)
-    import spark.implicits._
+    val metrics = ExecMetrics.install(spark.sparkContext)
 
     val stage = java.nio.file.Files.createTempDirectory("graft_streambench_").toString
 
     // ---- incremental QC over events -----------------------------------
+    // staged by time: each file is a contiguous time slice of every
+    // stream, as a cron window is
     val obs = Obs.eventsAsObservations(spark, sfDir)
-    val obsDir = s"$stage/obs"
-    obs.repartition(nBatches).write.parquet(obsDir)
-    val obsSchema = spark.read.parquet(obsDir).schema
-    val conf = obs.select(col(Obs.DatastreamId)).distinct()
-      .withColumn("qc_range_min", lit(5.0))
-      .withColumn("qc_range_max", lit(50.0))
-      .withColumn("qc_gradient_min", lit(-1.0))
-      .withColumn("qc_gradient_max", lit(1.0))
-      .cache()
-    conf.count()
+    val sliceDir = s"$stage/obs_slices"
+    obs.repartitionByRange(nBatches, col(Obs.Time)).write.parquet(sliceDir)
+    val slices = new java.io.File(sliceDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    val cfg = QcLifecycle.configFor(obs)
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f
@@ -54,21 +55,29 @@ object StreamBench {
 
     // batch equivalent first (also warms the JVM the same way Bench does)
     val (_, qcBatchSec) = timed {
-      IncrementalQc.qcBatch(spark.read.parquet(obsDir), conf)
-        .write.format("noop").mode("overwrite").save()
+      val (flagged, _) = QcMain.runFrom(spark, spark.read.parquet(sliceDir), cfg)
+      try flagged.write.format("noop").mode("overwrite").save()
+      finally flagged.unpersist()
     }
 
+    // one AvailableNow pass per slice, as one cron run per window that
+    // lands: each pass QCs only the slice moved in before it
+    val obsDir = s"$stage/obs"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(obsDir))
     var qcRows = 0L
+    val e0 = metrics.snapshot()
     val (_, qcStreamSec) = timed {
-      val q = IncrementalQc.stream(spark, obsDir, obsSchema, conf,
-        lookbackSec = 1200L) { (batch, _) =>
-        qcRows += batch.count()
-        batch.write.format("noop").mode("overwrite").save()
-      }.option("checkpointLocation", s"$stage/qc_ckpt")
-        .option("maxFilesPerTrigger", 1)
-        .start()
-      q.awaitTermination()
+      slices.foreach { f =>
+        java.nio.file.Files.move(f.toPath, java.nio.file.Paths.get(obsDir, f.getName))
+        IncrementalQc.stream(spark, obsDir, cfg) { (batch, _) =>
+          qcRows += batch.count()
+          batch.write.format("noop").mode("overwrite").save()
+        }.option("checkpointLocation", s"$stage/qc_ckpt")
+          .start().awaitTermination()
+      }
     }
+    // jobs, stages, tasks, shuffle, spill and executor time of the stream
+    val qcExec = metrics.snapshot() - e0
 
     // ---- watermark-bounded streaming dedup over documents --------------
     // synthetic event time with spread (30 min) INSIDE the 1 h dedup
@@ -157,7 +166,7 @@ object StreamBench {
     def f1(v: Double) = "%.1f".format(v)
     val json =
       s"""{"metric":"stream_bench","sf":"$sfDir","batches":$nBatches,""" +
-      s""""qc":{"rows":$obsN,"stream_sec":${f1(qcStreamSec)},"stream_rows_per_s":${f1(obsN / qcStreamSec)},"batch_sec":${f1(qcBatchSec)},"batch_rows_per_s":${f1(obsN / qcBatchSec)},"sink_rows":$qcRows},""" +
+      s""""qc":{"rows":$obsN,"stream_sec":${f1(qcStreamSec)},"stream_rows_per_s":${f1(obsN / qcStreamSec)},"batch_sec":${f1(qcBatchSec)},"batch_rows_per_s":${f1(obsN / qcBatchSec)},"sink_rows":$qcRows,"exec":${qcExec.json}},""" +
       s""""dedup":{"rows":$docN,"stream_sec":${f1(ddStreamSec)},"stream_rows_per_s":${f1(docN / ddStreamSec)},"batch_sec":${f1(ddBatchSec)},"batch_rows_per_s":${f1(docN / ddBatchSec)},"survivors_stream":$ddRows,"survivors_batch":$ddBatchRows,"state_rows":$ddStateRows,"state_bytes":$ddStateBytes},""" +
       s""""dedup_tuned":{"state_parts":$tunedParts,"files_per_trigger":$filesPerTrigger,"min_batch_rows":$nStar,"stream_sec":${f1(ddTunedSec)},"stream_rows_per_s":${f1(docN / ddTunedSec)},"survivors_stream":$ddTunedRows,"survivors_batch":$ddBatchRows}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json)

@@ -1,65 +1,48 @@
 package graft.streaming
 
-import graft.core.{Flags, Obs}
-import graft.ops.{QcCheck, WindowKernels}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.core.Obs
+import graft.pipeline.QcMain
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types.StructType
 
-/** The reference's "streaming" runtime is cron-driven re-runs over
-  * sliding, overlapping time windows (`qc_historical/qc_historical.sh:70-100`,
-  * `crontab/qc.sh:50-80`) — at-least-once, idempotent because flag writes
-  * are last-writer-wins PATCHes keyed on observation id.
+/** The reference's "streaming" runtime is cron-driven re-runs of its
+  * whole `main.py` over sliding, overlapping time windows
+  * (`qc_historical/qc_historical.sh:70-100`, `crontab/qc.sh:50-80`) —
+  * at-least-once, idempotent because flag writes are last-writer-wins
+  * PATCHes keyed on observation id.
   *
-  * Spark-native shape: Structured Streaming with `Trigger.AvailableNow`
-  * (incremental batch, exactly the cron cadence), a watermark equal to
-  * the stabilization lookback (`dt_stabilization` — the reference widens
-  * its fetch window backwards by the same amount, `src/main.py:224-241`),
-  * and `foreachBatch` so each micro-batch runs the *batch* QC chain —
-  * window kernels included — then upserts flags. State never lives in
-  * the stream: the overlap re-reads the lookback rows instead, exactly
-  * like the reference, so restarts are trivially safe.
+  * Spark-native shape: Structured Streaming over a parquet directory of
+  * observations ([[Obs.schema]]) with `Trigger.AvailableNow`, and
+  * `foreachBatch` running [[QcMain.runFrom]] — the one QC chain:
+  * stabilization, geo, kinematics, range/gradient/z-score and
+  * dependents — on each micro-batch. One pass is one cron run: it QCs
+  * the files that landed since the previous pass (the checkpoint
+  * records which) as one micro-batch, then terminates.
+  *
+  * A micro-batch sees only its own files. Window context across batches
+  * (the reference widens its fetch window backwards by
+  * `dt_stabilization`, `src/main.py:224-241`) is the producer's job: it
+  * re-delivers the overlap rows in the next file, and the re-QC'd flags
+  * overwrite the earlier ones. No row is dropped for being old, and no
+  * state lives in the stream, so restarts are trivially safe.
   */
 object IncrementalQc {
 
-  /** Per-batch QC: range check against broadcast config + time-window
-    * checks computed inside the batch (the overlap guarantees lookback
-    * context, reference §3.1 step 3).
+  /** Wire a parquet-directory stream of observations through
+    * [[QcMain.runFrom]] into `sink` (an idempotent upsert in production;
+    * a memory/file sink in tests). The sink receives the flagged batch
+    * with `qc_rank` set to the QC flag — the hand-off the cron PATCH
+    * uses — and the batch's cache is released when the sink returns.
     */
-  def qcBatch(batch: DataFrame, conf: DataFrame): DataFrame = {
-    val joined = batch.join(broadcast(conf), Seq(Obs.DatastreamId), "left")
-      .withColumn("t_us", unix_micros(col(Obs.Time)))
-    val w = Window.partitionBy(col(Obs.DatastreamId)).orderBy(col("t_us"), col(Obs.IotId))
-    val ranged = joined
-      .withColumn("flag_range",
-        QcCheck("range",
-          QcCheck.outOfRange(col(Obs.Result), col("qc_range_min"), col("qc_range_max")),
-          Flags.Bad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc)).flagCol)
-    val flagged = WindowKernels.gradientOnto(ranged, "gradient",
-        col(Obs.Result), col("t_us").cast("double") / 1e6, w)
-      .withColumn("flag_gradient",
-        QcCheck("gradient",
-          QcCheck.outOfRange(col("gradient"), col("qc_gradient_min"), col("qc_gradient_max")),
-          Flags.ProbablyBad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc)).flagCol)
-    flagged.withColumn(Obs.QcFlag, graft.core.Flags.worstWins(col("flag_range"), col("flag_gradient")))
-  }
-
-  /** Wire a parquet-directory stream of observations through per-batch QC
-    * into `sink` (an idempotent upsert in production; a memory/file sink
-    * in tests). `lookbackSec` == dt_stabilization: late rows within it
-    * are still re-processed via the overlap, older ones are dropped.
-    */
-  def stream(spark: SparkSession, srcDir: String, schema: StructType,
-             conf: DataFrame, lookbackSec: Long)(
-             sink: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
-    spark.readStream.schema(schema).parquet(srcDir)
-      .withWatermark(Obs.Time, s"$lookbackSec seconds")
+  def stream(spark: SparkSession, srcDir: String, cfg: QcMain.Config)(
+             sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    spark.readStream.schema(Obs.schema).parquet(srcDir)
       .writeStream
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(qcBatch(batch, conf), id)
+        val (flagged, _) = QcMain.runFrom(spark, batch, cfg)
+        try sink(flagged.withColumn(Obs.QcFlag, col("flag")), id)
+        finally flagged.unpersist()
       }
-  }
 }

@@ -20,13 +20,14 @@ final case class StabFlagged(datastreamId: Long, iotId: Long, tUs: Long,
                              timeUpSinceUs: Long, stabFlag: Byte)
 
 /** W5/O2 — the stabilization state machine as TRUE streaming state
-  * (`flatMapGroupsWithState`), complementing the lookback-overlap
-  * incremental runner (`IncrementalQc`).
+  * (`flatMapGroupsWithState`), complementing the incremental runner
+  * (`IncrementalQc`, which runs `QcMain.runFrom` per micro-batch).
   *
-  * Why both exist: the overlap runner re-reads `dt_stabilization` of
-  * history per batch — cheap, stateless, and exactly the reference's
-  * cron shape (`qc_historical.sh`), but an outage LONGER than the
-  * lookback window is invisible to it. This operator carries the
+  * Why both exist: the incremental runner's stabilization pass sees only
+  * its micro-batch, so it has `dt_stabilization` of history only when
+  * the producer re-delivers that overlap — cheap, stateless, and exactly
+  * the reference's cron shape (`qc_historical.sh`), but an outage LONGER
+  * than the re-delivered overlap is invisible to it. This operator carries the
   * running cumsum and the last-up / last-outage anchors in keyed state,
   * so downtime accounting is exact across micro-batches with NO
   * re-read, arbitrarily long outages included. Per-batch rows are

@@ -1,36 +1,28 @@
 package graft.tools
 
 import graft.core.{Flags, Obs}
+import graft.pipeline.QcMain
 import graft.streaming.IncrementalQc
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** §3.3 entry point — incremental QC over a growing parquet directory
-  * (the reference's cron/backfill loop as one Structured Streaming job):
-  * each AvailableNow pass runs the per-batch QC chain and appends patch
-  * JSON per micro-batch (idempotent last-writer-wins on iot_id).
+/** §3.3 entry point — incremental QC over a growing parquet directory of
+  * observations ([[Obs.schema]]): the reference's cron/backfill loop as
+  * one Structured Streaming job. Each run is one AvailableNow pass with
+  * no checkpoint: [[QcMain.runFrom]] over the directory's files as one
+  * micro-batch, appending its patch JSON (idempotent last-writer-wins on
+  * iot_id).
   *
   * Usage: runMain graft.tools.RunStreamingQc <obsParquetDir> <patchOutDir>
   */
 object RunStreamingQc {
   def main(args: Array[String]): Unit = {
     val spark = graft.core.Sessions.local()
-    import spark.implicits._
     val Array(srcDir, outDir) = args.take(2)
 
-    val schema = StructType(Seq(
-      StructField(Obs.IotId, LongType),
-      StructField(Obs.Result, DoubleType),
-      StructField(Obs.Time, TimestampType),
-      StructField(Obs.DatastreamId, LongType)))
+    // per-stream range bounds (a real deployment loads ConfigLoader output)
+    val cfg = QcMain.Config(rangeBounds = (0L to 31L).map(_ -> (5.0, 50.0)).toMap)
 
-    // per-stream bounds (a real deployment loads ConfigLoader output)
-    val conf = (0L to 31L).map(ds => (ds, 5.0, 50.0, -1.0, 1.0))
-      .toDF(Obs.DatastreamId, "qc_range_min", "qc_range_max",
-        "qc_gradient_min", "qc_gradient_max")
-
-    val q = IncrementalQc.stream(spark, srcDir, schema, conf,
-      lookbackSec = 1200L) { (batch, id) =>
+    val q = IncrementalQc.stream(spark, srcDir, cfg) { (batch, id) =>
       val flagged = batch.select(col(Obs.IotId).as("id"),
         Flags.rankToWireCol(col(Obs.QcFlag)).as("resultQuality"))
       flagged.write.mode("append").json(outDir)

@@ -191,6 +191,24 @@ class QcMainSpec extends SparkSpec {
     } finally flagged.unpersist()
   }
 
+  test("IncrementalQc sinks the edge-case window with runFrom's pinned flags") {
+    val (obs, cfg) = edgeCaseWindow()
+    val dir = java.nio.file.Files.createTempDirectory("qc_stream_edge").toString
+    obs.coalesce(1).write.mode("overwrite").parquet(dir)
+    var batches = 0
+    var sunk: Option[graft.core.Canon.Fingerprint] = None
+    val q = graft.streaming.IncrementalQc.stream(spark, dir, cfg) { (batch, _) =>
+      batches += 1
+      // the sink's flag is the hand-off column, qc_rank
+      sunk = Some(graft.core.Canon.fingerprint(batch.select(col("iot_id"),
+        col(graft.core.Obs.QcFlag).as("flag"), col("gradient"), col("zscore"))))
+    }.start()
+    q.awaitTermination(120000)
+    assert(batches == 1)
+    assert(sunk.contains(graft.core.Canon.Fingerprint(121,
+      "flag:int,gradient:float,iot_id:int,zscore:float", "6a3624566701ee64")))
+  }
+
   test("the value pass runs each exchange once, the window in few jobs") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Round-end gate: the same six signals every round, one PASS/FAIL line.
+# Round-end gate: the same seven signals every round, one PASS/FAIL line.
 #
 #   bash tools/round_gate.sh [sfDir] [outDir]
 #
@@ -14,10 +14,14 @@
 #      paper's whole QC chain): its exec.jobs is at most LIFECYCLE_MAX_JOBS
 #      and its flag_hist equals LIFECYCLE_FLAG_HIST, both recorded below
 #      (skipped when sfDir is not an sf0.01 directory)
-#   4. tests       — sbt test (full ScalaTest suite)
-#   5. perfbench   — cd perfbench && sbt test: compiles the benchmark
+#   4. stream smoke — graft.StreamBench over the sf0.01 tables in 2
+#      AvailableNow passes (QcMain.runFrom per micro-batch): every staged
+#      row reaches the sink (qc.sink_rows == qc.rows) and qc.exec.jobs > 0
+#      (skipped when sfDir is not an sf0.01 directory)
+#   5. tests       — sbt test (full ScalaTest suite)
+#   6. perfbench   — cd perfbench && sbt test: compiles the benchmark
 #      against the current program APIs and runs its specs
-#   6. scale gate  — tools/ratio_table.py --gate against the recorded
+#   7. scale gate  — tools/ratio_table.py --gate against the recorded
 #      decade base, IF a fresh scaled-run artifact is supplied via
 #      GATE_SCALED_JSON (skipped otherwise: the decade sweep is hours,
 #      not a per-commit cost)
@@ -37,7 +41,7 @@ LIFECYCLE_FLAG_HIST='{"1":4330,"4":5670}'
 declare -a RESULTS=()
 fail=0
 
-echo "[round_gate] 1/6 correctness: Verify @ $SF_DIR -> $OUT_DIR"
+echo "[round_gate] 1/7 correctness: Verify @ $SF_DIR -> $OUT_DIR"
 if sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" > /tmp/round_gate_verify.log 2>&1 \
    && python3 tools/compare.py "$SF_DIR" "$OUT_DIR" > /tmp/round_gate_compare.log 2>&1 \
    && python3 tools/manifest_check.py "$SF_DIR" "$OUT_DIR" > /tmp/round_gate_manifest.log 2>&1; then
@@ -47,7 +51,7 @@ else
   fail=1
 fi
 
-echo "[round_gate] 2/6 bench smoke: Bench w2_zscore, 1 rep @ $SF_DIR"
+echo "[round_gate] 2/7 bench smoke: Bench w2_zscore, 1 rep @ $SF_DIR"
 SMOKE_OUT=/tmp/round_gate_bench_full.json
 rm -f "$SMOKE_OUT"
 if SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_BENCH_ONLY=w2_zscore \
@@ -70,7 +74,7 @@ else
 fi
 
 if [ "$(basename "$SF_DIR")" = "sf0.01" ]; then
-  echo "[round_gate] 3/6 lifecycle smoke: QcLifecycle @ $SF_DIR"
+  echo "[round_gate] 3/7 lifecycle smoke: QcLifecycle @ $SF_DIR"
   LC_OUT=/tmp/round_gate_qc_lifecycle.json
   rm -f "$LC_OUT"
   if sbt -batch "runMain graft.QcLifecycle $SF_DIR $LC_OUT" > /tmp/round_gate_lifecycle.log 2>&1 \
@@ -93,7 +97,30 @@ else
   RESULTS+=("lifecycle=SKIPPED(pinned at sf0.01)")
 fi
 
-echo "[round_gate] 4/6 tests: sbt test"
+if [ "$(basename "$SF_DIR")" = "sf0.01" ]; then
+  echo "[round_gate] 4/7 stream smoke: StreamBench, 2 passes @ $SF_DIR"
+  SB_OUT=/tmp/round_gate_stream_bench.json
+  rm -f "$SB_OUT"
+  if sbt -batch "runMain graft.StreamBench $SF_DIR 2 $SB_OUT" > /tmp/round_gate_stream.log 2>&1 \
+     && python3 - "$SB_OUT" > /tmp/round_gate_stream_check.log 2>&1 <<'EOF'
+import json, sys
+qc = json.load(open(sys.argv[1]))["qc"]
+rows, sunk, jobs = qc["rows"], qc["sink_rows"], qc["exec"]["jobs"]
+assert sunk == rows, f"qc.sink_rows = {sunk} != qc.rows = {rows}"
+assert jobs > 0, f"qc.exec.jobs = {jobs}"
+print(f"rows={rows} sink_rows={sunk} jobs={jobs}")
+EOF
+  then
+    RESULTS+=("stream=PASS($(tail -1 /tmp/round_gate_stream_check.log | tr -d '\n'))")
+  else
+    RESULTS+=("stream=FAIL(see /tmp/round_gate_stream{,_check}.log)")
+    fail=1
+  fi
+else
+  RESULTS+=("stream=SKIPPED(pinned at sf0.01)")
+fi
+
+echo "[round_gate] 5/7 tests: sbt test"
 if sbt -batch test > /tmp/round_gate_test.log 2>&1; then
   RESULTS+=("tests=PASS($(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_gate_test.log | tail -1))")
 else
@@ -101,7 +128,7 @@ else
   fail=1
 fi
 
-echo "[round_gate] 5/6 perfbench: cd perfbench && sbt test"
+echo "[round_gate] 6/7 perfbench: cd perfbench && sbt test"
 if (cd perfbench && sbt -batch test) > /tmp/round_gate_perfbench.log 2>&1; then
   RESULTS+=("perfbench=PASS($(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_gate_perfbench.log | tail -1))")
 else
@@ -110,7 +137,7 @@ else
 fi
 
 if [ -n "${GATE_SCALED_JSON:-}" ]; then
-  echo "[round_gate] 6/6 scale gate: ratio drift vs recorded decade base"
+  echo "[round_gate] 7/7 scale gate: ratio drift vs recorded decade base"
   BASE="${GATE_BASE_JSON:-bench_artifacts_r14/bench_full_sf01_swept.json}"
   REF="${GATE_REF_JSON:-bench_artifacts_r14/b_sf1_r14_swept.json}"
   if python3 tools/ratio_table.py --gate "$BASE" "$REF" "$GATE_SCALED_JSON" \
