@@ -1,39 +1,20 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** QC configuration model (reference `conf/config.yaml:185-516` +
-  * `src/yaml_schema.py`): per-datastream bounds for each check family,
-  * global defaults filled in where a stream omits them
-  * (`QC_global`, reference `src/main.py:506-509`).
+/** The per-entry parts of the QC configuration (reference
+  * `conf/config.yaml:185-516` + `src/yaml_schema.py`): stabilization and
+  * dependent-quantity entries, which `graft.pipeline.QcMain.Config`
+  * holds as lists; `graft.pipeline.ConfigLoader` parses the document
+  * into that one `Config`.
   *
-  * The config materializes as a small DataFrame broadcast-joined onto the
-  * observations on `datastream_id` (reference `src/main.py:500-516`) —
-  * at 100 TB the observation side streams through while the ~hundreds-row
-  * config side ships to every executor.
+  * Per-stream bounds materialize as a small DataFrame broadcast-joined
+  * onto the observations on `datastream_id` ([[QcConfig.joinOnto]],
+  * reference `src/main.py:500-516`) — at 100 TB the observation side
+  * streams through while the ~hundreds-row config side ships to every
+  * executor.
   */
-final case class StreamQc(
-    datastreamId: Long,
-    rangeMin: Option[Double] = None,
-    rangeMax: Option[Double] = None,
-    gradientMin: Option[Double] = None,
-    gradientMax: Option[Double] = None,
-    zscoreMin: Option[Double] = None,
-    zscoreMax: Option[Double] = None
-)
-
-final case class GlobalQc(
-    rangeMin: Option[Double] = None,
-    rangeMax: Option[Double] = None,
-    gradientMin: Option[Double] = None,
-    gradientMax: Option[Double] = None,
-    zscoreMin: Option[Double] = None,
-    zscoreMax: Option[Double] = None,
-    /** rolling z-score window, seconds (reference `QC_global.zscore.time_window`) */
-    zscoreWindowSec: Long = 3600L
-)
-
 final case class StabilizationConf(
     datastreamId: Long,
     rangeMin: Double,
@@ -59,25 +40,6 @@ final case class DependentConf(
 )
 
 object QcConfig {
-
-  /** Build the broadcastable per-stream config frame, with global defaults
-    * coalesced in (reference `src/main.py:506-509`): stream bound if set,
-    * else global bound, else null (null bounds => flag_on_nan path).
-    */
-  def toDf(spark: SparkSession, streams: Seq[StreamQc], global: GlobalQc = GlobalQc()): DataFrame = {
-    import spark.implicits._
-    def pick(s: Option[Double], g: Option[Double]): Option[Double] = s.orElse(g)
-    val rows = streams.map { s =>
-      (s.datastreamId,
-        pick(s.rangeMin, global.rangeMin), pick(s.rangeMax, global.rangeMax),
-        pick(s.gradientMin, global.gradientMin), pick(s.gradientMax, global.gradientMax),
-        pick(s.zscoreMin, global.zscoreMin), pick(s.zscoreMax, global.zscoreMax))
-    }
-    rows.toDF(Obs.DatastreamId,
-      "qc_range_min", "qc_range_max",
-      "qc_gradient_min", "qc_gradient_max",
-      "qc_zscore_min", "qc_zscore_max")
-  }
 
   /** Left-join config onto observations; row count is preserved by
     * construction (left join on a unique key — the reference asserts this

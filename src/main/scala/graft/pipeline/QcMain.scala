@@ -34,23 +34,34 @@ object QcMain {
                               rangesSec: Double, totalQcSec: Double,
                               patchSec: Double, totalSec: Double)
 
+  /** The one QC configuration. Each field names its config-document key
+    * ([[ConfigLoader]]); an absent key keeps the default.
+    */
   final case class Config(
+      /** `QC.<id>.range`, else `QC_global.range` for a stream listed under `QC` */
       rangeBounds: Map[Long, (Double, Double)] = Map.empty,
+      /** `QC_global.gradient`, one bound for every stream */
       gradientBounds: (Double, Double) = (-1.0, 1.0),
+      /** `QC_global.zscore`, one bound for every stream */
       zscoreBounds: (Double, Double) = (-3.0, 3.0),
+      /** `QC_global.zscore.time_window`, seconds */
       zscoreWindowSec: Long = 3600L,
-      outlierWindowSec: Long = 600L, // reference location.time_window: 10min
-      outlierMaxDxDt: Double = 6.89, // reference conf max_dx_dt
+      /** `location.time_window`, seconds */
+      outlierWindowSec: Long = 600L,
+      /** `location.max_dx_dt`, m/s, which also sets [[maxVelocityMs]] */
+      outlierMaxDxDt: Double = 6.89,
+      /** `location.regions`, first match wins (in place of the reference's SeaVox lookup) */
       regions: Seq[Geo.BoxRegion] = Seq.empty,
+      /** `location.depth_threshold`, m */
       depthThreshold: Double = 0.0,
-      /** §3.1 step 6 — kinematic limits (reference conf max_dx_dt /
-        * max_ddx_dtdt, src/main.py:663-710); None = check off
+      /** §3.1 step 6 — kinematic limits (reference src/main.py:663-710):
+        * `location.max_dx_dt` and `location.max_ddx_dtdt`; None = check off
         */
       maxVelocityMs: Option[Double] = Some(6.89),
       maxAccelerationMs2: Option[Double] = Some(0.15),
-      /** §3.1 step 4 — per-independent-stream stabilization configs */
+      /** §3.1 step 4 — `QC_stabilization` */
       stabilization: Seq[graft.core.StabilizationConf] = Seq.empty,
-      /** §3.1 step 8 — dependent-quantity propagation configs */
+      /** §3.1 step 8 — `QC_dependent` */
       dependents: Seq[graft.core.DependentConf] = Seq.empty)
 
   /** Run the pipeline on a captured STA response; returns the flagged

@@ -1,26 +1,21 @@
 package graft.tools
 
-import graft.ops.Geo
-import graft.pipeline.QcMain
+import graft.pipeline.{ConfigLoader, QcMain}
 import org.apache.spark.sql.functions._
 
 /** CLI driver for the §3.1 QC pipeline: runs on a captured STA response
-  * and prints the reference-parity phase-timing line plus the flag
-  * histogram. Usage: runMain graft.tools.RunQcMain <staJson> [patchOut]
+  * under a config document (`conf/qc_example.json`) and prints the
+  * reference-parity phase-timing line plus the flag histogram. A config
+  * that does not validate prints each error as `path: message` on stderr
+  * and exits 2, before Spark starts.
+  * Usage: runMain graft.tools.RunQcMain <config.json> <staJson> [patchOut]
   */
 object RunQcMain {
   def main(args: Array[String]): Unit = {
+    val cfg = ConfigLoader.loadFileOrExit(args(0)).qc
     val spark = graft.core.Sessions.local()
-    val cfg = QcMain.Config(
-      rangeBounds = Map(7751L -> (0.0, 20.0), 7770L -> (5.0, 30.0)),
-      regions = Seq(Geo.BoxRegion("NORTH SEA", "SOUTHERN BIGHT", 51.0, 52.0, 2.5, 3.5)),
-      stabilization = Seq(graft.core.StabilizationConf(7751L, 0.0, 20.0,
-        dtStabilizationSec = 1200L, maxAllowedDowntimeSec = 900L)),
-      dependents = Seq(graft.core.DependentConf(independentId = 7751L,
-        dependentId = 7770L, dtToleranceUs = 500000L,
-        secondaryRange = Some((0.0, 25.0)))))
-    val (flagged, phases) = QcMain.run(spark, args(0), cfg,
-      patchOut = args.lift(1))
+    val (flagged, phases) = QcMain.run(spark, args(1), cfg,
+      patchOut = args.lift(2))
     println("FLAG HISTOGRAM " + flagged.groupBy(col("flag")).count()
       .collect().map(r => s"${r.getByte(0)}->${r.getLong(1)}").sorted.mkString(" "))
     println(f"PHASES df-construction=${phases.dfConstructionSec}%.2f region=${phases.regionSec}%.2f " +

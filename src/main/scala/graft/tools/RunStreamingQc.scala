@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.core.{Flags, Obs}
-import graft.pipeline.QcMain
+import graft.pipeline.{ConfigLoader, QcMain}
 import graft.streaming.IncrementalQc
 import org.apache.spark.sql.functions._
 
@@ -10,17 +10,17 @@ import org.apache.spark.sql.functions._
   * one Structured Streaming job. Each run is one AvailableNow pass with
   * no checkpoint: [[QcMain.runFrom]] over the directory's files as one
   * micro-batch, appending its patch JSON (idempotent last-writer-wins on
-  * iot_id).
+  * iot_id). The QC runs under a config document (`conf/qc_example.json`);
+  * one that does not validate prints each error as `path: message` on
+  * stderr and exits 2, before Spark starts.
   *
-  * Usage: runMain graft.tools.RunStreamingQc <obsParquetDir> <patchOutDir>
+  * Usage: runMain graft.tools.RunStreamingQc <config.json> <obsParquetDir> <patchOutDir>
   */
 object RunStreamingQc {
   def main(args: Array[String]): Unit = {
+    val cfg = ConfigLoader.loadFileOrExit(args(0)).qc
+    val Array(srcDir, outDir) = args.slice(1, 3)
     val spark = graft.core.Sessions.local()
-    val Array(srcDir, outDir) = args.take(2)
-
-    // per-stream range bounds (a real deployment loads ConfigLoader output)
-    val cfg = QcMain.Config(rangeBounds = (0L to 31L).map(_ -> (5.0, 50.0)).toMap)
 
     val q = IncrementalQc.stream(spark, srcDir, cfg) { (batch, id) =>
       val flagged = batch.select(col(Obs.IotId).as("id"),

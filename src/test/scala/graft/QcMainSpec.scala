@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Flags
 import graft.ops.Geo
-import graft.pipeline.QcMain
+import graft.pipeline.{ConfigLoader, QcMain}
 import org.apache.spark.sql.functions._
 
 /** §3.1 lifecycle end-to-end on the reference's own captured STA JSON
@@ -160,6 +160,54 @@ class QcMainSpec extends SparkSpec {
     (obs, cfg)
   }
 
+
+  /** [[edgeCaseWindow]]'s config as a config document: per-stream
+    * ranges, global gradient and z-score, a region, a depth threshold,
+    * stabilization and a dependent.
+    */
+  private val edgeCaseDoc =
+    """{
+      |  "QC": {
+      |    "601": {"range": {"min": 3, "max": 21}},
+      |    "602": {"range": {"min": 4, "max": 19}},
+      |    "603": {"range": {"min": 0, "max": 30}}
+      |  },
+      |  "QC_global": {"gradient": {"min": -0.05, "max": 0.05},
+      |                "zscore": {"min": -2.5, "max": 2.5}},
+      |  "QC_stabilization": [
+      |    {"datastream": 601, "range": {"min": 3, "max": 21},
+      |     "dt_stabilization": "10min", "max_allowed_downtime": "5min"}
+      |  ],
+      |  "QC_dependent": [
+      |    {"independent": 601, "dependent": 602, "dt_tolerance": "20s",
+      |     "range": {"min": 4.5, "max": 18.5}}
+      |  ],
+      |  "location": {
+      |    "depth_threshold": 25,
+      |    "regions": [{"region": "NORTH SEA", "sub_region": "SOUTHERN BIGHT",
+      |                 "lat": {"min": 51.1, "max": 51.45}, "lon": {"min": 2.8, "max": 3.1}}]
+      |  }
+      |}""".stripMargin
+
+  test("the edge-case window's config document loads to its QcMain.Config") {
+    val cfg = edgeCaseWindow()._2
+    assert(ConfigLoader.load(edgeCaseDoc).map(_.qc) == Right(cfg))
+    // gradient bounds are global only: a per-stream block is an error
+    val perStream = edgeCaseDoc.replace(""""601": {"range": {"min": 3, "max": 21}}""",
+      """"601": {"range": {"min": 3, "max": 21}, "gradient": {"min": -1, "max": 1}}""")
+    val Left(errs) = ConfigLoader.load(perStream): @unchecked
+    assert(errs.map(_.path) == Seq("QC.601.gradient"))
+    // a listed stream with no range of its own takes QC_global.range
+    val globalRange = edgeCaseDoc
+      .replace(""""603": {"range": {"min": 0, "max": 30}}""", """"603": {}""")
+      .replace(""""QC_global": {""", """"QC_global": {"range": {"min": 0, "max": 30}, """)
+    assert(ConfigLoader.load(globalRange).map(_.qc) == Right(cfg))
+    // max_dx_dt sets both speed limits; an explicit null max_ddx_dtdt is check off
+    val kinematics = edgeCaseDoc.replace(""""depth_threshold": 25,""",
+      """"depth_threshold": 25, "time_window": "5min", "max_dx_dt": 5, "max_ddx_dtdt": null,""")
+    assert(ConfigLoader.load(kinematics).map(_.qc) == Right(cfg.copy(outlierWindowSec = 300L,
+      outlierMaxDxDt = 5.0, maxVelocityMs = Some(5.0), maxAccelerationMs2 = None)))
+  }
 
   test("runFrom's flags, gradients and z-scores on the edge-case window are pinned") {
     val (obs, cfg) = edgeCaseWindow()
