@@ -17,8 +17,9 @@ object SparkEntry {
     QueriesTpch.defs ++ QueriesQcEvents.defs ++ QueriesText.defs ++ QueriesEmb.defs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * The full QC chain (config join → range → gradient → z-score,
-    * worst-wins merged) collapsed to a per-stream flag histogram.
+    * The config join followed by `QcMain`'s value checks (range →
+    * gradient → z-score, worst-wins merged), collapsed to a per-stream
+    * flag histogram.
     */
   def entry(spark: SparkSession): DataFrame =
     QueriesQcEvents.qcPipeline(spark, "/root/testdata/sf0.001")

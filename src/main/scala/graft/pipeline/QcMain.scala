@@ -166,13 +166,23 @@ object QcMain {
     */
   private[graft] def valuePass(spark: SparkSession, kinematics: DataFrame,
                                cfg: Config): DataFrame = {
-    val w = Window.partitionBy(col(Obs.DatastreamId)).orderBy(col("t_us"), col(Obs.IotId))
     val confDf = {
       import spark.implicits._
       cfg.rangeBounds.toSeq.map { case (ds, (lo, hi)) => (ds, lo, hi) }
         .toDF(Obs.DatastreamId, "qc_range_min", "qc_range_max")
     }
-    val withConf = QcConfig.joinOnto(kinematics, confDf)
+    valueChecks(QcConfig.joinOnto(kinematics, confDf), cfg)
+  }
+
+  /** The value pass's checks over a frame that already carries
+    * `qc_range_min`/`qc_range_max` and `flag`: range and gradient
+    * (`cfg.gradientBounds`), then the z-score (`cfg.zscoreBounds` over
+    * `cfg.zscoreWindowSec`) over the rows still at most PROBABLY_GOOD,
+    * each merged worst-wins into `flag`. A worse row gets a null z-score
+    * input, so its z-score check gives NO_QC and changes nothing.
+    */
+  private[graft] def valueChecks(withConf: DataFrame, cfg: Config): DataFrame = {
+    val w = Window.partitionBy(col(Obs.DatastreamId)).orderBy(col("t_us"), col(Obs.IotId))
     val range = QcCheck("range",
       QcCheck.outOfRange(col(Obs.Result), col("qc_range_min"), col("qc_range_max")),
       Flags.Bad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc))
@@ -250,7 +260,7 @@ object QcMain {
     val tRanges0 = System.nanoTime()
     val valueFlagged = valuePass(spark, kinematics, cfg)
     valueFlagged.cache().count() // close the "ranges" phase before dependents
-    val rangesSecMeasured = secsSince(tRanges0)
+    val rangesSec = secsSince(tRanges0)
 
     // the dependent pass reads the value cache as a leaf relation: its
     // operations analyze one node, not the value chain three times over
@@ -264,7 +274,6 @@ object QcMain {
     // cache, which a recompute would fill again).
     obs.unpersist()
     valueFlagged.unpersist()
-    val rangesSec = rangesSecMeasured
     val totalQcSec = secsSince(tRegion0)
 
     // 5. sink

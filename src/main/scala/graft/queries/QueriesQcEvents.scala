@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.{Flags, Obs, QcConfig}
 import graft.ops._
+import graft.pipeline.QcMain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,40 +41,19 @@ object QueriesQcEvents {
   private val wStream = Window.partitionBy(col(Obs.DatastreamId))
     .orderBy(col("t_us"), col(Obs.IotId))
 
-  // The canonical QC chain (reference §3.1 steps 7: range → gradient →
-  // z-score-on-still-good-rows; the z-score input filter is semantic,
-  // SURVEY §7.4.6). Shared by qc_pipeline_flags and SparkEntry.entry.
-  def qcPipeline(s: SparkSession, dir: String): DataFrame = {
-    val o = QcConfigJoin.joined(s, dir)
-    val withRange = o.withColumn("flag_range",
-      rangeFlag(col(Obs.Result), col("qc_range_min"), col("qc_range_max")))
-    val withGrad = WindowKernels.gradientOnto(withRange, "gradient",
-        col(Obs.Result), col("t_us").cast("double") / 1e6, wStream)
-      .withColumn("flag_gradient",
-        QcCheck("gradient", QcCheck.outOfRange(col("gradient"), lit(-0.04), lit(0.04)),
-          Flags.ProbablyBad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc)).flagCol)
-      .withColumn("flag12", Flags.worstWins(col("flag_range"), col("flag_gradient")))
-    // z-score only over rows still <= PROBABLY_GOOD (reference
-    // src/main.py:750). Expressed as a conditional window — avg/stddev
-    // ignore nulls, so aggregating when(flag12 <= 2, result) inside the
-    // ORIGINAL stream window computes the identical good-rows-only
-    // statistics with ZERO extra shuffle. (Round 1 filtered to a subset
-    // and joined flag_z back on iot_id: a full shuffle join keyed on the
-    // highest-cardinality column.) Bad rows get a null z-input → null
-    // zscore → onNan = NoQc, contributing nothing to worst-wins.
-    WindowKernels.zscoreOnto(withGrad, "zscore",
-        when(col("flag12") <= Flags.ProbablyGood, col(Obs.Result)),
-        col("t_us"), 21600L)
-      .withColumn("flag_z",
-        QcCheck("zscore", QcCheck.outOfRange(col("zscore"), lit(-2.5), lit(2.5)),
-          Flags.ProbablyBad, onFalse = Some(Flags.Good), onNan = Some(Flags.NoQc)).flagCol)
-      .withColumn("flag", Flags.worstWins(col("flag12"), col("flag_z")))
-  }
+  /** Bounds of the declared QC chain ([[qcPipeline]]). */
+  private val chainCfg = QcMain.Config(gradientBounds = (-0.04, 0.04),
+    zscoreBounds = (-2.5, 2.5), zscoreWindowSec = 21600L)
 
-  private object QcConfigJoin {
-    def joined(s: SparkSession, dir: String): DataFrame =
-      QcConfig.joinOnto(obs(s, dir), conf(s, dir))
-  }
+  /** The canonical QC chain (reference §3.1 step 7: range → gradient →
+    * z-score on the rows still at most PROBABLY_GOOD, worst-wins): runs
+    * [[QcMain]]'s value checks over the config-joined observations,
+    * none flagged yet. Shared by qc_pipeline_flags and SparkEntry.entry.
+    */
+  def qcPipeline(s: SparkSession, dir: String): DataFrame =
+    QcMain.valueChecks(
+      QcConfig.joinOnto(obs(s, dir), conf(s, dir)).withColumn("flag", lit(Flags.NoQc)),
+      chainCfg)
 
   private val zScoreSqlCte =
     """grad AS (
@@ -486,7 +466,7 @@ object QueriesQcEvents {
             Obs.DatastreamId, "t_us", "v_micro", Obs.IotId)
           .groupBy(col(Obs.DatastreamId))
           .agg(sum(when(col("alarm"), 1L).otherwise(0L)).as("n_alarms"))
-        val bad = QcConfigJoin.joined(s, dir)
+        val bad = QcConfig.joinOnto(obs(s, dir), conf(s, dir))
           .withColumn("flag",
             rangeFlag(col(Obs.Result), col("qc_range_min"), col("qc_range_max")))
           .groupBy(col(Obs.DatastreamId))
@@ -764,7 +744,7 @@ object QueriesQcEvents {
 
     // J1 — broadcast config join, row count preserved (asserted in tests)
     QDef("j1_config_join",
-      (s, dir) => QcConfigJoin.joined(s, dir)
+      (s, dir) => QcConfig.joinOnto(obs(s, dir), conf(s, dir))
         .groupBy(col(Obs.DatastreamId), col("qc_range_min"), col("qc_range_max"))
         .agg(count(lit(1)).as("n")),
       Some(s"""WITH ${Q.ObsCte}, ${Q.ConfCte}
@@ -774,7 +754,7 @@ object QueriesQcEvents {
 
     // F1/F4/A2 — range check + flag histogram
     QDef("f4_range_flags",
-      (s, dir) => QcConfigJoin.joined(s, dir)
+      (s, dir) => QcConfig.joinOnto(obs(s, dir), conf(s, dir))
         .withColumn("flag",
           rangeFlag(col(Obs.Result), col("qc_range_min"), col("qc_range_max")))
         .groupBy(col(Obs.DatastreamId), col("flag"))
@@ -858,7 +838,7 @@ object QueriesQcEvents {
     // W5 — stabilization state machine (gaps-and-islands, exact µs ints)
     QDef("w5_stabilization",
       (s, dir) => {
-        val o = QcConfigJoin.joined(s, dir)
+        val o = QcConfig.joinOnto(obs(s, dir), conf(s, dir))
           .filter(col(Obs.DatastreamId) % 5 =!= 4) // only streams with bounds
         val st = Stabilization(o,
           col(Obs.Result), col("t_us").cast("double"),

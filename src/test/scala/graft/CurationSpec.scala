@@ -67,12 +67,8 @@ class CurationSpec extends SparkSpec with Matchers {
     val out = Curation.curateStream(
       spark.readStream.schema(schema).parquet(dir), "doc_id", "text",
       minQualityMicro = 700000L, maxPii = 0L)
-    val q = out.writeStream.format("memory").queryName("cur_out")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("cur_out").select($"doc_id")
-      .collect().map(_.getLong(0)).toSet
+    // one step: the corpus is already in place
+    val streamed = runMemorySink(out)(() => ()).map(_.getAs[Long]("doc_id")).toSet
     val batch = Curation.curate(docs.toDF("doc_id", "text"), "doc_id", "text",
         minQualityMicro = 700000L, maxPii = 0L)
       .filter($"keep").select($"doc_id").collect().map(_.getLong(0)).toSet

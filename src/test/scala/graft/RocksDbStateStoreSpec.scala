@@ -3,7 +3,6 @@ package graft
 import graft.core.Sessions
 import graft.streaming.{StabEvent, StatefulStabilization, StreamingDedup}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** The production state store lifecycle: all streaming suites already run
@@ -22,18 +21,16 @@ class RocksDbStateStoreSpec extends SparkSpec with Matchers {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
     val out = StreamingDedup(mem.toDS().toDF("doc_id", "text"), "text")
-    val q = out.writeStream.format("memory").queryName("rocks_metrics")
-      .outputMode("append").start()
-    try {
-      mem.addData((1L, "alpha"), (2L, "alpha"), (3L, "beta"))
-      q.processAllAvailable()
-      val ops = q.lastProgress.stateOperators
-      ops should not be empty
-      // RocksDB-only metrics prove which provider served the batch
-      val metricNames = ops.flatMap(_.customMetrics.keySet.toArray).map(_.toString)
-      metricNames.exists(_.toLowerCase.contains("rocksdb")) shouldBe true
-      spark.table("rocks_metrics").count() shouldBe 2L
-    } finally q.stop()
+    var ops = Array.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
+    val rows = runMemorySink(out)(
+      () => mem.addData((1L, "alpha"), (2L, "alpha"), (3L, "beta")),
+      // the batch's progress, read from the runner's (the one active) query
+      () => ops = spark.streams.active.head.lastProgress.stateOperators)
+    ops should not be empty
+    // RocksDB-only metrics prove which provider served the batch
+    val metricNames = ops.flatMap(_.customMetrics.keySet.toArray).map(_.toString)
+    metricNames.exists(_.toLowerCase.contains("rocksdb")) shouldBe true
+    rows.length shouldBe 2
   }
 
   test("restart from checkpoint: dedup state survives, pre-restart dup still dropped") {

@@ -3,6 +3,7 @@ package graft
 import graft.core.StabilizationConf
 import graft.ops.Stabilization
 import graft.streaming.{StabEvent, StatefulStabilization}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -43,52 +44,39 @@ class StatefulStabilizationSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getByte(1)).toMap
   }
 
+  /** The state machine over `mem`, run by `steps`: its sink's rows. */
+  private def streamed(steps: MemoryStream[StabEvent] => Seq[() => Any]): Array[Row] = {
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[StabEvent]
+    runMemorySink(StatefulStabilization(mem.toDS(), conf))(steps(mem): _*)
+  }
+
   test("streaming state machine == batch operator, split across micro-batches") {
     val expected = batchFlags
     assert(expected.values.toSet == Set(graft.core.Flags.Bad, graft.core.Flags.NoQc))
 
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[StabEvent]
-    val out = StatefulStabilization(mem.toDS(), conf)
-    val query = out.writeStream.format("memory").queryName("stab_stream")
-      .outputMode("append").start()
-    try {
-      // split exactly across the outage marker: state must carry the
-      // cumsum and the last-outage anchor between micro-batches
-      mem.addData(events.take(4))
-      query.processAllAvailable()
-      mem.addData(events.drop(4))
-      query.processAllAvailable()
-      val got = spark.table("stab_stream")
-        .select("iotId", "stabFlag")
-        .collect().map(r => r.getLong(0) -> r.getByte(1)).toMap
-      assert(got.keySet == expected.keySet, s"rows: got=${got.keySet} want=${expected.keySet}")
-      expected.foreach { case (id, f) =>
-        assert(got(id) == f, s"iot $id: stream=${got(id)} batch=$f")
-      }
-      // unconfigured stream emits nothing
-      assert(!got.contains(7000L))
-    } finally query.stop()
+    // split exactly across the outage marker: state must carry the
+    // cumsum and the last-outage anchor between micro-batches
+    val got = streamed(twoBatches(_, events, 4))
+      .map(r => r.getAs[Long]("iotId") -> r.getAs[Byte]("stabFlag")).toMap
+    assert(got.keySet == expected.keySet, s"rows: got=${got.keySet} want=${expected.keySet}")
+    expected.foreach { case (id, f) =>
+      assert(got(id) == f, s"iot $id: stream=${got(id)} batch=$f")
+    }
+    // unconfigured stream emits nothing
+    assert(!got.contains(7000L))
   }
 
   test("late rows older than processed state are dropped, not applied backwards") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[StabEvent]
-    val out = StatefulStabilization(mem.toDS(), conf)
-    val query = out.writeStream.format("memory").queryName("stab_late")
-      .outputMode("append").start()
-    try {
-      mem.addData(events.filter(_.datastreamId == 7L).take(4))
-      query.processAllAvailable()
+    val stream7 = events.filter(_.datastreamId == 7L)
+    val got = streamed(mem => Seq(
+      () => mem.addData(stream7.take(4)),
       // a late row BEFORE the already-processed 2.5 h mark must not
       // regress the cumsum (it would corrupt all later accounting)
-      mem.addData(Seq(StabEvent(7L, 99L, hours(1.5), 10.0)) ++
-        events.filter(_.datastreamId == 7L).drop(4))
-      query.processAllAvailable()
-      val got = spark.table("stab_late").select("iotId").collect().map(_.getLong(0)).toSet
-      assert(!got.contains(99L), "late row should be dropped")
-      assert(got.contains(7L), "in-order rows after the late one still process")
-    } finally query.stop()
+      () => mem.addData(Seq(StabEvent(7L, 99L, hours(1.5), 10.0)) ++ stream7.drop(4))))
+      .map(_.getAs[Long]("iotId")).toSet
+    assert(!got.contains(99L), "late row should be dropped")
+    assert(got.contains(7L), "in-order rows after the late one still process")
   }
 
   test("warm-up flags: stream start and post-outage rows BAD, stabilized rows NQC") {

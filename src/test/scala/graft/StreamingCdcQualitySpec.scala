@@ -33,28 +33,19 @@ class StreamingCdcQualitySpec extends SparkSpec with Matchers {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[Change]
     val out = StreamingCdc.applyChanges(mem.toDS())
-    val q = out.writeStream.format("memory").queryName("cdc_stream")
-      .outputMode("update").start()
-    try {
-      mem.addData(log.take(4))
-      q.processAllAvailable()
-      mem.addData(log.drop(4))
-      q.processAllAvailable()
-      val got = spark.table("cdc_stream")
-        .withColumn("__n", monotonically_increasing_id())
-        .orderBy($"__n".desc).dropDuplicates("key")
-        .collect().map(r => r.getAs[Long]("key") ->
-          (r.getAs[Boolean]("present"), r.getAs[Double]("value"))).toMap
-      val truth = batchTruth
-      got.keySet shouldBe truth.keySet
-      truth.foreach { case (k, (present, v)) =>
-        got(k)._1 shouldBe present
-        if (present) got(k)._2 shouldBe v
-      }
-      // key 2 must be a tombstone, key 3 survives its stale delete
-      got(2L)._1 shouldBe false
-      got(3L) shouldBe ((true, 50.0))
-    } finally q.stop()
+    // last emission per key: the sink's latest row for it
+    val got = runMemorySink(out, "update")(twoBatches(mem, log, 4): _*)
+      .map(r => r.getAs[Long]("key") ->
+        (r.getAs[Boolean]("present"), r.getAs[Double]("value"))).toMap
+    val truth = batchTruth
+    got.keySet shouldBe truth.keySet
+    truth.foreach { case (k, (present, v)) =>
+      got(k)._1 shouldBe present
+      if (present) got(k)._2 shouldBe v
+    }
+    // key 2 must be a tombstone, key 3 survives its stale delete
+    got(2L)._1 shouldBe false
+    got(3L) shouldBe ((true, 50.0))
   }
 
   test("streaming violation counters == batch audit over the same rows") {
@@ -66,17 +57,9 @@ class StreamingCdcQualitySpec extends SparkSpec with Matchers {
     val mem = MemoryStream[(Long, Double)]
     val out = StreamingQuality.violationMonitor(
       mem.toDS().toDF("k", "v"), rules)
-    val q = out.writeStream.format("memory").queryName("dq_stream")
-      .outputMode("complete").start()
-    try {
-      mem.addData(rows.take(97))
-      q.processAllAvailable()
-      mem.addData(rows.drop(97))
-      q.processAllAvailable()
-      val got = spark.table("dq_stream")
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      got("non_negative") shouldBe ((200L, rows.count(_._2 < 0).toLong))
-      got("under_1000") shouldBe ((200L, 0L))
-    } finally q.stop()
+    val got = runMemorySink(out, "complete")(twoBatches(mem, rows, 97): _*)
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    got("non_negative") shouldBe ((200L, rows.count(_._2 < 0).toLong))
+    got("under_1000") shouldBe ((200L, 0L))
   }
 }

@@ -51,18 +51,9 @@ class StreamingConversionSpec extends SparkSpec with Matchers {
       mem.toDS().toDF("iot_id", "t_us", "typ", "ds"),
       "ds", "t_us", "iot_id", $"typ" === "view", $"typ" === "click",
       "iot_id", windowUs = 10L)
-    val name = s"conv_stream_$splitAt"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      mem.addData(rows.take(splitAt))
-      q.processAllAvailable()
-      mem.addData(rows.drop(splitAt))
-      q.processAllAvailable()
-      spark.table(name).collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getBoolean(3),
+    runMemorySink(out)(twoBatches(mem, rows, splitAt): _*)
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(3),
         if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSet
-    } finally q.stop()
   }
 
   test("batch-derived expectation sanity") {

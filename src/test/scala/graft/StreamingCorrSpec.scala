@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.WindowKernels
 import graft.streaming.StreamingCorr
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.matchers.should.Matchers
 
@@ -40,25 +41,16 @@ class StreamingCorrSpec extends SparkSpec with Matchers {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
 
-  private def streamed(splitAt: Int): Set[(Long, Long, Long, Option[Long])] = {
+  /** The monitor over `mem`, run by `steps`: its sink's rows. */
+  private def streamed(steps: MemoryStream[(Long, Long, Long, Long)] => Seq[() => Any])
+      : Array[Row] = {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, Long, Long, Long)]
     val out = StreamingCorr.monitor(
       mem.toDS().toDF("datastream_id", "t_us", "v_micro", "iot_id"),
       "datastream_id", "t_us", "v_micro", "iot_id",
       bucketUs = B, windowRows = 8, minPairs = 4)
-    val name = s"corr_stream_$splitAt"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      mem.addData(rows.take(splitAt))
-      q.processAllAvailable()
-      mem.addData(rows.drop(splitAt))
-      q.processAllAvailable()
-      spark.table(name)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
-    } finally q.stop()
+    runMemorySink(out)(steps(mem): _*)
   }
 
   test("batch reference: affine prefix scores exactly +1e6; the skipped " +
@@ -75,31 +67,21 @@ class StreamingCorrSpec extends SparkSpec with Matchers {
   test("stream == batch at every micro-batch split point") {
     val expect = batch
     (0 to rows.length).foreach { at =>
-      withClue(s"split at $at: ") { streamed(at) shouldBe expect }
+      val got = streamed(twoBatches(_, rows, at)).map(r => (r.getLong(0),
+        r.getLong(1), r.getLong(2), if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
+      withClue(s"split at $at: ") { got shouldBe expect }
     }
   }
 
   test("replayed and out-of-order rows are dropped by the side high-water") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Long, Long)]
-    val out = StreamingCorr.monitor(
-      mem.toDS().toDF("datastream_id", "t_us", "v_micro", "iot_id"),
-      "datastream_id", "t_us", "v_micro", "iot_id",
-      bucketUs = B, windowRows = 8, minPairs = 4)
-    val q = out.writeStream.format("memory").queryName("corr_late")
-      .outputMode("append").start()
-    try {
-      mem.addData(rows)
-      q.processAllAvailable()
+    val got = streamed(mem => Seq(
+      () => mem.addData(rows),
       // replay the whole feed plus a stale poison row: all at-or-before
       // the per-side high-waters -> no new emissions
-      mem.addData(rows ++ Seq((0L, 2L * B + 10, 999999999L, 99L)))
-      q.processAllAvailable()
-      spark.table("corr_late").collect().map(r =>
-        (r.getLong(0), r.getLong(1))).groupBy(identity)
-        .foreach { case (_, v) => v.length shouldBe 1 }
-      spark.table("corr_late").count() shouldBe batch.size
-    } finally q.stop()
+      () => mem.addData(rows ++ Seq((0L, 2L * B + 10, 999999999L, 99L)))))
+    got.map(r => (r.getLong(0), r.getLong(1))).groupBy(identity)
+      .foreach { case (_, v) => v.length shouldBe 1 }
+    got.length shouldBe batch.size
   }
 
   test("a one-sided pair's pending state is hard-capped at maxSkewBuckets") {

@@ -3,7 +3,6 @@ package graft
 import graft.ops.WindowKernels
 import graft.streaming.StreamingCusum
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Streaming CUSUM == batch cusumFixed at every micro-batch split:
@@ -31,24 +30,16 @@ class StreamingCusumSpec extends SparkSpec with Matchers {
       .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3),
         r.getBoolean(4))).toMap
 
-  private def streamed(splitAt: Int): Map[Long, (Long, Long, Boolean)] = {
+  /** The monitor over `mem`, run by `steps`: iot_id -> (s_pos, s_neg, alarm). */
+  private def streamed(steps: MemoryStream[(Long, Long, Long, Long)] => Seq[() => Any])
+      : Map[Long, (Long, Long, Boolean)] = {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, Long, Long, Long)]
     val out = StreamingCusum.monitor(
       mem.toDS().toDF("iot_id", "t_us", "v_micro", "ds"),
       "ds", "t_us", "v_micro", "iot_id", mu, slack, h)
-    val name = s"cusum_stream_$splitAt"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      mem.addData(rows.take(splitAt))
-      q.processAllAvailable()
-      mem.addData(rows.drop(splitAt))
-      q.processAllAvailable()
-      spark.table(name)
-        .collect().map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3),
-          r.getBoolean(4))).toMap
-    } finally q.stop()
+    runMemorySink(out)(steps(mem): _*)
+      .map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
   }
 
   test("batch reference: drift alarms, centered stream never does") {
@@ -64,32 +55,19 @@ class StreamingCusumSpec extends SparkSpec with Matchers {
   test("stream == batch at every micro-batch split point") {
     val expect = batch
     (0 to rows.length).foreach { at =>
-      withClue(s"split at $at: ") { streamed(at) shouldBe expect }
+      withClue(s"split at $at: ") { streamed(twoBatches(_, rows, at)) shouldBe expect }
     }
   }
 
   test("late duplicate and out-of-order rows are dropped, state intact") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Long, Long)]
-    val out = StreamingCusum.monitor(
-      mem.toDS().toDF("iot_id", "t_us", "v_micro", "ds"),
-      "ds", "t_us", "v_micro", "iot_id", mu, slack, h)
-    val q = out.writeStream.format("memory").queryName("cusum_late")
-      .outputMode("append").start()
-    try {
-      mem.addData(rows.filter(_._4 == 5L).take(4))
-      q.processAllAvailable()
+    val stream5 = rows.filter(_._4 == 5L)
+    val got = streamed(mem => Seq(
+      () => mem.addData(stream5.take(4)),
       // replayed row 4 and an older-timestamp row: both must be ignored
-      mem.addData(Seq((4L, 40L, 270L, 5L), (99L, 15L, 999L, 5L)))
-      q.processAllAvailable()
-      mem.addData(rows.filter(_._4 == 5L).drop(4))
-      q.processAllAvailable()
-      val got = spark.table("cusum_late")
-        .collect().map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3),
-          r.getBoolean(4))).toMap
-      got.keySet shouldBe Set(1L, 2L, 3L, 4L, 5L, 6L)
-      got(5L) shouldBe ((440L, 0L, true))
-      got(6L) shouldBe ((420L, 0L, true))
-    } finally q.stop()
+      () => mem.addData(Seq((4L, 40L, 270L, 5L), (99L, 15L, 999L, 5L))),
+      () => mem.addData(stream5.drop(4))))
+    got.keySet shouldBe Set(1L, 2L, 3L, 4L, 5L, 6L)
+    got(5L) shouldBe ((440L, 0L, true))
+    got(6L) shouldBe ((420L, 0L, true))
   }
 }

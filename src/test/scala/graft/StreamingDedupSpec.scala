@@ -18,43 +18,31 @@ class StreamingDedupSpec extends SparkSpec with Matchers {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[DocEvent]
     val out = StreamingDedup(mem.toDF(), "text")
-    val query = out.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    try {
-      mem.addData(
+    val got = runMemorySink(out)(
+      () => mem.addData(
         DocEvent(1L, "the quick brown fox", t(0)),
         DocEvent(2L, "The quick  BROWN fox", t(1)), // dup of 1 after normalize
-        DocEvent(3L, "something else entirely", t(2)))
-      query.processAllAvailable()
+        DocEvent(3L, "something else entirely", t(2))),
       // batch 2: a dup of batch-1 content plus a fresh doc — the state
       // store must remember batch 1's fingerprints
-      mem.addData(
+      () => mem.addData(
         DocEvent(4L, "the quick brown fox", t(3)), // dup of 1, later batch
-        DocEvent(5L, "genuinely new content here", t(4)))
-      query.processAllAvailable()
-      val got = spark.table("dedup_stream").select($"docId")
-        .collect().map(_.getLong(0)).toSet
-      assert(got == Set(1L, 3L, 5L))
-    } finally query.stop()
+        DocEvent(5L, "genuinely new content here", t(4))))
+      .map(_.getAs[Long]("docId")).toSet
+    assert(got == Set(1L, 3L, 5L))
   }
 
   test("watermark-bounded variant dedups within the horizon") {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[DocEvent]
     val out = StreamingDedup.withinWatermark(mem.toDF(), "text", "ts", "2 hours")
-    val query = out.writeStream.format("memory").queryName("dedup_wm")
-      .outputMode("append").start()
-    try {
-      mem.addData(DocEvent(1L, "alpha beta gamma", t(0)))
-      query.processAllAvailable()
-      mem.addData(
+    val got = runMemorySink(out)(
+      () => mem.addData(DocEvent(1L, "alpha beta gamma", t(0))),
+      () => mem.addData(
         DocEvent(2L, "alpha beta  GAMMA", t(30)), // dup, 30 min later
-        DocEvent(3L, "fresh document body", t(31)))
-      query.processAllAvailable()
-      val got = spark.table("dedup_wm").select($"docId")
-        .collect().map(_.getLong(0)).toSet
-      assert(got == Set(1L, 3L))
-    } finally query.stop()
+        DocEvent(3L, "fresh document body", t(31))))
+      .map(_.getAs[Long]("docId")).toSet
+    assert(got == Set(1L, 3L))
   }
 
   test("stream dedup keeps exactly the batch operator's canonical rows") {
@@ -68,14 +56,10 @@ class StreamingDedupSpec extends SparkSpec with Matchers {
       .filter(!$"is_duplicate").select($"docId")
       .collect().map(_.getLong(0)).toSet
     val mem = MemoryStream[DocEvent]
-    val query = StreamingDedup(mem.toDF(), "text")
-      .writeStream.format("memory").queryName("dedup_eq")
-      .outputMode("append").start()
-    try {
-      docs.grouped(2).foreach { g => mem.addData(g); query.processAllAvailable() }
-      val got = spark.table("dedup_eq").select($"docId").collect().map(_.getLong(0)).toSet
-      assert(got == batchCanonical) // min-id == first-arrival here (ordered feed)
-    } finally query.stop()
+    val got = runMemorySink(StreamingDedup(mem.toDF(), "text"))(
+      docs.grouped(2).map(g => () => mem.addData(g)).toSeq: _*)
+      .map(_.getAs[Long]("docId")).toSet
+    assert(got == batchCanonical) // min-id == first-arrival here (ordered feed)
   }
 
   test("stream substring windows: cross-batch window fps deduped; survivors = distinct fps") {
@@ -86,29 +70,23 @@ class StreamingDedupSpec extends SparkSpec with Matchers {
       (3L, "fresh words only in here now")
     )
     val mem = MemoryStream[DocEvent]
-    val query = StreamingDedup.substringWindows(
+    val out = StreamingDedup.substringWindows(
         mem.toDF().withColumnRenamed("docId", "doc_id"),
         "doc_id", "text", windowLen = 4)
-      .writeStream.format("memory").queryName("substr_stream")
-      .outputMode("append").start()
-    try {
-      docs.foreach { case (i, s) =>
-        mem.addData(DocEvent(i, s, t(i.toInt))); query.processAllAvailable()
-      }
-      val kept = spark.table("substr_stream")
-        .select($"doc_id", $"s", $"fp").collect()
-      // one survivor per distinct window text, corpus-wide
-      val batchWins = docs.toDF("doc_id", "text")
-      val allFps = graft.functions.Dedup.slidingWindows(
-          batchWins, "doc_id", "text", 4)
-        .select($"fp").distinct().collect().map(_.getString(0)).toSet
-      kept.map(_.getString(2)).toSet shouldBe allFps
-      kept.length shouldBe allFps.size
-      // doc 2's copy of the straddling span lost every window to doc 1
-      // (id-ordered arrival: doc 1's batch ran first)
-      val doc2Survivors = kept.filter(_.getLong(0) == 2L).map(_.getInt(1)).toSet
-      doc2Survivors.intersect(Set(5)) shouldBe Set.empty // offset of "p q r s"
-    } finally query.stop()
+    val kept = runMemorySink(out)(docs.map { case (i, s) =>
+      () => mem.addData(DocEvent(i, s, t(i.toInt)))
+    }: _*).map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("s"), r.getAs[String]("fp")))
+    // one survivor per distinct window text, corpus-wide
+    val batchWins = docs.toDF("doc_id", "text")
+    val allFps = graft.functions.Dedup.slidingWindows(
+        batchWins, "doc_id", "text", 4)
+      .select($"fp").distinct().collect().map(_.getString(0)).toSet
+    kept.map(_._3).toSet shouldBe allFps
+    kept.length shouldBe allFps.size
+    // doc 2's copy of the straddling span lost every window to doc 1
+    // (id-ordered arrival: doc 1's batch ran first)
+    val doc2Survivors = kept.filter(_._1 == 2L).map(_._2).toSet
+    doc2Survivors.intersect(Set(5)) shouldBe Set.empty // offset of "p q r s"
   }
 
   test("stream passage dedup == batch passageDedup under id-ordered arrival") {
@@ -120,25 +98,21 @@ class StreamingDedupSpec extends SparkSpec with Matchers {
       (3L, "e f g h e f g h"), (4L, "q r s t q r s t"))
     val batchDf = docs.toDF("doc_id", "text")
     val mem = MemoryStream[DocEvent]
-    val query = StreamingDedup.passages(mem.toDF().withColumnRenamed("docId", "doc_id"),
+    val out = StreamingDedup.passages(mem.toDF().withColumnRenamed("docId", "doc_id"),
         "doc_id", "text", passageLen = 4)
-      .writeStream.format("memory").queryName("pass_stream")
-      .outputMode("append").start()
-    try {
-      // one doc per batch: cross-batch state does the dedup work
-      docs.foreach { case (i, s) =>
-        mem.addData(DocEvent(i, s, t(i.toInt))); query.processAllAvailable()
-      }
-      val streamKept = spark.table("pass_stream")
-        .select($"doc_id", $"pidx", $"passage")
-      val rebuilt = graft.functions.TextAnalysis.reassemblePassages(
-        graft.functions.TextAnalysis.passages(batchDf, "doc_id", "text", 4),
-        streamKept)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-      val batch = graft.functions.Dedup.passageDedup(batchDf, "doc_id", "text", 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-      assert(rebuilt == batch)
-    } finally query.stop()
+    // one doc per batch: cross-batch state does the dedup work
+    val kept = runMemorySink(out)(docs.map { case (i, s) =>
+      () => mem.addData(DocEvent(i, s, t(i.toInt)))
+    }: _*)
+    val streamKept = spark.createDataFrame(java.util.Arrays.asList(kept: _*), out.schema)
+      .select($"doc_id", $"pidx", $"passage")
+    val rebuilt = graft.functions.TextAnalysis.reassemblePassages(
+      graft.functions.TextAnalysis.passages(batchDf, "doc_id", "text", 4),
+      streamKept)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
+    val batch = graft.functions.Dedup.passageDedup(batchDf, "doc_id", "text", 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
+    assert(rebuilt == batch)
   }
 
   test("tuneStatefulIngest: commit-cost confs land; dedup parity survives the tuned session") {
@@ -154,17 +128,11 @@ class StreamingDedupSpec extends SparkSpec with Matchers {
       // first-seen-wins result, only cheaper commits
       val mem = MemoryStream[DocEvent]
       val out = StreamingDedup.withinWatermark(mem.toDF(), "text", "ts", "2 hours")
-      val query = out.writeStream.format("memory").queryName("tuned_dedup")
-        .outputMode("append").start()
-      try {
-        mem.addData(DocEvent(1L, "alpha beta", t(0)), DocEvent(2L, "alpha  BETA", t(1)))
-        query.processAllAvailable()
-        mem.addData(DocEvent(3L, "alpha beta", t(2)), DocEvent(4L, "gamma", t(3)))
-        query.processAllAvailable()
-        val got = spark.table("tuned_dedup").select($"docId").collect()
-          .map(_.getLong(0)).toSet
-        got shouldBe Set(1L, 4L)
-      } finally query.stop()
+      val got = runMemorySink(out)(
+        () => mem.addData(DocEvent(1L, "alpha beta", t(0)), DocEvent(2L, "alpha  BETA", t(1))),
+        () => mem.addData(DocEvent(3L, "alpha beta", t(2)), DocEvent(4L, "gamma", t(3))))
+        .map(_.getAs[Long]("docId")).toSet
+      got shouldBe Set(1L, 4L)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", before)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")

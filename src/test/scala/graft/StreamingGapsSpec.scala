@@ -2,8 +2,8 @@ package graft
 
 import graft.ops.WindowKernels
 import graft.streaming.StreamingGaps
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Streaming gap monitor: closed gaps == batch gapEvents at every
@@ -43,22 +43,13 @@ class StreamingGapsSpec extends SparkSpec with Matchers {
     val out = StreamingGaps.monitor(
       mem.toDS().toDF("iot_id", "t_us", "ds"),
       "ds", "t_us", "iot_id", thr, watermarkDelay = "600 seconds")
-    val name = s"gaps_stream_$splitAt"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      mem.addData(rows.take(splitAt))
-      q.processAllAvailable()
-      mem.addData(rows.drop(splitAt))
-      q.processAllAvailable()
-      val all = spark.table(name).collect()
-      val closed = all.filter(!_.getBoolean(4))
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      val open = all.filter(_.getBoolean(4))
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      (closed, open)
-    } finally q.stop()
+    val all = runMemorySink(out)(twoBatches(mem, rows, splitAt): _*)
+    val closed = all.filter(!_.getBoolean(4))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet
+    val open = all.filter(_.getBoolean(4))
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    (closed, open)
   }
 
   test("batch reference: exactly the two planted gaps") {
@@ -85,41 +76,37 @@ class StreamingGapsSpec extends SparkSpec with Matchers {
   }
 
   test("open-gap alert: watermark from other streams proves the silence") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Long)]
-    val out = StreamingGaps.monitor(
-      mem.toDS().toDF("iot_id", "t_us", "ds"),
-      "ds", "t_us", "iot_id", thr)
-    val q = out.writeStream.format("memory").queryName("gaps_open")
-      .outputMode("append").start()
-    try {
-      // stream 5 reports once at t=10s; stream 9 keeps reporting
-      mem.addData(Seq((1L, us(10), 5L), (2L, us(10), 9L)))
-      q.processAllAvailable()
-      // watermark moves to 50s: below 10s+100s threshold, no alert
-      mem.addData(Seq((3L, us(50), 9L)))
-      q.processAllAvailable()
-      assert(spark.table("gaps_open").filter(col("open")).count() == 0)
-      // watermark moves to 300s: silence of stream 5 proven -> ONE alert
-      mem.addData(Seq((4L, us(300), 9L)))
-      q.processAllAvailable()
-      // and it does not repeat on further watermark advance
-      mem.addData(Seq((5L, us(500), 9L)))
-      q.processAllAvailable()
-      // (stream 9's own sparse heartbeats produce genuine closed gaps
-      // and possibly its own alert — assertions below isolate stream 5)
-      def openFor5 = spark.table("gaps_open")
-        .filter(col("open") && col("datastream_id") === 5L).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2), r.isNullAt(3)))
-      openFor5.toSeq shouldBe Seq((5L, us(10), true, true))
-      // when data returns, the gap closes with exact bounds
-      mem.addData(Seq((6L, us(600), 5L)))
-      q.processAllAvailable()
-      openFor5.toSeq shouldBe Seq((5L, us(10), true, true)) // no repeat
-      val closed = spark.table("gaps_open")
-        .filter(!col("open") && col("datastream_id") === 5L).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      closed.toSeq shouldBe Seq((5L, us(10), us(600), us(590)))
-    } finally q.stop()
+    // the sink after the first n feeds, each feed its own micro-batch
+    def sinkAfter(n: Int): Array[Row] = {
+      implicit val sq = spark.sqlContext
+      val mem = MemoryStream[(Long, Long, Long)]
+      val out = StreamingGaps.monitor(
+        mem.toDS().toDF("iot_id", "t_us", "ds"),
+        "ds", "t_us", "iot_id", thr)
+      runMemorySink(out)(Seq(
+        // stream 5 reports once at t=10s; stream 9 keeps reporting
+        Seq((1L, us(10), 5L), (2L, us(10), 9L)),
+        // watermark moves to 50s: below 10s+100s threshold, no alert
+        Seq((3L, us(50), 9L)),
+        // watermark moves to 300s: silence of stream 5 proven -> ONE alert
+        Seq((4L, us(300), 9L)),
+        // and it does not repeat on further watermark advance
+        Seq((5L, us(500), 9L)),
+        // when data returns, the gap closes with exact bounds
+        Seq((6L, us(600), 5L))
+      ).take(n).map(feed => () => mem.addData(feed)): _*)
+    }
+    assert(!sinkAfter(2).exists(_.getBoolean(4)))
+    // (stream 9's own sparse heartbeats produce genuine closed gaps
+    // and possibly its own alert — assertions below isolate stream 5)
+    def openFor5(sink: Array[Row]) = sink
+      .filter(r => r.getBoolean(4) && r.getLong(0) == 5L)
+      .map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2), r.isNullAt(3)))
+    openFor5(sinkAfter(4)).toSeq shouldBe Seq((5L, us(10), true, true))
+    val all = sinkAfter(5)
+    openFor5(all).toSeq shouldBe Seq((5L, us(10), true, true)) // no repeat
+    val closed = all.filter(r => !r.getBoolean(4) && r.getLong(0) == 5L)
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    closed.toSeq shouldBe Seq((5L, us(10), us(600), us(590)))
   }
 }

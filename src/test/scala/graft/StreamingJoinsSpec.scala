@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import graft.streaming.StreamingJoins
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Watermarked stream-stream attribution join: inner-join emissions
@@ -23,8 +22,10 @@ class StreamingJoinsSpec extends SparkSpec with Matchers {
     (2L, 92L, 450L),  // 350 s after view 20: outside the window
     (3L, 93L, 100L))  // no view at all
 
-  private def toDf(rows: Seq[(Long, Long, Long)]) =
-    rows.map { case (u, i, t) => (u, i, ts(t)) }.toDF("user_id", "id", "ts")
+  private def timed(rows: Seq[(Long, Long, Long)]) =
+    rows.map { case (u, i, t) => (u, i, ts(t)) }
+
+  private def toDf(rows: Seq[(Long, Long, Long)]) = timed(rows).toDF("user_id", "id", "ts")
 
   private def batchExpected: Set[(Long, Long, Long, Long)] =
     StreamingJoins.attributionJoin(toDf(views), toDf(clicks), windowSec = 300L)
@@ -46,20 +47,10 @@ class StreamingJoinsSpec extends SparkSpec with Matchers {
       val out = StreamingJoins.attributionJoin(
         vMem.toDS().toDF("user_id", "id", "ts"),
         cMem.toDS().toDF("user_id", "id", "ts"), windowSec = 300L)
-      val name = s"attr_join_$at"
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        vMem.addData(views.map { case (u, i, t) => (u, i, ts(t)) })
-        q.processAllAvailable()
-        cMem.addData(clicks.take(at).map { case (u, i, t) => (u, i, ts(t)) })
-        q.processAllAvailable()
-        cMem.addData(clicks.drop(at).map { case (u, i, t) => (u, i, ts(t)) })
-        q.processAllAvailable()
-        val got = spark.table(name).collect().map(r => (r.getLong(0),
-          r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-        withClue(s"split at $at: ") { got shouldBe expect }
-      } finally q.stop()
+      val got = runMemorySink(out)(
+        Seq(() => vMem.addData(timed(views))) ++ twoBatches(cMem, timed(clicks), at): _*)
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      withClue(s"split at $at: ") { got shouldBe expect }
     }
   }
 }

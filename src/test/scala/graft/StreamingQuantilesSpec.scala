@@ -3,7 +3,6 @@ package graft
 import graft.functions.Sketches
 import graft.streaming.StreamingQuantiles
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Streaming exact percentiles == the batch operator over the rows
@@ -29,21 +28,10 @@ class StreamingQuantilesSpec extends SparkSpec with Matchers {
       val mem = MemoryStream[(String, Long)]
       val out = StreamingQuantiles.monitor(
         mem.toDS().toDF("g", "v"), "g", $"v")
-      val name = s"q_stream_$at"
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        mem.addData(rows.take(at))
-        q.processAllAvailable()
-        mem.addData(rows.drop(at))
-        q.processAllAvailable()
-        val got = spark.table(name)
-          .withColumn("__i", monotonically_increasing_id())
-          .orderBy($"__i".desc).dropDuplicates("stratum")
-          .collect().map(r => r.getString(0) ->
-            (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-        withClue(s"split at $at: ") { got shouldBe expect }
-      } finally q.stop()
+      // last snapshot per stratum: the sink's latest row for it
+      val got = runMemorySink(out, "update")(twoBatches(mem, rows, at): _*)
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+      withClue(s"split at $at: ") { got shouldBe expect }
     }
   }
 }

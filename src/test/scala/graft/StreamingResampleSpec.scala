@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.WindowKernels
 import graft.streaming.StreamingResample
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
@@ -35,55 +36,40 @@ class StreamingResampleSpec extends SparkSpec with Matchers {
         (r.getDouble(2), r.getBoolean(3))).toMap
   }
 
-  private def streamed(splitAt: Int): Map[(Long, Long), (Double, Boolean)] = {
+  /** The LOCF monitor over `mem`, run by `steps`: its sink's rows. */
+  private def streamed(steps: MemoryStream[(Long, Long, Double, Long)] => Seq[() => Any])
+      : Array[Row] = {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, Long, Double, Long)]
     val out = StreamingResample.locfMonitor(
       mem.toDS().toDF("iot_id", "t_us", "result", "datastream_id"),
       "datastream_id", "t_us", "iot_id", "result", stepUs = 10L)
-    val name = s"locf_stream_$splitAt"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      mem.addData(rows.take(splitAt))
-      q.processAllAvailable()
-      mem.addData(rows.drop(splitAt))
-      q.processAllAvailable()
-      spark.table(name).collect().map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getDouble(2), r.getBoolean(3))).toMap
-    } finally q.stop()
+    runMemorySink(out)(steps(mem): _*)
   }
+
+  private def grid(splitAt: Int): Map[(Long, Long), (Double, Boolean)] =
+    streamed(twoBatches(_, rows, splitAt)).map(r => (r.getLong(0), r.getLong(1)) ->
+      (r.getDouble(2), r.getBoolean(3))).toMap
 
   test("finalized grid == batch kernel below the open bucket") {
     val expect = batchPrefix
     expect((100L, 0L)) shouldBe ((11.0, false)) // sanity: later obs won b0
     expect((100L, 40L)) shouldBe ((44.0, true))
-    streamed(splitAt = 6) shouldBe expect // single batch
+    grid(splitAt = 6) shouldBe expect // single batch
   }
 
   test("split point cannot matter (every prefix split)") {
     val expect = batchPrefix
     Seq(1, 2, 3, 4, 5).foreach { at =>
-      withClue(s"split at $at: ") { streamed(at) shouldBe expect }
+      withClue(s"split at $at: ") { grid(at) shouldBe expect }
     }
   }
 
   test("late row below the final horizon is dropped, not re-emitted") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Double, Long)]
-    val out = StreamingResample.locfMonitor(
-      mem.toDS().toDF("iot_id", "t_us", "result", "datastream_id"),
-      "datastream_id", "t_us", "iot_id", "result", stepUs = 10L)
-    val q = out.writeStream.format("memory").queryName("locf_late")
-      .outputMode("append").start()
-    try {
-      mem.addData(Seq((1L, 5L, 1.0, 9L), (2L, 25L, 2.0, 9L)))
-      q.processAllAvailable()
-      mem.addData(Seq((3L, 7L, 99.0, 9L))) // bucket 0: already finalized
-      q.processAllAvailable()
-      val got = spark.table("locf_late").collect()
-        .map(r => r.getLong(1) -> r.getDouble(2)).toMap
-      got shouldBe Map(0L -> 1.0, 10L -> 1.0) // b0 obs + b1 fill, no rewrite
-    } finally q.stop()
+    val got = streamed(mem => Seq(
+      () => mem.addData(Seq((1L, 5L, 1.0, 9L), (2L, 25L, 2.0, 9L))),
+      () => mem.addData(Seq((3L, 7L, 99.0, 9L))))) // bucket 0: already finalized
+      .map(r => r.getLong(1) -> r.getDouble(2)).toMap
+    got shouldBe Map(0L -> 1.0, 10L -> 1.0) // b0 obs + b1 fill, no rewrite
   }
 }

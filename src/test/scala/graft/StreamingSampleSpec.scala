@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.Sampling
 import graft.streaming.StreamingSample
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
@@ -39,59 +40,46 @@ class StreamingSampleSpec extends SparkSpec with Matchers {
     }
   }
 
+  /** The sampler over `mem` in update mode, fed `batches` one
+    * micro-batch each.
+    */
+  private def streamed(batches: Seq[(String, Long)]*): Array[Row] = {
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[(String, Long)]
+    val out = StreamingSample.monitor(
+      mem.toDS().toDF("lang", "doc_id"), "lang", "doc_id", k = 5)
+    runMemorySink(out, "update")(batches.map(b => () => mem.addData(b)): _*)
+  }
+
   test("latest version per stratum == batch fixedKPerStratum at every " +
     "micro-batch split; state bounded by k") {
-    implicit val sq = spark.sqlContext
     (0 to rows.length by 7).foreach { at =>
-      val mem = MemoryStream[(String, Long)]
-      val out = StreamingSample.monitor(
-        mem.toDS().toDF("lang", "doc_id"), "lang", "doc_id", k = 5)
-      val name = s"sample_stream_$at"
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        if (at > 0) { mem.addData(rows.take(at)); q.processAllAvailable() }
-        mem.addData(rows.drop(at))
-        q.processAllAvailable()
-        val emitted = spark.table(name).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getInt(3), r.getLong(4)))
-        // latest version per stratum is the selection
-        val latest = emitted.groupBy(_._1).toSeq.flatMap { case (_, v) =>
-          val mx = v.map(_._5).max
-          v.filter(_._5 == mx).toSeq
-        }.map(t => (t._1, t._2, t._4)).toSet
-        withClue(s"split at $at: ") {
-          latest shouldBe batchSel(rows.length)
-        }
-        // every emission is a full, dense, ≤k selection
-        emitted.groupBy(r => (r._1, r._5)).values.foreach { sel =>
-          sel.map(_._4).sorted.toSeq shouldBe (1 to sel.size)
-          sel.size should be <= 5
-        }
-      } finally q.stop()
+      val emitted = (if (at > 0) streamed(rows.take(at), rows.drop(at)) else streamed(rows))
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getInt(3), r.getLong(4)))
+      // latest version per stratum is the selection
+      val latest = emitted.groupBy(_._1).toSeq.flatMap { case (_, v) =>
+        val mx = v.map(_._5).max
+        v.filter(_._5 == mx).toSeq
+      }.map(t => (t._1, t._2, t._4)).toSet
+      withClue(s"split at $at: ") {
+        latest shouldBe batchSel(rows.length)
+      }
+      // every emission is a full, dense, ≤k selection
+      emitted.groupBy(r => (r._1, r._5)).values.foreach { sel =>
+        sel.map(_._4).sorted.toSeq shouldBe (1 to sel.size)
+        sel.size should be <= 5
+      }
     }
   }
 
   test("an arrival OUTSIDE the current top-k changes nothing and emits " +
     "nothing (version stays put)") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(String, Long)]
-    val out = StreamingSample.monitor(
-      mem.toDS().toDF("lang", "doc_id"), "lang", "doc_id", k = 5)
-    val q = out.writeStream.format("memory").queryName("sample_nochange")
-      .outputMode("update").start()
-    try {
-      mem.addData(rows)
-      q.processAllAvailable()
-      val before = spark.table("sample_nochange").count()
-      // the worst (highest-hash) de key not in the selection, replayed
-      val sel = batchSel(rows.length).map(_._2)
-      val outside = rows.map(_._2).filterNot(sel.contains)
-        .maxBy(k => Sampling.hashBucketLocal(k.toString, "graft"))
-      mem.addData(Seq(("de", outside), ("en", 0L)))
-      q.processAllAvailable()
-      spark.table("sample_nochange").count() shouldBe before
-    } finally q.stop()
+    // the worst (highest-hash) de key not in the selection, replayed
+    val sel = batchSel(rows.length).map(_._2)
+    val outside = rows.map(_._2).filterNot(sel.contains)
+      .maxBy(k => Sampling.hashBucketLocal(k.toString, "graft"))
+    val before = streamed(rows).length
+    streamed(rows, Seq(("de", outside), ("en", 0L))).length shouldBe before
   }
 }

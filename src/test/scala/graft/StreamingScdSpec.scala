@@ -28,53 +28,35 @@ class StreamingScdSpec extends SparkSpec with Matchers {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
 
-  private def streamed(splitAt: Int): Set[(Long, String, Long, Long, Long)] = {
+  /** The SCD2 monitor over `mem`, run by `steps`: its closed intervals. */
+  private def streamed(steps: MemoryStream[(Long, Long, String, Long)] => Seq[() => Any])
+      : Array[(Long, String, Long, Long, Long)] = {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, Long, String, Long)]
     val out = StreamingScd.scdMonitor(
       mem.toDS().toDF("iot_id", "t_us", "v", "datastream_id"),
       "datastream_id", "t_us", "iot_id", "v")
-    val name = s"scd_stream_$splitAt"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      mem.addData(rows.take(splitAt))
-      q.processAllAvailable()
-      mem.addData(rows.drop(splitAt))
-      q.processAllAvailable()
-      spark.table(name).collect().map(r => (r.getLong(0), r.getString(1),
-        r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    } finally q.stop()
+    runMemorySink(out)(steps(mem): _*).map(r => (r.getLong(0), r.getString(1),
+      r.getLong(2), r.getLong(3), r.getLong(4)))
   }
 
   test("closed intervals == batch kernel, every split point") {
     val expect = batchClosed
     expect should contain((5L, "a", 10L, 30L, 2L)) // sanity
     (1 to 6).foreach { at =>
-      withClue(s"split at $at: ") { streamed(at) shouldBe expect }
+      withClue(s"split at $at: ") { streamed(twoBatches(_, rows, at)).toSet shouldBe expect }
     }
   }
 
   test("same-value re-arrival bumps the open interval, no flicker") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, String, Long)]
-    val out = StreamingScd.scdMonitor(
-      mem.toDS().toDF("iot_id", "t_us", "v", "datastream_id"),
-      "datastream_id", "t_us", "iot_id", "v")
-    val q = out.writeStream.format("memory").queryName("scd_flicker")
-      .outputMode("append").start()
-    try {
-      mem.addData(Seq((1L, 10L, "a", 1L)))
-      q.processAllAvailable()
-      mem.addData(Seq((2L, 20L, "a", 1L))) // same value: no emission
-      q.processAllAvailable()
-      spark.table("scd_flicker").count() shouldBe 0L
-      mem.addData(Seq((3L, 30L, "b", 1L))) // change: closes [10, 30) n=2
-      q.processAllAvailable()
-      val got = spark.table("scd_flicker").collect()
-      got.length shouldBe 1
-      (got(0).getLong(2), got(0).getLong(3), got(0).getLong(4)) shouldBe
-        ((10L, 30L, 2L))
-    } finally q.stop()
+    val feeds = Seq(
+      Seq((1L, 10L, "a", 1L)),
+      Seq((2L, 20L, "a", 1L)),  // same value: no emission
+      Seq((3L, 30L, "b", 1L)))  // change: closes [10, 30) n=2
+    def after(n: Int) = streamed(mem => feeds.take(n).map(f => () => mem.addData(f)))
+    after(2) shouldBe empty
+    val got = after(3)
+    got.length shouldBe 1
+    (got(0)._3, got(0)._4, got(0)._5) shouldBe ((10L, 30L, 2L))
   }
 }

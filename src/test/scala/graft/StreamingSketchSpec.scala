@@ -3,7 +3,6 @@ package graft
 import graft.functions.Sketches
 import graft.streaming.StreamingSketch
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Streaming HLL register state == the batch sketch over the same rows,
@@ -26,28 +25,18 @@ class StreamingSketchSpec extends SparkSpec with Matchers {
     val mem = MemoryStream[(String, String)]
     val out = StreamingSketch.hllMonitor(mem.toDS().toDF("stratum", "v"),
       "stratum", $"v")
-    val query = out.writeStream.format("memory").queryName("hll_stream")
-      .outputMode("update").start()
-    try {
-      mem.addData(rows.take(1500))
-      query.processAllAvailable()
-      mem.addData(rows.drop(1500))
-      query.processAllAvailable()
-      // last snapshot per stratum = the converged registers
-      val got = spark.table("hll_stream")
-        .withColumn("__n", monotonically_increasing_id())
-        .orderBy($"__n".desc).dropDuplicates("stratum")
-        .collect().map(r => r.getAs[String]("stratum") ->
-          (r.getAs[Long]("hllZeros"), r.getAs[Long]("hllDenomQ49"),
-            r.getAs[Double]("hllEstimate"))).toMap
-      batch.foreach { case (k, (z, d, e)) =>
-        val (gz, gd, ge) = got(k)
-        gz shouldBe z
-        gd shouldBe d
-        // batch rounds to 6 decimals; the stream emits the raw division
-        math.abs(ge - e) should be < 1e-5
-      }
-    } finally query.stop()
+    // last snapshot per stratum = the converged registers
+    val got = runMemorySink(out, "update")(twoBatches(mem, rows, 1500): _*)
+      .map(r => r.getAs[String]("stratum") ->
+        (r.getAs[Long]("hllZeros"), r.getAs[Long]("hllDenomQ49"),
+          r.getAs[Double]("hllEstimate"))).toMap
+    batch.foreach { case (k, (z, d, e)) =>
+      val (gz, gd, ge) = got(k)
+      gz shouldBe z
+      gd shouldBe d
+      // batch rounds to 6 decimals; the stream emits the raw division
+      math.abs(ge - e) should be < 1e-5
+    }
   }
 
   test("streaming CMS cells == batch cmsSketch, split across micro-batches") {
@@ -59,20 +48,11 @@ class StreamingSketchSpec extends SparkSpec with Matchers {
     val mem = MemoryStream[String]
     val out = graft.streaming.StreamingSketch.cmsMonitor(
       mem.toDS().toDF("t"), $"t")
-    val query = out.writeStream.format("memory").queryName("cms_stream")
-      .outputMode("update").start()
-    try {
-      mem.addData(rows.take(600))
-      query.processAllAvailable()
-      mem.addData(rows.drop(600))
-      query.processAllAvailable()
-      val got = spark.table("cms_stream")
-        .withColumn("__n", monotonically_increasing_id())
-        .orderBy($"__n".desc).dropDuplicates("cmsRow", "cmsCol")
-        .collect().map(r => (r.getAs[Int]("cmsRow"), r.getAs[Int]("cmsCol").toLong)
-          -> r.getAs[Long]("cmsCnt")).toMap
-      got.size shouldBe batch.size
-      batch.foreach { case (k, v) => got(k) shouldBe v }
-    } finally query.stop()
+    // last snapshot per cell
+    val got = runMemorySink(out, "update")(twoBatches(mem, rows, 600): _*)
+      .map(r => (r.getAs[Int]("cmsRow"), r.getAs[Int]("cmsCol").toLong)
+        -> r.getAs[Long]("cmsCnt")).toMap
+    got.size shouldBe batch.size
+    batch.foreach { case (k, v) => got(k) shouldBe v }
   }
 }

@@ -138,31 +138,30 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       val mem = MemoryStream[(Long, String)]
       val out = StreamingRetrieval.termStatsMonitor(
         mem.toDS().toDF("doc_id", "text"), "doc_id", "text")
-      val q = out.writeStream.format("memory").queryName("soak_terms")
-        .outputMode("update").start()
       val stateSamples = scala.collection.mutable.ArrayBuffer.empty[Long]
       var fed = 0L
       var id = 0L
+      // the state rows after the latest micro-batch (the runner's query
+      // is the one active query)
+      def sample(): Unit = spark.streams.active.foreach { q =>
+        Option(q.lastProgress).flatMap(_.stateOperators.headOption)
+          .foreach(o => stateSamples += o.numRowsTotal)
+      }
       // a short fixed-batch soak: the wall-clock budget belongs to the
       // dedup soak above; this pins the orthogonal bound (vocab-sized
       // state) over enough batches for several snapshot compactions
-      try {
-        (0 until 30).foreach { b =>
-          val docs = (0 until 100).map { i =>
-            val words = (0 until 12).map(j =>
-              vocab(((id + i) * 7 + j * 13 + b).toInt % vocab.size))
-            (id + i, words.mkString(" "))
-          }
-          mem.addData(docs)
-          q.processAllAvailable()
-          fed += 100
-          id += 100
-          val p = q.lastProgress
-          if (p != null)
-            p.stateOperators.headOption.foreach(o =>
-              stateSamples += o.numRowsTotal)
+      val feeds = (0 until 30).map { b => () =>
+        sample()
+        val docs = (0 until 100).map { i =>
+          val words = (0 until 12).map(j =>
+            vocab(((id + i) * 7 + j * 13 + b).toInt % vocab.size))
+          (id + i, words.mkString(" "))
         }
-      } finally q.stop()
+        mem.addData(docs)
+        fed += 100
+        id += 100
+      }
+      runMemorySink(out, "update")(feeds :+ (() => sample()): _*)
       fed shouldBe 3000L
       // bigram terms over a 500-word vocab: bounded by distinct ADJACENT
       // pairs actually generated, far below fed-doc scale and FLAT at

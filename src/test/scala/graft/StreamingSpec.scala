@@ -137,14 +137,9 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val out = StreamingSessions.sessionStats(stream, "ts", Seq("user"),
       gap = "30 seconds", watermarkDelay = "0 seconds")
-    val q = out.writeStream.format("memory").queryName("sess_out")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-
-    val streamed = spark.table("sess_out")
-      .filter($"user" =!= "zz") // the watermark-pusher's own session never finalizes
-      .collect()
+    // one step: both files are already in place, one micro-batch each
+    val streamed = runMemorySink(out)(() => ())
+      .filter(_.getString(0) != "zz") // the watermark-pusher's own session never finalizes
       .map(r => (r.getString(0), r.getAs[Long]("t_start_us"),
         r.getAs[Long]("t_end_us"), r.getAs[Long]("n_events"),
         r.getAs[Long]("duration_us"))).toSet
@@ -175,28 +170,20 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[FunnelEvent]
     val out = StreamingFunnel(mem.toDS(), steps)
-    val q = out.writeStream.format("memory").queryName("funnel_stream")
-      .outputMode("append").start()
-    try {
-      // split MID-FUNNEL for keys 1 and 2: stage times must carry in state
-      mem.addData(events.take(4))
-      q.processAllAvailable()
-      mem.addData(events.drop(4))
-      q.processAllAvailable()
-      val streamed = spark.table("funnel_stream")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val batch = graft.ops.Funnel.ordered(
-        events.toDF().select($"key", $"etype", $"tUs"),
-        "key", $"etype", $"tUs", steps)
-        .collect().flatMap { r =>
-          (1 to steps.length).flatMap { i =>
-            if (r.isNullAt(i)) None else Some((r.getLong(0), i, r.getLong(i)))
-          }
-        }.toSet
-      assert(streamed == batch)
-      assert(streamed.contains((1L, 3, 30L)) && streamed.contains((2L, 2, 40L)))
-      assert(!streamed.exists(_._1 == 4L))
-    } finally q.stop()
+    // split MID-FUNNEL for keys 1 and 2: stage times must carry in state
+    val streamed = runMemorySink(out)(twoBatches(mem, events, 4): _*)
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val batch = graft.ops.Funnel.ordered(
+      events.toDF().select($"key", $"etype", $"tUs"),
+      "key", $"etype", $"tUs", steps)
+      .collect().flatMap { r =>
+        (1 to steps.length).flatMap { i =>
+          if (r.isNullAt(i)) None else Some((r.getLong(0), i, r.getLong(i)))
+        }
+      }.toSet
+    assert(streamed == batch)
+    assert(streamed.contains((1L, 3, 30L)) && streamed.contains((2L, 2, 40L)))
+    assert(!streamed.exists(_._1 == 4L))
   }
 
   test("re-running the stream over the same data is idempotent (last-writer-wins)") {

@@ -38,27 +38,11 @@ class StreamingTransitionsSpec extends SparkSpec with Matchers {
     val out = StreamingTransitions.monitor(
       mem.toDS().toDF("iot_id", "t_us", "typ", "ds"),
       "ds", "t_us", "iot_id", "typ")
-    val name = s"trans_stream_$splitAt"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode("update").start()
-    try {
-      mem.addData(rows.take(splitAt))
-      q.processAllAvailable()
-      mem.addData(rows.drop(splitAt))
-      q.processAllAvailable()
-      // latest emission per (stream, pair), then sum across streams
-      spark.table(name)
-        .withColumn("__i", monotonically_increasing_id())
-        .withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy($"datastream_id", $"from_type", $"to_type")
-            .orderBy($"__i".desc)))
-        .filter($"__rn" === 1)
-        .groupBy($"from_type", $"to_type")
-        .agg(sum($"n").as("n"))
-        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .toMap
-    } finally q.stop()
+    // latest emission per (stream, pair), then sum across streams
+    runMemorySink(out, "update")(twoBatches(mem, rows, splitAt): _*)
+      .map(r => (r.getAs[Long]("datastream_id"), r.getAs[String]("from_type"),
+        r.getAs[String]("to_type")) -> r.getAs[Long]("n")).toMap
+      .groupMapReduce { case ((_, from, to), _) => (from, to) }(_._2)(_ + _)
   }
 
   test("batch reference sanity") {

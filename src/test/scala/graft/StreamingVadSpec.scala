@@ -33,17 +33,11 @@ class StreamingVadSpec extends SparkSpec with Matchers {
       AudioChunk(9L, k.toLong, Audio.buildWav(10000, s))
     }
     val mem = MemoryStream[AudioChunk]
-    val name = s"vad_stream_${batches.hashCode.abs}"
-    val q = StreamingVad.segments(mem.toDS(), 10, 1000L)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { idxs =>
-        mem.addData(idxs.map(chunks))
-        q.processAllAvailable()
-      }
-      spark.table(name).as[Audio.VadSeg].collect().sortBy(_.seg_idx).toSeq
-    } finally q.stop()
+    runMemorySink(StreamingVad.segments(mem.toDS(), 10, 1000L))(
+      batches.map(idxs => () => mem.addData(idxs.map(chunks))): _*)
+      .map(r => Audio.VadSeg(r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5), r.getLong(6)))
+      .sortBy(_.seg_idx).toSeq
   }
 
   test("stream == batch: frame-aligned chunks, loud region spans the " +
@@ -65,16 +59,11 @@ class StreamingVadSpec extends SparkSpec with Matchers {
   test("chunk gap fails loudly instead of silently skipping audio") {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[AudioChunk]
-    val q = StreamingVad.segments(mem.toDS(), 10, 1000L)
-      .writeStream.format("memory").queryName("vad_gap")
-      .outputMode("append").start()
-    try {
-      mem.addData(Seq(AudioChunk(9L, 1L, Audio.buildWav(10000, signal))))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      assert(e.getMessage.contains("expected 0") ||
-        Option(e.getCause).exists(_.getMessage.contains("expected 0")))
-    } finally q.stop()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      runMemorySink(StreamingVad.segments(mem.toDS(), 10, 1000L))(
+        () => mem.addData(Seq(AudioChunk(9L, 1L, Audio.buildWav(10000, signal)))))
+    }
+    assert(e.getMessage.contains("expected 0") ||
+      Option(e.getCause).exists(_.getMessage.contains("expected 0")))
   }
 }
