@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.core.Util.jsonString
 import java.nio.file.{Files, Paths, StandardOpenOption}
 

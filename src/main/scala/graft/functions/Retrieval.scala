@@ -400,11 +400,9 @@ object Retrieval {
     * split applied to lexical retrieval): postings + the df/idf term
     * table + the 1-row stats land as parquet. Serving then skips the
     * corpus tokenize/explode/groupBy AND the log evaluations — a query
-    * touches the postings scan and two broadcast joins only. Index
-    * freshness over an ingest stream is [[graft.streaming.StreamingRetrieval]]'s
-    * job (df/cf deltas); BM25 serving tolerates slightly stale idf, so
-    * production rebuilds the terms table periodically rather than
-    * per-document.
+    * touches the postings scan and two broadcast joins only. BM25
+    * serving tolerates slightly stale idf, so production rebuilds the
+    * terms table periodically rather than per-document.
     */
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
                  path: String, maxDf: Long = 40L): Unit = {

@@ -30,31 +30,6 @@ object Sampling {
   def hashBucket(key: Column, salt: String): Column =
     pmod(Dedup.baseHash(concat(lit(salt), key.cast("string"))), lit(Buckets))
 
-  /** [[hashBucket]] computed JVM-side — bit-identical to the Column
-    * form (first 8 md5 hex chars of salt||key, mod 1e6) so keyed
-    * streaming state can make the SAME membership decisions the batch
-    * operators make (equality pinned in SamplingSpec/StreamingSample).
-    *
-    * Hot path: StreamingSample calls this once per ingested row, so the
-    * digest instance is thread-local (reset per use, never re-looked-up)
-    * and the "first 8 hex chars as integer" is read directly as the
-    * big-endian unsigned int of the first 4 digest bytes — no hex
-    * format/parse round-trip. Output is unchanged bit for bit.
-    */
-  private val localMd5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  def hashBucketLocal(key: String, salt: String): Long = {
-    val md = localMd5.get()
-    md.reset()
-    val d = md.digest((salt + key).getBytes("UTF-8"))
-    val u32 = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    u32 % Buckets
-  }
-
   /** Keep each row with probability `rate`, decided by [[hashBucket]]
     * of its key — a repeatable Bernoulli sample (same salt+key ⇒ same
     * decision, independent of partitioning or row order).

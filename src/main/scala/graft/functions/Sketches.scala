@@ -39,9 +39,7 @@ object Sketches {
 
   /** The per-item HLL pieces as columns: (register index in [0, 2^p),
     * rho = rank of first set bit of the remaining 60−p hash bits + 1).
-    * Shared by the batch profile and the streaming register state so
-    * stream and batch sketches are bit-compatible. Integer-only: rho is
-    * bit-fill + popcount, no log/clz libm anywhere.
+    * Integer-only: rho is bit-fill + popcount, no log/clz libm anywhere.
     */
   def hllRegisterRho(item: Column, p: Int, salt: String): (Column, Column) = {
     val m = 1L << p

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Flags, Frames, Obs}
+import graft.core.{Flags, Frames}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

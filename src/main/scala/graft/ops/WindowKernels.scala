@@ -483,8 +483,6 @@ object WindowKernels {
     * come from a spec sheet, not the batch being checked) and the form
     * a STREAM can compute: the data-derived constants need the whole
     * series up front, while this recursion carries two longs of state.
-    * `StreamingCusum.monitor` is the streaming twin; stream == batch is
-    * pinned at every micro-batch split in `StreamingCusumSpec`.
     * Same prefix-sum-minus-running-min replay of the Page recursion.
     */
   def cusumFixed(df: DataFrame, keyCol: String, tsUsCol: String,
@@ -554,11 +552,9 @@ object WindowKernels {
   }
 
   /** The gap LIST behind [[gapReport]]'s counts: one row per
-    * inter-observation gap wider than `thresholdUs`, with both bounds
-    * — the batch face of `StreamingGaps.monitor` (whose closed-gap
-    * emissions match these rows exactly; its open-gap alerts have no
-    * batch analogue by definition). One stream-keyed exchange, then a
-    * map-side filter.
+    * inter-observation gap wider than `thresholdUs`, with both bounds.
+    * Only closed gaps: an ongoing silence has no later row to bound it.
+    * One stream-keyed exchange, then a map-side filter.
     */
   def gapEvents(df: DataFrame, keyCol: String, tsUsCol: String,
                 tieBreakCol: String, thresholdUs: Long): DataFrame = {

@@ -263,9 +263,8 @@ object QueriesQcEvents {
               |FROM q""".stripMargin)),
 
     // W14 — CUSUM against CONFIGURED control limits (the production
-    // and streaming-twin form of W13: μ/k/h from a spec sheet, two
-    // longs of recursion state). StreamingCusum.monitor is the twin;
-    // stream==batch pinned per split in StreamingCusumSpec.
+    // form of W13: μ/k/h from a spec sheet, two longs of recursion
+    // state, so a stream could carry it).
     QDef("w14_cusum_fixed",
       (s, dir) => {
         val vMicro =
@@ -579,8 +578,7 @@ object QueriesQcEvents {
               |FROM g""".stripMargin)),
 
     // W18 — gap events: one row per inter-observation silence wider
-    // than the threshold, both bounds. Batch face of StreamingGaps
-    // (the event-time-timeout twin).
+    // than the threshold, both bounds.
     QDef("w18_gap_events",
       (s, dir) => WindowKernels.gapEvents(obs(s, dir),
         Obs.DatastreamId, "t_us", Obs.IotId,

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.core.{Flags, Obs}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** S4/S5 — the write-back sink: per-observation flag PATCHes (reference

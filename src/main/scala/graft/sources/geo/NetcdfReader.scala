@@ -131,7 +131,7 @@ object NetcdfReader {
     }
 
     def parse(version: Int): NcFile = {
-      val _numrecs = buf.getInt()
+      buf.getInt() // numrecs
       val dimTag = buf.getInt()
       val nDims = buf.getInt()
       require(dimTag == 0x0A || (dimTag == 0 && nDims == 0),
@@ -148,7 +148,7 @@ object NetcdfReader {
         val dimIds = (0 until ndims).map(_ => buf.getInt())
         val atts = readAttList()
         val typ = buf.getInt()
-        val _vsize = buf.getInt()
+        buf.getInt() // vsize
         val begin = if (version == 1) buf.getInt().toLong else buf.getLong()
         name -> NcVar(name, dimIds, atts, typ, begin)
       }.toMap

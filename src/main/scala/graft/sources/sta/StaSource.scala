@@ -1,7 +1,6 @@
 package graft.sources.sta
 
 import graft.core.Obs
-import graft.sources.StaJson
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.core.{Flags, Obs}
-import graft.pipeline.{ConfigLoader, QcMain}
+import graft.pipeline.ConfigLoader
 import graft.streaming.IncrementalQc
 import org.apache.spark.sql.functions._
 

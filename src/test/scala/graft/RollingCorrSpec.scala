@@ -53,6 +53,35 @@ class RollingCorrSpec extends SparkSpec with Matchers {
     run(Seq(row(0, 2, 999, off = 77))) shouldBe run(Nil)
   }
 
+  test("batch reference: affine prefix scores exactly +1e6; the skipped " +
+    "bucket never aligns") {
+    // pair 0 = streams (0, 1) with y = 2x + 3 for 6 buckets then two
+    // anti-phase buckets; pair 1 = streams (2, 3) where y SKIPS bucket 2
+    // (never aligns) and lags x's arrival
+    val p0 = (0L until 8L).flatMap { b =>
+      val x = b + 1
+      val y = if (b < 6) 2 * x + 3 else 30 - 3 * x
+      Seq((0L, b * B + 10, x * 10000L, 100 + b),
+        (1L, b * B + 20, y * 10000L, 200 + b))
+    }
+    val p1x = (0L until 6L).map(b => (2L, b * B + 30, (b * b + 1) * 10000L,
+      300 + b))
+    val p1y = Seq(0L, 1L, 3L, 4L, 5L).map(b => (3L, b * B + 40,
+      (7 - b) * 10000L, 400 + b))
+    val b = WindowKernels.rollingPairCorr(
+        (p0 ++ p1x ++ p1y).toDF("datastream_id", "t_us", "v_micro", "iot_id"),
+        "datastream_id", "t_us", "v_micro", "iot_id",
+        bucketUs = B, windowRows = 8, minPairs = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
+    // pair 0, bucket 3: four aligned affine buckets -> +1e6
+    assert(b.contains((0L, 3L, 4L, Some(1000000L))))
+    // pair 1's bucket 2 never aligns: windows count only aligned buckets
+    val p1 = b.filter(_._1 == 1L)
+    p1.map(_._2) shouldBe Set(4L, 5L)  // 4th aligned bucket is b=4
+    assert(b.size > 4)
+  }
+
   test("wide magnitudes: 64-bit cross terms would overflow, widened " +
     "decimal moments stay exact (batch) and BigInt agrees (stream)") {
     // centi mean 5e8 with unit spread: n·Σxy ≈ 3.2e19 overflows BIGINT
@@ -68,18 +97,5 @@ class RollingCorrSpec extends SparkSpec with Matchers {
         "v_micro", "iot_id", bucketUs = B, windowRows = 8, minPairs = 4)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(3))).toMap
     for (b <- 3L to 7L) out((0L, b)) shouldBe 1000000L
-
-    // the streaming twin's BigInt mirror computes the identical rows
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val st = TestGroupState.create[graft.streaming.CorrState](
-      org.apache.spark.api.java.Optional.empty(), GroupStateTimeout.NoTimeout, 0L,
-      org.apache.spark.api.java.Optional.empty(), false)
-    val ins = rows.sortBy(r => (r._2, r._4)).map { case (d, t, v, tie) =>
-      graft.streaming.CorrIn(d, t, tie, v)
-    }
-    val got = graft.streaming.StreamingCorr.step(B, 8, 4)(
-        0L, ins.iterator, st)
-      .toList.map { case (_, b, _, r2) => b -> r2 }.toMap
-    for (b <- 3L to 7L) got(b) shouldBe Some(1000000L)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{StreamingDedup, StreamingRetrieval}
+import graft.streaming.StreamingDedup
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
@@ -9,7 +9,7 @@ import org.scalatest.matchers.should.Matchers
   * restart specs don't exercise: many micro-batches of WALL-CLOCK
   * feeding on the RocksDB provider with aggressive snapshot/compaction
   * intervals, asserting the state-size telemetry PLATEAUS at the
-  * watermark/vocabulary bound instead of growing with history, and
+  * watermark bound instead of growing with history, and
   * that a mid-soak restart recovers both state and telemetry.
   *
   * Duration scales with GRAFT_SOAK_SECONDS (default 45 s — dozens of
@@ -127,47 +127,6 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
         s"$fed rows fed, $emitted emitted, state plateau " +
         s"mid=${midMean.round} last=${lastMean.round} max=${lastThird.max} " +
         s"(horizon bound $horizonBound), restarted=$restarted")
-    }
-  }
-
-  test("term-stats soak: state tracks the VOCABULARY, not the ingest " +
-    "history (Heaps-law bound under a closed vocab)") {
-    withAggressiveMaintenance {
-      implicit val sq = spark.sqlContext
-      val vocab = (0 until 500).map(i => s"w$i")
-      val mem = MemoryStream[(Long, String)]
-      val out = StreamingRetrieval.termStatsMonitor(
-        mem.toDS().toDF("doc_id", "text"), "doc_id", "text")
-      val stateSamples = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var fed = 0L
-      var id = 0L
-      // the state rows after the latest micro-batch (the runner's query
-      // is the one active query)
-      def sample(): Unit = spark.streams.active.foreach { q =>
-        Option(q.lastProgress).flatMap(_.stateOperators.headOption)
-          .foreach(o => stateSamples += o.numRowsTotal)
-      }
-      // a short fixed-batch soak: the wall-clock budget belongs to the
-      // dedup soak above; this pins the orthogonal bound (vocab-sized
-      // state) over enough batches for several snapshot compactions
-      val feeds = (0 until 30).map { b => () =>
-        sample()
-        val docs = (0 until 100).map { i =>
-          val words = (0 until 12).map(j =>
-            vocab(((id + i) * 7 + j * 13 + b).toInt % vocab.size))
-          (id + i, words.mkString(" "))
-        }
-        mem.addData(docs)
-        fed += 100
-        id += 100
-      }
-      runMemorySink(out, "update")(feeds :+ (() => sample()): _*)
-      fed shouldBe 3000L
-      // bigram terms over a 500-word vocab: bounded by distinct ADJACENT
-      // pairs actually generated, far below fed-doc scale and FLAT at
-      // the end (every possible pair seen long before the last batches)
-      stateSamples.last should be < 15000L
-      stateSamples.takeRight(5).toSet.size shouldBe 1
     }
   }
 }

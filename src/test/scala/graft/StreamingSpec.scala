@@ -3,7 +3,7 @@ package graft
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.core.{Flags, Obs}
 import graft.ops.Geo
-import graft.pipeline.QcMain
+import graft.pipeline.{ConfigLoader, QcMain}
 import graft.sources.PatchSink
 import graft.streaming.IncrementalQc
 import org.apache.spark.sql.{DataFrame, Row}
@@ -49,12 +49,18 @@ class StreamingSpec extends SparkSpec {
     // a small observations batch: 2 streams, some values out of bounds
     val obs = observations((0 until 40).map { i =>
       (i.toLong, if (i % 7 == 0) 99.0 else 10.0 + i % 3,
-        1700000000000L + i * 60000L, (i % 2).toLong)
+        1700000000000L + i * 60000L, (i % 2 + 1).toLong)
     })
     obs.write.mode("overwrite").parquet(dir)
 
-    val cfg = QcMain.Config(rangeBounds = Map(0L -> (5.0, 50.0), 1L -> (5.0, 50.0)),
+    val cfg = QcMain.Config(rangeBounds = Map(1L -> (5.0, 50.0), 2L -> (5.0, 50.0)),
       regions = Seq(northSea))
+    // the same config as a deployment writes it, in a config document
+    val doc =
+      """{"QC": {"1": {"range": {"min": 5, "max": 50}}, "2": {"range": {"min": 5, "max": 50}}},
+        | "location": {"regions": [{"region": "NORTH SEA", "sub_region": "SOUTHERN BIGHT",
+        |   "lat": {"min": 51.0, "max": 52.0}, "lon": {"min": 2.5, "max": 3.5}}]}}""".stripMargin
+    assert(ConfigLoader.load(doc).map(_.qc) == Right(cfg))
 
     var rows = 0L
     var bad = 0L
@@ -82,7 +88,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("stream_two_passes_ckpt").toString
     val t0 = 1700000000000L
     Seq((0L until 5L, t0), (5L until 10L, t0 - 7200000L)).foreach { case (ids, from) =>
-      observations(ids.map(i => (i, 10.0, from + (i - ids.head) * 60000L, 0L)))
+      observations(ids.map(i => (i, 10.0, from + (i - ids.head) * 60000L, 1L)))
         .coalesce(1).write.mode("append").parquet(dir)
       IncrementalQc.stream(spark, dir, cfg)(sink)
         .option("checkpointLocation", ckpt).start().awaitTermination(60000)
@@ -90,7 +96,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("rows 2 h older than the last batch still reach the sink, every row flagged") {
-    val cfg = QcMain.Config(rangeBounds = Map(0L -> (5.0, 50.0)), regions = Seq(northSea))
+    val cfg = QcMain.Config(rangeBounds = Map(1L -> (5.0, 50.0)), regions = Seq(northSea))
     val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Byte)]]
     twoPassesSecondOlder(cfg) { (batch, _) => batches += flagsOf(batch, Obs.QcFlag) }
     // the older file is its own, later micro-batch, and nothing drops it
@@ -99,7 +105,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a terminated stream leaves no persisted RDD behind") {
-    val cfg = QcMain.Config(rangeBounds = Map(0L -> (5.0, 50.0)), regions = Seq(northSea))
+    val cfg = QcMain.Config(rangeBounds = Map(1L -> (5.0, 50.0)), regions = Seq(northSea))
     val before = spark.sparkContext.getPersistentRDDs.keySet
     var batches = 0
     twoPassesSecondOlder(cfg) { (batch, _) =>
@@ -110,89 +116,13 @@ class StreamingSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
-  test("session_window streaming == batch sessionize on finalized sessions") {
-    import graft.streaming.StreamingSessions
-    val dir = java.nio.file.Files.createTempDirectory("stream_sess").toString
-    val base = 1700000000000L
-    // two users, sessions split by gaps far from the 30 s boundary
-    val events = Seq(
-      ("u1", 0L), ("u1", 5000L), ("u1", 9000L),      // session 1 (3 events)
-      ("u1", 120000L), ("u1", 125000L),              // session 2 (2 events)
-      ("u2", 1000L),                                  // session (1 event)
-      ("u2", 200000L), ("u2", 201000L), ("u2", 202000L) // session (3 events)
-    ).map { case (u, off) => (u, new java.sql.Timestamp(base + off)) }
-    spark.createDataFrame(events).toDF("user", "ts")
-      .repartition(1).write.mode("overwrite").parquet(dir)
-    // a far-future event in a SECOND file: its batch pushes the
-    // watermark past every real session so append mode finalizes them
-    Seq(("zz", new java.sql.Timestamp(base + 86400000L))).toDF("user", "ts")
-      .repartition(1).write.mode("append").parquet(dir)
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val out = StreamingSessions.sessionStats(stream, "ts", Seq("user"),
-      gap = "30 seconds", watermarkDelay = "0 seconds")
-    // one step: both files are already in place, one micro-batch each
-    val streamed = runMemorySink(out)(() => ())
-      .filter(_.getString(0) != "zz") // the watermark-pusher's own session never finalizes
-      .map(r => (r.getString(0), r.getAs[Long]("t_start_us"),
-        r.getAs[Long]("t_end_us"), r.getAs[Long]("n_events"),
-        r.getAs[Long]("duration_us"))).toSet
-    val batchDf = events.toDF("user", "ts")
-      .withColumn("t_us", unix_micros($"ts"))
-    val sess = graft.ops.WindowKernels.sessionize(
-      batchDf, Seq("user"), $"t_us", gapUs = 30000000L)
-    val batch = graft.ops.WindowKernels.sessionStats(sess, Seq("user"), $"t_us")
-      .collect()
-      .map(r => (r.getString(0), r.getAs[Long]("t_start_us"),
-        r.getAs[Long]("t_end_us"), r.getAs[Long]("n_events"),
-        r.getAs[Long]("duration_us"))).toSet
-    assert(streamed == batch)
-    assert(batch.size == 4)
-  }
-
-  test("streaming funnel == batch funnel across a micro-batch split") {
-    import graft.streaming.{FunnelEvent, StreamingFunnel}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val steps = Seq("view", "click", "purchase")
-    val events = Seq(
-      FunnelEvent(1L, "view", 10L), FunnelEvent(1L, "click", 20L),
-      FunnelEvent(1L, "purchase", 30L),                    // full funnel
-      FunnelEvent(2L, "click", 5L), FunnelEvent(2L, "view", 10L),
-      FunnelEvent(2L, "click", 40L),                       // pre-view click ignored
-      FunnelEvent(3L, "view", 10L),                        // stops at stage 1
-      FunnelEvent(4L, "purchase", 10L))                    // never viewed: no rows
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[FunnelEvent]
-    val out = StreamingFunnel(mem.toDS(), steps)
-    // split MID-FUNNEL for keys 1 and 2: stage times must carry in state
-    val streamed = runMemorySink(out)(twoBatches(mem, events, 4): _*)
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val batch = graft.ops.Funnel.ordered(
-      events.toDF().select($"key", $"etype", $"tUs"),
-      "key", $"etype", $"tUs", steps)
-      .collect().flatMap { r =>
-        (1 to steps.length).flatMap { i =>
-          if (r.isNullAt(i)) None else Some((r.getLong(0), i, r.getLong(i)))
-        }
-      }.toSet
-    assert(streamed == batch)
-    assert(streamed.contains((1L, 3, 30L)) && streamed.contains((2L, 2, 40L)))
-    assert(!streamed.exists(_._1 == 4L))
-  }
-
   test("re-running the stream over the same data is idempotent (last-writer-wins)") {
     val dir = java.nio.file.Files.createTempDirectory("stream_src2").toString
     val obs = observations((0 until 10).map { i =>
-      (i.toLong, 10.0, 1700000000000L + i * 1000L, 0L)
+      (i.toLong, 10.0, 1700000000000L + i * 1000L, 1L)
     })
     obs.write.mode("overwrite").parquet(dir)
-    val cfg = QcMain.Config(rangeBounds = Map(0L -> (5.0, 50.0)), regions = Seq(northSea))
+    val cfg = QcMain.Config(rangeBounds = Map(1L -> (5.0, 50.0)), regions = Seq(northSea))
 
     val state = scala.collection.mutable.Map.empty[Long, Byte] // upsert sink
     def run(): Unit = {
@@ -231,10 +161,10 @@ class StreamingSpec extends SparkSpec {
     try {
       val dir = java.nio.file.Files.createTempDirectory("stream_patch").toString
       val obs = observations((0 until 12).map { i =>
-        (i.toLong, if (i % 4 == 0) 99.0 else 10.0, 1700000000000L + i * 60000L, 0L)
+        (i.toLong, if (i % 4 == 0) 99.0 else 10.0, 1700000000000L + i * 60000L, 1L)
       })
       obs.write.mode("overwrite").parquet(dir)
-      val cfg = QcMain.Config(rangeBounds = Map(0L -> (5.0, 50.0)),
+      val cfg = QcMain.Config(rangeBounds = Map(1L -> (5.0, 50.0)),
         gradientBounds = (-1000.0, 1000.0), regions = Seq(northSea))
 
       // each run is one micro-batch over every file in the directory

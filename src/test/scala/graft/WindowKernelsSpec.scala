@@ -453,4 +453,72 @@ class WindowKernelsSpec extends SparkSpec with Matchers {
       case (g, e) => g shouldBe e
     }
   }
+
+  test("batch reference: drift alarms, centered stream never does") {
+    // (iot_id, t_us, v_micro, ds): stream 5 drifts high then recovers;
+    // stream 9 stays centered (never alarms)
+    val rows = Seq(
+      (1L, 10L, 100L, 5L), (2L, 20L, 250L, 5L), (3L, 30L, 260L, 5L),
+      (4L, 40L, 270L, 5L), (5L, 50L, 100L, 5L), (6L, 60L, 90L, 5L),
+      (7L, 10L, 95L, 9L), (8L, 20L, 105L, 9L), (9L, 30L, 100L, 9L))
+    val b = WindowKernels.cusumFixed(
+        rows.toDF("iot_id", "t_us", "v_micro", "ds"),
+        "ds", "t_us", "v_micro", "iot_id", 100L, 10L, 300L)
+      .collect()
+      .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
+    // stream 5: sp after rows 2-4 = 140, 290, 450 -> alarm on row 4
+    b(2L) shouldBe ((140L, 0L, false))
+    b(4L) shouldBe ((450L, 0L, true))
+    // recovery: 450 + (100-110) = 440, still above h
+    b(5L) shouldBe ((440L, 0L, true))
+    Seq(7L, 8L, 9L).foreach(i => b(i)._3 shouldBe false)
+  }
+
+  test("batch reference: exactly the two planted gaps") {
+    def us(sec: Long) = sec * 1000000L
+    // (iot_id, t_us, ds): stream 5 has gaps 200s (10->210) and 150s
+    // (240->390); stream 9 is steady then goes quiet 240s (160->400)
+    val rows = Seq(
+      (1L, us(10), 5L), (2L, us(210), 5L), (3L, us(240), 5L),
+      (4L, us(390), 5L),
+      (5L, us(10), 9L), (6L, us(60), 9L), (7L, us(110), 9L),
+      (8L, us(160), 9L), (9L, us(400), 9L))
+    WindowKernels.gapEvents(rows.toDF("iot_id", "t_us", "ds"),
+        "ds", "t_us", "iot_id", thresholdUs = us(100))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet shouldBe Set(
+        (5L, us(10), us(210), us(200)), (5L, us(240), us(390), us(150)),
+        (9L, us(160), us(400), us(240)))
+  }
+
+  test("batch-derived expectation sanity") {
+    // (iot_id, t_us, typ, ds); window 10
+    val rows = Seq(
+      (1L, 10L, "view", 5L),   // click at 15: converted dt 5
+      (2L, 15L, "click", 5L),
+      (3L, 20L, "view", 5L),   // next click at 40 (> 30): timeout at t>30
+      (4L, 32L, "other", 5L),  // the witness that passes 20+10
+      (5L, 40L, "click", 5L),
+      (6L, 50L, "view", 5L),   // unresolved: nothing after 50+10
+      (7L, 8L, "view", 9L),    // other stream: click at 8+2=10, dt 2
+      (8L, 10L, "click", 9L))
+    val batch = WindowKernels.conversionTimeout(
+        rows.toDF("iot_id", "t_us", "typ", "ds"), Seq("ds"),
+        col("t_us"), col("iot_id"), $"typ" === "view", $"typ" === "click",
+        windowUs = 10L, idCol = "iot_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))
+    // the resolved attempts: converted in window, or any event after t+window
+    val resolved = batch.flatMap { case (ds, id, t, dt, conv) =>
+      val witness = rows.exists { case (_, rt, _, rds) => rds == ds && rt > t + 10L }
+      if (conv) Some((ds, id, true, dt))
+      else if (witness) Some((ds, id, false, None))
+      else None
+    }.toSet
+    resolved shouldBe Set(
+      (5L, 1L, true, Some(5L)),
+      (5L, 3L, false, None),
+      (9L, 7L, true, Some(2L)))
+  }
 }
