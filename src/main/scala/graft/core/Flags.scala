@@ -36,14 +36,6 @@ object Flags {
     Map(0 -> NoQc, 1 -> Good, 2 -> ProbablyGood, 3 -> ProbablyBad, 4 -> Bad, 9 -> Missing)
   val rankToWire: Map[Byte, Int] = wireToRank.map(_.swap)
 
-  /** Wire L20 code column -> severity rank column (pure CASE WHEN). */
-  def wireToRankCol(code: Column): Column = {
-    val init: Column = lit(null).cast("tinyint")
-    wireToRank.foldLeft(init) { case (acc, (w, r)) =>
-      when(code === lit(w), lit(r).cast("tinyint")).otherwise(acc)
-    }
-  }
-
   /** Severity rank column -> wire L20 code column. */
   def rankToWireCol(rank: Column): Column = {
     val init: Column = lit(null).cast("int")

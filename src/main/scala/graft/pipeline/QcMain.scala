@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.core.{Flags, Frames, Obs, QcConfig}
 import graft.ops._
-import graft.sources.{PatchSink, StaJson}
+import graft.sources.PatchSink
 import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -63,13 +63,6 @@ object QcMain {
       stabilization: Seq[graft.core.StabilizationConf] = Seq.empty,
       /** §3.1 step 8 — `QC_dependent` */
       dependents: Seq[graft.core.DependentConf] = Seq.empty)
-
-  /** Run the pipeline on a captured STA response; returns the flagged
-    * frame and the phase timing line.
-    */
-  def run(spark: SparkSession, staJsonPath: String, cfg: Config,
-          patchOut: Option[String] = None): (DataFrame, PhaseTimes) =
-    runFrom(spark, StaJson.readResponse(spark, staJsonPath), cfg, patchOut)
 
   /** §3.1 step 4 — stabilization pass: per configured independent
     * stream, BAD during warm-up after long outages; worst-wins
@@ -230,11 +223,11 @@ object QcMain {
         Seq("flag" -> coalesce(col("dep_flag"), col("flag"))), drop = Seq("dep_flag"))
     }
 
-  /** The same lifecycle from an already-loaded observations frame (the
-    * long schema both [[StaJson.readResponse]] and the live
-    * `graft.sources.sta` HTTP source produce) — the entry the live
-    * transport composes with: source pushdown happens in the PLAN of
-    * `obsIn` before this cache materializes it.
+  /** The lifecycle over an already-loaded observations frame (the long
+    * schema the `graft.sources.sta` source produces from a captured
+    * response or a live service); returns the flagged frame and the
+    * phase timing line. Source pushdown happens in the PLAN of `obsIn`
+    * before this cache materializes it.
     */
   def runFrom(spark: SparkSession, obsIn: DataFrame, cfg: Config,
               patchOut: Option[String] = None): (DataFrame, PhaseTimes) = {

@@ -1,6 +1,6 @@
 package graft.sources.sta
 
-import graft.core.Obs
+import graft.core.{Flags, Obs}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
@@ -20,7 +21,8 @@ import scala.jdk.CollectionConverters._
   *
   * v2 architecture: the scan COMPILES Catalyst pushdowns into the OData
   * request the reference builds by hand —
-  *  - required columns  → `$select=` lists per entity level
+  *  - required columns  → the only ones the reader fills; their `$select=`
+  *    lists show in the scan's `description()`, on no request
   *  - time / stream filters → `$filter=phenomenonTime gt X and lt Y`,
   *    `datastream_id in (…)` (reference `filter_cfg_to_query`,
   *    `src/main.py:328-331`, pinned `tests/test_config.py:23-28`)
@@ -34,7 +36,9 @@ import scala.jdk.CollectionConverters._
   * option (one response per file, one partition per file) and enforces
   * the pushed filters row by row; "http" GETs the `path` collection URL
   * with the compiled `$filter`, follows `@iot.nextLink` paging and
-  * retries 5xx ([[StaHttp]]).
+  * retries 5xx ([[StaHttp]]). Both flatten as `response_datastreams_to_df`
+  * does (`src/aums_data_request.py:166`): one row per observation, with its
+  * datastream's metadata; a datastream without observations gives none.
   *
   * Usage: `spark.read.format("graft.sources.sta").option("path", dir).load()`
   */
@@ -238,7 +242,9 @@ class StaReaderFactory(required: StructType) extends PartitionReaderFactory {
   */
 class StaPartitionReader(p: StaPartition, required: StructType)
     extends PartitionReader[InternalRow] {
+  import com.fasterxml.jackson.databind.JsonNode
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  import org.apache.spark.sql.catalyst.util.DateTimeUtils
   import org.apache.spark.unsafe.types.UTF8String
 
   /** Epoch µs of a Filter value for the phenomenonTime column (Spark hands
@@ -259,49 +265,71 @@ class StaPartitionReader(p: StaPartition, required: StructType)
     * the server enforces the compiled `$filter`; the file transport
     * enforces the same semantics here, row by row.
     */
-  private def keep(dsId: Long, timeUs: Long): Boolean =
+  private def keep(dsId: java.lang.Long, timeUs: java.lang.Long): Boolean =
     p.pushed.forall {
-      case GreaterThan(Obs.Time, v) => timeUs > filterTimeUs(v)
-      case LessThan(Obs.Time, v)    => timeUs < filterTimeUs(v)
+      // a null column satisfies no comparison, as in SQL
+      case GreaterThan(Obs.Time, v) => timeUs != null && timeUs > filterTimeUs(v)
+      case LessThan(Obs.Time, v)    => timeUs != null && timeUs < filterTimeUs(v)
       case In(Obs.DatastreamId, vs) =>
-        vs.exists(x => x.asInstanceOf[Number].longValue == dsId)
+        dsId != null && vs.exists(x => x.asInstanceOf[Number].longValue == dsId)
       case _ => true // unknown pushed shape: keep (never claimed pushable)
     }
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val fieldIdx = required.fieldNames.zipWithIndex.toMap
+  // the session's, which tasks carry: a time without an offset is read in it
+  private val zone = java.time.ZoneId.of(SQLConf.get.sessionLocalTimeZone)
+
+  // A field as from_json reads it under the declared type: absent, JSON
+  // null, of another JSON type or (a rank) out of the vocabulary is null.
+  private def long(n: JsonNode): java.lang.Long =
+    if (n.isIntegralNumber && n.canConvertToLong) n.longValue else null
+  private def double(n: JsonNode): Any = if (n.isNumber) n.doubleValue else null
+  private def string(n: JsonNode): UTF8String =
+    if (n.isMissingNode || n.isNull) null
+    else UTF8String.fromString(if (n.isValueNode) n.asText else n.toString)
+
+  /** µs since the epoch, as a string cast to timestamp gives it; a
+    * string that is no timestamp fails the task, as the ANSI cast does.
+    */
+  private def time(n: JsonNode): java.lang.Long =
+    if (n.isMissingNode || n.isNull) null
+    else DateTimeUtils.stringToTimestamp(UTF8String.fromString(n.asText), zone).getOrElse(
+      throw new IllegalArgumentException(s"phenomenonTime '${n.asText}' is not a timestamp"))
+  /** The rank of an L20 wire code given as a number or a numeric string. */
+  private def rank(n: JsonNode): Any =
+    (if (n.isIntegralNumber && n.canConvertToInt) Some(n.intValue)
+     else if (n.isTextual) n.textValue.trim.toIntOption else None)
+      .flatMap(Flags.wireToRank.get).getOrElse(null)
 
   /** Flatten one response document (either transport) to rows. */
-  private def parse(root: com.fasterxml.jackson.databind.JsonNode): Iterator[InternalRow] = {
-    val ds = root.path("Datastreams")
+  private def parse(root: JsonNode): Iterator[InternalRow] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    ds.forEach { d =>
-      val obsArr = d.path("Observations")
-      obsArr.forEach { o =>
+    root.path("Datastreams").forEach { d =>
+      val dsId = long(d.path("@iot.id"))
+      val dsCols = Seq(
+        Obs.DatastreamId -> dsId,
+        "description" -> string(d.path("description")),
+        Obs.Units -> string(d.path("unitOfMeasurement").path("name")),
+        "observed_property_id" -> long(d.path("ObservedProperty").path("@iot.id")),
+        Obs.ObservationType -> string(d.path("ObservedProperty").path("name")),
+        "sensor" -> string(d.path("Sensor").path("name")))
+      d.path("Observations").forEach { o =>
         val row = new GenericInternalRow(required.length)
         def set(name: String, v: Any): Unit =
           fieldIdx.get(name).foreach(i => row.update(i, v))
-        set(Obs.DatastreamId, d.path("@iot.id").asLong())
-        set("description", UTF8String.fromString(d.path("description").asText("")))
-        set(Obs.Units, UTF8String.fromString(d.path("unitOfMeasurement").path("name").asText("")))
-        set("observed_property_id", d.path("ObservedProperty").path("@iot.id").asLong())
-        set(Obs.ObservationType,
-          UTF8String.fromString(d.path("ObservedProperty").path("name").asText("")))
-        set("sensor", UTF8String.fromString(d.path("Sensor").path("name").asText("")))
-        set(Obs.IotId, o.path("@iot.id").asLong())
-        set(Obs.Result, o.path("result").asDouble())
-        val inst = java.time.Instant.parse(o.path("phenomenonTime").asText())
-        val timeUs = inst.getEpochSecond * 1000000L + inst.getNano / 1000L
+        dsCols.foreach { case (name, v) => set(name, v) }
+        set(Obs.IotId, long(o.path("@iot.id")))
+        set(Obs.Result, double(o.path("result")))
+        val timeUs = time(o.path("phenomenonTime"))
         set(Obs.Time, timeUs)
-        set(Obs.QcFlag, graft.core.Flags.wireToRank
-          .getOrElse(o.path("resultQuality").asInt(0), graft.core.Flags.NoQc))
-        val coords = o.path("FeatureOfInterest").path("feature").path("coordinates")
-        if (coords.isArray && coords.size() >= 2) {
-          set(Obs.Long_, coords.get(0).asDouble())
-          set(Obs.Lat, coords.get(1).asDouble())
-        }
-        set(Obs.FeatureId, o.path("FeatureOfInterest").path("@iot.id").asLong())
-        if (keep(d.path("@iot.id").asLong(), timeUs)) out += row
+        set(Obs.QcFlag, rank(o.path("resultQuality")))
+        val foi = o.path("FeatureOfInterest")
+        val coords = foi.path("feature").path("coordinates")
+        set(Obs.Long_, double(coords.path(0)))
+        set(Obs.Lat, double(coords.path(1)))
+        set(Obs.FeatureId, long(foi.path("@iot.id")))
+        if (keep(dsId, timeUs)) out += row
       }
     }
     out.iterator
@@ -312,11 +340,11 @@ class StaPartitionReader(p: StaPartition, required: StructType)
     * nextLink is the STA-spec equivalent and server-agnostic). Fetched
     * lazily — a `limit(n)` query stops paging once satisfied.
     */
-  private def httpPages(startUrl: String): Iterator[com.fasterxml.jackson.databind.JsonNode] =
-    new Iterator[com.fasterxml.jackson.databind.JsonNode] {
+  private def httpPages(startUrl: String): Iterator[JsonNode] =
+    new Iterator[JsonNode] {
       private var pending: Option[String] = Some(startUrl)
       override def hasNext: Boolean = pending.isDefined
-      override def next(): com.fasterxml.jackson.databind.JsonNode = {
+      override def next(): JsonNode = {
         val root = mapper.readTree(StaHttp.get(pending.get))
         val nl = root.path("@iot.nextLink")
         pending = if (nl.isMissingNode || nl.isNull || nl.asText().isEmpty) None

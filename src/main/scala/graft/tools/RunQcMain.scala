@@ -14,7 +14,8 @@ object RunQcMain {
   def main(args: Array[String]): Unit = {
     val cfg = ConfigLoader.loadFileOrExit(args(0)).qc
     val spark = graft.core.Sessions.local()
-    val (flagged, phases) = QcMain.run(spark, args(1), cfg,
+    val (flagged, phases) = QcMain.runFrom(spark,
+      spark.read.format("graft.sources.sta").option("path", args(1)).load(), cfg,
       patchOut = args.lift(2))
     println("FLAG HISTOGRAM " + flagged.groupBy(col("flag")).count()
       .collect().map(r => s"${r.getByte(0)}->${r.getLong(1)}").sorted.mkString(" "))

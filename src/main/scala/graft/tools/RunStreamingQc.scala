@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.core.{Flags, Obs}
 import graft.pipeline.ConfigLoader
+import graft.sources.PatchSink
 import graft.streaming.IncrementalQc
 import org.apache.spark.sql.functions._
 
@@ -23,13 +24,12 @@ object RunStreamingQc {
     val spark = graft.core.Sessions.local()
 
     val q = IncrementalQc.stream(spark, srcDir, cfg) { (batch, id) =>
-      val flagged = batch.select(col(Obs.IotId).as("id"),
-        Flags.rankToWireCol(col(Obs.QcFlag)).as("resultQuality"))
-      flagged.write.mode("append").json(outDir)
+      PatchSink.patchBodies(batch).write.mode("append").json(outDir)
       println(s"STREAM batch=$id rows=${batch.count()} " +
         s"bad=${batch.filter(col(Obs.QcFlag) === Flags.Bad).count()}")
     }.start()
-    q.awaitTermination(120000)
+    // an AvailableNow query ends by itself; a failed one throws here
+    q.awaitTermination()
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.Bitext
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Margin-based bitext mining: planted translation pairs (identical

@@ -3,7 +3,6 @@ package graft
 import graft.core.{DependentConf, Flags, StabilizationConf, Util}
 import graft.ops.Geo
 import graft.pipeline.{ConfigLoader, QcMain}
-import org.apache.spark.sql.functions._
 
 /** S10/A8/G7 — config loading + validation (reference `src/yaml_schema.py`),
   * combine_dicts (pinned `tests/test_qc.py:973-978`), find_nearest_idx

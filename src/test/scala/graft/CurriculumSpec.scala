@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{Bitext, Curriculum, EmbAudit}
+import graft.functions.{Curriculum, EmbAudit}
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.Dedup
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Cross-run dedup ledger: persisted fingerprint history, bucketed on

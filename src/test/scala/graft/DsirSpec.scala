@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.Dsir
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** DSIR importance resampling (Xie et al. 2023): hashed-n-gram

@@ -4,7 +4,6 @@ import graft.core.Flags
 import org.apache.spark.sql.functions._
 import org.scalacheck.Prop.forAll
 import org.scalacheck.{Gen, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Flag algebra semantics (reference `README.adoc:172-175`,
   * `src/main.py:151,454`; pinning tests `tests/test_qc.py:184-195`):
@@ -44,8 +43,8 @@ class FlagsSpec extends SparkSpec {
   }
 
   test("wire->rank->wire column roundtrip") {
-    val df = Seq(0, 1, 2, 3, 4, 9).toDF("code")
-      .select(Flags.rankToWireCol(Flags.wireToRankCol(col("code"))).as("rt"))
+    val df = Seq(0, 1, 2, 3, 4, 9).map(Flags.wireToRank).toDF("rank")
+      .select(Flags.rankToWireCol(col("rank")).as("rt"))
     assert(df.collect().map(_.getInt(0)).toSeq == Seq(0, 1, 2, 3, 4, 9))
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Funnel
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Ordered-funnel semantics: step order matters, pre-step events don't

@@ -1,8 +1,7 @@
 package graft
 
-import graft.core.{Flags, Obs}
+import graft.core.Flags
 import graft.ops.PivotExport
-import graft.sources.StaJson
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
@@ -21,7 +20,7 @@ class GoldenExportSpec extends SparkSpec with Matchers {
 
   test("alignedExport reproduces the reference golden aggregate (rtol 0.01)") {
     assume(exists)
-    val obs = StaJson.readResponse(spark, fixture)
+    val obs = spark.read.format("graft.sources.sta").option("path", fixture).load()
     val wide = PivotExport.alignedExport(obs, streams, stepSec = 1L)
       .withColumn("t_sec", unix_micros(col("time_round")) / 1000000L)
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Graphs
-import org.apache.spark.sql.functions._
 
 /** Triangle counting on hand-built graphs with known answers; the
   * q_triangles oracle pins the integer replay at data scale.

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{LangModel, Portable}
-import org.apache.spark.sql.functions._
 
 /** Bigram-LM scoring semantics on a hand-computable corpus + the
   * broadcast-model plan pin for t_lm_score. Integer-score parity with

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.PageRank
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Integer PageRank — hand-computed fixpoint prefix on a 3-node path,

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.Pca
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 class PcaSpec extends SparkSpec with Matchers {

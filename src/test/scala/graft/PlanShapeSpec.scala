@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Plan-shape regression guards for the headline queries' scale claims —
   * the properties PLAN_AUDIT reads off by hand, pinned so a refactor

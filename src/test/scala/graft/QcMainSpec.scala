@@ -3,6 +3,7 @@ package graft
 import graft.core.Flags
 import graft.ops.Geo
 import graft.pipeline.{ConfigLoader, QcMain}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 
 /** §3.1 lifecycle end-to-end on the reference's own captured STA JSON
@@ -24,20 +25,21 @@ class QcMainSpec extends SparkSpec {
         secondaryRange = Some((0.0, 25.0)))))
     val out = java.nio.file.Files.createTempDirectory("qc_patch").toString
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val (flagged, phases) = QcMain.run(spark, fixture, cfg, patchOut = Some(out))
+    val staRead = spark.read.format("graft.sources.sta").option("path", fixture).load()
+    val (flagged, phases) = QcMain.runFrom(spark, staRead, cfg, patchOut = Some(out))
 
-    // cache lifecycle: run() must release its intermediate stage caches;
+    // cache lifecycle: runFrom() must release its intermediate stage caches;
     // the single surviving cached frame is the RETURNED one (caller-owned)
     val newlyCached = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
     assert(newlyCached.size <= 1,
-      s"run() leaked intermediate caches: $newlyCached")
+      s"runFrom() leaked intermediate caches: $newlyCached")
 
     val hist = flagged.groupBy(col("flag")).count().collect()
       .map(r => r.getByte(0) -> r.getLong(1)).toMap
     assert(hist.values.sum > 8000) // every observation flagged-or-passed
     // count-preserving: spatial-outlier rows must stay in the output
     // (flagged BAD), not be dropped by the kinematics input filter
-    val inputRows = graft.sources.StaJson.readResponse(spark, fixture).count()
+    val inputRows = staRead.count()
     assert(hist.values.sum == inputRows,
       s"pipeline dropped rows: in=$inputRows out=${hist.values.sum}")
     assert(hist.keys.exists(_ >= Flags.Good)) // at least some opinions
@@ -96,6 +98,15 @@ class QcMainSpec extends SparkSpec {
       flagged.unpersist()
       graft.core.Sessions.codegenCompiles - c0
     }
+    // the codegen cache is process-wide, and a suite that read the sta
+    // source into runFrom earlier compiled the scan's and the passes'
+    // literal-free classes: empty it, so the first window's are its own
+    val cache = {
+      val m = CodeGenerator.getClass.getDeclaredMethod("cache")
+      m.setAccessible(true)
+      m.invoke(CodeGenerator)
+    }
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
     val first = compiles(0)
     // more classes than Spark's default cache (100) holds: a session
     // capped there recompiles them in every window

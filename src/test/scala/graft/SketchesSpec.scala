@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.Sketches
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** Portable HLL — accuracy against exact distinct (expected relative

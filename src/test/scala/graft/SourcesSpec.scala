@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Flags, Obs}
-import graft.sources.{PatchSink, StaJson}
+import graft.sources.PatchSink
 import org.apache.spark.sql.functions._
 
 /** S3 — STA JSON flattening against the reference's own captured fixture
@@ -17,7 +17,7 @@ class SourcesSpec extends SparkSpec {
 
   test("flatten reference STA response: all datastreams, empty ones drop") {
     assume(fixtureExists)
-    val df = StaJson.readResponse(spark, fixture)
+    val df = spark.read.format("graft.sources.sta").option("path", fixture).load()
     val perStream = df.groupBy(col(Obs.DatastreamId)).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // 9 streams in the fixture; 7854/7855 have no observations => absent
@@ -29,8 +29,7 @@ class SourcesSpec extends SparkSpec {
 
   test("flattened schema carries coords, µs time, flag ranks") {
     assume(fixtureExists)
-    val df = StaJson.readResponse(spark, fixture)
-    val row = df.orderBy(col(Obs.IotId)).limit(1).collect()(0)
+    val df = spark.read.format("graft.sources.sta").option("path", fixture).load()
     assert(df.columns.toSet.contains(Obs.Lat) && df.columns.contains(Obs.Long_))
     // fixture wire code 2 (probably good) maps to rank PROBABLY_GOOD
     val flags = df.select(col(Obs.QcFlag)).distinct().collect().map(_.getByte(0)).toSet

@@ -216,7 +216,8 @@ class StaHttpSpec extends SparkSpec {
       java.nio.file.Files.writeString(fixture,
         s"""{"Datastreams":[${dsJson(1, ds1page2)},${dsJson(2, ds2obs)}]}""")
       val patchDir = java.nio.file.Files.createTempDirectory("golden_patch").toString
-      val (flaggedFile, _) = QcMain.run(spark, fixture.toString, cfg,
+      val (flaggedFile, _) = QcMain.runFrom(spark,
+        spark.read.format("graft.sources.sta").option("path", fixture.toString).load(), cfg,
         patchOut = Some(patchDir))
       val fileFlags = flaggedFile.select(col(Obs.IotId), col("flag"))
         .collect().map(r => r.getLong(0) -> r.getByte(1)).toMap

@@ -16,7 +16,6 @@ import java.net.InetSocketAddress
   * [[QcMain.runFrom]] per micro-batch, idempotent flag upserts.
   */
 class StreamingSpec extends SparkSpec {
-  import spark.implicits._
 
   /** The box the QC fixtures' observations sit in. */
   private val northSea = Geo.BoxRegion("NORTH SEA", "SOUTHERN BIGHT", 51.0, 52.0, 2.5, 3.5)
