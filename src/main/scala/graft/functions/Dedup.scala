@@ -772,7 +772,7 @@ object Dedup {
     def mark(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(false) else df.localCheckpoint(false)
     def markEager(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+      graft.core.Checkpoints.eager(df, reliable = checkpointDir.isDefined)
     // Materialize pair discovery ONCE before mirroring: the union puts
     // the (expensive) pairs plan in both arms, so without this the
     // upstream candidate+verify pipeline executes twice.

@@ -281,11 +281,6 @@ object Graphs {
   def labelPropagation(edges: DataFrame, rounds: Int,
                        checkpointEvery: Int = 8): DataFrame = {
     require(rounds >= 1 && checkpointEvery >= 1)
-    // hash-partition the edges on the join key ONCE before the
-    // checkpoint (the PageRank trick): every round's labels⋈edges then
-    // satisfies its distribution requirement from the materialized
-    // partitioning — labels (|V| rows) re-shuffle per round, the
-    // edge-scale frame never does
     // hash-partition AND sort on the join key once before the
     // checkpoint: LogicalRDD keeps both outputPartitioning and
     // outputOrdering, so every round's sort-merge join consumes the

@@ -139,6 +139,47 @@ object QueriesEmb {
        |    range(0, 25) t(b))"""
       .stripMargin.linesIterator.map(_.trim).mkString(" ")
 
+  /** The ten best matches per query by the score `sim` of `from`
+    * (match id breaks ties), the score rounded to 6 places as `out`.
+    */
+  private def top10Sql(sim: String, out: String, from: String = "s"): String =
+    s"""SELECT query_id, match_id, rank, round($sim, 6) + 0.0e0 AS $out FROM (
+       |  SELECT query_id, match_id, $sim,
+       |    CAST(row_number() OVER (PARTITION BY query_id
+       |      ORDER BY $sim DESC, match_id ASC) AS INT) AS rank
+       |  FROM $from) r
+       |WHERE rank <= 10""".stripMargin
+
+  /** Occupancy of the self-scaling coarse quantizer trained over `src`
+    * — mirrors Similarity.indexHealth: k-means (2 iterations), each
+    * vector's nearest centroid, and one row of list statistics; `shard`
+    * adds the shard number as a column.
+    */
+  private def indexHealthSql(src: String, shard: Option[Int]): String = {
+    val shardCol = shard.fold("")(i => s",\n  CAST($i AS BIGINT) AS shard")
+    s"""WITH ${kmeansCentsCteExpr(autoCoarseKSqlFrom(src), 2, src = src)},
+       |ccent AS MATERIALIZED (SELECT c, ce FROM cent2),
+       |ca AS (
+       |  SELECT e.vec_id, s.c,
+       |    row_number() OVER (PARTITION BY e.vec_id
+       |      ORDER BY ${cosSql("e.embedding", "s.ce")} DESC, s.c ASC) AS rn
+       |  FROM $src e, ccent s),
+       |casg AS (SELECT vec_id, c AS coarse_c FROM ca WHERE rn = 1),
+       |g AS (SELECT coarse_c, CAST(count(*) AS BIGINT) AS cnt
+       |      FROM casg GROUP BY 1),
+       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM $src),
+       |nl AS (SELECT CAST(count(*) AS BIGINT) AS n_lists FROM ccent)
+       |SELECT t.n AS n_vectors, nl.n_lists,
+       |  CAST(count(*) AS BIGINT) AS lists_used,
+       |  CAST(nl.n_lists - count(*) AS BIGINT) AS lists_empty,
+       |  CAST(max(g.cnt) AS BIGINT) AS max_list,
+       |  CAST(t.n // nl.n_lists AS BIGINT) AS mean_list,
+       |  CAST(max(g.cnt) * 1000000 // greatest(t.n // nl.n_lists, 1)
+       |    AS BIGINT) AS skew_ppm$shardCol
+       |FROM g, tot t, nl
+       |GROUP BY t.n, nl.n_lists""".stripMargin
+  }
+
   /** [[kmeansCentsCte]] with the centroid count as an arbitrary SQL
     * scalar expression (`kk` CTE) — a literal for the pinned test
     * shapes, [[autoCoarseKSql]] for the self-scaling geometry. The
@@ -239,15 +280,29 @@ object QueriesEmb {
   /** The PQ retrieve-and-rerank oracle — shared by `sim_pq_rerank`
     * (train-in-query) and `sim_pq_rerank_search` (persisted index).
     */
-  private lazy val pqRerankOracleSql: String = {
+  /** The PQ top-10 oracle — shared by `sim_pq_topk` (train-in-query)
+    * and `sim_pq_search` (persisted index).
+    */
+  private lazy val pqTopKOracleSql: String =
+    s"""WITH ${pqScoreCtes(m = 8, sub = 8, kc = 8, iters = 2)}
+       |${top10Sql("sim_pq", "sim_pq")}""".stripMargin
+
+  private lazy val pqRerankOracleSql: String =
+    rerankOracleSql(pqScoreCtes(m = 8, sub = 8, kc = 8, iters = 2), "sim_pq")
+
+  /** Retrieve-and-rerank over approximate scores `s (query_id,
+    * match_id, <sim>)` from `scoreBody`: the 50 best candidates per
+    * query are exactly re-scored by cosine over their float vectors.
+    */
+  private def rerankOracleSql(scoreBody: String, sim: String): String = {
     val dqq = dotSql("q.e", "q.e")
     val dee = dotSql("e.embedding", "e.embedding")
     val dqe = dotSql("q.e", "e.embedding")
-    s"""WITH ${pqScoreCtes(m = 8, sub = 8, kc = 8, iters = 2)},
+    s"""WITH $scoreBody,
        |cand AS (SELECT query_id, match_id FROM (
        |  SELECT query_id, match_id,
        |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY sim_pq DESC, match_id ASC) AS INT) AS rank
+       |      ORDER BY $sim DESC, match_id ASC) AS INT) AS rank
        |  FROM s) t WHERE rank <= 50),
        |x AS (
        |  SELECT c.query_id, c.match_id,
@@ -255,12 +310,7 @@ object QueriesEmb {
        |  FROM cand c
        |  JOIN embeddings e ON e.vec_id = c.match_id
        |  JOIN q ON q.query_id = c.query_id)
-       |SELECT query_id, match_id, rank, round(sim, 6) + 0.0e0 AS sim FROM (
-       |  SELECT query_id, match_id, sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY sim DESC, match_id ASC) AS INT) AS rank
-       |  FROM x) r
-       |WHERE rank <= 10""".stripMargin
+       |${top10Sql("sim", "sim", from = "x")}""".stripMargin
   }
 
   /** The IVF-PQ oracle CTE body — coarse k-means chain + residual CTE +
@@ -300,13 +350,6 @@ object QueriesEmb {
         s"list_slice(re, ${i * sub + 1}, ${(i + 1) * sub})",
         sub, kc, iters, src = "resid")
     }.mkString(",\n")
-    val fCtes = (0 until m).map { i =>
-      s"""f$i AS (SELECT vec_id, c FROM (
-         |  SELECT e.vec_id, s.c,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY ${cosSqlN("e.se", "s.ce", sub)} DESC, s.c ASC) AS rn
-         |  FROM p${i}_src e, p${i}_cent$iters s) t WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
     val reconJoins = (1 until m).map(i =>
       s"  JOIN f$i ON f$i.vec_id = f0.vec_id JOIN p${i}_cent$iters c$i ON c$i.c = f$i.c")
       .mkString("\n")
@@ -330,7 +373,7 @@ object QueriesEmb {
        |    a.coarse_c
        |  FROM casg a JOIN ccent t ON t.c = a.coarse_c),
        |$subCtes,
-       |$fCtes,
+       |${pqAssignCtes(m, sub, iters)},
        |recon AS MATERIALIZED (
        |  SELECT f0.vec_id, $reconList AS rrec
        |  FROM f0 JOIN p0_cent$iters c0 ON c0.c = f0.c
@@ -380,20 +423,9 @@ object QueriesEmb {
        |u AS (
        |$legs
        |)
-       |SELECT query_id, match_id, rank,
-       |  round(sim_ivfpq, 6) + 0.0e0 AS sim_ivfpq FROM (
-       |  SELECT query_id, match_id, sim_ivfpq,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY sim_ivfpq DESC, match_id ASC) AS INT) AS rank
-       |  FROM u) r
-       |WHERE rank <= 10""".stripMargin
+       |${top10Sql("sim_ivfpq", "sim_ivfpq", from = "u")}""".stripMargin
   }
 
-  /** The full IVF-PQ oracle SQL (body + rank-≤-10 tail). Shared verbatim
-    * by `sim_ivfpq_topk` (train-in-query) and `sim_ivfpq_search`
-    * (persisted index): the serving path reconstructs the same
-    * arithmetic from stored codes, so one mirror checks both.
-    */
   /** Retrieve-and-rerank over the IVF-PQ index: the approximate scores
     * `s` nominate 50 candidates per query, only those candidates'
     * float vectors are exactly re-scored — mirror of
@@ -401,40 +433,16 @@ object QueriesEmb {
     * the probe-pruned IVF-PQ body.
     */
   private lazy val ivfPqRerankOracleSql: String =
-    ivfPqRerankOracleSqlFrom(ivfPqScoreBody)
+    rerankOracleSql(ivfPqScoreBody, "sim_ivfpq")
 
-  private def ivfPqRerankOracleSqlFrom(scoreBody: String): String = {
-    val dqq = dotSql("q.e", "q.e")
-    val dee = dotSql("e.embedding", "e.embedding")
-    val dqe = dotSql("q.e", "e.embedding")
-    s"""WITH $scoreBody,
-       |cand AS (SELECT query_id, match_id FROM (
-       |  SELECT query_id, match_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY sim_ivfpq DESC, match_id ASC) AS INT) AS rank
-       |  FROM s) t WHERE rank <= 50),
-       |x AS (
-       |  SELECT c.query_id, c.match_id,
-       |    $dqe / (sqrt($dqq) * sqrt($dee)) AS sim
-       |  FROM cand c
-       |  JOIN embeddings e ON e.vec_id = c.match_id
-       |  JOIN q ON q.query_id = c.query_id)
-       |SELECT query_id, match_id, rank, round(sim, 6) + 0.0e0 AS sim FROM (
-       |  SELECT query_id, match_id, sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY sim DESC, match_id ASC) AS INT) AS rank
-       |  FROM x) r
-       |WHERE rank <= 10""".stripMargin
-  }
-
+  /** The full IVF-PQ oracle SQL (body + rank-≤-10 tail). Shared verbatim
+    * by `sim_ivfpq_topk` (train-in-query) and `sim_ivfpq_search`
+    * (persisted index): the serving path reconstructs the same
+    * arithmetic from stored codes, so one mirror checks both.
+    */
   private lazy val ivfPqOracleSql: String =
     s"""WITH $ivfPqScoreBody
-       |SELECT query_id, match_id, rank, round(sim_ivfpq, 6) + 0.0e0 AS sim_ivfpq FROM (
-       |  SELECT query_id, match_id, sim_ivfpq,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY sim_ivfpq DESC, match_id ASC) AS INT) AS rank
-       |  FROM s) r
-       |WHERE rank <= 10""".stripMargin
+       |${top10Sql("sim_ivfpq", "sim_ivfpq")}""".stripMargin
 
   /** Oracles of the geometry-SWAPPED declared forms ([[ivfPqServe]]):
     * above [[DeclaredBruteSwap]] the PQ-brute quartet and
@@ -447,22 +455,11 @@ object QueriesEmb {
     */
   private lazy val swappedSearchOracleSql: String =
     s"""WITH $ivfPqScoreBodyAuto
-       |SELECT query_id, match_id, rank, round(sim_ivfpq, 6) + 0.0e0 AS sim_pq FROM (
-       |  SELECT query_id, match_id, sim_ivfpq,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY sim_ivfpq DESC, match_id ASC) AS INT) AS rank
-       |  FROM s) r
-       |WHERE rank <= 10""".stripMargin
+       |${top10Sql("sim_ivfpq", "sim_pq")}""".stripMargin
 
   private lazy val swappedRerankOracleSql: String =
-    ivfPqRerankOracleSqlFrom(ivfPqScoreBodyAuto)
+    rerankOracleSql(ivfPqScoreBodyAuto, "sim_ivfpq")
 
-  /** The full PQ pipeline as CTEs — m subspace trainings, final
-    * assignments `f0..f{m-1}`, reconstructions, the query set `q`, and
-    * approximate scores `s (query_id, match_id, sim_pq)`. Shared by
-    * `sim_pq_topk` (rank over `s`) and `sim_pq_rerank` (candidates from
-    * `s`, exact re-score).
-    */
   /** Content-fingerprinted persisted-index location: the cache key is an
     * MD5 over the embeddings table's file names, sizes, and mtimes plus
     * the full dir path and the build params — so regenerating a dataset
@@ -511,18 +508,29 @@ object QueriesEmb {
         .withColumnRenamed("sim_ivfpq", simName)
   }
 
-  private def pqScoreCtes(m: Int, sub: Int, kc: Int, iters: Int): String = {
-    val subCtes = (0 until m).map { i =>
-      kmeansSubCte(s"p${i}_",
-        s"list_slice(embedding, ${i * sub + 1}, ${(i + 1) * sub})",
-        sub, kc, iters)
-    }.mkString(",\n")
-    val fCtes = (0 until m).map { i =>
+  /** Each vector's nearest centroid per PQ subspace, `f0..f{m-1}
+    * (vec_id, c)`, over the subspace trainings `p<i>_`.
+    */
+  private def pqAssignCtes(m: Int, sub: Int, iters: Int): String =
+    (0 until m).map { i =>
       s"""f$i AS (SELECT vec_id, c FROM (
          |  SELECT e.vec_id, s.c,
          |    row_number() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${cosSqlN("e.se", "s.ce", sub)} DESC, s.c ASC) AS rn
          |  FROM p${i}_src e, p${i}_cent$iters s) t WHERE rn = 1)""".stripMargin
+    }.mkString(",\n")
+
+  /** The full PQ pipeline as CTEs — m subspace trainings, final
+    * assignments `f0..f{m-1}`, reconstructions, the query set `q`, and
+    * approximate scores `s (query_id, match_id, sim_pq)`. Shared by
+    * `sim_pq_topk` (rank over `s`) and `sim_pq_rerank` (candidates from
+    * `s`, exact re-score).
+    */
+  private def pqScoreCtes(m: Int, sub: Int, kc: Int, iters: Int): String = {
+    val subCtes = (0 until m).map { i =>
+      kmeansSubCte(s"p${i}_",
+        s"list_slice(embedding, ${i * sub + 1}, ${(i + 1) * sub})",
+        sub, kc, iters)
     }.mkString(",\n")
     val reconJoins = (1 until m).map(i =>
       s"  JOIN f$i ON f$i.vec_id = f0.vec_id JOIN p${i}_cent$iters c$i ON c$i.c = f$i.c")
@@ -532,7 +540,7 @@ object QueriesEmb {
     val drr = dotSql("r.recon", "r.recon")
     val dqr = dotSql("q.e", "r.recon")
     s"""$subCtes,
-       |$fCtes,
+       |${pqAssignCtes(m, sub, iters)},
        |recon AS MATERIALIZED (
        |  SELECT f0.vec_id, $reconList AS recon
        |  FROM f0 JOIN p0_cent$iters c0 ON c0.c = f0.c
@@ -544,6 +552,26 @@ object QueriesEmb {
        |    $dqr / (sqrt($dqq) * sqrt($drr)) AS sim_pq
        |  FROM recon r JOIN q ON query_id <> r.vec_id)""".stripMargin
   }
+
+  /** The 64 dHash bits of each keyframe, `bits (media_id, frame_idx,
+    * i, bit)`: luma `l` of column x above that of column x + 1 in `lum`.
+    */
+  private val dHashBitsCte: String =
+    """bits AS (SELECT a.media_id, a.frame_idx, a.x AS i,
+      |           CASE WHEN a.l > b.l THEN 1 ELSE 0 END AS bit
+      |         FROM lum a JOIN lum b
+      |           ON a.media_id = b.media_id
+      |          AND a.frame_idx = b.frame_idx AND b.x = a.x + 1
+      |         WHERE a.x < 64)""".stripMargin
+
+  /** The dHash of one keyframe's `bits` as a signed 64-bit integer (bit
+    * 63 is the sign) — mirrors Multimodal's packing.
+    */
+  private val dHashSql: String =
+    """CAST(sum(CASE WHEN i < 63
+      |             THEN bit * (CAST(1 AS BIGINT) << i) ELSE 0 END)
+      |    + CASE WHEN max(CASE WHEN i = 63 THEN bit ELSE 0 END) = 1
+      |        THEN -9223372036854775807 - 1 ELSE 0 END AS BIGINT)""".stripMargin
 
   val defs: Seq[QDef] = Seq(
 
@@ -640,12 +668,7 @@ object QueriesEmb {
            |  SELECT query_id, match_id,
            |    $dqc / (sqrt($dqq) * sqrt($dcc)) AS sim
            |  FROM c, q WHERE query_id <> match_id)
-           |SELECT query_id, match_id, rank, round(sim, 6) + 0.0e0 AS sim FROM (
-           |  SELECT query_id, match_id, sim,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim DESC, match_id ASC) AS INT) AS rank
-           |  FROM s) r
-           |WHERE rank <= 10""".stripMargin
+           |${top10Sql("sim", "sim")}""".stripMargin
       }),
 
     // int8-style scalar-quantized top-k (the 4×-smaller-index ANN path):
@@ -672,12 +695,7 @@ object QueriesEmb {
            |  SELECT query_id, match_id,
            |    $dqc / (sqrt($dqq) * sqrt($dcc)) AS sim_q
            |  FROM c, q WHERE query_id <> match_id)
-           |SELECT query_id, match_id, rank, round(sim_q, 6) + 0.0e0 AS sim_q FROM (
-           |  SELECT query_id, match_id, sim_q,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim_q DESC, match_id ASC) AS INT) AS rank
-           |  FROM s) r
-           |WHERE rank <= 10""".stripMargin
+           |${top10Sql("sim_q", "sim_q")}""".stripMargin
       }),
 
     // 1-bit binary-quantization top-k (sign-bit codes, Hamming ranking):
@@ -750,12 +768,7 @@ object QueriesEmb {
            |  SELECT query_id, match_id,
            |    $dqc / (sqrt($dqq) * sqrt($dcc)) AS sim
            |  FROM cand)
-           |SELECT query_id, match_id, rank, round(sim, 6) + 0.0e0 AS sim FROM (
-           |  SELECT query_id, match_id, sim,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim DESC, match_id ASC) AS INT) AS rank
-           |  FROM s) r
-           |WHERE rank <= 10""".stripMargin
+           |${top10Sql("sim", "sim")}""".stripMargin
       }),
 
     // product-quantized top-k (Jégou et al. 2011 — the m-bytes-per-vector
@@ -772,15 +785,7 @@ object QueriesEmb {
         else Similarity.pqTopK(emb, queries, "vec_id", "embedding", k = 10,
           m = 8, subDim = 8, nCentroids = 8, iters = 2)
       },
-      Some {
-        s"""WITH ${pqScoreCtes(m = 8, sub = 8, kc = 8, iters = 2)}
-           |SELECT query_id, match_id, rank, round(sim_pq, 6) + 0.0e0 AS sim_pq FROM (
-           |  SELECT query_id, match_id, sim_pq,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim_pq DESC, match_id ASC) AS INT) AS rank
-           |  FROM s) r
-           |WHERE rank <= 10""".stripMargin
-      },
+      Some(pqTopKOracleSql),
       oracleSwapped = Some(swappedSearchOracleSql)),
 
     // the persisted-index serving path: train+encode ONCE into an
@@ -808,15 +813,7 @@ object QueriesEmb {
           Similarity.searchPqIndex(s, ix, queries, "vec_id", "embedding", k = 10)
         }
       },
-      Some {
-        s"""WITH ${pqScoreCtes(m = 8, sub = 8, kc = 8, iters = 2)}
-           |SELECT query_id, match_id, rank, round(sim_pq, 6) + 0.0e0 AS sim_pq FROM (
-           |  SELECT query_id, match_id, sim_pq,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim_pq DESC, match_id ASC) AS INT) AS rank
-           |  FROM s) r
-           |WHERE rank <= 10""".stripMargin
-      },
+      Some(pqTopKOracleSql),
       oracleSwapped = Some(swappedSearchOracleSql)),
 
     // two-stage retrieve-and-rerank: the PQ code index nominates 50
@@ -958,12 +955,7 @@ object QueriesEmb {
       },
       Some {
         s"""WITH ${ivfPqScoreBodyK(32)}
-           |SELECT query_id, match_id, rank, round(sim_ivfpq, 6) + 0.0e0 AS sim_ivfpq FROM (
-           |  SELECT query_id, match_id, sim_ivfpq,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim_ivfpq DESC, match_id ASC) AS INT) AS rank
-           |  FROM s) r
-           |WHERE rank <= 10""".stripMargin
+           |${top10Sql("sim_ivfpq", "sim_ivfpq")}""".stripMargin
       }),
 
     // the coarse-list knob SELF-SCALING (round 11): nCoarse = 0 derives
@@ -983,12 +975,7 @@ object QueriesEmb {
       },
       Some {
         s"""WITH $ivfPqScoreBodyAuto
-           |SELECT query_id, match_id, rank, round(sim_ivfpq, 6) + 0.0e0 AS sim_ivfpq FROM (
-           |  SELECT query_id, match_id, sim_ivfpq,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim_ivfpq DESC, match_id ASC) AS INT) AS rank
-           |  FROM s) r
-           |WHERE rank <= 10""".stripMargin
+           |${top10Sql("sim_ivfpq", "sim_ivfpq")}""".stripMargin
       }),
 
     // the index-health audit behind the self-scaling geometry: one row
@@ -1008,29 +995,7 @@ object QueriesEmb {
             nCentroids = 8, pqIters = 2, dim = Dim))
         Similarity.indexHealth(s, ix)
       },
-      Some {
-        s"""WITH ${kmeansCentsCteExpr(autoCoarseKSql, 2)},
-           |ccent AS MATERIALIZED (SELECT c, ce FROM cent2),
-           |ca AS (
-           |  SELECT e.vec_id, s.c,
-           |    row_number() OVER (PARTITION BY e.vec_id
-           |      ORDER BY ${cosSql("e.embedding", "s.ce")} DESC, s.c ASC) AS rn
-           |  FROM embeddings e, ccent s),
-           |casg AS (SELECT vec_id, c AS coarse_c FROM ca WHERE rn = 1),
-           |g AS (SELECT coarse_c, CAST(count(*) AS BIGINT) AS cnt
-           |      FROM casg GROUP BY 1),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
-           |nl AS (SELECT CAST(count(*) AS BIGINT) AS n_lists FROM ccent)
-           |SELECT t.n AS n_vectors, nl.n_lists,
-           |  CAST(count(*) AS BIGINT) AS lists_used,
-           |  CAST(nl.n_lists - count(*) AS BIGINT) AS lists_empty,
-           |  CAST(max(g.cnt) AS BIGINT) AS max_list,
-           |  CAST(t.n // nl.n_lists AS BIGINT) AS mean_list,
-           |  CAST(max(g.cnt) * 1000000 // greatest(t.n // nl.n_lists, 1)
-           |    AS BIGINT) AS skew_ppm
-           |FROM g, tot t, nl
-           |GROUP BY t.n, nl.n_lists""".stripMargin
-      }),
+      Some(indexHealthSql("embeddings", shard = None))),
 
     // per-shard health of the sharded serving tier: the same audit,
     // one row PER SHARD (a degenerate shard hides inside aggregate
@@ -1048,29 +1013,7 @@ object QueriesEmb {
       Some {
         val legs = (0 until 2).map { i =>
           s"""SELECT * FROM (
-             |WITH ${kmeansCentsCteExpr(autoCoarseKSqlFrom(s"shard$i"), 2,
-            src = s"shard$i")},
-             |ccent AS MATERIALIZED (SELECT c, ce FROM cent2),
-             |ca AS (
-             |  SELECT e.vec_id, s.c,
-             |    row_number() OVER (PARTITION BY e.vec_id
-             |      ORDER BY ${cosSql("e.embedding", "s.ce")} DESC, s.c ASC) AS rn
-             |  FROM shard$i e, ccent s),
-             |casg AS (SELECT vec_id, c AS coarse_c FROM ca WHERE rn = 1),
-             |g AS (SELECT coarse_c, CAST(count(*) AS BIGINT) AS cnt
-             |      FROM casg GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM shard$i),
-             |nl AS (SELECT CAST(count(*) AS BIGINT) AS n_lists FROM ccent)
-             |SELECT t.n AS n_vectors, nl.n_lists,
-             |  CAST(count(*) AS BIGINT) AS lists_used,
-             |  CAST(nl.n_lists - count(*) AS BIGINT) AS lists_empty,
-             |  CAST(max(g.cnt) AS BIGINT) AS max_list,
-             |  CAST(t.n // nl.n_lists AS BIGINT) AS mean_list,
-             |  CAST(max(g.cnt) * 1000000 // greatest(t.n // nl.n_lists, 1)
-             |    AS BIGINT) AS skew_ppm,
-             |  CAST($i AS BIGINT) AS shard
-             |FROM g, tot t, nl
-             |GROUP BY t.n, nl.n_lists) leg$i""".stripMargin
+             |${indexHealthSql(s"shard$i", shard = Some(i))}) leg$i""".stripMargin
         }.mkString("\nUNION ALL\n")
         s"""WITH shard0 AS (SELECT * FROM embeddings WHERE vec_id % 2 = 0),
            |shard1 AS (SELECT * FROM embeddings WHERE vec_id % 2 = 1)
@@ -1320,12 +1263,7 @@ object QueriesEmb {
            |  SELECT q.query_id, c.vec_id AS match_id,
            |    $dqc / (sqrt($dqq) * sqrt($dcc)) AS sim
            |  FROM b c JOIN q ON c.bucket = q.bucket AND q.query_id <> c.vec_id)
-           |SELECT query_id, match_id, rank, round(sim, 6) + 0.0e0 AS sim FROM (
-           |  SELECT query_id, match_id, sim,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim DESC, match_id ASC) AS INT) AS rank
-           |  FROM s) r
-           |WHERE rank <= 10""".stripMargin
+           |${top10Sql("sim", "sim")}""".stripMargin
       }),
 
     // IVF-style ANN over a TRAINED fixed-k coarse quantizer: driver
@@ -1360,12 +1298,7 @@ object QueriesEmb {
            |  SELECT p.query_id, a.match_id, ${cosSql("p.qe", "a.me")} AS sim
            |  FROM probes p JOIN assign a ON p.cent_id = a.cent_id
            |  WHERE p.query_id <> a.match_id)
-           |SELECT query_id, match_id, rank, round(sim, 6) + 0.0e0 AS sim FROM (
-           |  SELECT query_id, match_id, sim,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim DESC, match_id ASC) AS INT) AS rank
-           |  FROM s) r
-           |WHERE rank <= 10""".stripMargin
+           |${top10Sql("sim", "sim")}""".stripMargin
       }),
 
     // multimodal metadata pass (no decode; payload = utf-8 bytes of text)
@@ -1569,7 +1502,7 @@ object QueriesEmb {
           }.toDF("media_id", "kind", "payload")
         Multimodal.videoKeyframePhash(media).toDF()
       },
-      Some("""WITH p AS (
+      Some(s"""WITH p AS (
              |  SELECT doc_id AS media_id,
              |    1 + n_chars % 24 AS nf,
              |    1 + doc_id % 7 AS ke,
@@ -1580,19 +1513,10 @@ object QueriesEmb {
              |lum AS (SELECT media_id, frame_idx, x,
              |          (x * mult + 7 * frame_idx + media_id) % 256 AS l
              |        FROM kf, unnest(range(0, 65)) AS t(x)),
-             |bits AS (SELECT a.media_id, a.frame_idx, a.x AS i,
-             |           CASE WHEN a.l > b.l THEN 1 ELSE 0 END AS bit
-             |         FROM lum a JOIN lum b
-             |           ON a.media_id = b.media_id
-             |          AND a.frame_idx = b.frame_idx AND b.x = a.x + 1
-             |         WHERE a.x < 64)
+             |$dHashBitsCte
              |SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
              |  CAST(65 AS INT) AS frame_w, CAST(3 AS INT) AS frame_h,
-             |  CAST(sum(CASE WHEN i < 63
-             |             THEN bit * (CAST(1 AS BIGINT) << i) ELSE 0 END)
-             |    + CASE WHEN max(CASE WHEN i = 63 THEN bit ELSE 0 END) = 1
-             |        THEN -9223372036854775807 - 1 ELSE 0 END AS BIGINT)
-             |    AS phash
+             |  $dHashSql AS phash
              |FROM bits GROUP BY media_id, frame_idx""".stripMargin)),
 
     // shot-boundary detection: the synthetic frames change their luma
@@ -1639,7 +1563,7 @@ object QueriesEmb {
           }.toDF("media_id", "kind", "payload")
         Multimodal.videoSceneCuts(media, cutHamming = 10)
       },
-      Some("""WITH p AS (
+      Some(s"""WITH p AS (
              |  SELECT doc_id AS media_id,
              |    1 + n_chars % 24 AS nf,
              |    1 + doc_id % 7 AS ke
@@ -1652,18 +1576,9 @@ object QueriesEmb {
              |                 THEN 1 ELSE -1 END)
              |            + 7 * frame_idx + media_id) % 256 + 256) % 256 AS l
              |        FROM kf, unnest(range(0, 65)) AS t(x)),
-             |bits AS (SELECT a.media_id, a.frame_idx, a.x AS i,
-             |           CASE WHEN a.l > b.l THEN 1 ELSE 0 END AS bit
-             |         FROM lum a JOIN lum b
-             |           ON a.media_id = b.media_id
-             |          AND a.frame_idx = b.frame_idx AND b.x = a.x + 1
-             |         WHERE a.x < 64),
+             |$dHashBitsCte,
              |ph AS (SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
-             |         CAST(sum(CASE WHEN i < 63
-             |             THEN bit * (CAST(1 AS BIGINT) << i) ELSE 0 END)
-             |           + CASE WHEN max(CASE WHEN i = 63 THEN bit ELSE 0 END) = 1
-             |               THEN -9223372036854775807 - 1 ELSE 0 END AS BIGINT)
-             |           AS phash
+             |         $dHashSql AS phash
              |       FROM bits GROUP BY media_id, frame_idx),
              |lg AS (SELECT media_id, frame_idx, phash,
              |         lag(phash) OVER (PARTITION BY media_id

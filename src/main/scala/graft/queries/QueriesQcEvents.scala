@@ -87,6 +87,78 @@ object QueriesQcEvents {
         WindowKernels.gradientSql("result", "(t_us / 1000000.0)",
           "PARTITION BY datastream_id ORDER BY t_us, iot_id"))
 
+  /** Each observation's value in integer micro units:
+    * `m (iot_id, datastream_id, t_us, v)` over `obs`.
+    */
+  private val microObsCte =
+    """m AS (SELECT iot_id, datastream_id, t_us,
+      |        CAST(CAST(result AS DECIMAL(25,6)) * 1000000 AS BIGINT)
+      |          AS v
+      |      FROM obs)""".stripMargin
+
+  /** CUSUM increments against per-stream integer limits — mirrors
+    * WindowKernels.cusum: target μ = Σv DIV n, slack = MAD DIV 2, as
+    * `name (…, mad, dp, dn)` over [[microObsCte]].
+    */
+  private def cusumDevCtes(name: String): String =
+    s"""a AS (SELECT *, sum(v) OVER (PARTITION BY datastream_id) AS sv,
+       |        count(*) OVER (PARTITION BY datastream_id) AS n FROM m),
+       |b AS (SELECT *, sv // n AS mu FROM a),
+       |c AS (SELECT *, sum(abs(v - mu))
+       |          OVER (PARTITION BY datastream_id) // n AS mad FROM b),
+       |$name AS (SELECT *, v - mu - mad // 2 AS dp,
+       |        mu - v - mad // 2 AS dn FROM c)""".stripMargin
+
+  /** The clamped CUSUM recursion over the increments in `from`, as
+    * prefix sum minus running minimum: `q (…, sp, sn)`.
+    */
+  private def cusumRunCtes(from: String): String =
+    s"""p AS (SELECT *, sum(dp) OVER w AS pp, sum(dn) OVER w AS pn
+       |      FROM $from WINDOW w AS (PARTITION BY datastream_id
+       |        ORDER BY t_us, iot_id
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+       |q AS (SELECT *, pp - least(0, min(pp) OVER w) AS sp,
+       |        pn - least(0, min(pn) OVER w) AS sn
+       |      FROM p WINDOW w AS (PARTITION BY datastream_id
+       |        ORDER BY t_us, iot_id
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))""".stripMargin
+
+  /** Inter-observation gaps `d (datastream_id, t_us, dt)` and each
+    * stream's modal positive gap as `mode (datastream_id, cadence_us)`
+    * (ties toward the smaller gap) — mirrors WindowKernels.gapReport.
+    */
+  private def cadenceCtes(mode: String): String =
+    s"""d AS (SELECT datastream_id, t_us,
+       |        t_us - lag(t_us) OVER (PARTITION BY datastream_id
+       |          ORDER BY t_us, iot_id) AS dt
+       |      FROM obs),
+       |h AS (SELECT datastream_id, dt, count(*) AS cnt
+       |      FROM d WHERE dt > 0 GROUP BY 1, 2),
+       |$mode AS (SELECT datastream_id, dt AS cadence_us FROM (
+       |        SELECT datastream_id, dt,
+       |          row_number() OVER (PARTITION BY datastream_id
+       |            ORDER BY cnt DESC, dt ASC) AS rn
+       |        FROM h) t WHERE rn = 1)""".stripMargin
+
+  /** Runs of an unchanged observation_type per stream in time order —
+    * mirrors WindowKernels.islands: `i (datastream_id, v, t_us,
+    * island_idx)`.
+    */
+  private val typeIslandCtes =
+    """c AS (
+      |  SELECT datastream_id, t_us, iot_id, observation_type AS v,
+      |    CASE WHEN observation_type IS NOT DISTINCT FROM
+      |      lag(observation_type) OVER (PARTITION BY datastream_id
+      |        ORDER BY t_us, iot_id) THEN 0 ELSE 1 END AS chg
+      |  FROM obs),
+      |i AS (
+      |  SELECT datastream_id, v, t_us,
+      |    CAST(sum(chg) OVER (PARTITION BY datastream_id
+      |      ORDER BY t_us, iot_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |      AS BIGINT) AS island_idx
+      |  FROM c)""".stripMargin
+
   val defs: Seq[QDef] = Seq(
 
     // P1 — config time-range + datastream-id filter (pushed to the scan
@@ -236,26 +308,9 @@ object QueriesQcEvents {
           Obs.DatastreamId, "t_us", "v_micro", Obs.IotId)
       },
       Some(s"""WITH ${Q.ObsCte},
-              |m AS (SELECT iot_id, datastream_id, t_us,
-              |        CAST(CAST(result AS DECIMAL(25,6)) * 1000000 AS BIGINT)
-              |          AS v
-              |      FROM obs),
-              |a AS (SELECT *, sum(v) OVER (PARTITION BY datastream_id) AS sv,
-              |        count(*) OVER (PARTITION BY datastream_id) AS n FROM m),
-              |b AS (SELECT *, sv // n AS mu FROM a),
-              |c AS (SELECT *, sum(abs(v - mu))
-              |          OVER (PARTITION BY datastream_id) // n AS mad FROM b),
-              |d AS (SELECT *, v - mu - mad // 2 AS dp,
-              |        mu - v - mad // 2 AS dn FROM c),
-              |p AS (SELECT *, sum(dp) OVER w AS pp, sum(dn) OVER w AS pn
-              |      FROM d WINDOW w AS (PARTITION BY datastream_id
-              |        ORDER BY t_us, iot_id
-              |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-              |q AS (SELECT *, pp - least(0, min(pp) OVER w) AS sp,
-              |        pn - least(0, min(pn) OVER w) AS sn
-              |      FROM p WINDOW w AS (PARTITION BY datastream_id
-              |        ORDER BY t_us, iot_id
-              |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+              |$microObsCte,
+              |${cusumDevCtes("d")},
+              |${cusumRunCtes("d")}
               |SELECT iot_id, datastream_id,
               |  CAST(sp AS BIGINT) AS s_pos_micro,
               |  CAST(sn AS BIGINT) AS s_neg_micro,
@@ -274,21 +329,10 @@ object QueriesQcEvents {
           muMicro = 50000000L, slackMicro = 2000000L, hMicro = 400000000L)
       },
       Some(s"""WITH ${Q.ObsCte},
-              |m AS (SELECT iot_id, datastream_id, t_us,
-              |        CAST(CAST(result AS DECIMAL(25,6)) * 1000000 AS BIGINT)
-              |          AS v
-              |      FROM obs),
+              |$microObsCte,
               |d AS (SELECT *, v - 50000000 - 2000000 AS dp,
               |        50000000 - v - 2000000 AS dn FROM m),
-              |p AS (SELECT *, sum(dp) OVER w AS pp, sum(dn) OVER w AS pn
-              |      FROM d WINDOW w AS (PARTITION BY datastream_id
-              |        ORDER BY t_us, iot_id
-              |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-              |q AS (SELECT *, pp - least(0, min(pp) OVER w) AS sp,
-              |        pn - least(0, min(pn) OVER w) AS sn
-              |      FROM p WINDOW w AS (PARTITION BY datastream_id
-              |        ORDER BY t_us, iot_id
-              |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+              |${cusumRunCtes("d")}
               |SELECT iot_id, datastream_id,
               |  CAST(sp AS BIGINT) AS s_pos_micro,
               |  CAST(sn AS BIGINT) AS s_neg_micro,
@@ -483,17 +527,7 @@ object QueriesQcEvents {
               col("n_range_bad") * 4L < col("n_obs")).as("healthy"))
       },
       Some(s"""WITH ${Q.ObsCte}, ${Q.ConfCte},
-              |d AS (SELECT datastream_id, t_us,
-              |        t_us - lag(t_us) OVER (PARTITION BY datastream_id
-              |          ORDER BY t_us, iot_id) AS dt
-              |      FROM obs),
-              |h AS (SELECT datastream_id, dt, count(*) AS cnt
-              |      FROM d WHERE dt > 0 GROUP BY 1, 2),
-              |mo AS (SELECT datastream_id, dt AS cadence_us FROM (
-              |        SELECT datastream_id, dt,
-              |          row_number() OVER (PARTITION BY datastream_id
-              |            ORDER BY cnt DESC, dt ASC) AS rn
-              |        FROM h) t WHERE rn = 1),
+              |${cadenceCtes("mo")},
               |g AS (SELECT d.datastream_id,
               |        CAST(count(*) AS BIGINT) AS n_obs,
               |        CAST(max(mo.cadence_us) AS BIGINT) AS cadence_us,
@@ -506,26 +540,9 @@ object QueriesQcEvents {
               |           ELSE n_obs * 1000000 // (span_us // cadence_us + 1)
               |           END AS BIGINT) AS coverage_ppm
               |       FROM g),
-              |m AS (SELECT iot_id, datastream_id, t_us,
-              |        CAST(CAST(result AS DECIMAL(25,6)) * 1000000 AS BIGINT)
-              |          AS v
-              |      FROM obs),
-              |a AS (SELECT *, sum(v) OVER (PARTITION BY datastream_id) AS sv,
-              |        count(*) OVER (PARTITION BY datastream_id) AS n FROM m),
-              |b AS (SELECT *, sv // n AS mu FROM a),
-              |c AS (SELECT *, sum(abs(v - mu))
-              |          OVER (PARTITION BY datastream_id) // n AS mad FROM b),
-              |dd AS (SELECT *, v - mu - mad // 2 AS dp,
-              |        mu - v - mad // 2 AS dn FROM c),
-              |p AS (SELECT *, sum(dp) OVER w AS pp, sum(dn) OVER w AS pn
-              |      FROM dd WINDOW w AS (PARTITION BY datastream_id
-              |        ORDER BY t_us, iot_id
-              |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-              |q AS (SELECT *, pp - least(0, min(pp) OVER w) AS sp,
-              |        pn - least(0, min(pn) OVER w) AS sn
-              |      FROM p WINDOW w AS (PARTITION BY datastream_id
-              |        ORDER BY t_us, iot_id
-              |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+              |$microObsCte,
+              |${cusumDevCtes("dd")},
+              |${cusumRunCtes("dd")},
               |al AS (SELECT datastream_id,
               |         CAST(sum(CASE WHEN sp > 10 * mad OR sn > 10 * mad
               |           THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms
@@ -551,17 +568,7 @@ object QueriesQcEvents {
       (s, dir) => WindowKernels.gapReport(obs(s, dir),
         Obs.DatastreamId, "t_us", Obs.IotId),
       Some(s"""WITH ${Q.ObsCte},
-              |d AS (SELECT datastream_id, t_us,
-              |        t_us - lag(t_us) OVER (PARTITION BY datastream_id
-              |          ORDER BY t_us, iot_id) AS dt
-              |      FROM obs),
-              |h AS (SELECT datastream_id, dt, count(*) AS cnt
-              |      FROM d WHERE dt > 0 GROUP BY 1, 2),
-              |m AS (SELECT datastream_id, dt AS cadence_us FROM (
-              |        SELECT datastream_id, dt,
-              |          row_number() OVER (PARTITION BY datastream_id
-              |            ORDER BY cnt DESC, dt ASC) AS rn
-              |        FROM h) t WHERE rn = 1),
+              |${cadenceCtes("m")},
               |g AS (SELECT d.datastream_id,
               |        CAST(count(*) AS BIGINT) AS n_obs,
               |        CAST(max(m.cadence_us) AS BIGINT) AS cadence_us,
@@ -1338,10 +1345,7 @@ object QueriesQcEvents {
             col("t_end_us"), col("n_rows"))
       },
       Some(s"""WITH ${Q.ObsCte},
-              |m AS (SELECT iot_id, datastream_id, t_us,
-              |        CAST(CAST(result AS DECIMAL(25,6)) * 1000000 AS BIGINT)
-              |          AS v
-              |      FROM obs),
+              |$microObsCte,
               |med AS (SELECT datastream_id,
               |          CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY v)
               |            AS BIGINT) AS med
@@ -1434,19 +1438,7 @@ object QueriesQcEvents {
         obs(s, dir), Seq(Obs.DatastreamId), col("t_us"),
         col(Obs.IotId), col("observation_type")),
       Some(s"""WITH ${Q.ObsCte},
-              |c AS (
-              |  SELECT datastream_id, t_us, iot_id, observation_type AS v,
-              |    CASE WHEN observation_type IS NOT DISTINCT FROM
-              |      lag(observation_type) OVER (PARTITION BY datastream_id
-              |        ORDER BY t_us, iot_id) THEN 0 ELSE 1 END AS chg
-              |  FROM obs),
-              |i AS (
-              |  SELECT datastream_id, v, t_us,
-              |    CAST(sum(chg) OVER (PARTITION BY datastream_id
-              |      ORDER BY t_us, iot_id
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              |      AS BIGINT) AS island_idx
-              |  FROM c)
+              |$typeIslandCtes
               |SELECT datastream_id, island_idx, min(v) AS value,
               |  min(t_us) AS t_start_us, max(t_us) AS t_end_us,
               |  count(*) AS n_rows
@@ -1461,19 +1453,7 @@ object QueriesQcEvents {
         obs(s, dir), Seq(Obs.DatastreamId), col("t_us"),
         col(Obs.IotId), col("observation_type")),
       Some(s"""WITH ${Q.ObsCte},
-              |c AS (
-              |  SELECT datastream_id, t_us, iot_id, observation_type AS v,
-              |    CASE WHEN observation_type IS NOT DISTINCT FROM
-              |      lag(observation_type) OVER (PARTITION BY datastream_id
-              |        ORDER BY t_us, iot_id) THEN 0 ELSE 1 END AS chg
-              |  FROM obs),
-              |i AS (
-              |  SELECT datastream_id, v, t_us,
-              |    CAST(sum(chg) OVER (PARTITION BY datastream_id
-              |      ORDER BY t_us, iot_id
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              |      AS BIGINT) AS island_idx
-              |  FROM c),
+              |$typeIslandCtes,
               |g AS (SELECT datastream_id, island_idx, min(v) AS value,
               |        min(t_us) AS t_start_us, count(*) AS n_rows
               |      FROM i GROUP BY 1, 2)

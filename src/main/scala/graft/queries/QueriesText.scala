@@ -160,6 +160,556 @@ object QueriesText {
   }
   private val minhashBandsCte: String = minhashBandsCteGen(materializedSig = false)
 
+  /** MinHash band candidates `cand (id_a, id_b)` over `bands`, with the
+    * shingle-set `sizes` and pairwise overlaps `co` over `sh` that the
+    * exact Jaccard check reads — mirrors Dedup.minhashNearDupPairs.
+    */
+  private val minhashCandCtes: String =
+    """cand AS (
+      |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
+      |  FROM bands x JOIN bands y
+      |    ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.id < y.id),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+      |co AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS co
+      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Connected components of the `pairs (id_a, id_b)` graph as the
+    * recursive min-reachable id over every document — the oracle of
+    * Dedup.nearDupClusters' HashMin propagation.
+    */
+  private val hashMinClustersSql: String =
+    """edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+      |          UNION ALL SELECT id_b, id_a FROM pairs),
+      |lab (id, cluster) AS (
+      |  SELECT doc_id, doc_id FROM documents
+      |  UNION
+      |  SELECT e.src, l.cluster FROM edges e JOIN lab l ON l.id = e.dst)
+      |SELECT id AS doc_id, min(cluster) AS cluster_id,
+      |  id = min(cluster) AS is_canonical
+      |FROM lab GROUP BY id""".stripMargin
+
+  /** The per-document curation gates — mirrors Curation.curate: exact
+    * dedup on the normalized text (CTE `dedupCte`), the Gopher rules
+    * `g` (plus the C4 rules as `c4_ok` when `c4`), the quality score
+    * `q` and the PII counts `pp`.
+    */
+  private def curationGateCtes(dedupCte: String, c4: Boolean): String = {
+    val enHits = stopwordHitsSql("en")
+    val (e, p, i) = (TextAnalysis.PiiEmailRe, TextAnalysis.PiiPhoneRe,
+      TextAnalysis.PiiIpRe)
+    val c4Ok =
+      if (!c4) ""
+      else
+        s""",
+           |    NOT (contains(text, '{') OR contains(text, '}'))
+           |      AND NOT contains(lower(text), 'lorem ipsum')
+           |      AND NOT contains(lower(text), 'javascript')
+           |      AND len($rawTokensSql) >= 5
+           |      AND len($rawTokensSql) <= 100000 AS c4_ok""".stripMargin
+    s"""$dedupCte AS (
+       |  SELECT doc_id,
+       |    doc_id = min(doc_id) OVER (PARTITION BY md5($normSql)) AS dedup_ok
+       |  FROM documents),
+       |g AS (
+       |  SELECT doc_id,
+       |    len($rawTokensSql) >= 20 AND len($rawTokensSql) <= 90 AS r_len_ok,
+       |    CAST(length(text) AS DOUBLE)
+       |      / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) >= 3.0
+       |    AND CAST(length(text) AS DOUBLE)
+       |      / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) <= 10.0 AS r_mwl_ok,
+       |    $enHits >= 2 AS r_sw_ok,
+       |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
+       |      / greatest(CAST(length(text) AS DOUBLE), 1.0) >= 0.5 AS r_alpha_ok$c4Ok
+       |  FROM documents),
+       |q AS (
+       |  SELECT doc_id,
+       |    CAST(CAST($qualitySql AS DECIMAL(25,6)) * 1000000 AS BIGINT)
+       |      AS quality_micro
+       |  FROM documents),
+       |p1 AS (SELECT doc_id, text,
+       |    regexp_replace(text, '$e', '<EMAIL>', 'g') AS t1 FROM documents),
+       |p2 AS (SELECT doc_id, text, t1,
+       |    regexp_replace(t1, '$p', '<PHONE>', 'g') AS t2 FROM p1),
+       |pp AS (
+       |  SELECT doc_id,
+       |    CAST(len(regexp_extract_all(text, '$e'))
+       |       + len(regexp_extract_all(t1, '$p'))
+       |       + len(regexp_extract_all(t2, '$i')) AS BIGINT) AS n_pii
+       |  FROM p2)""".stripMargin
+  }
+
+  /** The linear quality logit in micro units with the weights every
+    * classifier query declares — mirrors TextAnalysis.linearQualityScore.
+    */
+  private val qualityLogitSql: String = {
+    val enHits = stopwordHitsSql("en")
+    s"""-62000000 + 500000 * CAST(len($rawTokensSql) AS BIGINT)
+       |      + 50000 * CAST(length(text) AS BIGINT)
+       |      + 30000 * CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)
+       |      + 200000 * CAST($enHits AS BIGINT)
+       |      + 2000 * (CAST(length(text) AS BIGINT) * 1000
+       |                // greatest(CAST(len($rawTokensSql) AS BIGINT), 1))""".stripMargin
+  }
+
+  /** The classifier's teacher label as 0/1: 20 to 70 tokens and an
+    * alphabetic share of at least 700/1024.
+    */
+  private val qualityTeacherSql: String =
+    s"""CASE WHEN CAST(len($rawTokensSql) AS BIGINT) BETWEEN 20 AND 70
+       |          AND CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)
+       |              * 1024 // greatest(CAST(length(text) AS BIGINT), 1) >= 700
+       |      THEN 1 ELSE 0 END""".stripMargin
+
+  /** Each document's quality logit `s` and teacher label `y`, the
+    * input of the calibration and ROC-AUC oracles.
+    */
+  private val qualityScoredCte: String =
+    s"""sc AS (
+       |  SELECT doc_id,
+       |    $qualityLogitSql
+       |      AS s,
+       |    $qualityTeacherSql AS y
+       |  FROM documents)""".stripMargin
+
+  /** Concat-and-split layout — mirrors Packing.packConcatSplit (seqLen
+    * 512, 32 buckets, salt 'pack'): `d (doc_id, n_tokens, bucket)` over
+    * the rows of `from` with `nTokens > 0`, the per-bucket running end
+    * `c` and the bucket offsets `bo`.
+    */
+  private def packLayoutCtes(nTokens: String, from: String): String =
+    s"""d AS (
+       |  SELECT doc_id,
+       |    CAST($nTokens AS BIGINT) AS n_tokens,
+       |    (CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+       |      % 1000000) % 32 AS bucket
+       |  FROM $from
+       |  WHERE $nTokens > 0),
+       |c AS (
+       |  SELECT doc_id, bucket, n_tokens,
+       |    CAST(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS local_end
+       |  FROM d),
+       |bo AS (
+       |  SELECT bucket,
+       |    CAST(coalesce(sum(tot) OVER (ORDER BY bucket
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS bucket_off
+       |  FROM (SELECT bucket, sum(n_tokens) AS tot FROM d GROUP BY bucket) t)""".stripMargin
+
+  /** The sequence span of each packed document `p` and its rows `e`,
+    * one per (document, sequence), over [[packLayoutCtes]].
+    */
+  private val packSeqCtes: String =
+    """p AS (
+      |  SELECT c.doc_id, c.n_tokens,
+      |    bucket_off + local_end - n_tokens AS start_off,
+      |    (bucket_off + local_end - n_tokens) // 512 AS seq_first,
+      |    (bucket_off + local_end - 1) // 512 AS seq_last
+      |  FROM c JOIN bo USING (bucket)),
+      |e AS (
+      |  SELECT doc_id, n_tokens, start_off,
+      |    unnest(generate_series(seq_first, seq_last)) AS seq_id
+      |  FROM p)""".stripMargin
+
+  /** The slices of [[packSeqCtes]]' `e` — mirrors
+    * Packing.packedSequences: one row per (sequence, document).
+    */
+  private val packedSlicesSql: String =
+    """SELECT seq_id, doc_id,
+      |  greatest(start_off, seq_id * 512) - start_off AS tok_from,
+      |  least(start_off + n_tokens, (seq_id + 1) * 512) - start_off AS tok_to,
+      |  greatest(start_off, seq_id * 512) - seq_id * 512 AS seq_off
+      |FROM e""".stripMargin
+
+  /** Greedy longest-match encode of every normalized word — mirrors
+    * Bpe.encode over Bpe.demoVocab — ending in `done (doc_id, widx, ids)`;
+    * `docCols` are the columns `docs` keeps beside `norm`.
+    */
+  private def bpeEncodeCtes(docCols: String): String =
+    s"""vocab(id, piece, plen) AS (VALUES ${Bpe.vocabValuesSql(Bpe.demoVocab)}),
+       |docs AS (SELECT $docCols, $normSql AS norm FROM documents),
+       |wn AS (SELECT doc_id, regexp_split_to_array(norm, ' ') AS words FROM docs),
+       |w AS (SELECT doc_id, unnest(words) AS word,
+       |             unnest(range(1, len(words) + 1)) AS widx FROM wn),
+       |enc(doc_id, widx, word, pos, ids) AS (
+       |  SELECT doc_id, widx, word, 0, CAST([] AS INTEGER[]) FROM w
+       |  WHERE length(word) > 0
+       |  UNION ALL
+       |  SELECT e.doc_id, e.widx, e.word, e.pos + coalesce(m.plen, 1),
+       |         list_append(e.ids, coalesce(m.id, 0))
+       |  FROM enc e LEFT JOIN LATERAL (
+       |    SELECT v.id, v.plen FROM vocab v
+       |    WHERE substr(e.word, e.pos + 1, v.plen) = v.piece
+       |    ORDER BY v.plen DESC LIMIT 1) m ON true
+       |  WHERE e.pos < length(e.word)
+       |),
+       |done AS (SELECT doc_id, widx, ids FROM enc WHERE pos = length(word))""".stripMargin
+
+  /** The corpus bigrams `bg (doc_id, w1, w2)` and their counts `c2` —
+    * the training input of LangModel's bigram scorers.
+    */
+  private val lmBigramCtes: String =
+    s"""w AS (SELECT doc_id, $wordsSql AS words FROM documents),
+       |bg AS (SELECT doc_id, words[i] AS w1, words[i + 1] AS w2
+       |       FROM w, unnest(range(1, len(words))) AS r(i)),
+       |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2
+       |       FROM bg GROUP BY 1, 2)""".stripMargin
+
+  /** Scoring with a bigram model given as `ja (w1, w2, xa, xb)`, the
+    * bigram probability xb / xa: per-bigram Q16 negative log2, summed
+    * per document, kept below 4.9 bits per bigram — mirrors LangModel's
+    * scorers.
+    */
+  private val lmScoreSql: String =
+    s"""ina AS (SELECT w1, w2, xa AS x FROM ja),
+       |${Portable.log2q16Sql("ina", Seq("w1", "w2"), "x", "lga", "lg")},
+       |inb AS (SELECT w1, w2, xb AS x FROM ja),
+       |${Portable.log2q16Sql("inb", Seq("w1", "w2"), "x", "lgb", "lg")},
+       |tab AS (SELECT a.w1, a.w2, a.lg - b.lg AS nll
+       |        FROM lga a JOIN lgb b USING (w1, w2)),
+       |d AS (SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+       |        CAST(sum(t.nll) AS BIGINT) AS nll_q16
+       |      FROM bg JOIN tab t USING (w1, w2) GROUP BY 1)
+       |SELECT dd.doc_id,
+       |  coalesce(d.n_bigrams, 0) AS n_bigrams,
+       |  coalesce(d.nll_q16, 0) AS nll_q16,
+       |  coalesce(d.nll_q16, 0) * 1000
+       |    <= 4900 * coalesce(d.n_bigrams, 0) * 65536 AS keep
+       |FROM documents dd LEFT JOIN d ON dd.doc_id = d.doc_id""".stripMargin
+
+  /** Cut of the duplicated 8-word spans `d (doc_id, s)` out of the
+    * words of `wn` — mirrors Dedup's exact-substring cut: overlapping
+    * starts merge into islands, every token inside one is dropped and
+    * the rest rejoined. `corpus` restricts the documents cut and
+    * returned.
+    */
+  private def substringCutSql(corpus: Option[String]): String = {
+    val tokWhere = corpus.fold("")(c => s" WHERE $c")
+    val outWhere = corpus.fold("")(c => s"\nWHERE wn.$c")
+    s"""r AS (SELECT doc_id, s,
+       |        s - row_number() OVER (PARTITION BY doc_id ORDER BY s) AS isl
+       |      FROM d),
+       |iv AS (SELECT doc_id, min(s) AS lo, max(s) + 8 AS hi
+       |       FROM r GROUP BY doc_id, isl),
+       |tok AS (SELECT doc_id, t, words[t] AS wd
+       |        FROM (SELECT doc_id, words,
+       |                unnest(range(1, len(words) + 1)) AS t FROM wn$tokWhere)),
+       |cut AS (SELECT tok.doc_id, tok.t FROM tok
+       |        JOIN iv ON tok.doc_id = iv.doc_id
+       |          AND tok.t >= iv.lo AND tok.t < iv.hi),
+       |kept AS (SELECT tok.doc_id, tok.t, tok.wd FROM tok
+       |         LEFT JOIN cut ON tok.doc_id = cut.doc_id AND tok.t = cut.t
+       |         WHERE cut.t IS NULL),
+       |ka AS (SELECT doc_id, count(*) AS n_kept,
+       |         string_agg(wd, ' ' ORDER BY t) AS clean_text
+       |       FROM kept GROUP BY 1)
+       |SELECT wn.doc_id, CAST(len(wn.words) AS BIGINT) AS n_tokens,
+       |  CAST(len(wn.words) - coalesce(ka.n_kept, 0) AS BIGINT) AS n_removed,
+       |  coalesce(ka.clean_text, '') AS clean_text
+       |FROM wn LEFT JOIN ka USING (doc_id)$outWhere""".stripMargin
+  }
+
+  /** The DSIR importance model — mirrors Dsir.dsirSelect over the
+    * src0-src3 target slice and 4096 hashed unigram+bigram buckets:
+    * features `fe (doc_id, is_t, fb)`, per-bucket Q16 log-ratio `lam`,
+    * and the two totals' logs `lgt`, `lgr`.
+    */
+  private val dsirModelCtes: String =
+    s"""w AS (SELECT doc_id, $wordsSql AS words,
+       |        source IN ('src0', 'src1', 'src2', 'src3') AS is_t
+       |      FROM documents),
+       |fe AS (SELECT doc_id, is_t,
+       |         ${baseHashSql("'dsir' || g")} % 4096 AS fb
+       |       FROM (SELECT doc_id, is_t,
+       |               unnest(list_concat(words,
+       |                 list_transform(range(1, len(words)),
+       |                   i -> words[i] || ' ' || words[i + 1]))) AS g
+       |             FROM w)),
+       |cnt AS (SELECT fb,
+       |          CAST(sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS ct,
+       |          CAST(sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS BIGINT) AS cr
+       |        FROM fe GROUP BY 1),
+       |tot AS (SELECT CAST(sum(ct) AS BIGINT) + 4096 AS xt,
+       |          CAST(sum(cr) AS BIGINT) + 4096 AS xr FROM cnt),
+       |ina AS (SELECT fb, ct + 1 AS x FROM cnt),
+       |${Portable.log2q16Sql("ina", Seq("fb"), "x", "lga", "lg")},
+       |inb AS (SELECT fb, cr + 1 AS x FROM cnt),
+       |${Portable.log2q16Sql("inb", Seq("fb"), "x", "lgb", "lg")},
+       |int1 AS (SELECT 1 AS k, xt AS x FROM tot),
+       |${Portable.log2q16Sql("int1", Seq("k"), "x", "lgt", "lg")},
+       |inr1 AS (SELECT 1 AS k, xr AS x FROM tot),
+       |${Portable.log2q16Sql("inr1", Seq("k"), "x", "lgr", "lg")},
+       |lam AS (SELECT a.fb, a.lg - b.lg AS lam
+       |        FROM lga a JOIN lgb b USING (fb))""".stripMargin
+
+  /** DSIR selection over the raw (non-target) rows of `scored (doc_id,
+    * is_t, logratio_q16)`: clamped score `raw`, the top-quarter budget
+    * `nb` and the rank `rk`.
+    */
+  private def dsirRankCtes(scored: String): String =
+    s"""raw AS (SELECT doc_id,
+       |          greatest(least(logratio_q16 >> 6, 1048576),
+       |                   -1048576) AS m
+       |        FROM $scored WHERE NOT is_t),
+       |nb AS (SELECT (CAST(count(*) AS BIGINT) * 1 + 4 - 1) // 4
+       |          AS budget FROM raw),
+       |rk AS (SELECT doc_id,
+       |         CAST(row_number() OVER (ORDER BY m DESC, doc_id)
+       |           AS BIGINT) AS r
+       |       FROM raw)""".stripMargin
+
+  /** BM25 over the inverted bigram-term index — mirrors
+    * [[Retrieval.index]] + `scoreAndRank`: the words → bigram postings →
+    * corpus stats → df cap → Q16 idf chain, the derived query terms
+    * (docs with id % every = offset, bigrams of the first 5 words) and
+    * the integer scores `sc<round>` over `cand<round>`. The df cap is
+    * absolute (`maxDf`) or relative (`df * relDfDen <= n_docs`), as in
+    * the index build; `excludeSelf` drops a query's own document.
+    */
+  private def bm25Ctes(every: Int, offset: Int, excludeSelf: Boolean,
+                       maxDf: Long = 40L, relDfDen: Option[Long] = None,
+                       round: String = ""): String =
+    s"""${bm25IndexCtes(maxDf, relDfDen)},
+       |qw AS (SELECT doc_id AS query_id, words FROM w
+       |       WHERE doc_id % $every = $offset),
+       |qt AS (SELECT DISTINCT query_id,
+       |         unnest(list_transform(range(1, least(len(words), 5)),
+       |           i -> words[i] || ' ' || words[i + 1])) AS term
+       |       FROM qw),
+       |${bm25ScoreCtes(round, "qt", excludeSelf)}""".stripMargin
+
+  /** The index half of [[bm25Ctes]], ending in `idf (term, idf_q16)`;
+    * without `lengths` the postings and stats carry no document
+    * lengths (tf-idf needs none).
+    */
+  private def bm25IndexCtes(maxDf: Long = 40L, relDfDen: Option[Long] = None,
+                            lengths: Boolean = true): String = {
+    val cap = relDfDen.fold(s"count(*) <= $maxDf")(den =>
+      s"count(*) * $den <= (SELECT n_docs FROM stats)")
+    val (pDl, statsDl) =
+      if (lengths) (",\n max(dl) AS dl", ",\n CAST(sum(dl) AS BIGINT) AS n_terms")
+      else ("", "")
+    s"""w AS (SELECT doc_id, $wordsSql AS words FROM documents),
+       |bl AS (SELECT doc_id,
+       |         list_transform(range(1, len(words)),
+       |           i -> words[i] || ' ' || words[i + 1]) AS terms,
+       |         CAST(len(words) - 1 AS BIGINT) AS dl
+       |       FROM w WHERE len(words) >= 2),
+       |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
+       |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf$pDl
+       |      FROM post GROUP BY 1, 2),
+       |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs$statsDl FROM bl),
+       |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
+       |        FROM p GROUP BY 1 HAVING $cap),
+       |ina AS (SELECT term,
+       |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
+       |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
+       |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
+       |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
+       |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
+       |        FROM lga a JOIN lgb b USING (term))""".stripMargin
+  }
+
+  /** One BM25 scoring round: candidates of the query terms `terms` (a
+    * CTE name, optionally with an alias) and their summed integer
+    * scores `sc<round> (query_id, doc_id, score_micro)`.
+    */
+  private def bm25ScoreCtes(round: String, terms: String,
+                            excludeSelf: Boolean): String = {
+    val q = terms.split(' ').last
+    val self = if (excludeSelf) s"\n WHERE $q.query_id <> p.doc_id" else ""
+    s"""cand$round AS (SELECT $q.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
+       |         FROM p JOIN idf USING (term) JOIN $terms USING (term)$self),
+       |sc$round AS (SELECT query_id, doc_id,
+       |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
+       |             (10 * tf * s.n_terms + 3 * s.n_terms
+       |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
+       |           AS score_micro
+       |       FROM cand$round, stats s GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** Per-query rank `rnk` of the BM25 scores in `from`, best first
+    * (doc id breaks ties); `withScore` keeps `score_micro` and types
+    * the rank INT, as the declared output does.
+    */
+  private def bm25RankCte(name: String, from: String,
+                          withScore: Boolean): String =
+    if (withScore)
+      s"""$name AS (SELECT query_id, doc_id, score_micro,
+         |        CAST(row_number() OVER (PARTITION BY query_id
+         |             ORDER BY score_micro DESC, doc_id) AS INT) AS rnk
+         |      FROM $from)""".stripMargin
+    else
+      s"""$name AS (SELECT query_id, doc_id,
+         |        row_number() OVER (PARTITION BY query_id
+         |             ORDER BY score_micro DESC, doc_id) AS rnk
+         |      FROM $from)""".stripMargin
+
+  /** The declared BM25 top-5 output (t_bm25_topk, t_bm25_search). */
+  private val bm25TopKOracle: String =
+    s"""WITH RECURSIVE
+       |${bm25Ctes(29, 3, excludeSelf = false)},
+       |${bm25RankCte("r", "sc", withScore = true)}
+       |SELECT query_id, doc_id, rnk, score_micro
+       |FROM r WHERE rnk <= 5""".stripMargin
+
+  /** Containment inputs over the winnowing fingerprints of `m`, with
+    * fingerprints in more than 20 documents dropped — mirrors
+    * Dedup.winnowOverlapPairs: set `sizes` and pairwise `co (id_a,
+    * id_b, shared)`.
+    */
+  private val winnowSharedCtes: String =
+    """fp0 AS (SELECT doc_id, unnest(wf) AS fp FROM m),
+      |fq AS (SELECT fp FROM fp0 GROUP BY fp HAVING count(*) <= 20),
+      |fp AS (SELECT fp0.doc_id, fp0.fp FROM fp0 JOIN fq USING (fp)),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM fp GROUP BY 1),
+      |co AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
+      |       FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
+      |       GROUP BY 1, 2)""".stripMargin
+
+  /** The brute-force dense leg: cosine of every 50th embedding against
+    * all others (self excluded), ranked per query into `dr` with the
+    * rank column `rank` — mirrors Similarity.bruteForceTopK.
+    */
+  private def denseRankCtes(rank: String): String = {
+    val dqq = QueriesEmb.dotSql("q.e", "q.e")
+    val dcc = QueriesEmb.dotSql("c.e", "c.e")
+    val dqc = QueriesEmb.dotSql("q.e", "c.e")
+    s"""q AS (SELECT vec_id AS query_id, embedding AS e FROM embeddings
+       |      WHERE vec_id % 50 = 0),
+       |c AS (SELECT vec_id AS doc_id, embedding AS e FROM embeddings),
+       |s2 AS (SELECT query_id, doc_id,
+       |         $dqc / (sqrt($dqq) * sqrt($dcc)) AS sim
+       |       FROM c, q WHERE query_id <> doc_id),
+       |dr AS (SELECT query_id, doc_id,
+       |         row_number() OVER (PARTITION BY query_id
+       |           ORDER BY sim DESC, doc_id) AS $rank
+       |       FROM s2)""".stripMargin
+  }
+
+  /** Temperature-0.5 mixture mass per source — mirrors
+    * Sampling.mixtureSample's rate inputs: each document's token count
+    * `d`, per-source √n in milli-units `s2 (source, n, sq)` and their
+    * total `t (ssum)`.
+    */
+  private val mixtureMassCtes: String =
+    s"""d AS (SELECT doc_id, source,
+       |         CAST(len($rawTokensSql) AS BIGINT) AS n_tokens
+       |       FROM documents),
+       |s AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS n
+       |      FROM d GROUP BY 1),
+       |s2 AS (SELECT source, n,
+       |         CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000.0) AS BIGINT) AS sq
+       |       FROM s),
+       |t AS (SELECT CAST(sum(sq) AS BIGINT) AS ssum FROM s2)""".stripMargin
+
+  /** The lexical leg of the hybrid and mining queries: BM25 over every
+    * 50th document as a query, self excluded, ranked into `lr`.
+    */
+  private val lexRankCtes: String =
+    s"""${bm25Ctes(50, 0, excludeSelf = true)},
+       |${bm25RankCte("lr", "sc", withScore = false)}""".stripMargin
+
+  /** [[lexRankCtes]] plus the lexical RRF contributions `lex` of the
+    * top 20 — mirrors the lexical input of [[Retrieval.rrfFuse]].
+    */
+  private val hybridLexCtes: String =
+    s"""$lexRankCtes,
+       |lex AS (SELECT query_id, doc_id, 1000000 // (60 + rnk) AS r
+       |        FROM lr WHERE rnk <= 20)""".stripMargin
+
+  /** Integer reciprocal-rank fusion of `lex` with the dense ranks `dr`
+    * (1000000 div (60 + rank) over each top 20), top 10 per query —
+    * mirrors [[Retrieval.rrfFuse]] with kRrf = 60.
+    */
+  private val rrfTail: String =
+    """den AS (SELECT query_id, doc_id, 1000000 // (60 + rnk) AS r
+      |        FROM dr WHERE rnk <= 20),
+      |fused AS (SELECT coalesce(lex.query_id, den.query_id) AS query_id,
+      |            coalesce(lex.doc_id, den.doc_id) AS doc_id,
+      |            CAST(coalesce(lex.r, 0) + coalesce(den.r, 0) AS BIGINT)
+      |              AS rrf_micro
+      |          FROM lex FULL OUTER JOIN den
+      |            ON lex.query_id = den.query_id
+      |           AND lex.doc_id = den.doc_id)
+      |SELECT query_id, doc_id, rrf_micro, rnk FROM (
+      |  SELECT query_id, doc_id, rrf_micro,
+      |    CAST(row_number() OVER (PARTITION BY query_id
+      |      ORDER BY rrf_micro DESC, doc_id) AS INT) AS rnk
+      |  FROM fused) t
+      |WHERE rnk <= 10""".stripMargin
+
+  /** [[lexRankCtes]] plus the BM25 top 5 `bmr` the hard negatives come
+    * from.
+    */
+  private val miningLexCtes: String =
+    s"""$lexRankCtes,
+       |bmr AS (SELECT query_id, doc_id, rnk FROM lr WHERE rnk <= 5)""".stripMargin
+
+  /** Triple assembly over the positives `posr` and `bmr` — mirrors
+    * [[Retrieval.hardNegativeMining]]: hard negatives are the BM25 top 5
+    * minus the positive, random negatives 3 hash draws from the global
+    * pool (doc hash % 10 = 0) that are neither.
+    */
+  private def miningTail(materializedHard: Boolean): String = {
+    val hardKw = if (materializedHard) " MATERIALIZED" else ""
+    s"""hardr AS$hardKw (SELECT * FROM (
+       |    SELECT b.query_id, b.doc_id,
+       |      CAST(row_number() OVER (PARTITION BY b.query_id
+       |        ORDER BY b.rnk) AS INT) AS rnk
+       |    FROM bmr b JOIN posr p2 ON b.query_id = p2.query_id
+       |    WHERE b.doc_id <> p2.doc_id) t),
+       |pool AS (SELECT doc_id FROM documents
+       |         WHERE CAST(('0x' || substr(md5('pool' ||
+       |           CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 = 0),
+       |pix AS MATERIALIZED (SELECT doc_id,
+       |         row_number() OVER (ORDER BY doc_id) - 1 AS pidx
+       |       FROM pool),
+       |pc AS (SELECT CAST(count(*) AS BIGINT) AS p FROM pool),
+       |qids AS (SELECT doc_id AS query_id FROM documents
+       |         WHERE doc_id % 50 = 0),
+       |taken AS (SELECT query_id, doc_id FROM posr
+       |          UNION ALL SELECT query_id, doc_id FROM hardr),
+       |draws AS (SELECT query_id,
+       |            CAST(('0x' || substr(md5('rsel' ||
+       |              CAST(query_id AS VARCHAR) || ':' ||
+       |              CAST(j AS VARCHAR)), 1, 8)) AS BIGINT) % p AS widx
+       |          FROM qids, range(0, 8) t(j), pc),
+       |randc AS (SELECT DISTINCT draws.query_id, pix.doc_id
+       |          FROM draws JOIN pix ON pix.pidx = draws.widx
+       |          WHERE pix.doc_id <> draws.query_id
+       |            AND NOT EXISTS (SELECT 1 FROM taken t
+       |              WHERE t.query_id = draws.query_id
+       |                AND t.doc_id = pix.doc_id)),
+       |randr AS (SELECT * FROM (
+       |    SELECT query_id, doc_id,
+       |      CAST(row_number() OVER (PARTITION BY query_id
+       |        ORDER BY CAST(('0x' || substr(md5('rng' ||
+       |          CAST(query_id AS VARCHAR) || ':' ||
+       |          CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT), doc_id)
+       |        AS INT) AS rnk
+       |    FROM randc) t WHERE rnk <= 3)
+       |SELECT query_id, doc_id, 'pos' AS role, CAST(1 AS INT) AS rnk
+       |FROM posr
+       |UNION ALL
+       |SELECT query_id, doc_id, 'hard_neg' AS role, rnk FROM hardr
+       |UNION ALL
+       |SELECT query_id, doc_id, 'rand_neg' AS role, rnk FROM randr""".stripMargin
+  }
+
+  /** BM25 top 5 of the sampled queries (self excluded) labelled by
+    * same-source relevance: `res`, `qs (query_id, qsrc)` and `ds` — the
+    * shared input of the t_ndcg and t_mrr oracles.
+    */
+  private val evalLabelCtes: String =
+    s"""${bm25Ctes(29, 3, excludeSelf = true)},
+       |${bm25RankCte("r", "sc", withScore = false)},
+       |res AS (SELECT query_id, doc_id, rnk FROM r WHERE rnk <= 5),
+       |qs AS (SELECT doc_id AS query_id, source AS qsrc
+       |       FROM documents WHERE doc_id % 29 = 3),
+       |ds AS (SELECT doc_id, source FROM documents)""".stripMargin
+
   val defs: Seq[QDef] = Seq(
 
     // token counting + char metrics
@@ -193,11 +743,7 @@ object QueriesText {
       },
       Some {
         val langs = TextAnalysis.Stopwords.keys.toSeq.sorted
-        def hits(l: String): String = {
-          val lst = TextAnalysis.Stopwords(l).map(w => s"'$w'").mkString("[", ", ", "]")
-          s"len(list_filter($rawTokensSql, x -> list_contains($lst, x)))"
-        }
-        val hitCols = langs.map(l => s"  ${hits(l)} AS h_$l").mkString(",\n")
+        val hitCols = langs.map(l => s"  ${stopwordHitsSql(l)} AS h_$l").mkString(",\n")
         // fold: start ('und', 0); langs in sorted order; strictly-greater wins
         val (bestExpr, _) = langs.foldLeft(("'und'", "0")) { case ((bl, bh), l) =>
           (s"(CASE WHEN h_$l > $bh THEN '$l' ELSE $bl END)",
@@ -215,7 +761,6 @@ object QueriesText {
           (s"(CASE WHEN t_$l > $bh THEN '$l' ELSE $bl END)",
             s"greatest(t_$l, $bh)")
         }
-        val enHits = hits("en")
         s"""WITH h AS (
            |  SELECT doc_id, text,
            |$hitCols,
@@ -223,19 +768,7 @@ object QueriesText {
            |  FROM documents)
            |SELECT doc_id, $bestExpr AS lang_id,
            |  $triBest AS lang_id_ngram,
-           |  round((
-           |    (CASE WHEN len($rawTokensSql) >= 5 AND len($rawTokensSql) <= 10000
-           |          THEN 1.0 ELSE 0.0 END)
-           |    + CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-           |      / greatest(CAST(length(text) AS DOUBLE), 1.0)
-           |    + least(CAST($enHits AS DOUBLE)
-           |        / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) * 10.0, 1.0)
-           |    + (CASE WHEN CAST(length(text) AS DOUBLE)
-           |              / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) >= 2.0
-           |             AND CAST(length(text) AS DOUBLE)
-           |              / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) <= 12.0
-           |            THEN 1.0 ELSE 0.0 END)
-           |  ) / 4.0, 6) AS quality
+           |  $qualitySql AS quality
            |FROM h""".stripMargin
       }),
 
@@ -269,13 +802,7 @@ object QueriesText {
         "doc_id", "text", tau = 0.7, maxFpDf = 20L),
       Some(
         s"""WITH $winnowCte,
-           |fp0 AS (SELECT doc_id, unnest(wf) AS fp FROM m),
-           |fq AS (SELECT fp FROM fp0 GROUP BY fp HAVING count(*) <= 20),
-           |fp AS (SELECT fp0.doc_id, fp0.fp FROM fp0 JOIN fq USING (fp)),
-           |sizes AS (SELECT doc_id, count(*) AS n FROM fp GROUP BY 1),
-           |co AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-           |       FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-           |       GROUP BY 1, 2)
+           |$winnowSharedCtes
            |SELECT id_a, id_b, shared,
            |  round(CAST(shared AS DOUBLE) / CAST(least(sa.n, sb.n) AS DOUBLE), 6)
            |    AS containment
@@ -407,15 +934,7 @@ object QueriesText {
         "doc_id", "text", tau = 0.5),
       Some(s"""WITH $shinglesCte,
               |$minhashBandsCte,
-              |cand AS (
-              |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-              |  FROM bands x JOIN bands y
-              |    ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.id < y.id),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-              |co AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS co
-              |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
+              |$minhashCandCtes
               |SELECT c.id_a, c.id_b,
               |  round(CAST(co.co AS DOUBLE) / CAST(sa.n + sb.n - co.co AS DOUBLE), 6) AS jaccard
               |FROM cand c
@@ -439,30 +958,14 @@ object QueriesText {
       },
       Some(s"""WITH RECURSIVE $shinglesCte,
               |$minhashBandsCte,
-              |cand AS (
-              |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-              |  FROM bands x JOIN bands y
-              |    ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.id < y.id),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-              |co AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS co
-              |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+              |$minhashCandCtes,
               |pairs AS (
               |  SELECT c.id_a, c.id_b FROM cand c
               |  JOIN co ON co.id_a = c.id_a AND co.id_b = c.id_b
               |  JOIN sizes sa ON sa.doc_id = c.id_a
               |  JOIN sizes sb ON sb.doc_id = c.id_b
               |  WHERE CAST(co.co AS DOUBLE) / CAST(sa.n + sb.n - co.co AS DOUBLE) >= 0.5),
-              |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-              |          UNION ALL SELECT id_b, id_a FROM pairs),
-              |lab (id, cluster) AS (
-              |  SELECT doc_id, doc_id FROM documents
-              |  UNION
-              |  SELECT e.src, l.cluster FROM edges e JOIN lab l ON l.id = e.dst)
-              |SELECT id AS doc_id, min(cluster) AS cluster_id,
-              |  id = min(cluster) AS is_canonical
-              |FROM lab GROUP BY id""".stripMargin)),
+              |$hashMinClustersSql""".stripMargin)),
 
     // substring-level dup GROUPS: the generic HashMin clustering composed
     // over winnow-containment pairs instead of MinHash-Jaccard pairs —
@@ -479,27 +982,13 @@ object QueriesText {
       },
       Some(
         s"""WITH RECURSIVE $winnowCte,
-           |fp0 AS (SELECT doc_id, unnest(wf) AS fp FROM m),
-           |fq AS (SELECT fp FROM fp0 GROUP BY fp HAVING count(*) <= 20),
-           |fp AS (SELECT fp0.doc_id, fp0.fp FROM fp0 JOIN fq USING (fp)),
-           |sizes AS (SELECT doc_id, count(*) AS n FROM fp GROUP BY 1),
-           |co AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-           |       FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-           |       GROUP BY 1, 2),
+           |$winnowSharedCtes,
            |pairs AS (
            |  SELECT id_a, id_b FROM co
            |  JOIN sizes sa ON sa.doc_id = id_a
            |  JOIN sizes sb ON sb.doc_id = id_b
            |  WHERE CAST(shared AS DOUBLE) / CAST(least(sa.n, sb.n) AS DOUBLE) >= 0.7),
-           |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-           |          UNION ALL SELECT id_b, id_a FROM pairs),
-           |lab (id, cluster) AS (
-           |  SELECT doc_id, doc_id FROM documents
-           |  UNION
-           |  SELECT e.src, l.cluster FROM edges e JOIN lab l ON l.id = e.dst)
-           |SELECT id AS doc_id, min(cluster) AS cluster_id,
-           |  id = min(cluster) AS is_canonical
-           |FROM lab GROUP BY id""".stripMargin)),
+           |$hashMinClustersSql""".stripMargin)),
 
     // cross-corpus near-dups: odd doc ids play the incoming batch, even
     // ids the already-trained reference corpus. Band join ACROSS the two
@@ -883,39 +1372,7 @@ object QueriesText {
         Q.table(s, dir, "documents"), "doc_id", "text",
         minQualityMicro = 800000L, maxPii = 0L),
       Some {
-        val enHits = stopwordHitsSql("en")
-        val (e, p, i) = (TextAnalysis.PiiEmailRe, TextAnalysis.PiiPhoneRe,
-          TextAnalysis.PiiIpRe)
-        s"""WITH d AS (
-           |  SELECT doc_id,
-           |    doc_id = min(doc_id) OVER (PARTITION BY md5($normSql)) AS dedup_ok
-           |  FROM documents),
-           |g AS (
-           |  SELECT doc_id,
-           |    len($rawTokensSql) >= 20 AND len($rawTokensSql) <= 90 AS r_len_ok,
-           |    CAST(length(text) AS DOUBLE)
-           |      / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) >= 3.0
-           |    AND CAST(length(text) AS DOUBLE)
-           |      / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) <= 10.0 AS r_mwl_ok,
-           |    $enHits >= 2 AS r_sw_ok,
-           |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-           |      / greatest(CAST(length(text) AS DOUBLE), 1.0) >= 0.5 AS r_alpha_ok
-           |  FROM documents),
-           |q AS (
-           |  SELECT doc_id,
-           |    CAST(CAST($qualitySql AS DECIMAL(25,6)) * 1000000 AS BIGINT)
-           |      AS quality_micro
-           |  FROM documents),
-           |p1 AS (SELECT doc_id, text,
-           |    regexp_replace(text, '$e', '<EMAIL>', 'g') AS t1 FROM documents),
-           |p2 AS (SELECT doc_id, text, t1,
-           |    regexp_replace(t1, '$p', '<PHONE>', 'g') AS t2 FROM p1),
-           |pp AS (
-           |  SELECT doc_id,
-           |    CAST(len(regexp_extract_all(text, '$e'))
-           |       + len(regexp_extract_all(t1, '$p'))
-           |       + len(regexp_extract_all(t2, '$i')) AS BIGINT) AS n_pii
-           |  FROM p2)
+        s"""WITH ${curationGateCtes("d", c4 = false)}
            |SELECT d.doc_id, d.dedup_ok,
            |  g.r_len_ok, g.r_mwl_ok, g.r_sw_ok, g.r_alpha_ok,
            |  g.r_len_ok AND g.r_mwl_ok AND g.r_sw_ok AND g.r_alpha_ok AS gopher_ok,
@@ -1150,23 +1607,7 @@ object QueriesText {
           d, col("doc_id"), TextAnalysis.wsTokenCount(col("text")),
           seqLen = 512, nBuckets = 32, salt = "pack")
       },
-      Some(s"""WITH d AS (
-              |  SELECT doc_id,
-              |    CAST(len($rawTokensSql) AS BIGINT) AS n_tokens,
-              |    (CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-              |      % 1000000) % 32 AS bucket
-              |  FROM documents
-              |  WHERE len($rawTokensSql) > 0),
-              |c AS (
-              |  SELECT doc_id, bucket, n_tokens,
-              |    CAST(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS local_end
-              |  FROM d),
-              |bo AS (
-              |  SELECT bucket,
-              |    CAST(coalesce(sum(tot) OVER (ORDER BY bucket
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS bucket_off
-              |  FROM (SELECT bucket, sum(n_tokens) AS tot FROM d GROUP BY bucket) t)
+      Some(s"""WITH ${packLayoutCtes(s"len($rawTokensSql)", "documents")}
               |SELECT c.doc_id, c.bucket, c.n_tokens,
               |  bucket_off + local_end - n_tokens AS start_off,
               |  (bucket_off + local_end - n_tokens) // 512 AS seq_first,
@@ -1186,38 +1627,9 @@ object QueriesText {
           d, col("doc_id"), TextAnalysis.wsTokenCount(col("text")),
           seqLen = 512, nBuckets = 32, salt = "pack")
       },
-      Some(s"""WITH d AS (
-              |  SELECT doc_id,
-              |    CAST(len($rawTokensSql) AS BIGINT) AS n_tokens,
-              |    (CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-              |      % 1000000) % 32 AS bucket
-              |  FROM documents
-              |  WHERE len($rawTokensSql) > 0),
-              |c AS (
-              |  SELECT doc_id, bucket, n_tokens,
-              |    CAST(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS local_end
-              |  FROM d),
-              |bo AS (
-              |  SELECT bucket,
-              |    CAST(coalesce(sum(tot) OVER (ORDER BY bucket
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS bucket_off
-              |  FROM (SELECT bucket, sum(n_tokens) AS tot FROM d GROUP BY bucket) t),
-              |p AS (
-              |  SELECT c.doc_id, c.n_tokens,
-              |    bucket_off + local_end - n_tokens AS start_off,
-              |    (bucket_off + local_end - n_tokens) // 512 AS seq_first,
-              |    (bucket_off + local_end - 1) // 512 AS seq_last
-              |  FROM c JOIN bo USING (bucket)),
-              |e AS (
-              |  SELECT doc_id, n_tokens, start_off,
-              |    unnest(generate_series(seq_first, seq_last)) AS seq_id
-              |  FROM p)
-              |SELECT seq_id, doc_id,
-              |  greatest(start_off, seq_id * 512) - start_off AS tok_from,
-              |  least(start_off + n_tokens, (seq_id + 1) * 512) - start_off AS tok_to,
-              |  greatest(start_off, seq_id * 512) - seq_id * 512 AS seq_off
-              |FROM e""".stripMargin)),
+      Some(s"""WITH ${packLayoutCtes(s"len($rawTokensSql)", "documents")},
+              |$packSeqCtes
+              |$packedSlicesSql""".stripMargin)),
 
     // CAPSTONE — prepare-training-shards end to end: exact-dedup
     // canonical → Gopher/quality/PII curation gates → concat-and-split
@@ -1236,77 +1648,16 @@ object QueriesText {
           seqLen = 512, nBuckets = 32, salt = "pack")
       },
       Some {
-        val enHits = stopwordHitsSql("en")
-        val (e, p, i) = (TextAnalysis.PiiEmailRe, TextAnalysis.PiiPhoneRe,
-          TextAnalysis.PiiIpRe)
-        s"""WITH dd0 AS (
-           |  SELECT doc_id,
-           |    doc_id = min(doc_id) OVER (PARTITION BY md5($normSql)) AS dedup_ok
-           |  FROM documents),
-           |g AS (
-           |  SELECT doc_id,
-           |    len($rawTokensSql) >= 20 AND len($rawTokensSql) <= 90 AS r_len_ok,
-           |    CAST(length(text) AS DOUBLE)
-           |      / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) >= 3.0
-           |    AND CAST(length(text) AS DOUBLE)
-           |      / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) <= 10.0 AS r_mwl_ok,
-           |    $enHits >= 2 AS r_sw_ok,
-           |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-           |      / greatest(CAST(length(text) AS DOUBLE), 1.0) >= 0.5 AS r_alpha_ok
-           |  FROM documents),
-           |q AS (
-           |  SELECT doc_id,
-           |    CAST(CAST($qualitySql AS DECIMAL(25,6)) * 1000000 AS BIGINT)
-           |      AS quality_micro
-           |  FROM documents),
-           |p1 AS (SELECT doc_id, text,
-           |    regexp_replace(text, '$e', '<EMAIL>', 'g') AS t1 FROM documents),
-           |p2 AS (SELECT doc_id, text, t1,
-           |    regexp_replace(t1, '$p', '<PHONE>', 'g') AS t2 FROM p1),
-           |pp AS (
-           |  SELECT doc_id,
-           |    CAST(len(regexp_extract_all(text, '$e'))
-           |       + len(regexp_extract_all(t1, '$p'))
-           |       + len(regexp_extract_all(t2, '$i')) AS BIGINT) AS n_pii
-           |  FROM p2),
+        s"""WITH ${curationGateCtes("dd0", c4 = false)},
            |kept AS (
            |  SELECT doc_id, text FROM documents
            |  JOIN dd0 USING (doc_id) JOIN g USING (doc_id)
            |  JOIN q USING (doc_id) JOIN pp USING (doc_id)
            |  WHERE dedup_ok AND r_len_ok AND r_mwl_ok AND r_sw_ok
            |    AND r_alpha_ok AND quality_micro >= 800000 AND n_pii <= 0),
-           |d AS (
-           |  SELECT doc_id,
-           |    CAST(len($rawTokensSql) AS BIGINT) AS n_tokens,
-           |    (CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-           |      % 1000000) % 32 AS bucket
-           |  FROM kept
-           |  WHERE len($rawTokensSql) > 0),
-           |c AS (
-           |  SELECT doc_id, bucket, n_tokens,
-           |    CAST(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS local_end
-           |  FROM d),
-           |bo AS (
-           |  SELECT bucket,
-           |    CAST(coalesce(sum(tot) OVER (ORDER BY bucket
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS bucket_off
-           |  FROM (SELECT bucket, sum(n_tokens) AS tot FROM d GROUP BY bucket) t),
-           |p AS (
-           |  SELECT c.doc_id, c.n_tokens,
-           |    bucket_off + local_end - n_tokens AS start_off,
-           |    (bucket_off + local_end - n_tokens) // 512 AS seq_first,
-           |    (bucket_off + local_end - 1) // 512 AS seq_last
-           |  FROM c JOIN bo USING (bucket)),
-           |e AS (
-           |  SELECT doc_id, n_tokens, start_off,
-           |    unnest(generate_series(seq_first, seq_last)) AS seq_id
-           |  FROM p)
-           |SELECT seq_id, doc_id,
-           |  greatest(start_off, seq_id * 512) - start_off AS tok_from,
-           |  least(start_off + n_tokens, (seq_id + 1) * 512) - start_off AS tok_to,
-           |  greatest(start_off, seq_id * 512) - seq_id * 512 AS seq_off
-           |FROM e""".stripMargin
+           |${packLayoutCtes(s"len($rawTokensSql)", "kept")},
+           |$packSeqCtes
+           |$packedSlicesSql""".stripMargin
       }),
 
     // MinHash estimator calibration: sketch-Jaccard vs exact Jaccard
@@ -1322,15 +1673,7 @@ object QueriesText {
           .mkString("\n      + ")
         s"""WITH $shinglesCte,
            |${minhashBandsCteGen(materializedSig = true)},
-           |cand AS (
-           |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-           |  FROM bands x JOIN bands y
-           |    ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.id < y.id),
-           |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-           |co AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS co
-           |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
+           |$minhashCandCtes,
            |est AS (
            |  SELECT c.id_a, c.id_b,
            |    CAST($matches AS BIGINT) AS est_matches
@@ -1431,27 +1774,7 @@ object QueriesText {
               |        ORDER BY doc_id, s) AS rn
               |      FROM wi),
               |d AS (SELECT doc_id, s FROM f WHERE rn > 1),
-              |r AS (SELECT doc_id, s,
-              |        s - row_number() OVER (PARTITION BY doc_id ORDER BY s) AS isl
-              |      FROM d),
-              |iv AS (SELECT doc_id, min(s) AS lo, max(s) + 8 AS hi
-              |       FROM r GROUP BY doc_id, isl),
-              |tok AS (SELECT doc_id, t, words[t] AS wd
-              |        FROM (SELECT doc_id, words,
-              |                unnest(range(1, len(words) + 1)) AS t FROM wn)),
-              |cut AS (SELECT tok.doc_id, tok.t FROM tok
-              |        JOIN iv ON tok.doc_id = iv.doc_id
-              |          AND tok.t >= iv.lo AND tok.t < iv.hi),
-              |kept AS (SELECT tok.doc_id, tok.t, tok.wd FROM tok
-              |         LEFT JOIN cut ON tok.doc_id = cut.doc_id AND tok.t = cut.t
-              |         WHERE cut.t IS NULL),
-              |ka AS (SELECT doc_id, count(*) AS n_kept,
-              |         string_agg(wd, ' ' ORDER BY t) AS clean_text
-              |       FROM kept GROUP BY 1)
-              |SELECT wn.doc_id, CAST(len(wn.words) AS BIGINT) AS n_tokens,
-              |  CAST(len(wn.words) - coalesce(ka.n_kept, 0) AS BIGINT) AS n_removed,
-              |  coalesce(ka.clean_text, '') AS clean_text
-              |FROM wn LEFT JOIN ka USING (doc_id)""".stripMargin)),
+              |${substringCutSql(None)}""".stripMargin)),
 
     // exact-substring decontamination: corpus spans >= 8 tokens equal
     // to ANY benchmark text at ANY offset on BOTH sides are cut — the
@@ -1478,29 +1801,7 @@ object QueriesText {
               |               unnest(range(1, len(words) - 6)) AS s
               |             FROM wn WHERE doc_id % 23 <> 0) c),
               |d AS (SELECT cw.doc_id, cw.s FROM cw JOIN bf USING (fp)),
-              |r AS (SELECT doc_id, s,
-              |        s - row_number() OVER (PARTITION BY doc_id ORDER BY s) AS isl
-              |      FROM d),
-              |iv AS (SELECT doc_id, min(s) AS lo, max(s) + 8 AS hi
-              |       FROM r GROUP BY doc_id, isl),
-              |tok AS (SELECT doc_id, t, words[t] AS wd
-              |        FROM (SELECT doc_id, words,
-              |                unnest(range(1, len(words) + 1)) AS t
-              |              FROM wn WHERE doc_id % 23 <> 0)),
-              |cut AS (SELECT tok.doc_id, tok.t FROM tok
-              |        JOIN iv ON tok.doc_id = iv.doc_id
-              |          AND tok.t >= iv.lo AND tok.t < iv.hi),
-              |kept AS (SELECT tok.doc_id, tok.t, tok.wd FROM tok
-              |         LEFT JOIN cut ON tok.doc_id = cut.doc_id AND tok.t = cut.t
-              |         WHERE cut.t IS NULL),
-              |ka AS (SELECT doc_id, count(*) AS n_kept,
-              |         string_agg(wd, ' ' ORDER BY t) AS clean_text
-              |       FROM kept GROUP BY 1)
-              |SELECT wn.doc_id, CAST(len(wn.words) AS BIGINT) AS n_tokens,
-              |  CAST(len(wn.words) - coalesce(ka.n_kept, 0) AS BIGINT) AS n_removed,
-              |  coalesce(ka.clean_text, '') AS clean_text
-              |FROM wn LEFT JOIN ka USING (doc_id)
-              |WHERE wn.doc_id % 23 <> 0""".stripMargin)),
+              |${substringCutSql(Some("doc_id % 23 <> 0"))}""".stripMargin)),
 
     // in-engine classifier training: pocket perceptron distilling the
     // integer heuristic teacher into linearQualityScore weights; the
@@ -1561,15 +1862,7 @@ object QueriesText {
         budgetTokens = 12000L, salt = "mix2")
         .select(col("key").as("doc_id"), col("stratum").as("source"),
           col("n_tokens"), col("rate_micro")),
-      Some(s"""WITH d AS (SELECT doc_id, source,
-              |         CAST(len($rawTokensSql) AS BIGINT) AS n_tokens
-              |       FROM documents),
-              |s AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS n
-              |      FROM d GROUP BY 1),
-              |s2 AS (SELECT source, n,
-              |         CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000.0) AS BIGINT) AS sq
-              |       FROM s),
-              |t AS (SELECT CAST(sum(sq) AS BIGINT) AS ssum FROM s2),
+      Some(s"""WITH $mixtureMassCtes,
               |r AS (SELECT source,
               |        least(1000000, ((CAST(12000 AS BIGINT) * 1000000 // ssum) * sq) // n)
               |          AS rate_micro
@@ -1620,15 +1913,7 @@ object QueriesText {
         budgetTokens = 40000L, salt = "mix3")
         .select(col("key").as("doc_id"), col("stratum").as("source"),
           col("n_tokens"), col("copy")),
-      Some(s"""WITH d AS (SELECT doc_id, source,
-              |         CAST(len($rawTokensSql) AS BIGINT) AS n_tokens
-              |       FROM documents),
-              |s AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS n
-              |      FROM d GROUP BY 1),
-              |s2 AS (SELECT source, n,
-              |         CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000.0) AS BIGINT) AS sq
-              |       FROM s),
-              |t AS (SELECT CAST(sum(sq) AS BIGINT) AS ssum FROM s2),
+      Some(s"""WITH $mixtureMassCtes,
               |r AS (SELECT source,
               |        ((CAST(40000 AS BIGINT) * 1000000 // ssum) * sq) // n AS rate_micro
               |      FROM s2, t),
@@ -1666,17 +1951,11 @@ object QueriesText {
         wTokensMicro = 500000L, wCharsMicro = 50000L, wAlphaMicro = 30000L,
         wStopMicro = 200000L, wMwlMicro = 2000L, biasMicro = -62000000L),
       Some {
-        val enHits = stopwordHitsSql("en")
         s"""SELECT doc_id, n_tokens, logit_micro, logit_micro >= 0 AS keep
            |FROM (
            |  SELECT doc_id,
            |    CAST(len($rawTokensSql) AS BIGINT) AS n_tokens,
-           |    -62000000 + 500000 * CAST(len($rawTokensSql) AS BIGINT)
-           |      + 50000 * CAST(length(text) AS BIGINT)
-           |      + 30000 * CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)
-           |      + 200000 * CAST($enHits AS BIGINT)
-           |      + 2000 * (CAST(length(text) AS BIGINT) * 1000
-           |                // greatest(CAST(len($rawTokensSql) AS BIGINT), 1))
+           |    $qualityLogitSql
            |      AS logit_micro
            |  FROM documents) t""".stripMargin
       }),
@@ -1705,21 +1984,7 @@ object QueriesText {
           col("logit_micro"), col("teacher"))
       },
       Some {
-        val enHits = stopwordHitsSql("en")
-        s"""WITH sc AS (
-           |  SELECT doc_id,
-           |    -62000000 + 500000 * CAST(len($rawTokensSql) AS BIGINT)
-           |      + 50000 * CAST(length(text) AS BIGINT)
-           |      + 30000 * CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)
-           |      + 200000 * CAST($enHits AS BIGINT)
-           |      + 2000 * (CAST(length(text) AS BIGINT) * 1000
-           |                // greatest(CAST(len($rawTokensSql) AS BIGINT), 1))
-           |      AS s,
-           |    CASE WHEN CAST(len($rawTokensSql) AS BIGINT) BETWEEN 20 AND 70
-           |          AND CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)
-           |              * 1024 // greatest(CAST(length(text) AS BIGINT), 1) >= 700
-           |      THEN 1 ELSE 0 END AS y
-           |  FROM documents),
+        s"""WITH $qualityScoredCte,
            |g AS (SELECT s, CAST(sum(y) AS BIGINT) AS pos,
            |        CAST(count(*) - sum(y) AS BIGINT) AS neg
            |      FROM sc GROUP BY 1),
@@ -1782,24 +2047,7 @@ object QueriesText {
               acc => acc.getField("s")).as("id_possum"))
       },
       Some(s"""WITH RECURSIVE
-              |vocab(id, piece, plen) AS (VALUES ${Bpe.vocabValuesSql(Bpe.demoVocab)}),
-              |docs AS (SELECT doc_id, $normSql AS norm FROM documents),
-              |wn AS (SELECT doc_id, regexp_split_to_array(norm, ' ') AS words FROM docs),
-              |w AS (SELECT doc_id, unnest(words) AS word,
-              |             unnest(range(1, len(words) + 1)) AS widx FROM wn),
-              |enc(doc_id, widx, word, pos, ids) AS (
-              |  SELECT doc_id, widx, word, 0, CAST([] AS INTEGER[]) FROM w
-              |  WHERE length(word) > 0
-              |  UNION ALL
-              |  SELECT e.doc_id, e.widx, e.word, e.pos + coalesce(m.plen, 1),
-              |         list_append(e.ids, coalesce(m.id, 0))
-              |  FROM enc e LEFT JOIN LATERAL (
-              |    SELECT v.id, v.plen FROM vocab v
-              |    WHERE substr(e.word, e.pos + 1, v.plen) = v.piece
-              |    ORDER BY v.plen DESC LIMIT 1) m ON true
-              |  WHERE e.pos < length(e.word)
-              |),
-              |done AS (SELECT doc_id, widx, ids FROM enc WHERE pos = length(word)),
+              |${bpeEncodeCtes("doc_id")},
               |flat AS (SELECT doc_id, flatten(list(ids ORDER BY widx)) AS ids
               |         FROM done GROUP BY doc_id),
               |fl AS (SELECT d.doc_id, coalesce(f.ids, CAST([] AS INTEGER[])) AS ids
@@ -1839,25 +2087,7 @@ object QueriesText {
               .as("fertility_micro"))
       },
       Some(s"""WITH RECURSIVE
-              |vocab(id, piece, plen) AS (VALUES ${Bpe.vocabValuesSql(Bpe.demoVocab)}),
-              |docs AS (SELECT doc_id, source, $normSql AS norm FROM documents),
-              |wn AS (SELECT doc_id, regexp_split_to_array(norm, ' ') AS words FROM docs),
-              |w AS (SELECT doc_id, unnest(words) AS word,
-              |             unnest(range(1, len(words) + 1)) AS widx FROM wn),
-              |enc(doc_id, widx, word, pos, ids) AS (
-              |  SELECT doc_id, widx, word, 0, CAST([] AS INTEGER[]) FROM w
-              |  WHERE length(word) > 0
-              |  UNION ALL
-              |  SELECT e.doc_id, e.widx, e.word, e.pos + coalesce(m.plen, 1),
-              |         list_append(e.ids, coalesce(m.id, 0))
-              |  FROM enc e LEFT JOIN LATERAL (
-              |    SELECT v.id, v.plen FROM vocab v
-              |    WHERE substr(e.word, e.pos + 1, v.plen) = v.piece
-              |    ORDER BY v.plen DESC LIMIT 1) m ON true
-              |  WHERE e.pos < length(e.word)
-              |),
-              |done AS (SELECT doc_id, widx, ids FROM enc
-              |         WHERE pos = length(word)),
+              |${bpeEncodeCtes("doc_id, source")},
               |wagg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
               |           CAST(sum(len(ids)) AS BIGINT) AS n_sub
               |         FROM done GROUP BY 1)
@@ -1896,51 +2126,11 @@ object QueriesText {
               acc => acc.getField("s")).as("id_possum"))
       },
       Some(s"""WITH RECURSIVE
-              |vocab(id, piece, plen) AS (VALUES ${Bpe.vocabValuesSql(Bpe.demoVocab)}),
-              |docs AS (SELECT doc_id, $normSql AS norm FROM documents),
-              |wn AS (SELECT doc_id, regexp_split_to_array(norm, ' ') AS words FROM docs),
-              |w AS (SELECT doc_id, unnest(words) AS word,
-              |             unnest(range(1, len(words) + 1)) AS widx FROM wn),
-              |enc(doc_id, widx, word, pos, ids) AS (
-              |  SELECT doc_id, widx, word, 0, CAST([] AS INTEGER[]) FROM w
-              |  WHERE length(word) > 0
-              |  UNION ALL
-              |  SELECT e.doc_id, e.widx, e.word, e.pos + coalesce(m.plen, 1),
-              |         list_append(e.ids, coalesce(m.id, 0))
-              |  FROM enc e LEFT JOIN LATERAL (
-              |    SELECT v.id, v.plen FROM vocab v
-              |    WHERE substr(e.word, e.pos + 1, v.plen) = v.piece
-              |    ORDER BY v.plen DESC LIMIT 1) m ON true
-              |  WHERE e.pos < length(e.word)
-              |),
-              |done AS (SELECT doc_id, widx, ids FROM enc WHERE pos = length(word)),
+              |${bpeEncodeCtes("doc_id")},
               |fl AS (SELECT doc_id, flatten(list(ids ORDER BY widx)) AS ids
               |       FROM done GROUP BY doc_id),
-              |d AS (
-              |  SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_tokens,
-              |    (CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-              |      % 1000000) % 32 AS bucket
-              |  FROM fl WHERE len(ids) > 0),
-              |c AS (
-              |  SELECT doc_id, bucket, n_tokens,
-              |    CAST(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS local_end
-              |  FROM d),
-              |bo AS (
-              |  SELECT bucket,
-              |    CAST(coalesce(sum(tot) OVER (ORDER BY bucket
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS bucket_off
-              |  FROM (SELECT bucket, sum(n_tokens) AS tot FROM d GROUP BY bucket) t),
-              |p AS (
-              |  SELECT c.doc_id, c.n_tokens,
-              |    bucket_off + local_end - n_tokens AS start_off,
-              |    (bucket_off + local_end - n_tokens) // 512 AS seq_first,
-              |    (bucket_off + local_end - 1) // 512 AS seq_last
-              |  FROM c JOIN bo USING (bucket)),
-              |e AS (
-              |  SELECT doc_id, n_tokens, start_off,
-              |    unnest(generate_series(seq_first, seq_last)) AS seq_id
-              |  FROM p),
+              |${packLayoutCtes("len(ids)", "fl")},
+              |$packSeqCtes,
               |sl AS (
               |  SELECT e.seq_id, e.doc_id,
               |    greatest(start_off, seq_id * 512) - start_off AS tok_from,
@@ -1972,48 +2162,7 @@ object QueriesText {
           Retrieval.queriesFromDocs(docs, "doc_id", "text"),
           k = 5, maxDf = 40L)
       },
-      Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-              |bl AS (SELECT doc_id,
-              |         list_transform(range(1, len(words)),
-              |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-              |         CAST(len(words) - 1 AS BIGINT) AS dl
-              |       FROM w WHERE len(words) >= 2),
-              |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-              |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-              |        max(dl) AS dl
-              |      FROM post GROUP BY 1, 2),
-              |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-              |            CAST(sum(dl) AS BIGINT) AS n_terms FROM bl),
-              |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-              |        FROM p GROUP BY 1 HAVING count(*) <= 40),
-              |ina AS (SELECT term,
-              |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-              |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-              |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-              |        FROM lga a JOIN lgb b USING (term)),
-              |qw AS (SELECT doc_id AS query_id, words FROM w
-              |       WHERE doc_id % 29 = 3),
-              |qt AS (SELECT DISTINCT query_id,
-              |         unnest(list_transform(range(1, least(len(words), 5)),
-              |           i -> words[i] || ' ' || words[i + 1])) AS term
-              |       FROM qw),
-              |cand AS (SELECT qt.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
-              |         FROM p JOIN idf USING (term) JOIN qt USING (term)),
-              |sc AS (SELECT query_id, doc_id,
-              |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-              |             (10 * tf * s.n_terms + 3 * s.n_terms
-              |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-              |           AS score_micro
-              |       FROM cand, stats s GROUP BY 1, 2),
-              |r AS (SELECT query_id, doc_id, score_micro,
-              |        CAST(row_number() OVER (PARTITION BY query_id
-              |             ORDER BY score_micro DESC, doc_id) AS INT) AS rnk
-              |      FROM sc)
-              |SELECT query_id, doc_id, rnk, score_micro
-              |FROM r WHERE rnk <= 5""".stripMargin)),
+      Some(bm25TopKOracle)),
 
     // BM25 + pseudo-relevance feedback (Rocchio blind feedback): the
     // top-3 feedback docs donate their 2 strongest in-vocab new terms
@@ -2029,47 +2178,9 @@ object QueriesText {
           relDfDen = Some(12L))
       },
       Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-              |bl AS (SELECT doc_id,
-              |         list_transform(range(1, len(words)),
-              |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-              |         CAST(len(words) - 1 AS BIGINT) AS dl
-              |       FROM w WHERE len(words) >= 2),
-              |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-              |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-              |        max(dl) AS dl
-              |      FROM post GROUP BY 1, 2),
-              |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-              |            CAST(sum(dl) AS BIGINT) AS n_terms FROM bl),
-              |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-              |        FROM p GROUP BY 1
-              |        HAVING count(*) * 12 <= (SELECT n_docs FROM stats)),
-              |ina AS (SELECT term,
-              |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-              |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-              |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-              |        FROM lga a JOIN lgb b USING (term)),
-              |qw AS (SELECT doc_id AS query_id, words FROM w
-              |       WHERE doc_id % 29 = 3),
-              |qt AS (SELECT DISTINCT query_id,
-              |         unnest(list_transform(range(1, least(len(words), 5)),
-              |           i -> words[i] || ' ' || words[i + 1])) AS term
-              |       FROM qw),
-              |cand1 AS (SELECT qt.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
-              |          FROM p JOIN idf USING (term) JOIN qt USING (term)
-              |          WHERE qt.query_id <> p.doc_id),
-              |sc1 AS (SELECT query_id, doc_id,
-              |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-              |             (10 * tf * s.n_terms + 3 * s.n_terms
-              |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-              |           AS score_micro
-              |        FROM cand1, stats s GROUP BY 1, 2),
-              |r1 AS (SELECT query_id, doc_id,
-              |         row_number() OVER (PARTITION BY query_id
-              |           ORDER BY score_micro DESC, doc_id) AS rnk
-              |       FROM sc1),
+              |${bm25Ctes(29, 3, excludeSelf = true, relDfDen = Some(12L),
+                  round = "1")},
+              |${bm25RankCte("r1", "sc1", withScore = false)},
               |fb AS (SELECT r1.query_id, p.term,
               |         CAST(sum(p.tf) AS BIGINT) AS ft
               |       FROM r1 JOIN p USING (doc_id)
@@ -2085,20 +2196,8 @@ object QueriesText {
               |         FROM fb) t WHERE er <= 2),
               |qt2 AS (SELECT query_id, term FROM qt
               |        UNION SELECT query_id, term FROM ex),
-              |cand2 AS (SELECT q2.query_id, p.doc_id, p.tf, p.dl,
-              |            idf.idf_q16
-              |          FROM p JOIN idf USING (term) JOIN qt2 q2 USING (term)
-              |          WHERE q2.query_id <> p.doc_id),
-              |sc2 AS (SELECT query_id, doc_id,
-              |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-              |             (10 * tf * s.n_terms + 3 * s.n_terms
-              |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-              |           AS score_micro
-              |        FROM cand2, stats s GROUP BY 1, 2),
-              |r2 AS (SELECT query_id, doc_id, score_micro,
-              |         CAST(row_number() OVER (PARTITION BY query_id
-              |           ORDER BY score_micro DESC, doc_id) AS INT) AS rnk
-              |       FROM sc2)
+              |${bm25ScoreCtes("2", "qt2 q2", excludeSelf = true)},
+              |${bm25RankCte("r2", "sc2", withScore = true)}
               |SELECT query_id, doc_id, rnk, score_micro
               |FROM r2 WHERE rnk <= 5""".stripMargin)),
 
@@ -2118,48 +2217,7 @@ object QueriesText {
         Retrieval.searchIndex(s, ix,
           Retrieval.queriesFromDocs(docs, "doc_id", "text"), k = 5)
       },
-      Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-              |bl AS (SELECT doc_id,
-              |         list_transform(range(1, len(words)),
-              |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-              |         CAST(len(words) - 1 AS BIGINT) AS dl
-              |       FROM w WHERE len(words) >= 2),
-              |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-              |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-              |        max(dl) AS dl
-              |      FROM post GROUP BY 1, 2),
-              |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-              |            CAST(sum(dl) AS BIGINT) AS n_terms FROM bl),
-              |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-              |        FROM p GROUP BY 1 HAVING count(*) <= 40),
-              |ina AS (SELECT term,
-              |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-              |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-              |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-              |        FROM lga a JOIN lgb b USING (term)),
-              |qw AS (SELECT doc_id AS query_id, words FROM w
-              |       WHERE doc_id % 29 = 3),
-              |qt AS (SELECT DISTINCT query_id,
-              |         unnest(list_transform(range(1, least(len(words), 5)),
-              |           i -> words[i] || ' ' || words[i + 1])) AS term
-              |       FROM qw),
-              |cand AS (SELECT qt.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
-              |         FROM p JOIN idf USING (term) JOIN qt USING (term)),
-              |sc AS (SELECT query_id, doc_id,
-              |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-              |             (10 * tf * s.n_terms + 3 * s.n_terms
-              |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-              |           AS score_micro
-              |       FROM cand, stats s GROUP BY 1, 2),
-              |r AS (SELECT query_id, doc_id, score_micro,
-              |        CAST(row_number() OVER (PARTITION BY query_id
-              |             ORDER BY score_micro DESC, doc_id) AS INT) AS rnk
-              |      FROM sc)
-              |SELECT query_id, doc_id, rnk, score_micro
-              |FROM r WHERE rnk <= 5""".stripMargin)),
+      Some(bm25TopKOracle)),
 
     // CCNet-style LM perplexity filter: add-one bigram LM trained on
     // the corpus itself, per-doc negative log-likelihood in portable
@@ -2172,11 +2230,7 @@ object QueriesText {
         Q.table(s, dir, "documents"), "doc_id", "text",
         thresholdMilliBits = 4900L),
       Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-              |bg AS (SELECT doc_id, words[i] AS w1, words[i + 1] AS w2
-              |       FROM w, unnest(range(1, len(words))) AS r(i)),
-              |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2
-              |       FROM bg GROUP BY 1, 2),
+              |$lmBigramCtes,
               |c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1
               |       FROM c2 GROUP BY 1),
               |vv AS (SELECT CAST(count(DISTINCT word) AS BIGINT) AS v
@@ -2185,21 +2239,7 @@ object QueriesText {
               |         c1.c1 + (SELECT v FROM vv) AS xa,
               |         c2.c2 + 1 AS xb
               |       FROM c2 JOIN c1 USING (w1)),
-              |ina AS (SELECT w1, w2, xa AS x FROM ja),
-              |${Portable.log2q16Sql("ina", Seq("w1", "w2"), "x", "lga", "lg")},
-              |inb AS (SELECT w1, w2, xb AS x FROM ja),
-              |${Portable.log2q16Sql("inb", Seq("w1", "w2"), "x", "lgb", "lg")},
-              |tab AS (SELECT a.w1, a.w2, a.lg - b.lg AS nll
-              |        FROM lga a JOIN lgb b USING (w1, w2)),
-              |d AS (SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-              |        CAST(sum(t.nll) AS BIGINT) AS nll_q16
-              |      FROM bg JOIN tab t USING (w1, w2) GROUP BY 1)
-              |SELECT dd.doc_id,
-              |  coalesce(d.n_bigrams, 0) AS n_bigrams,
-              |  coalesce(d.nll_q16, 0) AS nll_q16,
-              |  coalesce(d.nll_q16, 0) * 1000
-              |    <= 4900 * coalesce(d.n_bigrams, 0) * 65536 AS keep
-              |FROM documents dd LEFT JOIN d ON dd.doc_id = d.doc_id""".stripMargin)),
+              |$lmScoreSql""".stripMargin)),
 
     // Interpolated Kneser-Ney bigram scoring (Kneser & Ney 1995): with
     // D = 3/4 the smoothed probability is the exact rational
@@ -2211,11 +2251,7 @@ object QueriesText {
         Q.table(s, dir, "documents"), "doc_id", "text",
         thresholdMilliBits = 4900L),
       Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-              |bg AS (SELECT doc_id, words[i] AS w1, words[i + 1] AS w2
-              |       FROM w, unnest(range(1, len(words))) AS r(i)),
-              |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2
-              |       FROM bg GROUP BY 1, 2),
+              |$lmBigramCtes,
               |c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1,
               |         CAST(count(*) AS BIGINT) AS t1
               |       FROM c2 GROUP BY 1),
@@ -2227,21 +2263,7 @@ object QueriesText {
               |         greatest(4 * c2.c2 - 3, 0) * (SELECT tt FROM tts)
               |           + 3 * c1.t1 * tcs.tc AS xb
               |       FROM c2 JOIN c1 USING (w1) JOIN tcs USING (w2)),
-              |ina AS (SELECT w1, w2, xa AS x FROM ja),
-              |${Portable.log2q16Sql("ina", Seq("w1", "w2"), "x", "lga", "lg")},
-              |inb AS (SELECT w1, w2, xb AS x FROM ja),
-              |${Portable.log2q16Sql("inb", Seq("w1", "w2"), "x", "lgb", "lg")},
-              |tab AS (SELECT a.w1, a.w2, a.lg - b.lg AS nll
-              |        FROM lga a JOIN lgb b USING (w1, w2)),
-              |d AS (SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-              |        CAST(sum(t.nll) AS BIGINT) AS nll_q16
-              |      FROM bg JOIN tab t USING (w1, w2) GROUP BY 1)
-              |SELECT dd.doc_id,
-              |  coalesce(d.n_bigrams, 0) AS n_bigrams,
-              |  coalesce(d.nll_q16, 0) AS nll_q16,
-              |  coalesce(d.nll_q16, 0) * 1000
-              |    <= 4900 * coalesce(d.n_bigrams, 0) * 65536 AS keep
-              |FROM documents dd LEFT JOIN d ON dd.doc_id = d.doc_id""".stripMargin)),
+              |$lmScoreSql""".stripMargin)),
 
     // DSIR importance resampling (Xie et al. 2023): hashed unigram+
     // bigram models of a trusted target slice (src0-src3 here) vs the
@@ -2255,32 +2277,7 @@ object QueriesText {
         isTarget = col("source").isin("src0", "src1", "src2", "src3"),
         buckets = 4096, keepNum = 1L, keepDen = 4L),
       Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words,
-              |        source IN ('src0', 'src1', 'src2', 'src3') AS is_t
-              |      FROM documents),
-              |fe AS (SELECT doc_id, is_t,
-              |         ${baseHashSql("'dsir' || g")} % 4096 AS fb
-              |       FROM (SELECT doc_id, is_t,
-              |               unnest(list_concat(words,
-              |                 list_transform(range(1, len(words)),
-              |                   i -> words[i] || ' ' || words[i + 1]))) AS g
-              |             FROM w)),
-              |cnt AS (SELECT fb,
-              |          CAST(sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-              |          CAST(sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS BIGINT) AS cr
-              |        FROM fe GROUP BY 1),
-              |tot AS (SELECT CAST(sum(ct) AS BIGINT) + 4096 AS xt,
-              |          CAST(sum(cr) AS BIGINT) + 4096 AS xr FROM cnt),
-              |ina AS (SELECT fb, ct + 1 AS x FROM cnt),
-              |${Portable.log2q16Sql("ina", Seq("fb"), "x", "lga", "lg")},
-              |inb AS (SELECT fb, cr + 1 AS x FROM cnt),
-              |${Portable.log2q16Sql("inb", Seq("fb"), "x", "lgb", "lg")},
-              |int1 AS (SELECT 1 AS k, xt AS x FROM tot),
-              |${Portable.log2q16Sql("int1", Seq("k"), "x", "lgt", "lg")},
-              |inr1 AS (SELECT 1 AS k, xr AS x FROM tot),
-              |${Portable.log2q16Sql("inr1", Seq("k"), "x", "lgr", "lg")},
-              |lam AS (SELECT a.fb, a.lg - b.lg AS lam
-              |        FROM lga a JOIN lgb b USING (fb)),
+              |$dsirModelCtes,
               |d AS (SELECT fe.doc_id, CAST(count(*) AS BIGINT) AS n_feats,
               |        CAST(sum(lam) AS BIGINT) AS s
               |      FROM fe JOIN lam USING (fb) GROUP BY 1),
@@ -2290,16 +2287,7 @@ object QueriesText {
               |           * ((SELECT lg FROM lgr) - (SELECT lg FROM lgt))
               |           AS BIGINT) AS logratio_q16
               |       FROM w LEFT JOIN d USING (doc_id)),
-              |raw AS (SELECT doc_id,
-              |          greatest(least(logratio_q16 >> 6, 1048576),
-              |                   -1048576) AS m
-              |        FROM sc WHERE NOT is_t),
-              |nb AS (SELECT (CAST(count(*) AS BIGINT) * 1 + 4 - 1) // 4
-              |          AS budget FROM raw),
-              |rk AS (SELECT doc_id,
-              |         CAST(row_number() OVER (ORDER BY m DESC, doc_id)
-              |           AS BIGINT) AS r
-              |       FROM raw)
+              |${dsirRankCtes("sc")}
               |SELECT sc.doc_id, sc.is_t AS is_target, sc.n_feats,
               |  sc.logratio_q16,
               |  CASE WHEN sc.is_t THEN FALSE
@@ -2456,32 +2444,7 @@ object QueriesText {
           seqLen = 512, nBuckets = 32, salt = "pack")
       },
       Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words,
-              |        source IN ('src0', 'src1', 'src2', 'src3') AS is_t
-              |      FROM documents),
-              |fe AS (SELECT doc_id, is_t,
-              |         ${baseHashSql("'dsir' || g")} % 4096 AS fb
-              |       FROM (SELECT doc_id, is_t,
-              |               unnest(list_concat(words,
-              |                 list_transform(range(1, len(words)),
-              |                   i -> words[i] || ' ' || words[i + 1]))) AS g
-              |             FROM w)),
-              |cnt AS (SELECT fb,
-              |          CAST(sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-              |          CAST(sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS BIGINT) AS cr
-              |        FROM fe GROUP BY 1),
-              |tot AS (SELECT CAST(sum(ct) AS BIGINT) + 4096 AS xt,
-              |          CAST(sum(cr) AS BIGINT) + 4096 AS xr FROM cnt),
-              |ina AS (SELECT fb, ct + 1 AS x FROM cnt),
-              |${Portable.log2q16Sql("ina", Seq("fb"), "x", "lga", "lg")},
-              |inb AS (SELECT fb, cr + 1 AS x FROM cnt),
-              |${Portable.log2q16Sql("inb", Seq("fb"), "x", "lgb", "lg")},
-              |int1 AS (SELECT 1 AS k, xt AS x FROM tot),
-              |${Portable.log2q16Sql("int1", Seq("k"), "x", "lgt", "lg")},
-              |inr1 AS (SELECT 1 AS k, xr AS x FROM tot),
-              |${Portable.log2q16Sql("inr1", Seq("k"), "x", "lgr", "lg")},
-              |lam AS (SELECT a.fb, a.lg - b.lg AS lam
-              |        FROM lga a JOIN lgb b USING (fb)),
+              |$dsirModelCtes,
               |sd AS (SELECT fe.doc_id, CAST(count(*) AS BIGINT) AS n_feats,
               |         CAST(sum(lam) AS BIGINT) AS s
               |       FROM fe JOIN lam USING (fb) GROUP BY 1),
@@ -2490,16 +2453,7 @@ object QueriesText {
               |           * ((SELECT lg FROM lgr) - (SELECT lg FROM lgt))
               |           AS BIGINT) AS logratio_q16
               |        FROM w LEFT JOIN sd USING (doc_id)),
-              |raw AS (SELECT doc_id,
-              |          greatest(least(logratio_q16 >> 6, 1048576),
-              |                   -1048576) AS m
-              |        FROM sc2 WHERE NOT is_t),
-              |nb AS (SELECT (CAST(count(*) AS BIGINT) * 1 + 4 - 1) // 4
-              |          AS budget FROM raw),
-              |rk AS (SELECT doc_id,
-              |         CAST(row_number() OVER (ORDER BY m DESC, doc_id)
-              |           AS BIGINT) AS r
-              |       FROM raw),
+              |${dsirRankCtes("sc2")},
               |kept AS (SELECT d0.doc_id, d0.text FROM documents d0
               |         JOIN rk ON rk.doc_id = d0.doc_id
               |         WHERE rk.r <= (SELECT budget FROM nb)),
@@ -2589,77 +2543,10 @@ object QueriesText {
         Retrieval.rrfFuse(lex, dense, kRrf = 60L, k = 10)
       },
       Some {
-        val dqq = QueriesEmb.dotSql("q.e", "q.e")
-        val dcc = QueriesEmb.dotSql("c.e", "c.e")
-        val dqc = QueriesEmb.dotSql("q.e", "c.e")
         s"""WITH RECURSIVE
-           |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-           |bl AS (SELECT doc_id,
-           |         list_transform(range(1, len(words)),
-           |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-           |         CAST(len(words) - 1 AS BIGINT) AS dl
-           |       FROM w WHERE len(words) >= 2),
-           |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-           |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-           |        max(dl) AS dl
-           |      FROM post GROUP BY 1, 2),
-           |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |            CAST(sum(dl) AS BIGINT) AS n_terms FROM bl),
-           |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-           |        FROM p GROUP BY 1 HAVING count(*) <= 40),
-           |ina AS (SELECT term,
-           |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-           |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-           |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-           |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-           |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-           |        FROM lga a JOIN lgb b USING (term)),
-           |qw AS (SELECT doc_id AS query_id, words FROM w
-           |       WHERE doc_id % 50 = 0),
-           |qt AS (SELECT DISTINCT query_id,
-           |         unnest(list_transform(range(1, least(len(words), 5)),
-           |           i -> words[i] || ' ' || words[i + 1])) AS term
-           |       FROM qw),
-           |cand AS (SELECT qt.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
-           |         FROM p JOIN idf USING (term) JOIN qt USING (term)
-           |         WHERE qt.query_id <> p.doc_id),
-           |sc AS (SELECT query_id, doc_id,
-           |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-           |             (10 * tf * s.n_terms + 3 * s.n_terms
-           |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-           |           AS score_micro
-           |       FROM cand, stats s GROUP BY 1, 2),
-           |lr AS (SELECT query_id, doc_id,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY score_micro DESC, doc_id) AS rnk
-           |       FROM sc),
-           |lex AS (SELECT query_id, doc_id, 1000000 // (60 + rnk) AS r
-           |        FROM lr WHERE rnk <= 20),
-           |q AS (SELECT vec_id AS query_id, embedding AS e FROM embeddings
-           |      WHERE vec_id % 50 = 0),
-           |c AS (SELECT vec_id AS doc_id, embedding AS e FROM embeddings),
-           |s2 AS (SELECT query_id, doc_id,
-           |         $dqc / (sqrt($dqq) * sqrt($dcc)) AS sim
-           |       FROM c, q WHERE query_id <> doc_id),
-           |dr AS (SELECT query_id, doc_id,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY sim DESC, doc_id) AS rnk
-           |       FROM s2),
-           |den AS (SELECT query_id, doc_id, 1000000 // (60 + rnk) AS r
-           |        FROM dr WHERE rnk <= 20),
-           |fused AS (SELECT coalesce(lex.query_id, den.query_id) AS query_id,
-           |            coalesce(lex.doc_id, den.doc_id) AS doc_id,
-           |            CAST(coalesce(lex.r, 0) + coalesce(den.r, 0) AS BIGINT)
-           |              AS rrf_micro
-           |          FROM lex FULL OUTER JOIN den
-           |            ON lex.query_id = den.query_id
-           |           AND lex.doc_id = den.doc_id)
-           |SELECT query_id, doc_id, rrf_micro, rnk FROM (
-           |  SELECT query_id, doc_id, rrf_micro,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY rrf_micro DESC, doc_id) AS INT) AS rnk
-           |  FROM fused) t
-           |WHERE rnk <= 10""".stripMargin
+           |$hybridLexCtes,
+           |${denseRankCtes("rnk")},
+           |$rrfTail""".stripMargin
       }),
 
     // hybrid search, PRODUCTION-SERVING form: both legs ride persisted
@@ -2700,68 +2587,13 @@ object QueriesText {
       },
       Some {
         s"""WITH RECURSIVE
-           |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-           |bl AS (SELECT doc_id,
-           |         list_transform(range(1, len(words)),
-           |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-           |         CAST(len(words) - 1 AS BIGINT) AS dl
-           |       FROM w WHERE len(words) >= 2),
-           |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-           |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-           |        max(dl) AS dl
-           |      FROM post GROUP BY 1, 2),
-           |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |            CAST(sum(dl) AS BIGINT) AS n_terms FROM bl),
-           |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-           |        FROM p GROUP BY 1 HAVING count(*) <= 40),
-           |ina AS (SELECT term,
-           |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-           |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-           |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-           |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-           |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-           |        FROM lga a JOIN lgb b USING (term)),
-           |qw AS (SELECT doc_id AS query_id, words FROM w
-           |       WHERE doc_id % 50 = 0),
-           |qt AS (SELECT DISTINCT query_id,
-           |         unnest(list_transform(range(1, least(len(words), 5)),
-           |           i -> words[i] || ' ' || words[i + 1])) AS term
-           |       FROM qw),
-           |cand AS (SELECT qt.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
-           |         FROM p JOIN idf USING (term) JOIN qt USING (term)
-           |         WHERE qt.query_id <> p.doc_id),
-           |sc AS (SELECT query_id, doc_id,
-           |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-           |             (10 * tf * s.n_terms + 3 * s.n_terms
-           |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-           |           AS score_micro
-           |       FROM cand, stats s GROUP BY 1, 2),
-           |lr AS (SELECT query_id, doc_id,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY score_micro DESC, doc_id) AS rnk
-           |       FROM sc),
-           |lex AS (SELECT query_id, doc_id, 1000000 // (60 + rnk) AS r
-           |        FROM lr WHERE rnk <= 20),
+           |$hybridLexCtes,
            |${QueriesEmb.ivfPqScoreBodyAuto},
            |dr AS (SELECT query_id, match_id AS doc_id,
            |         row_number() OVER (PARTITION BY query_id
            |           ORDER BY sim_ivfpq DESC, match_id ASC) AS rnk
            |       FROM s),
-           |den AS (SELECT query_id, doc_id, 1000000 // (60 + rnk) AS r
-           |        FROM dr WHERE rnk <= 20),
-           |fused AS (SELECT coalesce(lex.query_id, den.query_id) AS query_id,
-           |            coalesce(lex.doc_id, den.doc_id) AS doc_id,
-           |            CAST(coalesce(lex.r, 0) + coalesce(den.r, 0) AS BIGINT)
-           |              AS rrf_micro
-           |          FROM lex FULL OUTER JOIN den
-           |            ON lex.query_id = den.query_id
-           |           AND lex.doc_id = den.doc_id)
-           |SELECT query_id, doc_id, rrf_micro, rnk FROM (
-           |  SELECT query_id, doc_id, rrf_micro,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY rrf_micro DESC, doc_id) AS INT) AS rnk
-           |  FROM fused) t
-           |WHERE rnk <= 10""".stripMargin
+           |$rrfTail""".stripMargin
       }),
 
     // hard-negative mining: training-triple construction for retriever
@@ -2778,104 +2610,11 @@ object QueriesText {
         Q.table(s, dir, "embeddings"), "vec_id", "embedding",
         every = 50L, kHard = 5, kRand = 3, poolMod = 10L, maxDf = 40L),
       Some {
-        val dqq = QueriesEmb.dotSql("q.e", "q.e")
-        val dcc = QueriesEmb.dotSql("c.e", "c.e")
-        val dqc = QueriesEmb.dotSql("q.e", "c.e")
         s"""WITH RECURSIVE
-           |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-           |bl AS (SELECT doc_id,
-           |         list_transform(range(1, len(words)),
-           |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-           |         CAST(len(words) - 1 AS BIGINT) AS dl
-           |       FROM w WHERE len(words) >= 2),
-           |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-           |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-           |        max(dl) AS dl
-           |      FROM post GROUP BY 1, 2),
-           |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |            CAST(sum(dl) AS BIGINT) AS n_terms FROM bl),
-           |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-           |        FROM p GROUP BY 1 HAVING count(*) <= 40),
-           |ina AS (SELECT term,
-           |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-           |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-           |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-           |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-           |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-           |        FROM lga a JOIN lgb b USING (term)),
-           |qw AS (SELECT doc_id AS query_id, words FROM w
-           |       WHERE doc_id % 50 = 0),
-           |qt AS (SELECT DISTINCT query_id,
-           |         unnest(list_transform(range(1, least(len(words), 5)),
-           |           i -> words[i] || ' ' || words[i + 1])) AS term
-           |       FROM qw),
-           |cand AS (SELECT qt.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
-           |         FROM p JOIN idf USING (term) JOIN qt USING (term)
-           |         WHERE qt.query_id <> p.doc_id),
-           |sc AS (SELECT query_id, doc_id,
-           |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-           |             (10 * tf * s.n_terms + 3 * s.n_terms
-           |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-           |           AS score_micro
-           |       FROM cand, stats s GROUP BY 1, 2),
-           |lr AS (SELECT query_id, doc_id,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY score_micro DESC, doc_id) AS rnk
-           |       FROM sc),
-           |bmr AS (SELECT query_id, doc_id, rnk FROM lr WHERE rnk <= 5),
-           |q AS (SELECT vec_id AS query_id, embedding AS e FROM embeddings
-           |      WHERE vec_id % 50 = 0),
-           |c AS (SELECT vec_id AS doc_id, embedding AS e FROM embeddings),
-           |s2 AS (SELECT query_id, doc_id,
-           |         $dqc / (sqrt($dqq) * sqrt($dcc)) AS sim
-           |       FROM c, q WHERE query_id <> doc_id),
-           |dr AS (SELECT query_id, doc_id,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY sim DESC, doc_id) AS r
-           |       FROM s2),
+           |$miningLexCtes,
+           |${denseRankCtes("r")},
            |posr AS (SELECT query_id, doc_id FROM dr WHERE r = 1),
-           |hardr AS (SELECT * FROM (
-           |    SELECT b.query_id, b.doc_id,
-           |      CAST(row_number() OVER (PARTITION BY b.query_id
-           |        ORDER BY b.rnk) AS INT) AS rnk
-           |    FROM bmr b JOIN posr p2 ON b.query_id = p2.query_id
-           |    WHERE b.doc_id <> p2.doc_id) t),
-           |pool AS (SELECT doc_id FROM documents
-           |         WHERE CAST(('0x' || substr(md5('pool'
-           |           || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 = 0),
-           |pix AS MATERIALIZED (SELECT doc_id,
-           |         row_number() OVER (ORDER BY doc_id) - 1 AS pidx
-           |       FROM pool),
-           |pc AS (SELECT CAST(count(*) AS BIGINT) AS p FROM pool),
-           |qids AS (SELECT doc_id AS query_id FROM documents
-           |         WHERE doc_id % 50 = 0),
-           |taken AS (SELECT query_id, doc_id FROM posr
-           |          UNION ALL SELECT query_id, doc_id FROM hardr),
-           |draws AS (SELECT query_id,
-           |            CAST(('0x' || substr(md5('rsel'
-           |              || CAST(query_id AS VARCHAR) || ':'
-           |              || CAST(j AS VARCHAR)), 1, 8)) AS BIGINT) % p AS widx
-           |          FROM qids, range(0, 8) t(j), pc),
-           |randc AS (SELECT DISTINCT draws.query_id, pix.doc_id
-           |          FROM draws JOIN pix ON pix.pidx = draws.widx
-           |          WHERE pix.doc_id <> draws.query_id
-           |            AND NOT EXISTS (SELECT 1 FROM taken t
-           |              WHERE t.query_id = draws.query_id
-           |                AND t.doc_id = pix.doc_id)),
-           |randr AS (SELECT * FROM (
-           |    SELECT query_id, doc_id,
-           |      CAST(row_number() OVER (PARTITION BY query_id
-           |        ORDER BY CAST(('0x' || substr(md5('rng'
-           |          || CAST(query_id AS VARCHAR) || ':'
-           |          || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT), doc_id)
-           |        AS INT) AS rnk
-           |    FROM randc) t WHERE rnk <= 3)
-           |SELECT query_id, doc_id, 'pos' AS role, CAST(1 AS INT) AS rnk
-           |FROM posr
-           |UNION ALL
-           |SELECT query_id, doc_id, 'hard_neg' AS role, rnk FROM hardr
-           |UNION ALL
-           |SELECT query_id, doc_id, 'rand_neg' AS role, rnk FROM randr""".stripMargin
+           |${miningTail(materializedHard = false)}""".stripMargin
       }),
 
     // hard-negative mining, PRODUCTION-SERVING form: the positive comes
@@ -2904,95 +2643,14 @@ object QueriesText {
       },
       Some {
         s"""WITH RECURSIVE
-           |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-           |bl AS (SELECT doc_id,
-           |         list_transform(range(1, len(words)),
-           |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-           |         CAST(len(words) - 1 AS BIGINT) AS dl
-           |       FROM w WHERE len(words) >= 2),
-           |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-           |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-           |        max(dl) AS dl
-           |      FROM post GROUP BY 1, 2),
-           |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |            CAST(sum(dl) AS BIGINT) AS n_terms FROM bl),
-           |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-           |        FROM p GROUP BY 1 HAVING count(*) <= 40),
-           |ina AS (SELECT term,
-           |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-           |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-           |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-           |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-           |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-           |        FROM lga a JOIN lgb b USING (term)),
-           |qw AS (SELECT doc_id AS query_id, words FROM w
-           |       WHERE doc_id % 50 = 0),
-           |qt AS (SELECT DISTINCT query_id,
-           |         unnest(list_transform(range(1, least(len(words), 5)),
-           |           i -> words[i] || ' ' || words[i + 1])) AS term
-           |       FROM qw),
-           |cand AS (SELECT qt.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
-           |         FROM p JOIN idf USING (term) JOIN qt USING (term)
-           |         WHERE qt.query_id <> p.doc_id),
-           |sc AS (SELECT query_id, doc_id,
-           |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-           |             (10 * tf * s.n_terms + 3 * s.n_terms
-           |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-           |           AS score_micro
-           |       FROM cand, stats s GROUP BY 1, 2),
-           |lr AS (SELECT query_id, doc_id,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY score_micro DESC, doc_id) AS rnk
-           |       FROM sc),
-           |bmr AS (SELECT query_id, doc_id, rnk FROM lr WHERE rnk <= 5),
+           |$miningLexCtes,
            |${QueriesEmb.ivfPqScoreBodyAuto},
            |posr AS MATERIALIZED (SELECT query_id, match_id AS doc_id FROM (
            |    SELECT query_id, match_id,
            |      row_number() OVER (PARTITION BY query_id
            |        ORDER BY sim_ivfpq DESC, match_id ASC) AS r
            |    FROM s) t WHERE r = 1),
-           |hardr AS MATERIALIZED (SELECT * FROM (
-           |    SELECT b.query_id, b.doc_id,
-           |      CAST(row_number() OVER (PARTITION BY b.query_id
-           |        ORDER BY b.rnk) AS INT) AS rnk
-           |    FROM bmr b JOIN posr p2 ON b.query_id = p2.query_id
-           |    WHERE b.doc_id <> p2.doc_id) t),
-           |pool AS (SELECT doc_id FROM documents
-           |         WHERE CAST(('0x' || substr(md5('pool'
-           |           || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 = 0),
-           |pix AS MATERIALIZED (SELECT doc_id,
-           |         row_number() OVER (ORDER BY doc_id) - 1 AS pidx
-           |       FROM pool),
-           |pc AS (SELECT CAST(count(*) AS BIGINT) AS p FROM pool),
-           |qids AS (SELECT doc_id AS query_id FROM documents
-           |         WHERE doc_id % 50 = 0),
-           |taken AS (SELECT query_id, doc_id FROM posr
-           |          UNION ALL SELECT query_id, doc_id FROM hardr),
-           |draws AS (SELECT query_id,
-           |            CAST(('0x' || substr(md5('rsel'
-           |              || CAST(query_id AS VARCHAR) || ':'
-           |              || CAST(j AS VARCHAR)), 1, 8)) AS BIGINT) % p AS widx
-           |          FROM qids, range(0, 8) t(j), pc),
-           |randc AS (SELECT DISTINCT draws.query_id, pix.doc_id
-           |          FROM draws JOIN pix ON pix.pidx = draws.widx
-           |          WHERE pix.doc_id <> draws.query_id
-           |            AND NOT EXISTS (SELECT 1 FROM taken t
-           |              WHERE t.query_id = draws.query_id
-           |                AND t.doc_id = pix.doc_id)),
-           |randr AS (SELECT * FROM (
-           |    SELECT query_id, doc_id,
-           |      CAST(row_number() OVER (PARTITION BY query_id
-           |        ORDER BY CAST(('0x' || substr(md5('rng'
-           |          || CAST(query_id AS VARCHAR) || ':'
-           |          || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT), doc_id)
-           |        AS INT) AS rnk
-           |    FROM randc) t WHERE rnk <= 3)
-           |SELECT query_id, doc_id, 'pos' AS role, CAST(1 AS INT) AS rnk
-           |FROM posr
-           |UNION ALL
-           |SELECT query_id, doc_id, 'hard_neg' AS role, rnk FROM hardr
-           |UNION ALL
-           |SELECT query_id, doc_id, 'rand_neg' AS role, rnk FROM randr""".stripMargin
+           |${miningTail(materializedHard = true)}""".stripMargin
       }),
 
     // hashed tf-idf document vectors: the sparse->dense bridge from
@@ -3017,25 +2675,7 @@ object QueriesText {
               (acc.getField("i") + 1L).as("i")),
             acc => acc.getField("s")).as("v_possum")),
       Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-              |bl AS (SELECT doc_id,
-              |         list_transform(range(1, len(words)),
-              |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-              |         CAST(len(words) - 1 AS BIGINT) AS dl
-              |       FROM w WHERE len(words) >= 2),
-              |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-              |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-              |      FROM post GROUP BY 1, 2),
-              |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM bl),
-              |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-              |        FROM p GROUP BY 1 HAVING count(*) <= 40),
-              |ina AS (SELECT term,
-              |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-              |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-              |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-              |        FROM lga a JOIN lgb b USING (term)),
+              |${bm25IndexCtes(lengths = false)},
               |wt AS (SELECT p.doc_id,
               |         ${baseHashSql("term")} % 64 AS dim,
               |         p.tf * idf.idf_q16 AS wv
@@ -3185,21 +2825,7 @@ object QueriesText {
           col("logit_micro"), col("teacher"), nBins = 10)
       },
       Some {
-        val enHits = stopwordHitsSql("en")
-        s"""WITH sc AS (
-           |  SELECT doc_id,
-           |    -62000000 + 500000 * CAST(len($rawTokensSql) AS BIGINT)
-           |      + 50000 * CAST(length(text) AS BIGINT)
-           |      + 30000 * CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)
-           |      + 200000 * CAST($enHits AS BIGINT)
-           |      + 2000 * (CAST(length(text) AS BIGINT) * 1000
-           |                // greatest(CAST(len($rawTokensSql) AS BIGINT), 1))
-           |      AS s,
-           |    CASE WHEN CAST(len($rawTokensSql) AS BIGINT) BETWEEN 20 AND 70
-           |          AND CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)
-           |              * 1024 // greatest(CAST(length(text) AS BIGINT), 1) >= 700
-           |      THEN 1 ELSE 0 END AS y
-           |  FROM documents),
+        s"""WITH $qualityScoredCte,
            |g AS (SELECT s, CAST(sum(y) AS BIGINT) AS pos,
            |        CAST(count(*) AS BIGINT) AS n
            |      FROM sc GROUP BY 1),
@@ -3238,50 +2864,7 @@ object QueriesText {
         graft.functions.Eval.ndcgAtK(labeled, nrt, k = 5)
       },
       Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-              |bl AS (SELECT doc_id,
-              |         list_transform(range(1, len(words)),
-              |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-              |         CAST(len(words) - 1 AS BIGINT) AS dl
-              |       FROM w WHERE len(words) >= 2),
-              |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-              |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-              |        max(dl) AS dl
-              |      FROM post GROUP BY 1, 2),
-              |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-              |            CAST(sum(dl) AS BIGINT) AS n_terms FROM bl),
-              |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-              |        FROM p GROUP BY 1 HAVING count(*) <= 40),
-              |ina AS (SELECT term,
-              |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-              |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-              |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-              |        FROM lga a JOIN lgb b USING (term)),
-              |qw AS (SELECT doc_id AS query_id, words FROM w
-              |       WHERE doc_id % 29 = 3),
-              |qt AS (SELECT DISTINCT query_id,
-              |         unnest(list_transform(range(1, least(len(words), 5)),
-              |           i -> words[i] || ' ' || words[i + 1])) AS term
-              |       FROM qw),
-              |cand AS (SELECT qt.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
-              |         FROM p JOIN idf USING (term) JOIN qt USING (term)
-              |         WHERE qt.query_id <> p.doc_id),
-              |sc AS (SELECT query_id, doc_id,
-              |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-              |             (10 * tf * s.n_terms + 3 * s.n_terms
-              |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-              |           AS score_micro
-              |       FROM cand, stats s GROUP BY 1, 2),
-              |r AS (SELECT query_id, doc_id,
-              |        row_number() OVER (PARTITION BY query_id
-              |             ORDER BY score_micro DESC, doc_id) AS rnk
-              |      FROM sc),
-              |res AS (SELECT query_id, doc_id, rnk FROM r WHERE rnk <= 5),
-              |qs AS (SELECT doc_id AS query_id, source AS qsrc
-              |       FROM documents WHERE doc_id % 29 = 3),
-              |ds AS (SELECT doc_id, source FROM documents),
+              |$evalLabelCtes,
               |lab AS (SELECT res.query_id, res.doc_id, res.rnk,
               |          CASE WHEN ds.source = qs.qsrc THEN 1 ELSE 0 END AS rel
               |        FROM res JOIN qs USING (query_id) JOIN ds USING (doc_id)),
@@ -3332,20 +2915,11 @@ object QueriesText {
           col("logit_micro") >= 0L, col("teacher"))
       },
       Some {
-        val enHits = stopwordHitsSql("en")
         s"""WITH sc AS (
            |  SELECT doc_id,
-           |    CASE WHEN -62000000 + 500000 * CAST(len($rawTokensSql) AS BIGINT)
-           |      + 50000 * CAST(length(text) AS BIGINT)
-           |      + 30000 * CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)
-           |      + 200000 * CAST($enHits AS BIGINT)
-           |      + 2000 * (CAST(length(text) AS BIGINT) * 1000
-           |                // greatest(CAST(len($rawTokensSql) AS BIGINT), 1))
+           |    CASE WHEN $qualityLogitSql
            |      >= 0 THEN 1 ELSE 0 END AS a,
-           |    CASE WHEN CAST(len($rawTokensSql) AS BIGINT) BETWEEN 20 AND 70
-           |          AND CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)
-           |              * 1024 // greatest(CAST(length(text) AS BIGINT), 1) >= 700
-           |      THEN 1 ELSE 0 END AS b
+           |    $qualityTeacherSql AS b
            |  FROM documents),
            |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
            |        CAST(sum(CASE WHEN a = 0 AND b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n00,
@@ -3385,50 +2959,7 @@ object QueriesText {
         graft.functions.Eval.reciprocalRank(labeled)
       },
       Some(s"""WITH RECURSIVE
-              |w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-              |bl AS (SELECT doc_id,
-              |         list_transform(range(1, len(words)),
-              |           i -> words[i] || ' ' || words[i + 1]) AS terms,
-              |         CAST(len(words) - 1 AS BIGINT) AS dl
-              |       FROM w WHERE len(words) >= 2),
-              |post AS (SELECT doc_id, dl, unnest(terms) AS term FROM bl),
-              |p AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-              |        max(dl) AS dl
-              |      FROM post GROUP BY 1, 2),
-              |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-              |            CAST(sum(dl) AS BIGINT) AS n_terms FROM bl),
-              |dfv AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-              |        FROM p GROUP BY 1 HAVING count(*) <= 40),
-              |ina AS (SELECT term,
-              |          2 * ((SELECT n_docs FROM stats) - df) + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("ina", Seq("term"), "x", "lga", "lg")},
-              |inb AS (SELECT term, 2 * df + 1 AS x FROM dfv),
-              |${Portable.log2q16Sql("inb", Seq("term"), "x", "lgb", "lg")},
-              |idf AS (SELECT a.term, greatest(a.lg - b.lg, 0) AS idf_q16
-              |        FROM lga a JOIN lgb b USING (term)),
-              |qw AS (SELECT doc_id AS query_id, words FROM w
-              |       WHERE doc_id % 29 = 3),
-              |qt AS (SELECT DISTINCT query_id,
-              |         unnest(list_transform(range(1, least(len(words), 5)),
-              |           i -> words[i] || ' ' || words[i + 1])) AS term
-              |       FROM qw),
-              |cand AS (SELECT qt.query_id, p.doc_id, p.tf, p.dl, idf.idf_q16
-              |         FROM p JOIN idf USING (term) JOIN qt USING (term)
-              |         WHERE qt.query_id <> p.doc_id),
-              |sc AS (SELECT query_id, doc_id,
-              |         CAST(sum((idf_q16 * ((22000000 * tf * s.n_terms) //
-              |             (10 * tf * s.n_terms + 3 * s.n_terms
-              |              + 9 * dl * s.n_docs))) // 65536) AS BIGINT)
-              |           AS score_micro
-              |       FROM cand, stats s GROUP BY 1, 2),
-              |r AS (SELECT query_id, doc_id,
-              |        row_number() OVER (PARTITION BY query_id
-              |             ORDER BY score_micro DESC, doc_id) AS rnk
-              |      FROM sc),
-              |res AS (SELECT query_id, doc_id, rnk FROM r WHERE rnk <= 5),
-              |qs AS (SELECT doc_id AS query_id, source AS qsrc
-              |       FROM documents WHERE doc_id % 29 = 3),
-              |ds AS (SELECT doc_id, source FROM documents),
+              |$evalLabelCtes,
               |lab AS (SELECT res.query_id, res.rnk,
               |          CASE WHEN ds.source = qs.qsrc THEN 1 ELSE 0 END AS rel
               |        FROM res JOIN qs USING (query_id) JOIN ds USING (doc_id)),
@@ -3463,44 +2994,7 @@ object QueriesText {
         passageLen = 8, budgetTokens = 20000L, seqLen = 512,
         nBuckets = 32, seqsPerShard = 8L, tableBuckets = 8),
       Some {
-        val enHits = stopwordHitsSql("en")
-        val (e, p, i) = (TextAnalysis.PiiEmailRe, TextAnalysis.PiiPhoneRe,
-          TextAnalysis.PiiIpRe)
-        s"""WITH dd0 AS (
-           |  SELECT doc_id,
-           |    doc_id = min(doc_id) OVER (PARTITION BY md5($normSql)) AS dedup_ok
-           |  FROM documents),
-           |g AS (
-           |  SELECT doc_id,
-           |    len($rawTokensSql) >= 20 AND len($rawTokensSql) <= 90 AS r_len_ok,
-           |    CAST(length(text) AS DOUBLE)
-           |      / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) >= 3.0
-           |    AND CAST(length(text) AS DOUBLE)
-           |      / greatest(CAST(len($rawTokensSql) AS DOUBLE), 1.0) <= 10.0 AS r_mwl_ok,
-           |    $enHits >= 2 AS r_sw_ok,
-           |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-           |      / greatest(CAST(length(text) AS DOUBLE), 1.0) >= 0.5 AS r_alpha_ok,
-           |    NOT (contains(text, '{') OR contains(text, '}'))
-           |      AND NOT contains(lower(text), 'lorem ipsum')
-           |      AND NOT contains(lower(text), 'javascript')
-           |      AND len($rawTokensSql) >= 5
-           |      AND len($rawTokensSql) <= 100000 AS c4_ok
-           |  FROM documents),
-           |q AS (
-           |  SELECT doc_id,
-           |    CAST(CAST($qualitySql AS DECIMAL(25,6)) * 1000000 AS BIGINT)
-           |      AS quality_micro
-           |  FROM documents),
-           |p1 AS (SELECT doc_id, text,
-           |    regexp_replace(text, '$e', '<EMAIL>', 'g') AS t1 FROM documents),
-           |p2 AS (SELECT doc_id, text, t1,
-           |    regexp_replace(t1, '$p', '<PHONE>', 'g') AS t2 FROM p1),
-           |pp AS (
-           |  SELECT doc_id,
-           |    CAST(len(regexp_extract_all(text, '$e'))
-           |       + len(regexp_extract_all(t1, '$p'))
-           |       + len(regexp_extract_all(t2, '$i')) AS BIGINT) AS n_pii
-           |  FROM p2),
+        s"""WITH ${curationGateCtes("dd0", c4 = true)},
            |kept0 AS MATERIALIZED (
            |  SELECT doc_id, source, text FROM documents
            |  JOIN dd0 USING (doc_id) JOIN g USING (doc_id)
@@ -3517,16 +3011,7 @@ object QueriesText {
            |        AS shingle
            |    FROM kw) t),
            |${minhashBandsCteGen(materializedSig = true)},
-           |cand AS (
-           |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-           |  FROM bands x JOIN bands y
-           |    ON x.band_idx = y.band_idx AND x.band_key = y.band_key
-           |      AND x.id < y.id),
-           |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-           |co AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS co
-           |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
+           |$minhashCandCtes,
            |dups AS (
            |  SELECT DISTINCT c.id_b AS doc_id FROM cand c
            |  JOIN co ON co.id_a = c.id_a AND co.id_b = c.id_b

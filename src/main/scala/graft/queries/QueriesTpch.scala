@@ -37,6 +37,87 @@ object QueriesTpch {
   private def microSql(e: String): String =
     s"CAST(CAST($e AS DECIMAL(25,6)) * 1000000 AS BIGINT)"
 
+  /** The distinct customer → supplier trade pairs (suppliers keyed
+    * negative) as the CTE `name` — mirrors PageRank.tradeGraphPairs.
+    */
+  private def tradePairsCte(name: String, materialized: Boolean): String =
+    s"""$name AS${if (materialized) " MATERIALIZED" else ""} (
+       |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS src,
+       |                  CAST(-l_suppkey AS BIGINT) AS dst
+       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey)""".stripMargin
+
+  /** The trade `pairs` and their symmetrized edge list `e` — mirrors
+    * PageRank.tradeGraphEdges.
+    */
+  private val tradeEdgesCtes: String =
+    s"""${tradePairsCte("pairs", materialized = false)},
+       |e AS MATERIALIZED (SELECT src, dst FROM pairs
+       |       UNION ALL SELECT dst, src FROM pairs)""".stripMargin
+
+  /** The PageRank input: symmetrized trade edges with their source's
+    * out-degree, `e (src, dst, deg)`, and the nodes `n`.
+    */
+  private val pageRankGraphCtes: String =
+    s"""${tradePairsCte("pairs", materialized = false)},
+       |edges AS (SELECT src, dst FROM pairs
+       |          UNION ALL SELECT dst, src FROM pairs),
+       |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+       |e AS (SELECT edges.src, edges.dst, deg.deg
+       |      FROM edges JOIN deg USING (src)),
+       |n AS (SELECT src AS node FROM deg)""".stripMargin
+
+  /** Three unrolled integer PageRank rounds `r1`..`r3` from `r0`
+    * (damping 0.85, `teleport` = a node's teleport mass in micro
+    * units) — mirrors PageRank.ranks and personalizedRanks.
+    */
+  private def pageRankRounds(teleport: String): String =
+    (1 to 3).map { r =>
+      s"""c$r AS (SELECT e.dst AS node, sum(r${r - 1}.rank_micro // e.deg) AS s
+         |       FROM e JOIN r${r - 1} ON r${r - 1}.node = e.src GROUP BY e.dst),
+         |r$r AS (SELECT n.node,
+         |         CAST($teleport
+         |           + (85 * coalesce(c$r.s, 0)) // 100 AS BIGINT)
+         |           AS rank_micro
+         |       FROM n LEFT JOIN c$r ON c$r.node = n.node)""".stripMargin
+    }.mkString(",\n")
+
+  /** Three unrolled synchronous label-propagation rounds over the trade
+    * edges, `l0`..`l3` (most frequent neighbour label, smallest label on
+    * ties) — mirrors Graphs.labelPropagation.
+    */
+  private val labelPropCtes: String = {
+    val rounds = (1 to 3).map { r =>
+      s"""v$r AS (SELECT e.dst, l.label, CAST(count(*) AS BIGINT) AS c
+         |  FROM e JOIN l${r - 1} l ON l.v = e.src GROUP BY 1, 2),
+         |l$r AS MATERIALIZED (SELECT dst AS v, label FROM (
+         |  SELECT dst, label, row_number() OVER (
+         |    PARTITION BY dst ORDER BY c DESC, label ASC) AS rn
+         |  FROM v$r) WHERE rn = 1)""".stripMargin
+    }.mkString(",\n")
+    s"""$tradeEdgesCtes,
+       |l0 AS (SELECT DISTINCT src AS v, src AS label FROM e),
+       |$rounds""".stripMargin
+  }
+
+  /** Candidate part-name pairs `cand (name_a, name_b)` from two-pass
+    * token blocking (blocks above 500 names dropped) over the distinct
+    * names `n (name, n_rows)` — mirrors EntityResolution.nameMatchPairs
+    * before its edit-distance check.
+    */
+  private val entityCandCtes: String =
+    """n AS (SELECT p_name AS name,
+      |         CAST(count(*) AS BIGINT) AS n_rows
+      |       FROM part GROUP BY 1),
+      |t AS (SELECT name, string_split(name, ' ') AS toks FROM n),
+      |b AS (SELECT name, 't1:' || toks[1] AS blk FROM t
+      |      UNION ALL SELECT name, 't2:' || toks[2] FROM t),
+      |sz AS (SELECT blk FROM b GROUP BY blk
+      |       HAVING count(*) <= 500),
+      |bb AS (SELECT b.name, b.blk FROM b JOIN sz USING (blk)),
+      |cand AS (SELECT DISTINCT a.name AS name_a, b2.name AS name_b
+      |         FROM bb a JOIN bb b2 USING (blk)
+      |         WHERE a.name < b2.name)""".stripMargin
+
   val defs: Seq[QDef] = Seq(
 
     QDef("q1_pricing_summary",
@@ -574,18 +655,7 @@ object QueriesTpch {
     QDef("q_entity_match",
       (s, dir) => graft.ops.EntityResolution.nameMatchPairs(
         Q.table(s, dir, "part"), "p_name", maxDist = 2, blockCap = 500L),
-      Some("""WITH n AS (SELECT p_name AS name,
-             |         CAST(count(*) AS BIGINT) AS n_rows
-             |       FROM part GROUP BY 1),
-             |t AS (SELECT name, string_split(name, ' ') AS toks FROM n),
-             |b AS (SELECT name, 't1:' || toks[1] AS blk FROM t
-             |      UNION ALL SELECT name, 't2:' || toks[2] FROM t),
-             |sz AS (SELECT blk FROM b GROUP BY blk
-             |       HAVING count(*) <= 500),
-             |bb AS (SELECT b.name, b.blk FROM b JOIN sz USING (blk)),
-             |cand AS (SELECT DISTINCT a.name AS name_a, b2.name AS name_b
-             |         FROM bb a JOIN bb b2 USING (blk)
-             |         WHERE a.name < b2.name),
+      Some(s"""WITH $entityCandCtes,
              |p AS (SELECT name_a, name_b,
              |        CAST(levenshtein(name_a, name_b) AS INTEGER) AS dist
              |      FROM cand WHERE levenshtein(name_a, name_b) <= 2)
@@ -613,19 +683,8 @@ object QueriesTpch {
             col("is_canonical"))
           .join(names, Seq("name"))
       },
-      Some("""WITH RECURSIVE
-             |n AS (SELECT p_name AS name,
-             |         CAST(count(*) AS BIGINT) AS n_rows
-             |       FROM part GROUP BY 1),
-             |t AS (SELECT name, string_split(name, ' ') AS toks FROM n),
-             |b AS (SELECT name, 't1:' || toks[1] AS blk FROM t
-             |      UNION ALL SELECT name, 't2:' || toks[2] FROM t),
-             |sz AS (SELECT blk FROM b GROUP BY blk
-             |       HAVING count(*) <= 500),
-             |bb AS (SELECT b.name, b.blk FROM b JOIN sz USING (blk)),
-             |cand AS (SELECT DISTINCT a.name AS name_a, b2.name AS name_b
-             |         FROM bb a JOIN bb b2 USING (blk)
-             |         WHERE a.name < b2.name),
+      Some(s"""WITH RECURSIVE
+             |$entityCandCtes,
              |p AS (SELECT name_a, name_b FROM cand
              |      WHERE levenshtein(name_a, name_b) <= 2),
              |edges AS (SELECT name_a AS src, name_b AS dst FROM p
@@ -723,35 +782,9 @@ object QueriesTpch {
       (s, dir) => graft.ops.PageRank.ranks(
         graft.ops.PageRank.tradeGraphEdges(
           Q.table(s, dir, "orders"), Q.table(s, dir, "lineitem")), iters = 3),
-      Some("""WITH pairs AS (
-             |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS src,
-             |                  CAST(-l_suppkey AS BIGINT) AS dst
-             |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-             |edges AS (SELECT src, dst FROM pairs
-             |          UNION ALL SELECT dst, src FROM pairs),
-             |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-             |e AS (SELECT edges.src, edges.dst, deg.deg
-             |      FROM edges JOIN deg USING (src)),
-             |n AS (SELECT src AS node FROM deg),
+      Some(s"""WITH $pageRankGraphCtes,
              |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_micro FROM n),
-             |c1 AS (SELECT e.dst AS node, sum(r0.rank_micro // e.deg) AS s
-             |       FROM e JOIN r0 ON r0.node = e.src GROUP BY e.dst),
-             |r1 AS (SELECT n.node,
-             |         CAST(150000 + (85 * coalesce(c1.s, 0)) // 100 AS BIGINT)
-             |           AS rank_micro
-             |       FROM n LEFT JOIN c1 ON c1.node = n.node),
-             |c2 AS (SELECT e.dst AS node, sum(r1.rank_micro // e.deg) AS s
-             |       FROM e JOIN r1 ON r1.node = e.src GROUP BY e.dst),
-             |r2 AS (SELECT n.node,
-             |         CAST(150000 + (85 * coalesce(c2.s, 0)) // 100 AS BIGINT)
-             |           AS rank_micro
-             |       FROM n LEFT JOIN c2 ON c2.node = n.node),
-             |c3 AS (SELECT e.dst AS node, sum(r2.rank_micro // e.deg) AS s
-             |       FROM e JOIN r2 ON r2.node = e.src GROUP BY e.dst),
-             |r3 AS (SELECT n.node,
-             |         CAST(150000 + (85 * coalesce(c3.s, 0)) // 100 AS BIGINT)
-             |           AS rank_micro
-             |       FROM n LEFT JOIN c3 ON c3.node = n.node)
+             |${pageRankRounds("150000")}
              |SELECT node, rank_micro FROM r3""".stripMargin)),
 
     // k-hop BFS reachability from the seed set (node % 20 == 0) on the
@@ -774,12 +807,7 @@ object QueriesTpch {
              |  UNION ALL SELECT v, CAST($r AS INTEGER) AS hop FROM n$r),
              |f$r AS (SELECT v FROM n$r)""".stripMargin
         }.mkString(",\n")
-        s"""WITH pairs AS (
-           |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS src,
-           |                  CAST(-l_suppkey AS BIGINT) AS dst
-           |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-           |e AS MATERIALIZED (SELECT src, dst FROM pairs
-           |       UNION ALL SELECT dst, src FROM pairs),
+        s"""WITH $tradeEdgesCtes,
            |verts AS MATERIALIZED (SELECT DISTINCT src AS v FROM e),
            |vis0 AS (SELECT v, CAST(0 AS INTEGER) AS hop FROM verts
            |         WHERE v % 20 = 0),
@@ -801,29 +829,11 @@ object QueriesTpch {
           Q.table(s, dir, "orders"), Q.table(s, dir, "lineitem")),
         seedMod = 20L, iters = 3),
       Some {
-        val rounds = (1 to 3).map { r =>
-          s"""c$r AS (SELECT e.dst AS node, sum(r${r - 1}.rank_micro // e.deg) AS s
-             |       FROM e JOIN r${r - 1} ON r${r - 1}.node = e.src GROUP BY e.dst),
-             |r$r AS (SELECT n.node,
-             |         CAST(CASE WHEN n.node % 20 = 0 THEN 150000 ELSE 0 END
-             |           + (85 * coalesce(c$r.s, 0)) // 100 AS BIGINT)
-             |           AS rank_micro
-             |       FROM n LEFT JOIN c$r ON c$r.node = n.node)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH pairs AS (
-           |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS src,
-           |                  CAST(-l_suppkey AS BIGINT) AS dst
-           |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-           |edges AS (SELECT src, dst FROM pairs
-           |          UNION ALL SELECT dst, src FROM pairs),
-           |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-           |e AS (SELECT edges.src, edges.dst, deg.deg
-           |      FROM edges JOIN deg USING (src)),
-           |n AS (SELECT src AS node FROM deg),
+        s"""WITH $pageRankGraphCtes,
            |r0 AS (SELECT node,
            |         CAST(CASE WHEN node % 20 = 0 THEN 1000000 ELSE 0 END
            |           AS BIGINT) AS rank_micro FROM n),
-           |$rounds
+           |${pageRankRounds("CASE WHEN n.node % 20 = 0 THEN 150000 ELSE 0 END")}
            |SELECT node, rank_micro FROM r3""".stripMargin
       }),
 
@@ -855,10 +865,7 @@ object QueriesTpch {
              |       FROM n LEFT JOIN hr$r ON hr$r.src = n.node, hd$r)"""
             .stripMargin
         }.mkString(",\n")
-        s"""WITH e AS MATERIALIZED (
-           |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS src,
-           |                  CAST(-l_suppkey AS BIGINT) AS dst
-           |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+        s"""WITH ${tradePairsCte("e", materialized = true)},
            |n AS MATERIALIZED (SELECT src AS node FROM e
            |                   UNION SELECT dst AS node FROM e),
            |h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM n),
@@ -879,22 +886,7 @@ object QueriesTpch {
           Q.table(s, dir, "orders"), Q.table(s, dir, "lineitem")),
         rounds = 3),
       Some {
-        val rounds = (1 to 3).map { r =>
-          s"""v$r AS (SELECT e.dst, l.label, CAST(count(*) AS BIGINT) AS c
-             |  FROM e JOIN l${r - 1} l ON l.v = e.src GROUP BY 1, 2),
-             |l$r AS MATERIALIZED (SELECT dst AS v, label FROM (
-             |  SELECT dst, label, row_number() OVER (
-             |    PARTITION BY dst ORDER BY c DESC, label ASC) AS rn
-             |  FROM v$r) WHERE rn = 1)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH pairs AS (
-           |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS src,
-           |                  CAST(-l_suppkey AS BIGINT) AS dst
-           |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-           |e AS MATERIALIZED (SELECT src, dst FROM pairs
-           |       UNION ALL SELECT dst, src FROM pairs),
-           |l0 AS (SELECT DISTINCT src AS v, src AS label FROM e),
-           |$rounds
+        s"""WITH $labelPropCtes
            |SELECT v, label FROM l3 ORDER BY v""".stripMargin
       }),
 
@@ -917,22 +909,7 @@ object QueriesTpch {
         graft.ops.Graphs.modularity(pairs, labels)
       },
       Some {
-        val rounds = (1 to 3).map { r =>
-          s"""v$r AS (SELECT e.dst, l.label, CAST(count(*) AS BIGINT) AS c
-             |  FROM e JOIN l${r - 1} l ON l.v = e.src GROUP BY 1, 2),
-             |l$r AS MATERIALIZED (SELECT dst AS v, label FROM (
-             |  SELECT dst, label, row_number() OVER (
-             |    PARTITION BY dst ORDER BY c DESC, label ASC) AS rn
-             |  FROM v$r) WHERE rn = 1)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH pairs AS (
-           |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS src,
-           |                  CAST(-l_suppkey AS BIGINT) AS dst
-           |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-           |e AS MATERIALIZED (SELECT src, dst FROM pairs
-           |       UNION ALL SELECT dst, src FROM pairs),
-           |l0 AS (SELECT DISTINCT src AS v, src AS label FROM e),
-           |$rounds,
+        s"""WITH $labelPropCtes,
            |intra AS (SELECT a.label, CAST(count(*) AS BIGINT) AS e_intra
            |          FROM pairs p JOIN l3 a ON a.v = p.src
            |                       JOIN l3 b ON b.v = p.dst
@@ -964,12 +941,7 @@ object QueriesTpch {
       (s, dir) => graft.ops.Graphs.assortativity(
         graft.ops.PageRank.tradeGraphEdges(
           Q.table(s, dir, "orders"), Q.table(s, dir, "lineitem"))),
-      Some("""WITH pairs AS (
-             |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS src,
-             |                  CAST(-l_suppkey AS BIGINT) AS dst
-             |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-             |e AS MATERIALIZED (SELECT src, dst FROM pairs
-             |       UNION ALL SELECT dst, src FROM pairs),
+      Some(s"""WITH $tradeEdgesCtes,
              |d AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
              |      FROM e GROUP BY 1),
              |j AS (SELECT dx.deg AS x, dy.deg AS y

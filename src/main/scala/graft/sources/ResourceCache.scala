@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.sources.sta.StaHttp
+
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 
@@ -12,9 +14,11 @@ import java.security.MessageDigest
   * Semantics:
   *   - cache hit (file exists and matches the expected checksum, when
   *     given) → returns the path, no network touched;
-  *   - miss → GET with [[graft.sources.sta.StaHttp]]-style retry, write
-  *     to a temp file, verify the checksum BEFORE the atomic move into
-  *     place — a torn or corrupted download can never be half-cached;
+  *   - miss → GET through [[StaHttp.getBytes]]'s retry loop (5xx, 429
+  *     and connection errors retry; other failures throw
+  *     [[StaHttp.HttpFailure]]), verify the checksum, then write a temp
+  *     file and move it atomically into place — a torn or corrupted
+  *     download can never be half-cached;
   *   - checksum mismatch on an existing file → re-download (a partial
   *     file from a killed previous run heals instead of poisoning every
   *     later run).
@@ -35,7 +39,8 @@ object ResourceCache {
 
   /** Ensure `url`'s content exists at `localFolder/fileName` and return
     * the path. `sha256` (hex) pins the content when given — checked on
-    * both cache hits and fresh downloads.
+    * both cache hits and fresh downloads. A miss makes at most `retries`
+    * download attempts.
     */
   def fetch(url: String, localFolder: String, fileName: String,
             sha256: Option[String] = None, retries: Int = 3): Path = {
@@ -44,48 +49,19 @@ object ResourceCache {
     val target = dir.resolve(fileName)
     if (ok(target, sha256)) return target
 
-    var attempt = 0
-    var lastErr = ""
-    while (attempt < retries) {
-      try {
-        val conn = java.net.URI.create(url).toURL.openConnection()
-          .asInstanceOf[java.net.HttpURLConnection]
-        conn.setConnectTimeout(10000)
-        conn.setReadTimeout(120000)
-        val code = conn.getResponseCode
-        if (code >= 200 && code < 300) {
-          val in = conn.getInputStream
-          val bytes = try in.readAllBytes() finally in.close()
-          sha256.foreach { want =>
-            val got = sha256Hex(bytes)
-            require(want.equalsIgnoreCase(got),
-              s"checksum mismatch for $url: expected $want, got $got")
-          }
-          val tmp = Files.createTempFile(dir, s".$fileName.", ".part")
-          try {
-            Files.write(tmp, bytes)
-            Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-              StandardCopyOption.ATOMIC_MOVE)
-          } finally Files.deleteIfExists(tmp)
-          return target
-        }
-        val err = conn.getErrorStream
-        if (err != null) {
-          try { err.readAllBytes(); () } catch { case _: java.io.IOException => }
-          finally err.close()
-        }
-        conn.disconnect()
-        lastErr = s"HTTP $code"
-        if (code < 500 && code != 429)
-          throw new IllegalStateException(s"$lastErr for $url")
-      } catch {
-        case e: IllegalStateException => throw e
-        case e: IllegalArgumentException => throw e // checksum mismatch: don't retry
-        case e: java.io.IOException => lastErr = e.toString
-      }
-      attempt += 1
-      if (attempt < retries) Thread.sleep(200L * attempt)
+    val bytes = StaHttp.getBytes(url, retries = retries - 1, backoffMs = 200L,
+      readTimeoutMs = 120000)
+    sha256.foreach { want =>
+      val got = sha256Hex(bytes)
+      require(want.equalsIgnoreCase(got),
+        s"checksum mismatch for $url: expected $want, got $got")
     }
-    throw new IllegalStateException(s"download failed after $retries tries ($lastErr) for $url")
+    val tmp = Files.createTempFile(dir, s".$fileName.", ".part")
+    try {
+      Files.write(tmp, bytes)
+      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+    target
   }
 }

@@ -17,23 +17,34 @@ object StaHttp {
     * backoff; other non-2xx codes fail fast (a 404 won't heal).
     */
   def get(url: String, retries: Int = 3, backoffMs: Long = 100L): String =
-    withRetry(url, retries, backoffMs) { conn =>
+    new String(getBytes(url, retries, backoffMs), "UTF-8")
+
+  /** [[get]]'s retry loop returning the raw body (binary downloads such
+    * as [[graft.sources.ResourceCache]]'s); `readTimeoutMs` bounds each
+    * read.
+    */
+  def getBytes(url: String, retries: Int = 3, backoffMs: Long = 100L,
+               readTimeoutMs: Int = 60000): Array[Byte] =
+    withRetry(url, retries, backoffMs, readTimeoutMs) { conn =>
       conn.setRequestMethod("GET")
     }
 
   /** POST a JSON body (the `$batch` patch payload). */
   def postJson(url: String, body: String, retries: Int = 3,
-               backoffMs: Long = 100L): String =
-    withRetry(url, retries, backoffMs) { conn =>
+               backoffMs: Long = 100L): String = {
+    val resp = withRetry(url, retries, backoffMs, readTimeoutMs = 60000) { conn =>
       conn.setRequestMethod("POST")
       conn.setRequestProperty("Content-Type", "application/json")
       conn.setDoOutput(true)
       val out = conn.getOutputStream
       try out.write(body.getBytes("UTF-8")) finally out.close()
     }
+    new String(resp, "UTF-8")
+  }
 
-  private def withRetry(url: String, retries: Int, backoffMs: Long)
-                       (prepare: java.net.HttpURLConnection => Unit): String = {
+  private def withRetry(url: String, retries: Int, backoffMs: Long,
+                        readTimeoutMs: Int)
+                       (prepare: java.net.HttpURLConnection => Unit): Array[Byte] = {
     var attempt = 0
     var lastErr: String = ""
     while (attempt <= retries) {
@@ -42,12 +53,12 @@ object StaHttp {
         val conn = java.net.URI.create(url).toURL.openConnection()
           .asInstanceOf[java.net.HttpURLConnection]
         conn.setConnectTimeout(10000)
-        conn.setReadTimeout(60000)
+        conn.setReadTimeout(readTimeoutMs)
         prepare(conn)
         val code = conn.getResponseCode
         if (code >= 200 && code < 300) {
           val in = conn.getInputStream
-          try return new String(in.readAllBytes(), "UTF-8") finally in.close()
+          try return in.readAllBytes() finally in.close()
         }
         // drain + close the error body: an unread stream pins the pooled
         // keep-alive socket, leaking one per executor-side retry loop

@@ -21,8 +21,8 @@ import scala.jdk.CollectionConverters._
   *
   * v2 architecture: the scan COMPILES Catalyst pushdowns into the OData
   * request the reference builds by hand —
-  *  - required columns  → the only ones the reader fills; their `$select=`
-  *    lists show in the scan's `description()`, on no request
+  *  - required columns  → the only ones the reader fills; the pruning
+  *    happens in the reader, no `$select` is sent
   *  - time / stream filters → `$filter=phenomenonTime gt X and lt Y`,
   *    `datastream_id in (…)` (reference `filter_cfg_to_query`,
   *    `src/main.py:328-331`, pinned `tests/test_config.py:23-28`)
@@ -111,23 +111,6 @@ object StaSource {
     }
     (clauses.mkString(" and "), pushable, residual)
   }
-
-  /** Compile pruned columns to per-entity `$select` lists (reference
-    * `selection=[...]` trees, `src/aums_data_request.py:44-69`).
-    */
-  def compileSelect(required: StructType): Map[String, Seq[String]] = {
-    val names = required.fieldNames.toSet
-    def pick(m: Map[String, String]): Seq[String] =
-      m.collect { case (col, sta) if names.contains(col) => sta }.toSeq
-    Map(
-      "Datastreams" -> pick(Map(Obs.DatastreamId -> "@iot.id",
-        "description" -> "description", Obs.Units -> "unitOfMeasurement")),
-      "Observations" -> pick(Map(Obs.IotId -> "@iot.id", Obs.Result -> "result",
-        Obs.Time -> "phenomenonTime", Obs.QcFlag -> "resultQuality")),
-      "FeatureOfInterest" -> pick(Map(Obs.Lat -> "feature", Obs.Long_ -> "feature",
-        Obs.FeatureId -> "@iot.id"))
-    ).filter(_._2.nonEmpty)
-  }
 }
 
 /** @param transport "file" (captured response JSON, the test/sandbox
@@ -178,8 +161,7 @@ class StaScan(path: String, required: StructType, odataFilter: String,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"StaScan(transport=$transport, odataFilter=[$odataFilter], " +
-      s"select=[${StaSource.compileSelect(required)}])"
+    s"StaScan(transport=$transport, odataFilter=[$odataFilter])"
 
   /** File transport: one partition per captured response file.
     *

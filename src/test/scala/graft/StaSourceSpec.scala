@@ -73,11 +73,4 @@ class StaSourceSpec extends SparkSpec {
       "(Datastream/id eq 7751 or Datastream/id eq 7770)")
     assert(pushed.length == 3 && residual == Seq(EqualTo(Obs.Result, 1.0)))
   }
-
-  test("$select compilation from pruned columns (aums_data_request.py:44-69)") {
-    val sel = StaSource.compileSelect(new org.apache.spark.sql.types.StructType()
-      .add(Obs.IotId, "long").add(Obs.Result, "double").add(Obs.Time, "timestamp"))
-    assert(sel("Observations").toSet == Set("@iot.id", "result", "phenomenonTime"))
-    assert(!sel.contains("Datastreams"))
-  }
 }

@@ -39,11 +39,10 @@ cd "$(dirname "$0")/.."
 # every version of the chain has produced
 LIFECYCLE_MAX_JOBS=19
 LIFECYCLE_FLAG_HIST='{"1":4330,"4":5670}'
-# sbt test's succeeded count once the sta source became the one STA
-# reader: 470, less ObservationSpec's typed-Dataset test, plus three
-# StaResponseSpec tests and the pruning test, which moved off the
-# reference fixture (7 more cancel without their fixtures)
-TESTS_MIN_SUCCEEDED=473
+# sbt test's succeeded count once every oracle text is pinned by
+# digest: 473, less StaSourceSpec's `$select` compilation test, plus
+# OracleDigestSpec's two tests (7 more cancel without their fixtures)
+TESTS_MIN_SUCCEEDED=474
 
 declare -a RESULTS=()
 fail=0
