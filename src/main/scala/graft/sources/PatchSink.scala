@@ -1,8 +1,11 @@
 package graft.sources
 
 import graft.core.{Flags, Obs}
-import org.apache.spark.sql.DataFrame
+import graft.sources.sta.StaHttp
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** S4/S5 — the write-back sink: per-observation flag PATCHes (reference
   * `patch_qc_flags` `src/main.py:854-859`, `create_patch_json` +
@@ -11,7 +14,8 @@ import org.apache.spark.sql.functions._
   * v0 writes the patch dataset as JSON files (one body per line, exactly
   * the reference's file shape). The HTTP variant batches per partition —
   * idempotent last-writer-wins upserts keyed on observation id, which is
-  * what makes the overlapping-window backfill (§3.3) safe to re-run.
+  * what makes the overlapping-window backfill (§3.3) safe to re-run — and
+  * keeps up to 8 of a partition's `$batch` POSTs in flight at once.
   */
 object PatchSink {
 
@@ -25,14 +29,19 @@ object PatchSink {
   def writePatchFile(flagged: DataFrame, outDir: String): Unit =
     patchBodies(flagged).write.mode("overwrite").json(outDir)
 
+  /** A partition's (id, wire code) pairs in groups of `batchSize`. */
+  private def batches(rows: Iterator[Row], batchSize: Int): Iterator[Seq[(Long, Int)]] =
+    rows.map(r => (r.getLong(0), r.getInt(1))).grouped(batchSize)
+
   /** S4 — transport-pluggable batch sink: `send` is called once per batch
-    * per partition (the HTTP POST to `$batch` in production; a collector
-    * in tests). Returns nothing — counts come from the driver-side
-    * flag histogram, not the sink.
+    * per partition, one call after another on the task's thread (a
+    * collector in tests; [[httpBatchSink]] is the live transport).
+    * Returns nothing — counts come from the driver-side flag histogram,
+    * not the sink.
     */
   def foreachBatchSink(flagged: DataFrame, batchSize: Int)(send: Seq[(Long, Int)] => Unit): Unit =
-    patchBodies(flagged).foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      rows.map(r => (r.getLong(0), r.getInt(1))).grouped(batchSize).foreach(g => send(g.toSeq))
+    patchBodies(flagged).foreachPartition { (rows: Iterator[Row]) =>
+      batches(rows, batchSize).foreach(send)
     }
 
   /** One OData JSON-batch body (FROST `$batch` shape): `batchSize` PATCH
@@ -46,15 +55,37 @@ object PatchSink {
       s"""{"id":"$i","method":"patch","url":"Observations($id)","body":{"resultQuality":$wire}}"""
     }.mkString("""{"requests":[""", ",", "]}")
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The observation ids of `batch` whose sub-request the `$batch` reply
+    * answers with a status of 400 or more (OData JSON batch: a rejected
+    * PATCH is a sub-response inside the 200 reply, matched to its request
+    * by `id`). An empty `responses` list rejects nothing.
+    */
+  private def rejectedIds(reply: String, batch: Seq[(Long, Int)]): Seq[String] =
+    mapper.readTree(reply).path("responses").elements.asScala
+      .filter(_.path("status").asInt(0) >= 400)
+      .map { r =>
+        val id = r.path("id").asText
+        id.toIntOption.flatMap(batch.lift).fold(s"sub-request '$id'")(_._1.toString)
+      }.toSeq
+
   /** S4 — live HTTP write-back (reference `patch_qc_flags`
     * `src/main.py:854-859`): per partition, flag upserts are grouped into
     * `$batch` POSTs — idempotent last-writer-wins keyed on observation id,
     * which is what makes the overlapping-window backfill (§3.3) safe to
-    * re-run. Runs on executors; retry/backoff via [[graft.sources.sta.StaHttp]].
+    * re-run. Runs on executors: up to 8 of a partition's POSTs are in
+    * flight at once ([[StaHttp.inFlight]]), holding at most 8 batches,
+    * with retry/backoff via [[StaHttp]]. A sub-request the service
+    * rejects fails the task with [[StaHttp.HttpFailure]].
     */
   def httpBatchSink(flagged: DataFrame, batchUrl: String, batchSize: Int = 100): Unit =
-    foreachBatchSink(flagged, batchSize) { batch =>
-      graft.sources.sta.StaHttp.postJson(batchUrl, batchBody(batch))
-      ()
+    patchBodies(flagged).foreachPartition { (rows: Iterator[Row]) =>
+      StaHttp.inFlight(batches(rows, batchSize).map { batch => () =>
+        val rejected = rejectedIds(StaHttp.postJson(batchUrl, batchBody(batch)), batch)
+        if (rejected.nonEmpty)
+          throw new StaHttp.HttpFailure(
+            s"$batchUrl rejected the PATCH of observations ${rejected.mkString(", ")}")
+      }).foreach(_ => ())
     }
 }

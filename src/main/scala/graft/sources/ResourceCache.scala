@@ -50,7 +50,7 @@ object ResourceCache {
     if (ok(target, sha256)) return target
 
     val bytes = StaHttp.getBytes(url, retries = retries - 1, backoffMs = 200L,
-      readTimeoutMs = 120000)
+      timeoutMs = 120000)
     sha256.foreach { want =>
       val got = sha256Hex(bytes)
       require(want.equalsIgnoreCase(got),

@@ -28,9 +28,11 @@ import scala.jdk.CollectionConverters._
   *    `src/main.py:328-331`, pinned `tests/test_config.py:23-28`)
   *  - http transport: one paged fetch per datastream id
   *    (`$filter=… and Datastream/id eq k`), dealt round-robin over at
-  *    most `defaultParallelism` input partitions; each partition runs
-  *    its streams' fetches one after another, so the Spark tasks
-  *    replace the reference's thread pool.
+  *    most `defaultParallelism` input partitions; a partition with
+  *    several fetches keeps up to 8 of them in flight at once
+  *    ([[StaHttp.inFlight]]), each paging its stream in order, and
+  *    emits their rows in fetch order, holding at most 8 streams' rows;
+  *    a partition with one fetch pages it lazily.
   *
   * Two transports: "file" reads captured response JSON from the `path`
   * option (one response per file, one partition per file) and enforces
@@ -119,8 +121,9 @@ object StaSource {
   *   bounded retries).
   * @param datastreams with http transport: comma-separated datastream ids
   *   — one paged fetch per id, grouped into at most `defaultParallelism`
-  *   input partitions (see [[StaScan.planInputPartitions]]); absent = one
-  *   partition for the whole collection.
+  *   input partitions, each running up to 8 of its fetches at once (see
+  *   [[StaScan.planInputPartitions]]); absent = one partition for the
+  *   whole collection.
   */
 class StaTable(path: String, transport: String = "file",
                datastreams: Option[String] = None) extends Table with SupportsRead {
@@ -167,13 +170,14 @@ class StaScan(path: String, required: StructType, odataFilter: String,
     *
     * HTTP transport: one paged fetch per datastream id, each with its
     * own `Datastream/id eq k` filter. The fetches are dealt round-robin
-    * over `min(#ids, defaultParallelism)` partitions, and a partition
-    * runs its fetches one after another. Only `defaultParallelism` tasks
-    * run at once anyway, so the fetch concurrency is that of one
-    * partition per id, while every stage over the scanned rows schedules
-    * at most one task per core instead of one per stream. Without ids:
-    * a single whole-collection partition. Plans from the options alone:
-    * nothing is fetched and no job runs here.
+    * over `min(#ids, defaultParallelism)` partitions, so every stage over
+    * the scanned rows schedules at most one task per core instead of one
+    * per stream. Within a partition up to 8 fetches are in flight at
+    * once ([[StaHttp.inFlight]]): a task's round trips overlap instead of
+    * waiting one after another, while the task holds at most 8 streams'
+    * parsed rows and emits them in fetch order. Without ids: a single
+    * whole-collection partition. Plans from the options alone: nothing
+    * is fetched and no job runs here.
     */
   override def planInputPartitions(): Array[InputPartition] =
     if (transport == "http") {
@@ -218,9 +222,10 @@ class StaReaderFactory(required: StructType) extends PartitionReaderFactory {
 }
 
 /** Yields the flattened rows of one partition: one captured STA response
-  * (file transport), or the pages of each of the partition's fetches in
-  * turn (http transport: paged GET with retry, reference `get_with_retry`
-  * `src/main.py:107`).
+  * (file transport), or the rows of each of the partition's fetches in
+  * fetch order (http transport: paged GET with retry, reference
+  * `get_with_retry` `src/main.py:107`). Several fetches run through
+  * [[StaHttp.inFlight]], which `close()` cancels.
   */
 class StaPartitionReader(p: StaPartition, required: StructType)
     extends PartitionReader[InternalRow] {
@@ -320,7 +325,10 @@ class StaPartitionReader(p: StaPartition, required: StructType)
   /** Standard SensorThings paging: follow `@iot.nextLink` until absent
     * (reference pages with $top/$skip, `get_all_data` src/main.py:350-364;
     * nextLink is the STA-spec equivalent and server-agnostic). Fetched
-    * lazily — a `limit(n)` query stops paging once satisfied.
+    * lazily: a partition with one fetch reads a page only when its rows
+    * are asked for, so a `limit(n)` query stops paging once satisfied.
+    * With several fetches each runs all of its pages, in order, on a
+    * pool thread, at most 8 ahead of the rows handed to Spark.
     */
   private def httpPages(startUrl: String): Iterator[JsonNode] =
     new Iterator[JsonNode] {
@@ -335,16 +343,24 @@ class StaPartitionReader(p: StaPartition, required: StructType)
       }
     }
 
-  private val rows: Iterator[InternalRow] =
-    if (p.http) {
-      val sep = if (p.file.contains("?")) "&" else "?"
-      p.odataFilters.iterator.flatMap { f =>
-        httpPages(if (f.isEmpty) p.file else s"${p.file}$sep%24filter=${StaHttp.enc(f)}")
-      }.flatMap(parse)
-    } else parse(mapper.readTree(new java.io.File(p.file)))
+  private def url(odataFilter: String): String =
+    if (odataFilter.isEmpty) p.file
+    else s"${p.file}${if (p.file.contains("?")) "&" else "?"}%24filter=${StaHttp.enc(odataFilter)}"
+
+  private val fetches: Option[StaHttp.InFlight[Vector[InternalRow]]] =
+    if (p.http && p.odataFilters.size > 1)
+      Some(StaHttp.inFlight(p.odataFilters.map(f =>
+        () => httpPages(url(f)).flatMap(parse).toVector)))
+    else None
+
+  private val rows: Iterator[InternalRow] = fetches match {
+    case Some(f) => f.flatten
+    case None if p.http => p.odataFilters.iterator.flatMap(f => httpPages(url(f))).flatMap(parse)
+    case None => parse(mapper.readTree(new java.io.File(p.file)))
+  }
 
   private var current: InternalRow = _
   override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = fetches.foreach(_.close())
 }

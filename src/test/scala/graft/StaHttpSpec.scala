@@ -13,9 +13,17 @@ import java.util.concurrent.atomic.AtomicInteger
   * paged GET (`@iot.nextLink`) with retry on 5xx, per-datastream
   * fetches grouped into at most one partition per core, server-side
   * `$filter` + reader-side pushed-filter enforcement, and the `$batch`
-  * PATCH write-back (reference
+  * PATCH write-back with its rejected sub-requests (reference
   * `get_with_retry` src/main.py:107-118, `get_all_data` 350-364,
   * `patch_qc_flags` 854-859).
+  *
+  * Overlap: a partition keeps up to 8 of its fetches, and the sink up to
+  * 8 of a partition's `$batch` POSTs, in flight at once; a partition
+  * holds at most 8 streams' rows and emits them in fetch order; a
+  * partition with one fetch pages it lazily; closing a reader cancels
+  * its fetches. The specs for it run a server whose handlers run on a
+  * thread pool and answer each request late, so that only overlapped
+  * requests finish early (`withSlowServer`).
   */
 class StaHttpSpec extends SparkSpec {
 
@@ -47,6 +55,31 @@ class StaHttpSpec extends SparkSpec {
     ex.close()
   }
 
+  /** The `/sta` reply to a decoded query: datastream 1 over two pages, 2
+    * on one, 3+ as below, and with no `Datastream/id` both 1 and 2.
+    */
+  private def staReply(base: String, decoded: String): String = {
+    val dsMatch = "Datastream/id eq (\\d+)".r.findFirstMatchIn(decoded).map(_.group(1).toLong)
+    val page2 = decoded.contains("page=2")
+    dsMatch match {
+      case Some(1L) if !page2 =>
+        // nextLink keeps the original query and adds the page marker
+        s"""{"Datastreams":[${dsJson(1, ds1page1)}],
+           |"@iot.nextLink":"$base?page=2&${StaHttp.enc("$filter=Datastream/id eq 1")}"}""".stripMargin
+      case Some(1L) => s"""{"Datastreams":[${dsJson(1, ds1page2)}]}"""
+      case Some(2L) => s"""{"Datastreams":[${dsJson(2, ds2obs)}]}"""
+      // datastreams 3+: obs k*100+1 on page 1, and for even k a second
+      // page with obs k*100+2
+      case Some(k) if !page2 =>
+        val link = s"$base?page=2&" + StaHttp.enc("$filter=Datastream/id eq " + k)
+        val next = if (k % 2 == 0) s""","@iot.nextLink":"$link"""" else ""
+        s"""{"Datastreams":[${dsJson(k, Seq(obsJson(k * 100 + 1, "2024-01-01T02:00:00Z", k.toDouble)))}]$next}"""
+      case Some(k) =>
+        s"""{"Datastreams":[${dsJson(k, Seq(obsJson(k * 100 + 2, "2024-01-01T02:10:00Z", k + 0.5)))}]}"""
+      case _ => s"""{"Datastreams":[${dsJson(1, ds1page1 ++ ds1page2)},${dsJson(2, ds2obs)}]}"""
+    }
+  }
+
   private def withServer(test: (String, java.util.concurrent.ConcurrentLinkedQueue[String],
                                 AtomicInteger,
                                 java.util.concurrent.ConcurrentLinkedQueue[String]) => Unit): Unit = {
@@ -66,26 +99,7 @@ class StaHttpSpec extends SparkSpec {
         urls.add(decoded)
         // every distinct URL fails once with 503 before serving (retry path)
         if (flaked.putIfAbsent(decoded, true) == null) { respond(ex, 503, "flaky"); return }
-        val dsMatch = "Datastream/id eq (\\d+)".r.findFirstMatchIn(decoded).map(_.group(1).toLong)
-        val page2 = decoded.contains("page=2")
-        val body = dsMatch match {
-          case Some(1L) if !page2 =>
-            // nextLink keeps the original query and adds the page marker
-            s"""{"Datastreams":[${dsJson(1, ds1page1)}],
-               |"@iot.nextLink":"$base?page=2&${StaHttp.enc("$filter=Datastream/id eq 1")}"}""".stripMargin
-          case Some(1L) => s"""{"Datastreams":[${dsJson(1, ds1page2)}]}"""
-          case Some(2L) => s"""{"Datastreams":[${dsJson(2, ds2obs)}]}"""
-          // datastreams 3+: obs k*100+1 on page 1, and for even k a second
-          // page with obs k*100+2
-          case Some(k) if !page2 =>
-            val link = s"$base?page=2&" + StaHttp.enc("$filter=Datastream/id eq " + k)
-            val next = if (k % 2 == 0) s""","@iot.nextLink":"$link"""" else ""
-            s"""{"Datastreams":[${dsJson(k, Seq(obsJson(k * 100 + 1, "2024-01-01T02:00:00Z", k.toDouble)))}]$next}"""
-          case Some(k) =>
-            s"""{"Datastreams":[${dsJson(k, Seq(obsJson(k * 100 + 2, "2024-01-01T02:10:00Z", k + 0.5)))}]}"""
-          case _ => s"""{"Datastreams":[${dsJson(1, ds1page1 ++ ds1page2)},${dsJson(2, ds2obs)}]}"""
-        }
-        respond(ex, 200, body)
+        respond(ex, 200, staReply(base, decoded))
       }
     })
     server.createContext("/batch", new HttpHandler {
@@ -97,6 +111,69 @@ class StaHttpSpec extends SparkSpec {
     server.start()
     try test(base, patched, requests, urls) finally server.stop(0)
   }
+
+  /** What [[withSlowServer]] saw: requests, the most handled at once, the
+    * distinct client connections (remote address and port), the `$batch`
+    * bodies, and the reply delay, which a spec may change.
+    */
+  private final class Traffic {
+    val requests, open, peak = new AtomicInteger
+    val connections = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var delayMs = 0L
+  }
+
+  /** A server whose handlers run on 32 threads and answer `delayMs` late:
+    * `/sta` as [[staReply]] (datastream 404 answers 404), `/batch` with
+    * `batchReply` of the body.
+    */
+  private def withSlowServer(delayMs: Long,
+                             batchReply: String => String = _ => """{"responses":[]}""")
+                            (test: (String, Traffic) => Unit): Unit = {
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 64)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(32)
+    server.setExecutor(pool)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}/sta"
+    val t = new Traffic
+    t.delayMs = delayMs
+    def slow(reply: HttpExchange => (Int, String)): HttpHandler = { ex =>
+      t.requests.incrementAndGet()
+      t.connections.add(ex.getRemoteAddress.toString)
+      t.peak.accumulateAndGet(t.open.incrementAndGet(), (a, b) => math.max(a, b))
+      try {
+        Thread.sleep(t.delayMs)
+        val (code, body) = reply(ex)
+        respond(ex, code, body)
+      } finally t.open.decrementAndGet()
+    }
+    server.createContext("/sta", slow { ex =>
+      val decoded = java.net.URLDecoder.decode(
+        Option(ex.getRequestURI.getRawQuery).getOrElse(""), "UTF-8")
+      if (decoded.contains("Datastream/id eq 404")) (404, "no such datastream")
+      else (200, staReply(base, decoded))
+    })
+    server.createContext("/batch", slow { ex =>
+      val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+      t.batches.add(body)
+      (200, batchReply(body))
+    })
+    server.start()
+    try test(base, t) finally { server.stop(0); pool.shutdownNow() }
+  }
+
+  private def staRead(base: String, ids: Seq[Long]) = spark.read.format("graft.sources.sta")
+    .option("path", base).option("transport", "http")
+    .option("datastreams", ids.mkString(",")).load()
+    .select(Obs.IotId, Obs.DatastreamId, Obs.Result)
+
+  private def timed[A](body: => A): (A, Long) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1000000L)
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
 
   // ---- specs ------------------------------------------------------------
 
@@ -116,14 +193,10 @@ class StaHttpSpec extends SparkSpec {
   test("http transport: more datastreams than cores share one partition " +
     "per core, each stream's pages fetched once") {
     val ids = (1 to 10).map(_.toLong)
-    def read(base: String, ids: Seq[Long]) = spark.read.format("graft.sources.sta")
-      .option("path", base).option("transport", "http")
-      .option("datastreams", ids.mkString(",")).load()
-      .select(Obs.IotId, Obs.DatastreamId, Obs.Result)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
     withServer { (base, _, _, urls) =>
-      val grouped = read(base, ids)
+      val grouped = staRead(base, ids)
       val parts = grouped.rdd.getNumPartitions
       assert(parts <= 4 && parts == math.min(ids.size, spark.sparkContext.defaultParallelism),
         s"$parts partitions for ${ids.size} datastreams")
@@ -133,7 +206,7 @@ class StaHttpSpec extends SparkSpec {
         case (u, hits) => u -> hits.length }
       assert(groupedUrls.values.forall(_ == 2), s"repeated GETs: $groupedUrls")
       urls.clear()
-      val perStream = ids.flatMap(id => rows(read(base, Seq(id)))).sortBy(_._1)
+      val perStream = ids.flatMap(id => rows(staRead(base, Seq(id)))).sortBy(_._1)
       assert(groupedRows == perStream)
       assert(groupedRows.map(_._2).distinct.size == ids.size)
       // the same pages as the per-stream reads, which page every
@@ -232,6 +305,97 @@ class StaHttpSpec extends SparkSpec {
           r.getLong(r.fieldIndex("resultQuality")).toInt).toMap
       assert(patchOps == fileOps, s"wire=$patchOps file=$fileOps")
       assert(patchOps.keySet == Set(13L, 21L, 22L))
+    }
+  }
+
+  test("http transport: a partition's fetches overlap, and its rows keep " +
+    "the per-stream reads' order") {
+    val d = 400L
+    val ids = (1L to 16L)
+    withSlowServer(d) { (base, t) =>
+      val df = staRead(base, ids)
+      val n = df.rdd.getNumPartitions
+      assert(n <= 4 && n == math.min(ids.size, spark.sparkContext.defaultParallelism))
+      val (rows, ms) = timed(df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
+      // one after another, each partition waits at least 4·d (4 streams,
+      // some of two pages); overlapped, at most 2·d (two pages in order)
+      assert(ms < 4 * d, s"read took $ms ms, d = $d ms")
+      assert(t.peak.get > n, s"at most ${t.peak.get} requests at once over $n partitions")
+      info(s"${t.requests.get} requests, at most ${t.peak.get} at once, " +
+        s"${t.connections.size} client connections")
+      // rows in partition order, each partition's streams in fetch order
+      t.delayMs = 0
+      val perStream = ids.map(id => id -> staRead(base, Seq(id)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq).toMap
+      val expected = (0 until n).flatMap(k => ids.indices.filter(_ % n == k).flatMap(i => perStream(ids(i))))
+      assert(rows.toSeq == expected)
+    }
+  }
+
+  test("http transport: a failed fetch fails the read without waiting for the others") {
+    val d = 200L
+    withSlowServer(d) { (base, _) =>
+      val ids = (1L to 7L) ++ Seq(404L) ++ (9L to 16L)
+      val (e, ms) = timed(intercept[org.apache.spark.SparkException](staRead(base, ids).collect()))
+      assert(causes(e).exists(_.isInstanceOf[StaHttp.HttpFailure]), e)
+      assert(ms < 20 * d, s"failed read took $ms ms")
+    }
+  }
+
+  test("http transport: limit(1) over a many-stream partition cancels its " +
+    "fetches; nothing reaches the server after the action") {
+    val d = 300L
+    withSlowServer(d) { (base, t) =>
+      // 10 streams per partition: more than the 8 a partition runs at once
+      val rows = staRead(base, (1L to 40L)).limit(1).collect()
+      assert(rows.length == 1)
+      val atReturn = t.requests.get
+      Thread.sleep(3 * d)
+      assert(t.requests.get == atReturn,
+        s"${t.requests.get - atReturn} requests arrived after the action returned")
+      // the first partition alone ran (ids 1, 5, …, 37), and not all of
+      // its 11 pages
+      assert(atReturn < 11, s"$atReturn requests")
+    }
+  }
+
+  test("$batch POSTs of one partition overlap, each id sent once") {
+    val d = 400L
+    withSlowServer(d) { (base, t) =>
+      import spark.implicits._
+      val flagged = (1L to 16L).map(id => (id, graft.core.Flags.Good)).toDF(Obs.IotId, Obs.QcFlag)
+        .withColumn(Obs.QcFlag, col(Obs.QcFlag).cast("tinyint"))
+        .repartition(1)
+      val (_, ms) = timed(PatchSink.httpBatchSink(flagged, base.replace("/sta", "/batch"),
+        batchSize = 2))
+      assert(t.batches.size == 8)
+      assert(ms < 4 * d, s"8 batches took $ms ms, d = $d ms") // one after another: 8·d
+      val sent = "Observations\\((\\d+)\\)".r.findAllMatchIn(t.batches.toArray.mkString)
+        .map(_.group(1).toLong).toSeq
+      assert(sent.sorted == (1L to 16L))
+      info(s"at most ${t.peak.get} POSTs at once, ${t.connections.size} client connections")
+    }
+  }
+
+  test("$batch sub-requests the service rejects fail the sink, naming their ids") {
+    // the service rejects the PATCH of observation 12 inside a 200 reply
+    val reply = (body: String) => {
+      val ids = "Observations\\((\\d+)\\)".r.findAllMatchIn(body).map(_.group(1)).toSeq
+      ids.zipWithIndex.map { case (id, i) =>
+        val status = if (id == "12") 404 else 200
+        s"""{"id":"$i","status":$status,"body":{}}"""
+      }.mkString("""{"responses":[""", ",", "]}")
+    }
+    withSlowServer(0L, reply) { (base, t) =>
+      import spark.implicits._
+      val flagged = Seq(11L, 12L, 13L).map(id => (id, graft.core.Flags.Bad)).toDF(Obs.IotId, Obs.QcFlag)
+        .withColumn(Obs.QcFlag, col(Obs.QcFlag).cast("tinyint"))
+        .repartition(1)
+      val e = intercept[org.apache.spark.SparkException](
+        PatchSink.httpBatchSink(flagged, base.replace("/sta", "/batch"), batchSize = 2))
+      val failure = causes(e).collectFirst { case f: StaHttp.HttpFailure => f }
+      assert(failure.exists(_.getMessage.endsWith("observations 12")), e)
+      assert(t.batches.size == 2)
     }
   }
 
