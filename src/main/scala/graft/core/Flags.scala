@@ -51,13 +51,4 @@ object Flags {
     */
   def worstWins(flags: Column*): Column =
     greatest(flags.map(f => coalesce(f, lit(NoQc).cast("tinyint"))): _*).cast("tinyint")
-
-  /** Human-readable label, for audit/export. */
-  def labelCol(rank: Column): Column =
-    when(rank === NoQc, "NO_QUALITY_CONTROL")
-      .when(rank === Good, "GOOD")
-      .when(rank === ProbablyGood, "PROBABLY_GOOD")
-      .when(rank === ProbablyBad, "PROBABLY_BAD")
-      .when(rank === Bad, "BAD")
-      .when(rank === Missing, "MISSING")
 }

@@ -21,8 +21,6 @@ object Obs {
   val Lat = "lat"
   val FeatureId = "feature_id"
   val QcFlagFeature = "qc_flag_feature" // per-geometry flag (reference src/main.py:587)
-  val Region = "region"
-  val SubRegion = "sub_region"
 
   val schema: StructType = StructType(Seq(
     StructField(IotId, LongType),
@@ -36,12 +34,6 @@ object Obs {
     StructField(Lat, DoubleType),
     StructField(FeatureId, LongType)
   ))
-
-  /** Epoch microseconds of the observation time — the canonical ordering /
-    * range-window key (integer, so Spark `rangeBetween` frames are exact
-    * and match a DuckDB `RANGE BETWEEN INTERVAL` frame at µs precision).
-    */
-  def epochUs(ts: Column): Column = unix_micros(ts.cast("timestamp"))
 
   /** Epoch-µs derivation for the RAW events `ts` column — the single
     * place the schema dispatch lives (production + tests share it, so

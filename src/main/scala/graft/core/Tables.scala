@@ -1,7 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-at-rest table layout — the co-location lever for repeated
   * big-big equi-joins and aggregations at 100 TB: both sides bucketed
@@ -31,94 +30,6 @@ object Tables {
       .sortBy(sorted.head, sorted.tail: _*)
       .format("parquet")
       .saveAsTable(table)
-  }
-
-  /** Small-file compaction: rewrite a parquet directory into files of
-    * roughly `targetFileBytes` each — the operational counterpart of the
-    * streaming sinks, whose per-trigger×per-partition output degrades
-    * scan planning and driver memory once file counts reach the
-    * millions at ingest scale. One size-driven repartition pass: the
-    * output file count comes from the directory's actual bytes, not
-    * its file count. Returns (filesBefore, filesAfter). Expects a FLAT
-    * parquet directory (the streaming sinks' layout); for a
-    * hive-partitioned tree, compact each leaf directory.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, inPath: String,
-              outPath: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    require(targetFileBytes > 0)
-    // in-place compaction is UNSUPPORTED: the read is lazy, so an
-    // overwrite into the source directory would truncate it mid-job and
-    // destroy the data. Write to a sibling dir and swap afterwards.
-    require(new org.apache.hadoop.fs.Path(inPath).toUri.normalize() !=
-      new org.apache.hadoop.fs.Path(outPath).toUri.normalize(),
-      s"compact cannot write in place (outPath == inPath == $inPath); " +
-        "write to a temp dir and rename")
-    val p = new org.apache.hadoop.fs.Path(inPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataFiles = fs.listStatus(p).filter { s =>
-      s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
-    }
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read.parquet(inPath).repartition(nOut)
-      .write.mode("overwrite").parquet(outPath)
-    val outFiles = fs.listStatus(new org.apache.hadoop.fs.Path(outPath))
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    (dataFiles.length, outFiles)
-  }
-
-  /** Morton (Z-order) key over numeric columns: each column linearly
-    * quantized to `bits` bits against its [min, max], bit b of column i
-    * landing at interleaved position b·nCols + i. Rows close in z are
-    * close in EVERY dimension, so range-partitioning by z gives files
-    * whose per-column min/max footprints are small in all dimensions at
-    * once — parquet row-group / file skipping then works for predicates
-    * on ANY subset of the z columns, where a single-column sort only
-    * serves that column. nCols·bits must fit a long (≤ 62). A null in
-    * any z column nulls the key — range partitioning groups those rows
-    * into the first partition (nulls-first ordering), so they cannot
-    * smear every file's footprint.
-    */
-  def zOrderKey(cols: Seq[Column], mins: Seq[Double], maxs: Seq[Double],
-                bits: Int = 16): Column = {
-    val n = cols.length
-    require(n >= 1 && n * bits <= 62, s"z-order needs 1..62/bits cols, got $n x $bits")
-    val cap = (1L << bits) - 1
-    val q = cols.zipWithIndex.map { case (c, i) =>
-      val span = math.max(maxs(i) - mins(i), java.lang.Double.MIN_NORMAL)
-      least(lit(cap), greatest(lit(0L),
-        floor((c.cast("double") - lit(mins(i))) / lit(span) * cap)))
-    }
-    val terms = for (b <- 0 until bits; i <- 0 until n)
-      yield shiftleft(shiftright(q(i), b).bitwiseAND(lit(1L)), b * n + i)
-    terms.reduce(_ bitwiseOR _)
-  }
-
-  /** Write `df` range-partitioned and sorted by the z-order key of
-    * `zCols` — the multi-dimensional clustering layout (one write-time
-    * shuffle buys file skipping on every z column for all later reads).
-    * Column min/max come from one bounded stats pass (2·nCols doubles
-    * on the driver).
-    */
-  def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-                    files: Int, bits: Int = 16): Unit = {
-    val stats = df.agg(
-      zCols.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
-        .head, zCols.flatMap(c =>
-        Seq(min(col(c).cast("double")), max(col(c).cast("double")))).tail: _*)
-      .collect()(0)
-    zCols.indices.foreach { i =>
-      require(!stats.isNullAt(2 * i),
-        s"z-order column '${zCols(i)}' is entirely null — " +
-          "it cannot contribute to the key; drop it from zCols")
-    }
-    val mins = zCols.indices.map(i => stats.getDouble(2 * i))
-    val maxs = zCols.indices.map(i => stats.getDouble(2 * i + 1))
-    df.withColumn("__z", zOrderKey(zCols.map(col), mins, maxs, bits))
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
   }
 
   /** Snapshot diff — the table-versioning primitive (what a data

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge}
+import org.apache.spark.sql.{Column, GraftExpressionBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,8 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * it): id 0 is reserved `<unk>`; pieces are numbered 1.. in vocab
   * order. A position matching no piece emits 0 and advances one char —
   * encoding never fails and never stalls. Words are the (normalized)
-  * space-separated tokens; spaces themselves produce no id, so
-  * `decode` of a multi-word text yields the words concatenated.
+  * space-separated tokens; spaces themselves produce no id.
   */
 object Bpe {
 
@@ -43,8 +41,6 @@ object Bpe {
     require(pieces.forall(p => p.nonEmpty && !p.contains(' ')),
       "pieces must be non-empty and space-free")
     require(pieces.distinct.size == pieces.size, "duplicate pieces")
-    val UnkId = 0
-    def size: Int = pieces.size + 1 // + <unk>
   }
 
   /** Encode normalized text to token ids (`array<int>`), greedy
@@ -56,77 +52,6 @@ object Bpe {
   def encode(normText: Column, vocab: Vocab): Column =
     GraftExpressionBridge.column(
       BpeEncodeExpr(GraftExpressionBridge.expression(normText), vocab.pieces))
-
-  /** Inverse of [[encode]] for inspection/specs: ids back to surface
-    * text (words concatenate — spaces emit no id). Unknown id 0 renders
-    * as `⁇` (double question mark), never a piece.
-    */
-  def decode(ids: Column, vocab: Vocab): Column = {
-    val withUnk = "⁇" +: vocab.pieces
-    array_join(transform(ids, i => element_at(lit(withUnk.toArray), i + 1)), "")
-  }
-
-  /** Learn a BPE vocabulary from a corpus — the classic frequency-driven
-    * merge loop (Sennrich et al. 2016) over the corpus' word-frequency
-    * table, with the same scale shape as the ANN codebooks
-    * ([[Similarity]]): TRAIN ON A BOUNDED SAMPLE, apply distributed.
-    * The word-frequency aggregation is one distributed groupBy; only
-    * the top `maxWords` (word, count) rows — a bounded, Heaps-law-small
-    * frame — reach the driver, where the merge loop runs locally.
-    * Deterministic: ties in pair frequency break lexicographically, so
-    * the same corpus always yields the same vocab.
-    *
-    * Returns pieces = single-character alphabet (sorted) ++ merged
-    * pieces in merge order. `nMerges` is an upper bound: merging stops
-    * early when no pair repeats.
-    */
-  def learn(df: DataFrame, textCol: String, nMerges: Int,
-            maxWords: Int = 65536): Vocab = {
-    val wordFreq = df
-      .select(explode(TextAnalysis.wsTokens(
-        TextAnalysis.normalized(col(textCol)))).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("w"))
-      .limit(maxWords)
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-
-    val alphabet = wordFreq.iterator.flatMap(_._1.iterator)
-      .toSet.toIndexedSeq.sorted.map((_: Char).toString)
-
-    // word as current piece sequence, weighted by corpus frequency
-    var words: Array[(Array[String], Long)] =
-      wordFreq.map { case (w, n) => (w.toCharArray.map(_.toString), n) }
-    val merges = Vector.newBuilder[String]
-    var m = 0
-    var done = false
-    while (m < nMerges && !done) {
-      val pairCount = scala.collection.mutable.Map[(String, String), Long]()
-      for ((ps, n) <- words; i <- 0 until ps.length - 1)
-        pairCount.updateWith((ps(i), ps(i + 1)))(c => Some(c.getOrElse(0L) + n))
-      // the best pair: max weighted count, lexicographic tie-break
-      val best = pairCount.filter(_._2 >= 2).toSeq
-        .sortBy { case ((a, b), n) => (-n, a, b) }.headOption
-      best match {
-        case None => done = true
-        case Some(((a, b), _)) =>
-          merges += (a + b)
-          words = words.map { case (ps, n) =>
-            val out = Array.newBuilder[String]
-            var i = 0
-            while (i < ps.length) {
-              if (i < ps.length - 1 && ps(i) == a && ps(i + 1) == b) {
-                out += (a + b); i += 2
-              } else { out += ps(i); i += 1 }
-            }
-            (out.result(), n)
-          }
-          m += 1
-      }
-    }
-    Vocab(alphabet.toIndexedSeq ++ merges.result())
-  }
 
   /** Fixed demonstration vocabulary for oracle-checked queries: the
     * lowercase alphanumeric alphabet + common punctuation + a hand
@@ -150,27 +75,6 @@ object Bpe {
     vocab.pieces.zipWithIndex.map { case (p, i) =>
       s"(${i + 1}, '${p.replace("'", "''")}', ${p.length})"
     }.mkString(", ")
-
-  /** Overlapping fixed-size chunks of BPE token ids per document —
-    * [[TextAnalysis.tokenChunks]] with a learned vocabulary instead of
-    * word strings: (id, chunk_idx, n_tokens, ids). Same shape and scale
-    * argument (map-side explode over stride starts, no shuffle).
-    */
-  def tokenIdChunks(df: DataFrame, idCol: String, textCol: String,
-                    vocab: Vocab, chunkSize: Int = 64,
-                    overlap: Int = 16): DataFrame = {
-    require(overlap >= 0 && overlap < chunkSize,
-      s"overlap must be in [0, chunkSize): got overlap=$overlap chunkSize=$chunkSize")
-    val stride = chunkSize - overlap
-    df.select(col(idCol).as("id"),
-        encode(TextAnalysis.normalized(col(textCol)), vocab).as("ids"))
-      .withColumn("s",
-        explode(sequence(lit(0), greatest(size(col("ids")) - 1, lit(0)), lit(stride))))
-      .select(col("id"),
-        (col("s") / stride).cast("int").as("chunk_idx"),
-        slice(col("ids"), col("s") + 1, lit(chunkSize)).as("ids"))
-      .withColumn("n_tokens", size(col("ids")))
-  }
 }
 
 /** Per-row greedy longest-match tokenizer kernel shared by the

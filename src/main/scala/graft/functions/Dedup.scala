@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -330,120 +330,6 @@ object Dedup {
       .filter(col("c") > 1)
     wins.join(grp, col("fp") === col("__fp"))
       .select(col("doc_id"), col("s"), col("fp"), col("first"))
-  }
-
-  /** Create a persistent dedup ledger: the fingerprint set of an
-    * already-accepted corpus, stored as a parquet table BUCKETED BY
-    * FINGERPRINT — the cross-run form of [[exact]]. Every later ingest
-    * ([[dedupAgainstLedger]]) dedups against ALL history by scanning
-    * only this one-hash-per-document column store, never the historical
-    * corpus bytes, and because the ledger is bucketed on the join key
-    * the history side NEVER shuffles: each ingest shuffles only that
-    * day's batch into the bucket layout. At 10¹¹ accepted documents the
-    * ledger is a few TB of hashes; the daily batch is the small side.
-    */
-  def writeDedupLedger(df: DataFrame, textCol: String, table: String,
-                       path: String, buckets: Int = 32): Unit = {
-    val fps = df.select(TextAnalysis.fingerprint(col(textCol)).as("fingerprint"))
-      .distinct()
-    graft.core.Tables.writeBucketed(fps, table, path,
-      keys = Seq("fingerprint"), buckets = buckets)
-  }
-
-  /** Incremental-ingest dedup against a [[writeDedupLedger]] ledger:
-    * first-seen-wins WITHIN the batch (two-phase min-id, as [[exact]]),
-    * then a left-anti join against the ledger drops everything history
-    * has already accepted; survivors' fingerprints are appended to the
-    * ledger (same bucket spec — Spark validates on append) and the
-    * surviving rows are returned WITH their `fingerprint` column.
-    *
-    * The result is materialized with LINEAGE CUT (`localCheckpoint`)
-    * before the ledger append: a table insert actively REFRESHES every
-    * cached plan that references the table (persist() is not enough),
-    * so any frame still carrying the anti-join would re-evaluate
-    * against the grown ledger and come back empty. After the
-    * checkpoint the result no longer references the table at all.
-    */
-  def dedupAgainstLedger(batch: DataFrame, idCol: String, textCol: String,
-                         table: String): DataFrame = {
-    val spark = batch.sparkSession
-    val withFp = batch.withColumn("fingerprint",
-      TextAnalysis.fingerprint(col(textCol)))
-    val first = withFp.groupBy(col("fingerprint").as("__fp"))
-      .agg(min(col(idCol)).as("__canon"))
-    val inBatchCanon = withFp.join(first,
-        col("fingerprint") === col("__fp") && col(idCol) === col("__canon"))
-      .drop("__fp", "__canon")
-    val fresh = inBatchCanon
-      .join(spark.table(table), Seq("fingerprint"), "left_anti")
-      .localCheckpoint(true)
-    // append must match the ledger's existing bucket layout; read it
-    // from the catalog's typed metadata (not DESCRIBE text, whose row
-    // labels have shifted across Spark versions)
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val buckets = spark.sessionState.catalog.getTableMetadata(ident)
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(sys.error(s"ledger table $table has no bucket spec — " +
-        "create it with writeDedupLedger"))
-    fresh.select("fingerprint")
-      .write.mode("append")
-      .bucketBy(buckets, "fingerprint")
-      .sortBy("fingerprint")
-      .format("parquet")
-      .saveAsTable(table)
-    fresh
-  }
-
-  /** Compact a dedup ledger in place (catalog-wise): every
-    * [[dedupAgainstLedger]] append adds one small file-set per bucket,
-    * so after N daily ingests each bucketed scan opens N files per
-    * bucket and planning degrades. This rewrites the ledger into
-    * `newPath` PRESERVING the bucket spec — the rewrite is
-    * repartitioned by the bucket columns with the bucket count, which
-    * is the same Murmur3 `pmod` mapping bucketed writes use, so each
-    * task holds exactly one bucket's rows and emits one file per
-    * bucket — then swaps the staged table in under the original name
-    * (drop + rename; the old files stay at the old path for the caller
-    * to retire). Post-compaction plans are identical: history side
-    * still bucketed, still Exchange-free (spec-pinned).
-    * Returns (filesBefore, filesAfter).
-    */
-  def compactLedger(spark: SparkSession, table: String,
-                    newPath: String): (Int, Int) = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val spec = meta.bucketSpec.getOrElse(sys.error(
-      s"ledger table $table has no bucket spec — not a dedup ledger"))
-    def countFiles(p: org.apache.hadoop.fs.Path): Int = {
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.listStatus(p).count(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    }
-    val oldPath = new org.apache.hadoop.fs.Path(meta.location)
-    require(new org.apache.hadoop.fs.Path(newPath).toUri.normalize() !=
-      oldPath.toUri.normalize(),
-      s"compactLedger cannot write in place ($newPath == ledger location); " +
-        "stage to a sibling directory")
-    val before = countFiles(oldPath)
-    val keyCols = spec.bucketColumnNames
-    // read the ledger as a PLAIN parquet directory, not via the catalog:
-    // a bucketed-table read already satisfies the hash distribution, so
-    // a catalog read would elide the repartition shuffle and leave one
-    // task per file-split (files per bucket = read tasks, not 1); the
-    // plain read keeps the shuffle real, so each task holds exactly one
-    // bucket's rows and the write emits one file per bucket. It also
-    // leaves no catalog reference in the staged frame's lineage, so the
-    // drop+rename swap below cannot invalidate it mid-write.
-    val rows = spark.read.parquet(oldPath.toString)
-      .repartition(spec.numBuckets, keyCols.map(col): _*)
-    val staged = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $staged")
-    graft.core.Tables.writeBucketed(rows, staged, newPath,
-      keys = keyCols, buckets = spec.numBuckets,
-      sortCols = spec.sortColumnNames)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $staged RENAME TO $table")
-    (before, countFiles(new org.apache.hadoop.fs.Path(newPath)))
   }
 
   /** Exact n-gram-Jaccard near-dup pairs via an inverted shingle index:
@@ -877,48 +763,14 @@ object Dedup {
         round(col("n_contaminated").cast("double") / col("n_shingles").cast("double"), 6))
   }
 
-  /** [[contaminationCheck]]'s very-large-eval-set path: the distinct
-    * eval shingles go into a Bloom filter (`DataFrameStatFunctions
-    * .bloomFilter` — built distributed, merged on the driver) instead of
-    * a broadcast hash set. At an eval set of 10^9 shingles the exact
-    * set is tens of GB — undistributable — while a 1%-FPP Bloom filter
-    * is ~1.2 GB and any-FPP sizing is caller-controlled. Probe stays
-    * map-side (`might_contain` in a Column filter), the only shuffle is
-    * still the final per-doc groupBy.
-    *
-    * One-sided error, the safe direction for decontamination: NO false
-    * negatives (a truly contaminated shingle always counts), and false
-    * positives only INFLATE `n_contaminated` by ≤ fpp of clean
-    * shingles — a conservative over-flag, never a missed leak. Use the
-    * exact [[contaminationCheck]] when counts feed an oracle or report.
-    */
-  def contaminationCheckBloom(corpus: DataFrame, evalSet: DataFrame,
-                              idCol: String, textCol: String, k: Int = 3,
-                              expectedShingles: Long = 1000000L,
-                              fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
-    val evalSh = evalSet
-      .select(explode(shingles(col(textCol), k)).as("shingle")).distinct()
-    val bloom = evalSh.stat.bloomFilter("shingle", expectedShingles, fpp)
-    val hit = exprCol(BloomContainsExpr(colExpr(col("shingle")), bloom))
-    corpus
-      .select(col(idCol).as("id"), explode(shingles(col(textCol), k)).as("shingle"))
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_shingles"),
-        sum(when(hit, 1L).otherwise(0L)).as("n_contaminated"))
-      .withColumn("contamination",
-        round(col("n_contaminated").cast("double") / col("n_shingles").cast("double"), 6))
-  }
-
   // ---- SimHash ----------------------------------------------------------
 
   /** Relational 32-bit SimHash (Charikar 2002): explode shingles, hash
     * each once, fold the 32 bit-votes as plain long-sum aggregates in one
     * groupBy — one shuffle by doc id with map-side partial aggregation,
-    * fully codegen'd. This is the scale path: the Column variant
-    * [[simhash32]] re-walks a 32-long vote array per shingle in
-    * interpreted lambda eval (round-1 bench: 23 s vs this form's shape,
-    * which matches minhashBands at ~2.5 s).
+    * fully codegen'd. (A Column-expression fold over a 32-long vote
+    * array runs its lambdas interpreted: 23 s against this shape's
+    * ~2.5 s on the round-1 bench.)
     *
     * Docs with fewer than k words have no shingles and are absent from
     * the output (same semantics as [[minhashBands]]).
@@ -935,30 +787,5 @@ object Dedup {
       .map(i => when(col(s"s$i") > 0, lit(1L << i)).otherwise(lit(0L)))
       .reduce(_ + _)
     votes.select(col("id"), value.cast("long").as("simhash"))
-  }
-
-  /** 32-bit SimHash over shingle base-hashes, as a single Column
-    * expression (composable in a select; prefer the relational
-    * [[simhash]] for corpus-scale runs — lambda folds evaluate
-    * interpreted, outside whole-stage codegen): bit i of the result is
-    * set when Σ_shingles (2·bit_i(h) − 1) > 0. Hamming-close simhashes ≈
-    * near-dup texts.
-    *
-    * Single pass: one `aggregate` folds every shingle into a 32-long
-    * vote vector (32 separate aggregates would rebuild the md5'd shingle
-    * array once per bit). Bit i of h is floor(h / 2^i) mod 2 — exact for
-    * h < 2^32 in doubles — because `shiftright` only takes literal shift
-    * amounts, not the lambda's index column.
-    */
-  def simhash32(text: Column): Column = {
-    val hs = transform(shingles(text), s => baseHash(s))
-    def bitOf(h: Column, i: Column): Column =
-      pmod(floor(h.cast("double") / pow(lit(2.0), i.cast("double"))).cast("long"), lit(2L))
-    val votes = aggregate(hs, array_repeat(lit(0L), 32),
-      (acc, h) => transform(acc, (v, i) => v + bitOf(h, i) * 2 - 1))
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(31)),
-        (v, i) => when(v > 0, pow(lit(2.0), i.cast("double")).cast("long")).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
   }
 }

@@ -321,42 +321,6 @@ case class CosineExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Membership probe against a pre-built Bloom filter, as a native
-  * expression (no UDF): the filter rides the serialized expression to
-  * executors (same plan-reference mechanism as [[NearestCentroidExpr]]'s
-  * centroid matrix) and the probe is one compiled call per row —
-  * map-side, codegen-friendly, zero shuffle. Backs
-  * `Dedup.contaminationCheckBloom`'s very-large-eval-set path.
-  */
-case class BloomContainsExpr(child: Expression,
-                             bloom: org.apache.spark.util.sketch.BloomFilter)
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_contains requires string, got ${child.dataType.sql}")
-
-  def contains(s: org.apache.spark.unsafe.types.UTF8String): Boolean =
-    bloom.mightContainBinary(s.getBytes)
-
-  override protected def nullSafeEval(input: Any): Any =
-    contains(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("graftBloom", this,
-      classOf[BloomContainsExpr].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.contains($c);")
-  }
-
-  override def prettyName: String = "bloom_contains"
-
-  override protected def withNewChildInternal(newChild: Expression): BloomContainsExpr =
-    copy(child = newChild)
-}
-
 /** Distinct k-word shingles of a whitespace-normalized text, as one
   * compiled pass (split → sliding join → first-occurrence dedup). The
   * Column-algebra form (k aligned slices zip_with-concatenated, then

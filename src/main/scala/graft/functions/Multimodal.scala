@@ -87,20 +87,6 @@ object Multimodal {
     }
   }
 
-  /** Real image codec over `javax.imageio` (JPEG/PNG/GIF/BMP — whatever
-    * the JRE's registered readers decode): dimensions and features come
-    * from actual pixel data, resize is an area-averaged rescale
-    * re-encoded as PNG, frames degenerate to 1 (stills). Deterministic:
-    * decode → `BufferedImage` pixel access → integer arithmetic, no
-    * timestamps or platform color management in the outputs. The 8-dim
-    * feature is [mean R, G, B, luma, normalized w, h, aspect, edge
-    * energy] — enough signal for the near-dup/embedding operators to
-    * compose against real images.
-    *
-    * This codec and [[StubMediaCodec]] implement the same [[MediaCodec]]
-    * trait; the mm_* oracle queries keep the stub (byte-arithmetic is
-    * SQL-mirrorable, real decoding is not), production wires this one.
-    */
   /** ImageIO's stream wrappers default to DISK-backed caches: every
     * read/write through the InputStream/OutputStream entry points
     * creates (and deletes) a temp FILE per image. Every payload in this
@@ -112,109 +98,6 @@ object Multimodal {
     */
   private[graft] def noDiskImageCache(): Unit =
     javax.imageio.ImageIO.setUseCache(false)
-
-  object ImageIoCodec extends MediaCodec {
-    private def read(payload: Array[Byte]): java.awt.image.BufferedImage = {
-      noDiskImageCache()
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-      require(img != null, "undecodable image payload")
-      img
-    }
-
-    override def decode(kind: String, payload: Array[Byte]): Decoded = {
-      val img = read(payload)
-      val (w, h) = (img.getWidth, img.getHeight)
-      var (sr, sg, sb) = (0L, 0L, 0L)
-      var edge = 0L
-      var prevLuma = 0L
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          val (r, g, b) = ((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
-          sr += r; sg += g; sb += b
-          val luma = (299L * r + 587L * g + 114L * b) / 1000L
-          if (x > 0) edge += math.abs(luma - prevLuma)
-          prevLuma = luma
-          x += 1
-        }
-        y += 1
-      }
-      val n = w.toLong * h
-      val checksum = { // content hash of the DECODED pixels, not the container
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val bb = java.nio.ByteBuffer.allocate(24)
-          .putLong(sr).putLong(sg).putLong(sb)
-        md.update(bb.array())
-        md.digest().take(4).map(b => f"${b & 0xff}%02x").mkString
-      }
-      Decoded(width = w, height = h, checksum = checksum,
-        feature = Array(
-          sr.toFloat / n / 255f, sg.toFloat / n / 255f, sb.toFloat / n / 255f,
-          ((299L * sr + 587L * sg + 114L * sb) / 1000L).toFloat / n / 255f,
-          math.min(w / 4096f, 1f), math.min(h / 4096f, 1f),
-          w.toFloat / math.max(h, 1),
-          if (n > w) edge.toFloat / (n - w) / 255f else 0f))
-    }
-
-    override def resize(kind: String, payload: Array[Byte],
-                        targetW: Int, targetH: Int): Array[Byte] = {
-      val src = read(payload)
-      val dst = new java.awt.image.BufferedImage(targetW, targetH,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = dst.createGraphics()
-      try {
-        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(src, 0, 0, targetW, targetH, null)
-      } finally g.dispose()
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(dst, "png", out)
-      out.toByteArray
-    }
-
-    /** Run `f` against the ImageIO reader registered for the payload's
-      * container (GIF gets the JRE's multi-frame GIF reader).
-      */
-    private def withReader[T](payload: Array[Byte])
-                             (f: javax.imageio.ImageReader => T): T = {
-      noDiskImageCache()
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        require(readers.hasNext, "undecodable image payload")
-        val r = readers.next()
-        r.setInput(iis)
-        try f(r) finally r.dispose()
-      } finally iis.close()
-    }
-
-    /** Real frame count: multi-frame containers (animated GIF) report
-      * their sequence length; stills report 1.
-      */
-    override def frameCount(payload: Array[Byte]): Int =
-      withReader(payload)(_.getNumImages(true))
-
-    /** Decode frame `idx` and re-encode it standalone as PNG, so each
-      * emitted frame is independently decodable downstream (a raw GIF
-      * sub-image may be a palette delta against the previous frame).
-      */
-    override def frameAt(payload: Array[Byte], idx: Int): Array[Byte] =
-      withReader(payload) { r =>
-        val n = r.getNumImages(true)
-        require(idx >= 0 && idx < n, s"frame $idx out of ${n} frames")
-        val img = r.read(idx)
-        val rgb = new java.awt.image.BufferedImage(img.getWidth, img.getHeight,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = rgb.createGraphics()
-        try g.drawImage(img, 0, 0, null) finally g.dispose()
-        val out = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(rgb, "png", out)
-        out.toByteArray
-      }
-  }
 
   /** Wrap a text table as fake media payloads (utf-8 bytes) — the
     * stand-in corpus for plumbing tests at any SF.

@@ -154,21 +154,6 @@ object Packing {
         .asInstanceOf[Column]).getField("part")).as("tokens"))
   }
 
-  /** Packing-run summary: total tokens, number of sequences produced,
-    * how many documents straddle a boundary, and the tail waste (tokens
-    * of padding in the final partial sequence) — the numbers a pipeline
-    * dashboard reports per packing run. One tiny aggregate over
-    * [[packConcatSplit]]'s output.
-    */
-  def packStats(packed: DataFrame, seqLen: Int): DataFrame =
-    packed.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("n_tokens")).as("total_tokens"),
-      (max(col("seq_last")) + 1).as("n_seqs"),
-      sum(when(col("n_seqs") > 1, 1L).otherwise(0L)).as("n_straddling"),
-      ((max(col("seq_last")) + 1) * seqLen - sum(col("n_tokens")))
-        .as("tail_padding"))
-
   /** Length-grouped batching — the training-loader trick that cuts
     * padding waste: documents of similar token length train together,
     * so a batch's padding is bounded by the within-bucket length

@@ -30,14 +30,6 @@ object Sampling {
   def hashBucket(key: Column, salt: String): Column =
     pmod(Dedup.baseHash(concat(lit(salt), key.cast("string"))), lit(Buckets))
 
-  /** Keep each row with probability `rate`, decided by [[hashBucket]]
-    * of its key — a repeatable Bernoulli sample (same salt+key ⇒ same
-    * decision, independent of partitioning or row order).
-    */
-  def hashSample(df: DataFrame, keyCol: Column, rate: Double,
-                 salt: String = "graft"): DataFrame =
-    df.filter(hashBucket(keyCol, salt) < (rate * Buckets).toLong)
-
   /** Stratified sample: per-stratum keep rates (e.g. language or source
     * mixing weights), defaulting to `defaultRate` for strata not in the
     * map. The stratum column only selects the threshold — membership
@@ -159,7 +151,7 @@ object Sampling {
     * n_s^0.5 (temperature-0.5 upsampling of small domains, the
     * "unigram-smoothed" mixture of multilingual-corpus practice), cap
     * at the stratum's actual mass, and keep each document by the same
-    * repeatable per-key hash as [[hashSample]]. Returns the kept rows
+    * repeatable per-key hash as [[stratifiedSample]]. Returns the kept rows
     * as (key, stratum, n_tokens, rate_micro).
     *
     * Portability is engineered: the ONLY floating-point step is sqrt,

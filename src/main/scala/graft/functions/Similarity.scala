@@ -16,20 +16,10 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Sequential-fold dot product in double precision. The fold order is
-    * fixed (element 1..d), so the result is bit-reproducible across
-    * engines (matches a left-associated explicit sum in SQL).
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine via the native single-loop [[CosineExpr]] — bit-compatible
-    * with `dot(a,b) / (norm(a) * norm(b))` (identical per-accumulator
-    * fold order) but compiled instead of three interpreted lambda folds
-    * per pair.
+  /** Cosine via the native single-loop [[CosineExpr]]: dot(a,b) /
+    * (|a|·|b|) in double precision, each sum folded in element order
+    * 1..d, so the result is bit-reproducible across engines (it matches
+    * a left-associated explicit sum in SQL).
     */
   def cosine(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(CosineExpr(
@@ -41,8 +31,8 @@ object Similarity {
     * at 1M vectors each query already scores a million pairs, and
     * nothing else stops someone pointing them at a cluster-scale
     * corpus where the persisted-index family is the only sane path.
-    * The guard is the [[ivfTopK]] 65536-centroid pattern: a loud,
-    * named failure instead of a silent quadratic wall.
+    * The guard is a loud, named failure instead of a silent quadratic
+    * wall.
     */
   val MaxBruteCorpus: Long = 1000000L
 
@@ -386,42 +376,15 @@ object Similarity {
     */
   def writePqIndex(corpus: DataFrame, idCol: String, embCol: String,
                    path: String, m: Int = 8, subDim: Int = 8,
-                   nCentroids: Int = 8, iters: Int = 2,
-                   trainOn: Option[DataFrame] = None): Unit = {
+                   nCentroids: Int = 8, iters: Int = 2): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // trainOn: at corpus scale codebooks train on a (deterministic)
-    // sample while ALL vectors are encoded — k-means over 100 TB of
-    // floats buys no extra codebook quality over a few million rows
-    val cbs = trainPqCodebooks(trainOn.getOrElse(corpus), idCol, embCol,
-      m, subDim, nCentroids, iters)
+    val cbs = trainPqCodebooks(corpus, idCol, embCol, m, subDim, nCentroids, iters)
     Seq((m, subDim, cbs.map(_.toSeq).toSeq)).toDF("m", "sub_dim", "codebooks")
       .write.mode("overwrite").parquet(s"$path/codebooks")
     corpus.select(col(idCol).as("match_id"),
         pqEncode(col(embCol), cbs, subDim).as("codes"))
       .write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  /** Encode-only append to a persisted PQ index ([[writePqIndex]]):
-    * the stored codebooks are FROZEN — new vectors are encoded with
-    * them and their codes land as new parquet files under
-    * `<path>/codes`. This is the standard serving-index ingest shape
-    * (daily vector arrivals never retrain or re-encode the existing
-    * corpus); an index built on half a corpus and appended with the
-    * rest is byte-identical to one built from scratch over everything
-    * with the same codebooks (`trainOn` = that same half).
-    */
-  def appendToPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                      newRows: DataFrame, idCol: String, embCol: String): Unit = {
-    val meta = spark.read.parquet(s"$path/codebooks").collect()(0)
-    val subDim = meta.getInt(meta.fieldIndex("sub_dim"))
-    val cbs = meta.getSeq[scala.collection.Seq[Double]](meta.fieldIndex("codebooks"))
-      .map(_.toArray).toArray
-    require(cbs.length == meta.getInt(meta.fieldIndex("m")),
-      s"$path: codebook count ${cbs.length} != stored m — corrupt index meta")
-    newRows.select(col(idCol).as("match_id"),
-        pqEncode(col(embCol), cbs, subDim).as("codes"))
-      .write.mode("append").parquet(s"$path/codes")
   }
 
   /** Search a persisted PQ index ([[writePqIndex]]): reconstruct each
@@ -538,9 +501,7 @@ object Similarity {
       math.max(8L, java.lang.Long.highestOneBit(s))).toInt
   }
 
-  /** One-shard width ceiling for [[autoCoarseLists]] — the same 65536
-    * bound [[ivfTopK]]'s driver-collect guard uses.
-    */
+  /** One-shard width ceiling for [[autoCoarseLists]]. */
   val MaxCoarseLists: Int = 65536
 
   /** Driver plan-literal budget per shard, in centroid CELLS (k·dim
@@ -604,26 +565,21 @@ object Similarity {
   def writeIvfPqIndex(corpus: DataFrame, idCol: String, embCol: String,
                       path: String, nCoarse: Int = 0, coarseIters: Int = 2,
                       m: Int = 8, subDim: Int = 8, nCentroids: Int = 8,
-                      pqIters: Int = 2, dim: Int = 64,
-                      trainOn: Option[DataFrame] = None): Unit = {
+                      pqIters: Int = 2, dim: Int = 64): Unit = {
     import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
     val spark = corpus.sparkSession
     import spark.implicits._
-    // coarse centroids + residual codebooks train on trainOn (or the
-    // whole corpus); every corpus vector is then assigned + encoded.
-    // Geometry derives from the FULL corpus count (not the training
-    // sample) — list sizing answers "how many vectors per list", which
-    // is a property of what gets encoded, not of what trains.
+    // coarse centroids + residual codebooks train on the corpus; every
+    // corpus vector is then assigned + encoded
     val nC0 = resolveCoarse(nCoarse, corpus)
-    val trainDf = trainOn.getOrElse(corpus)
-    val coarse = trainIvfCentroids(trainDf, idCol, embCol, nC0, coarseIters, dim)
+    val coarse = trainIvfCentroids(corpus, idCol, embCol, nC0, coarseIters, dim)
     val coarseLit = typedLit(coarse.toSeq)
     def withResid(df: DataFrame): DataFrame = df
       .withColumn("coarse_c",
         exprCol(NearestCentroidExpr(colExpr(col(embCol)), coarse, dim)))
       .withColumn("resid", zip_with(col(embCol).cast("array<double>"),
         slice(coarseLit, col("coarse_c") * dim + 1, lit(dim)), (x, c) => x - c))
-    val cbs = trainPqCodebooks(withResid(trainDf).select(col(idCol), col("resid")),
+    val cbs = trainPqCodebooks(withResid(corpus).select(col(idCol), col("resid")),
       idCol, "resid", m, subDim, nCentroids, pqIters)
     Seq((dim, m, subDim, coarse.toSeq, cbs.map(_.toSeq).toSeq))
       .toDF("dim", "m", "sub_dim", "coarse", "codebooks")
@@ -631,36 +587,6 @@ object Similarity {
     withResid(corpus).select(col(idCol).as("match_id"), col("coarse_c"),
         pqEncode(col("resid"), cbs, subDim).as("codes"))
       .write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  /** Encode-only append to a persisted IVF-PQ index
-    * ([[writeIvfPqIndex]]): coarse centroids and residual codebooks are
-    * FROZEN — new vectors are assigned to their nearest coarse list,
-    * residual-encoded, and appended as new parquet files under
-    * `<path>/codes`. Same contract as [[appendToPqIndex]].
-    */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                         newRows: DataFrame, idCol: String, embCol: String): Unit = {
-    import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
-    val meta = spark.read.parquet(s"$path/meta").collect()(0)
-    val dim = meta.getInt(meta.fieldIndex("dim"))
-    val subDim = meta.getInt(meta.fieldIndex("sub_dim"))
-    val coarse = meta.getSeq[Double](meta.fieldIndex("coarse")).toArray
-    val cbs = meta.getSeq[scala.collection.Seq[Double]](meta.fieldIndex("codebooks"))
-      .map(_.toArray).toArray
-    require(cbs.length == meta.getInt(meta.fieldIndex("m")) &&
-      coarse.length % dim == 0,
-      s"$path: inconsistent index meta (codebooks=${cbs.length}, " +
-        s"coarse=${coarse.length}, dim=$dim)")
-    val coarseLit = typedLit(coarse.toSeq)
-    newRows
-      .withColumn("coarse_c",
-        exprCol(NearestCentroidExpr(colExpr(col(embCol)), coarse, dim)))
-      .withColumn("resid", zip_with(col(embCol).cast("array<double>"),
-        slice(coarseLit, col("coarse_c") * dim + 1, lit(dim)), (x, c) => x - c))
-      .select(col(idCol).as("match_id"), col("coarse_c"),
-        pqEncode(col("resid"), cbs, subDim).as("codes"))
-      .write.mode("append").parquet(s"$path/codes")
   }
 
   /** Index-health audit over a persisted IVF-PQ index
@@ -1132,49 +1058,17 @@ object Similarity {
   }
 
   /** IVF-style ANN, the other classic scale path next to LSH: a coarse
-    * quantizer assigns every corpus vector to its nearest centroid
-    * (map-side native expression over a plan-reference centroid matrix —
-    * the 100 TB corpus never shuffles to find its list); each query
-    * probes only its `nProbe` nearest centroid lists, then exact cosine
-    * re-ranks the candidates.
-    *
-    * Centroid choice is deterministic (every `centroidEvery`-th vector,
-    * ordered by id) so results are oracle-reproducible; a deployment
-    * would swap in k-means centroids behind the same quantizer.
-    *
-    * SCALE NOTE: the centroid count grows O(corpus / centroidEvery) and
-    * the matrix is collected to the driver — this variant is the exact
-    * reference quantizer for bounded centroid sets, guarded below.
-    * [[ivfTopKTrained]] (fixed `nCentroids`) is the production path: its
-    * driver state is k·dim doubles regardless of corpus size.
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              embCol: String, k: Int, centroidEvery: Long = 100,
-              nProbe: Int = 2, dim: Int = 64): DataFrame = {
-    val centDf = corpus.filter(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"), col(embCol).as("cent_emb"))
-    val nCent = centDf.count()
-    require(nCent <= 65536,
-      s"ivfTopK would collect $nCent centroids (> 65536) to the driver; " +
-        "raise centroidEvery or use ivfTopKTrained (fixed k) at this scale")
-    val centRows = centDf.orderBy(col("cent_id")).collect()
-    val centIds: Seq[Long] = centRows.map(_.getLong(0)).toSeq
-    val cents: Array[Double] = centRows.flatMap(
-      _.getSeq[Any](1).map {
-        case f: Float  => f.toDouble
-        case d: Double => d
-        case x => x.asInstanceOf[Number].doubleValue
-      }).toArray
-    ivfSearch(corpus, queries, idCol, embCol, k, centIds, cents, centDf, nProbe, dim)
-  }
-
-  /** IVF with a TRAINED coarse quantizer ([[trainIvfCentroids]]) instead
-    * of the deterministic every-Nth seed centroids — same search path,
-    * tighter lists. Centroid ids are the cluster indices 0..k-1.
+    * quantizer ([[trainIvfCentroids]], cluster ids 0..k-1) assigns every
+    * corpus vector to its nearest centroid (map-side native expression
+    * over a plan-reference centroid matrix — the 100 TB corpus never
+    * shuffles to find its list); each query probes only its `nProbe`
+    * nearest centroid lists, then exact cosine re-ranks the candidates.
+    * Driver state is k·dim doubles regardless of corpus size.
     */
   def ivfTopKTrained(corpus: DataFrame, queries: DataFrame, idCol: String,
                      embCol: String, k: Int, nCentroids: Int, iters: Int = 5,
                      nProbe: Int = 2, dim: Int = 64): DataFrame = {
+    import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = trainIvfCentroids(corpus, idCol, embCol, nCentroids, iters, dim)
@@ -1183,17 +1077,6 @@ object Similarity {
     val centDf = centIds.map(c =>
       (c, cents.slice(c.toInt * dim, (c.toInt + 1) * dim).toSeq))
       .toDF("cent_id", "cent_emb")
-    ivfSearch(corpus, queries, idCol, embCol, k, centIds, cents, centDf, nProbe, dim)
-  }
-
-  /** Shared IVF search: map-side coarse assignment, nProbe probe lists
-    * per query, exact cosine re-rank.
-    */
-  private def ivfSearch(corpus: DataFrame, queries: DataFrame, idCol: String,
-                        embCol: String, k: Int, centIds: Seq[Long],
-                        cents: Array[Double], centDf: DataFrame,
-                        nProbe: Int, dim: Int): DataFrame = {
-    import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
     // map-side coarse assignment: centroid INDEX -> centroid id
     val nearestIdx = exprCol(NearestCentroidExpr(colExpr(col(embCol)), cents, dim))
     val assigned = corpus.select(col(idCol).as("match_id"), col(embCol).as("c_emb"),

@@ -543,9 +543,9 @@ object TextAnalysis {
     *
     * Scale shape: benchmark shingle fingerprints are distinct-reduced
     * (partial agg) and broadcast — eval sets are small next to the
-    * corpus — so the cut is a map-side left-anti; for a huge eval set
-    * swap in a Bloom filter exactly as [[Dedup.contaminationCheckBloom]]
-    * does. The corpus side stays one explode + the reassembly groupBy.
+    * corpus — so the cut is a map-side left-anti; a huge eval set would
+    * swap in a Bloom-filter probe. The corpus side stays one explode +
+    * the reassembly groupBy.
     */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                     idCol: String, textCol: String,

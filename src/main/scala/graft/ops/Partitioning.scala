@@ -9,34 +9,16 @@ import org.apache.spark.sql.functions._
   * The observation table's natural keys are (datastream_id, time). At
   * production scale (~60 streams ÷ 1000 executors) a plain
   * `partitionBy(datastream_id)` leaves most executors idle and any hot
-  * stream unsplittable — these helpers encode the two standard fixes:
-  *
-  *  - **range co-partitioning** on (stream, time): window kernels only
-  *    need *time-local* order per stream, so time-range chunks with an
-  *    overlap margin parallelize a single stream arbitrarily;
-  *  - **salted aggregation**: two-phase groupBy for skewed keys.
+  * stream unsplittable. The standard fix is **range co-partitioning**
+  * on (stream, time): window kernels only need *time-local* order per
+  * stream, so time-range chunks with an overlap margin parallelize a
+  * single stream arbitrarily.
   *
   * AQE (`spark.sql.adaptive.enabled`, on in [[graft.core.Sessions]])
   * already splits skewed *join* partitions at runtime; these helpers
-  * cover aggregation and window skew, which AQE does not re-balance.
+  * cover window skew, which AQE does not re-balance.
   */
 object Partitioning {
-
-  /** Two-phase (salted) aggregation: `df.groupBy(keys).agg(sums)` where
-    * one key dominates. Phase 1 aggregates (key, salt) partial groups;
-    * phase 2 merges per key. Only algebraic aggregates (sum/count/min/
-    * max) compose this way — which is exactly the flag-histogram /
-    * count-profile shape the QC pipeline aggregates at scale.
-    */
-  def saltedSumCount(df: DataFrame, keys: Seq[String], valueCol: String,
-                     saltBuckets: Int = 32): DataFrame = {
-    val salted = df.withColumn("__salt", pmod(spark_partition_id(), lit(saltBuckets)))
-    val partial = salted.groupBy((keys :+ "__salt").map(col): _*)
-      .agg(sum(col(valueCol)).as("__psum"), count(lit(1)).as("__pcnt"))
-    partial.groupBy(keys.map(col): _*)
-      .agg(sum(col("__psum")).as(s"sum_$valueCol"),
-        sum(col("__pcnt")).as("n"))
-  }
 
   /** Spread a narrow-scan frame across the session's cores BEFORE heavy
     * map-side compute (tokenize/hash/explode chains), adaptively: a
@@ -48,15 +30,12 @@ object Partitioning {
     * as cores (the 100 TB shape: thousands of 128 MB splits), this is
     * the IDENTITY — no round-robin exchange of payload bytes is ever
     * paid at scale (guide §8: never shuffle heavy payloads without
-    * need). The probe reads the physical plan's partition count — no
-    * job is submitted.
+    * need). The probe reads the partition count of the frame's RDD: on
+    * an exchange-free input (a scan plus narrow operators) that comes
+    * from the physical plan and no job is submitted; an input that holds
+    * an exchange runs its upstream stages under AQE to learn the count.
     */
   def spreadScan(df: DataFrame): DataFrame = {
-    // streaming frames pass through untouched: the split-count probe
-    // needs a batch physical plan, and micro-batch sources are already
-    // sized by their trigger (the operators sharing this path have
-    // streaming twins — stream substring windows rides slidingWindows)
-    if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     val parts = df.rdd.getNumPartitions
     if (parts < target) df.repartition(target) else df

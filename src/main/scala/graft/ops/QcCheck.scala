@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.Flags
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The uniform check combinator (reference `QCFlagConfig`, constructor
@@ -48,19 +48,6 @@ final case class QcCheck(
 }
 
 object QcCheck {
-
-  /** Per-check flagged-row counts in ONE aggregate pass
-    * (reference `update_flag_history_series` audit, `src/main.py:544-870`,
-    * which recounts per check — here a single `sum(cast(bool))` job).
-    */
-  def flagHistory(df: DataFrame, checks: Seq[QcCheck]): Map[String, Long] = {
-    if (checks.isEmpty) return Map.empty
-    val aggs = checks.map(c => sum(c.verdict.cast("long")).as(c.label))
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    checks.zipWithIndex.map { case (c, i) =>
-      c.label -> (if (row.isNullAt(i)) 0L else row.getLong(i))
-    }.toMap
-  }
 
   /** Generic bounds check (reference `get_bool_out_of_range`,
     * `src/main.py:723-744`, pinned `tests/test_qc.py:658-668`): value

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.core.{DependentConf, Flags, Obs, StabilizationConf}
+import graft.core.{DependentConf, Flags, StabilizationConf}
 import graft.ops.Geo
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -56,35 +56,6 @@ object ConfigLoader {
         (n.toDouble * mult).round
       case other => throw new IllegalArgumentException(s"bad duration: '$other'")
     }
-  }
-
-  def parseDurationSec(s: String): Long = math.round(parseDurationUs(s) / 1e6)
-
-  /** O5 — config-template generation from a thing's datastream catalog
-    * (reference `src/main.py:77-143`): derive a starting config document
-    * from the observed data — per-stream range bounds widened from the
-    * observed min/max, global z-score defaults — ready for hand-tuning.
-    */
-  def generateTemplate(obs: org.apache.spark.sql.DataFrame): String = {
-    import org.apache.spark.sql.functions._
-    val stats = obs.groupBy(col(Obs.DatastreamId))
-      .agg(min(col(Obs.Result)).as("lo"), max(col(Obs.Result)).as("hi"))
-      .orderBy(col(Obs.DatastreamId))
-      .collect()
-    val entries = stats.map { r =>
-      val ds = r.getLong(0)
-      val lo = math.floor(r.getDouble(1))
-      val hi = math.ceil(r.getDouble(2))
-      s"""    "$ds": {"range": {"min": $lo, "max": $hi}}"""
-    }.mkString(",\n")
-    s"""{
-       |  "QC": {
-       |$entries
-       |  },
-       |  "QC_global": {"zscore": {"min": -3, "max": 3, "time_window": "60min"}},
-       |  "QC_dependent": [],
-       |  "QC_stabilization": []
-       |}""".stripMargin
   }
 
   /** Hydra/omegaconf-style env resolvers (reference `conf/config.yaml:24-25`

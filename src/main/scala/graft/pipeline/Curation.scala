@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.functions.{Bpe, Dedup, TextAnalysis}
+import graft.functions.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -69,48 +69,6 @@ object Curation {
     val survivors = TextAnalysis.piiScrubOnto(scored, text)
       .filter(col("n_pii") <= maxPii)
     survivors.select(df.columns.map(col).toIndexedSeq: _*)
-  }
-
-  /** The whole prepare-training-shards flow as one call: curated corpus
-    * ([[curatedCorpus]]) → concat-and-split packing → fixed-`seqLen`
-    * token sequences, written as a bucketed-at-rest table keyed by
-    * `shard` (= seq_id / seqsPerShard) and sorted by (shard, seq_id) —
-    * so a trainer's "read shard k" is a bucket-pruned scan in sequence
-    * order with no shuffle and no sort at read time. Tokenization:
-    * whitespace words by default — the same split the curation gates
-    * count, so the packed layout and the gates agree on token
-    * boundaries; pass `bpeVocab` to emit SUBWORD TOKEN IDS instead
-    * ([[Bpe.encode]] greedy longest-match, `array<int>` sequences) —
-    * the shard table then holds trainable integer ids, and the packing
-    * offsets count BPE tokens rather than words (the gates still count
-    * words: quality thresholds are calibrated on word statistics).
-    * Returns the sequence count (the one number an orchestrator needs
-    * to size the training run).
-    */
-  def writeTrainingShards(df: DataFrame, idCol: String, textCol: String,
-                          outTable: String, outPath: String,
-                          seqLen: Int = 512, nBuckets: Int = 32,
-                          seqsPerShard: Long = 1024L, tableBuckets: Int = 32,
-                          minQualityMicro: Long = 400000L,
-                          maxPii: Long = 0L,
-                          bpeVocab: Option[Bpe.Vocab] = None): Long = {
-    val corpus = curatedCorpus(df, idCol, textCol, minQualityMicro, maxPii)
-    val tokens = bpeVocab match {
-      case Some(v) => Bpe.encode(TextAnalysis.normalized(col(textCol)), v)
-      case None => TextAnalysis.wsTokens(col(textCol))
-    }
-    // the sequence count rides the write itself (observed metric
-    // harvested from the write job) — a count() against the written
-    // table would re-scan the whole shard table for one number
-    val obs = org.apache.spark.sql.Observation()
-    val seqs = graft.functions.Packing.packSequenceTokens(
-        corpus, col(idCol), tokens, seqLen, nBuckets)
-      .withColumn("shard", (col("seq_id") / lit(seqsPerShard)).cast("long"))
-      .observe(obs, count(lit(1)).as("n_seqs"))
-    graft.core.Tables.writeBucketed(seqs, outTable, outPath,
-      keys = Seq("shard"), buckets = tableBuckets,
-      sortCols = Seq("shard", "seq_id"))
-    obs.get("n_seqs").asInstanceOf[Long]
   }
 
   /** The CENTURY CAPSTONE: the full production curation chain composed
@@ -258,45 +216,4 @@ object Curation {
           (acc.getField("i") + lit(1L)).as("i")),
         acc => acc.getField("s")).as("hash_possum"))
   }
-
-  /** Streaming curation — the ingest-time form: all quality gates are
-    * stateless Columns so they run map-side on the stream unchanged;
-    * exact dedup becomes first-seen-wins on the fingerprint
-    * (`dropDuplicates` keyed streaming state — same choice as
-    * [[graft.streaming.StreamingDedup]]; the batch form's min-id
-    * canonical coincides with first-seen when arrival follows id
-    * order). Emits only the SURVIVING documents — a stream cannot
-    * retract a duplicate row it already emitted, so the streaming
-    * contract is "the curated corpus", not per-doc verdicts.
-    */
-  def curateStream(df: DataFrame, idCol: String, textCol: String,
-                   minQualityMicro: Long = 400000L,
-                   maxPii: Long = 0L): DataFrame = {
-    val text: Column = col(textCol)
-    val gated = TextAnalysis.gopherFilterOnto(
-      df.select(col(idCol).as("doc_id"), text.as("text")), col("text"))
-      .withColumnRenamed("keep", "gopher_ok")
-    val scored = TextAnalysis.qualityScoreOnto(gated, "__q", col("text"))
-      .withColumn("quality_ok",
-        (col("__q").cast("decimal(25,6)") * lit(1000000)).cast("long")
-          >= minQualityMicro)
-    val pii = TextAnalysis.piiScrubOnto(scored, col("text"))
-      .withColumn("pii_ok", col("n_pii") <= maxPii)
-    pii.filter(col("gopher_ok") && col("quality_ok") && col("pii_ok"))
-      .withColumn("fingerprint", TextAnalysis.fingerprint(col("text")))
-      .dropDuplicates("fingerprint")
-      .select(col("doc_id"), col("text"))
-  }
-
-  /** Per-gate kill counts + survivor count — the dashboard rollup a
-    * curation run reports (one tiny aggregate).
-    */
-  def gateStats(curated: DataFrame): DataFrame =
-    curated.agg(
-      count(lit(1)).as("n_docs"),
-      sum(when(!col("dedup_ok"), 1L).otherwise(0L)).as("killed_dedup"),
-      sum(when(!col("gopher_ok"), 1L).otherwise(0L)).as("killed_gopher"),
-      sum(when(!col("quality_ok"), 1L).otherwise(0L)).as("killed_quality"),
-      sum(when(!col("pii_ok"), 1L).otherwise(0L)).as("killed_pii"),
-      sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"))
 }

@@ -2101,8 +2101,8 @@ object QueriesText {
               |GROUP BY 1""".stripMargin)),
 
     // BPE ids through concat-and-split packing, end to end: the
-    // trainable-shard integration (what writeTrainingShards(bpeVocab=…)
-    // lands) reduced to per-sequence order-pinned checksums. The oracle
+    // trainable-shard integration (BPE ids packed into fixed-length
+    // sequences) reduced to per-sequence order-pinned checksums. The oracle
     // composes the t_bpe_encode recursive-CTE encoder with the
     // t_seq_emit layout CTEs (same two-phase prefix sum, n_tokens now
     // BPE counts) and re-derives every sequence's contents from the

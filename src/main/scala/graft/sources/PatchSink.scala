@@ -33,17 +33,6 @@ object PatchSink {
   private def batches(rows: Iterator[Row], batchSize: Int): Iterator[Seq[(Long, Int)]] =
     rows.map(r => (r.getLong(0), r.getInt(1))).grouped(batchSize)
 
-  /** S4 — transport-pluggable batch sink: `send` is called once per batch
-    * per partition, one call after another on the task's thread (a
-    * collector in tests; [[httpBatchSink]] is the live transport).
-    * Returns nothing — counts come from the driver-side flag histogram,
-    * not the sink.
-    */
-  def foreachBatchSink(flagged: DataFrame, batchSize: Int)(send: Seq[(Long, Int)] => Unit): Unit =
-    patchBodies(flagged).foreachPartition { (rows: Iterator[Row]) =>
-      batches(rows, batchSize).foreach(send)
-    }
-
   /** One OData JSON-batch body (FROST `$batch` shape): `batchSize` PATCH
     * sub-requests keyed Observations(id).
     */

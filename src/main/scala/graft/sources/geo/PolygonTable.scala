@@ -68,13 +68,6 @@ object PolygonTable {
     fromRings(df.sparkSession, rows)
   }
 
-  /** Standard PostgreSQL JDBC URL from the reference's connection-config
-    * fields (`/root/reference/conf/config.yaml:79-85`: database, host,
-    * port — user/passphrase travel in the connection properties).
-    */
-  def postgresUrl(host: String, port: Int, database: String): String =
-    s"jdbc:postgresql://$host:$port/$database"
-
   /** Live JDBC transport for the SeaVox polygon source (reference reads
     * the PostGIS `seavox_areas` table directly,
     * `/root/reference/src/main.py:527-533`). `query` must yield one row

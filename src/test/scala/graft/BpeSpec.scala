@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** BPE subword tokenizer: greedy longest-match apply (native
-  * expression), the driver-side merge learner, and the chunking
-  * integration.
+  * expression).
   */
 class BpeSpec extends SparkSpec with Matchers {
   import spark.implicits._
@@ -40,61 +39,6 @@ class BpeSpec extends SparkSpec with Matchers {
     val v = Bpe.Vocab(IndexedSeq("a", "b"))
     enc("axb", v) shouldBe Seq(1, 0, 2)
     enc("xyz", v) shouldBe Seq(0, 0, 0)
-  }
-
-  test("decode inverts encode up to word boundaries; unk renders as marker") {
-    val v = Bpe.Vocab(IndexedSeq("a", "b", "c", "ab"))
-    val df = Seq("ab cab", "axc").toDF("t")
-      .select(Bpe.decode(Bpe.encode(col("t"), v), v).as("d"))
-    df.as[String].collect() shouldBe Array("abcab", "a⁇c")
-  }
-
-  test("learner reproduces the classic merge sequence on a toy corpus") {
-    // corpus word frequencies: hug x10, pug x5, pun x12, bun x4, hugs x5
-    // (the standard BPE walkthrough). Pair counts weighted by frequency:
-    //   (h,u)=15 (u,g)=20 (p,u)=17 (u,n)=16 (b,u)=4 (g,s)=5
-    // merge 1: ug (20). pug loses its (p,u) pair -> counts become
-    //   (h,ug)=15 (p,ug)=5 (p,u)=12 (u,n)=16 (b,u)=4 (ug,s)=5
-    // merge 2: un (16). then (h,ug)=15 (p,ug)=5 (p,un)=12 (b,un)=4
-    // merge 3: hug (15).
-    val corpus = (Seq.fill(10)("hug") ++ Seq.fill(5)("pug") ++
-      Seq.fill(12)("pun") ++ Seq.fill(4)("bun") ++ Seq.fill(5)("hugs"))
-      .toDF("text")
-    val v = Bpe.learn(corpus, "text", nMerges = 3)
-    // alphabet sorted: b g h n p s u
-    v.pieces.take(7) shouldBe IndexedSeq("b", "g", "h", "n", "p", "s", "u")
-    v.pieces.drop(7) shouldBe IndexedSeq("ug", "un", "hug")
-  }
-
-  test("learner is deterministic and encode round-trips corpus words") {
-    val corpus = Seq("the cat sat on the mat", "the cat ran").toDF("text")
-    val v1 = Bpe.learn(corpus, "text", nMerges = 10)
-    val v2 = Bpe.learn(corpus, "text", nMerges = 10)
-    v1 shouldBe v2
-    // every corpus char is in the alphabet, so decode(encode(w)) == w
-    val out = corpus
-      .select(TextAnalysis.normalized(col("text")).as("n"))
-      .select(Bpe.decode(Bpe.encode(col("n"), v1), v1).as("d"), col("n"))
-      .as[(String, String)].collect()
-    out.foreach { case (d, n) => d shouldBe n.replace(" ", "") }
-  }
-
-  test("tokenIdChunks: stride layout over id stream, ids match full encode") {
-    val v = Bpe.demoVocab
-    val df = Seq((1L, "the quick brown fox jumps over the lazy dog again and again"))
-      .toDF("doc_id", "text")
-    val full = df.select(
-      Bpe.encode(TextAnalysis.normalized(col("text")), v).as("ids"))
-      .collect()(0).getSeq[Int](0)
-    val chunks = Bpe.tokenIdChunks(df, "doc_id", "text", v,
-      chunkSize = 8, overlap = 4)
-      .orderBy("chunk_idx")
-      .select("chunk_idx", "ids").as[(Int, Seq[Int])].collect()
-    chunks.head._2 shouldBe full.take(8)
-    chunks(1)._2 shouldBe full.slice(4, 12)
-    // reassembling the stride-4 heads + final tail gives the stream back
-    val rebuilt = chunks.dropRight(1).flatMap(_._2.take(4)) ++ chunks.last._2
-    rebuilt.toSeq shouldBe full
   }
 
   test("encode is map-side: the projection plans with zero Exchanges") {

@@ -1,15 +1,12 @@
 package graft
 
-import graft.core.{DependentConf, Flags, StabilizationConf, Util}
+import graft.core.{DependentConf, Flags, StabilizationConf}
 import graft.ops.Geo
 import graft.pipeline.{ConfigLoader, QcMain}
+import org.scalatest.funsuite.AnyFunSuite
 
-/** S10/A8/G7 — config loading + validation (reference `src/yaml_schema.py`),
-  * combine_dicts (pinned `tests/test_qc.py:973-978`), find_nearest_idx
-  * (pinned `tests/test_other.py:200-212`).
-  */
-class ConfigUtilSpec extends SparkSpec {
-  import spark.implicits._
+/** S10 — config loading + validation (reference `src/yaml_schema.py`). */
+class ConfigUtilSpec extends AnyFunSuite {
 
   private val cfgJson =
     """{
@@ -54,10 +51,10 @@ class ConfigUtilSpec extends SparkSpec {
   }
 
   test("duration grammar: s/min/h with fractions") {
-    assert(ConfigLoader.parseDurationSec("0.5s") == 1L) // rounds
-    assert(ConfigLoader.parseDurationSec("10min") == 600L)
-    assert(ConfigLoader.parseDurationSec("2h") == 7200L)
-    intercept[IllegalArgumentException](ConfigLoader.parseDurationSec("abc"))
+    assert(ConfigLoader.parseDurationUs("0.5s") == 500000L)
+    assert(ConfigLoader.parseDurationUs("10min") == 600000000L)
+    assert(ConfigLoader.parseDurationUs("2h") == 7200000000L)
+    intercept[IllegalArgumentException](ConfigLoader.parseDurationUs("abc"))
     // "10ms" must be 10 milliseconds, not 10 minutes (the old
     // `(s|sec|min|m|h|hour)s?` regex parsed unit 'm' + trailing 's')
     assert(ConfigLoader.parseDurationUs("10ms") == 10000L)
@@ -86,14 +83,6 @@ class ConfigUtilSpec extends SparkSpec {
     assert(loaded.qc.zscoreBounds._2 == 4.0) // overlay wins
     assert(loaded.qc.zscoreBounds._1 == -3.0) // base survives
     assert(loaded.qc.dependents.isEmpty) // arrays replace wholesale
-  }
-
-  test("config template generation round-trips through the loader (O5, src/main.py:77-143)") {
-    val obs = Seq((1L, 5.5), (1L, 19.2), (2L, -3.0), (2L, 7.7))
-      .toDF(graft.core.Obs.DatastreamId, graft.core.Obs.Result)
-    val tpl = ConfigLoader.generateTemplate(obs)
-    val Right(cfg) = ConfigLoader.load(tpl): @unchecked
-    assert(cfg.qc.rangeBounds == Map(1L -> (5.0, 20.0), 2L -> (-3.0, 8.0)))
   }
 
   test("a bad document is Left at its path, never an exception or a silent 0") {
@@ -166,20 +155,5 @@ class ConfigUtilSpec extends SparkSpec {
       dependents = Seq(DependentConf(independentId = 7751L,
         dependentId = 7770L, dtToleranceUs = 500000L,
         secondaryRange = Some((0.0, 25.0))))))
-  }
-
-  test("combine_dicts adds overlapping numeric/string values (test_qc.py:973-978)") {
-    val merged = Util.combineDicts(
-      Map("a" -> 1L, "b" -> "x", "c" -> 2.5),
-      Map("a" -> 2L, "b" -> "y", "d" -> 7L))
-    assert(merged == Map("a" -> 3L, "b" -> "xy", "c" -> 2.5, "d" -> 7L))
-  }
-
-  test("find_nearest_idx: argmin |arr - v|, first wins ties (test_other.py:200-212)") {
-    val df = Seq((Seq(1.0, 5.0, 9.0), 6.0), (Seq(1.0, 5.0, 9.0), 7.0),
-      (Seq(2.0, 4.0), 3.0)).toDF("arr", "v")
-    val got = df.select(Util.findNearestIdx($"arr", $"v").as("i"))
-      .collect().map(_.getInt(0)).toSeq
-    assert(got == Seq(1, 1, 0)) // 7.0 ties 5 and 9 (|Δ|=2 both) -> first wins = idx 1
   }
 }

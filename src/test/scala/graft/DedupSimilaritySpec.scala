@@ -196,49 +196,6 @@ class DedupSimilaritySpec extends SparkSpec with Matchers {
     assert(fromDisk == inQuery)
   }
 
-  test("index append: build-half-then-append equals full build with the same codebooks") {
-    // the serving-index ingest path: codebooks/centroids FROZEN, new
-    // vectors encode-only. Reference = a from-scratch build over the
-    // full corpus trained on the SAME half (trainOn), so the codebooks
-    // are identical and only the code provenance differs.
-    val dir = "/root/testdata/sf0.001"
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val half1 = emb.filter(col("vec_id") % 2 === 0)
-    val half2 = emb.filter(col("vec_id") % 2 === 1)
-    val queries = emb.filter(col("vec_id") % 100 === 0)
-    def results(ix: String) = graft.functions.Similarity
-      .searchPqIndex(spark, ix, queries, "vec_id", "embedding", k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-
-    val ixInc = java.nio.file.Files.createTempDirectory("graft_pq_inc").toString
-    graft.functions.Similarity.writePqIndex(half1, "vec_id", "embedding", ixInc,
-      m = 8, subDim = 8, nCentroids = 4, iters = 1)
-    graft.functions.Similarity.appendToPqIndex(spark, ixInc, half2, "vec_id", "embedding")
-
-    val ixFull = java.nio.file.Files.createTempDirectory("graft_pq_full").toString
-    graft.functions.Similarity.writePqIndex(emb, "vec_id", "embedding", ixFull,
-      m = 8, subDim = 8, nCentroids = 4, iters = 1, trainOn = Some(half1))
-    assert(results(ixInc) == results(ixFull))
-    // appended vectors are actually served (both halves reachable)
-    val served = results(ixInc).map(_._2)
-    assert(served.exists(_ % 2 == 0) && served.exists(_ % 2 == 1))
-
-    // same contract for IVF-PQ (coarse lists + residual codebooks frozen)
-    def ivfResults(ix: String) = graft.functions.Similarity
-      .searchIvfPqIndex(spark, ix, queries, "vec_id", "embedding", k = 5, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    val ivfInc = java.nio.file.Files.createTempDirectory("graft_ivfpq_inc").toString
-    graft.functions.Similarity.writeIvfPqIndex(half1, "vec_id", "embedding", ivfInc,
-      nCoarse = 4, coarseIters = 1, m = 8, subDim = 8, nCentroids = 4,
-      pqIters = 1, dim = 64)
-    graft.functions.Similarity.appendToIvfPqIndex(spark, ivfInc, half2, "vec_id", "embedding")
-    val ivfFull = java.nio.file.Files.createTempDirectory("graft_ivfpq_full").toString
-    graft.functions.Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", ivfFull,
-      nCoarse = 4, coarseIters = 1, m = 8, subDim = 8, nCentroids = 4,
-      pqIters = 1, dim = 64, trainOn = Some(half1))
-    assert(ivfResults(ivfInc) == ivfResults(ivfFull))
-  }
-
   test("cross-corpus near-dups: incoming vs reference only, no self-join pairs") {
     val ref = Seq(
       (10L, "the quick brown fox jumps over the lazy dog"),
@@ -259,7 +216,7 @@ class DedupSimilaritySpec extends SparkSpec with Matchers {
 
   test("simhash: identical texts equal; near-dups hamming-close; unrelated far") {
     def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-    val h = docs.select($"doc_id", Dedup.simhash32($"text").as("h")).collect()
+    val h = Dedup.simhash(docs, "doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(h(1L) == h(2L))
     assert(hamming(h(1L), h(3L)) < hamming(h(1L), h(4L)))
@@ -295,13 +252,13 @@ class DedupSimilaritySpec extends SparkSpec with Matchers {
     val exact = Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
       .select($"query_id", $"match_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recallAt(nProbe: Int): Double = {
-      val approx = Similarity.ivfTopK(emb, q, "vec_id", "embedding", 10,
-        centroidEvery = 50L, nProbe = nProbe)
+      val approx = Similarity.ivfTopKTrained(emb, q, "vec_id", "embedding", 10,
+        nCentroids = 8, iters = 3, nProbe = nProbe)
         .select($"query_id", $"match_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (exact intersect approx).size.toDouble / exact.size
     }
     val r1 = recallAt(1)
-    val rAll = recallAt(100) // probe every list => brute force => full recall
+    val rAll = recallAt(8) // probe every list => brute force => full recall
     assert(rAll == 1.0, s"full-probe recall $rAll should be exact")
     assert(r1 > 0.0 && r1 <= rAll, s"recall@1=$r1 should be within (0, $rAll]")
   }

@@ -88,128 +88,6 @@ class MultimodalSpec extends SparkSpec {
       Seq((1L, 1L, 3L, false), (2L, 1L, 3L, true), (3L, 3L, 1L, false), (7L, 1L, 3L, true)))
   }
 
-  /** A real PNG, generated in-memory: a deterministic 32×24 gradient
-    * with a hard vertical edge at x=16 (gives a nonzero edge-energy
-    * feature to pin).
-    */
-  private def testPng(): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(32, 24,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 24; x <- 0 until 32) {
-      val v = if (x < 16) (x * 8) & 0xff else 0xe0
-      img.setRGB(x, y, (v << 16) | ((y * 10 & 0xff) << 8) | 0x40)
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    out.toByteArray
-  }
-
-  test("ImageIoCodec: real PNG decode — true dims, deterministic pixel features") {
-    val png = testPng()
-    val d1 = Multimodal.ImageIoCodec.decode("image", png)
-    val d2 = Multimodal.ImageIoCodec.decode("image", png)
-    assert(d1.width == 32 && d1.height == 24)
-    // deterministic across calls, byte-identical feature vector
-    assert(d1.checksum == d2.checksum && d1.feature.sameElements(d2.feature))
-    assert(d1.feature.length == 8)
-    assert(d1.feature(6) == 32f / 24f) // aspect ratio from real pixels
-    assert(d1.feature(7) > 0f)         // the x=16 edge registers
-    // different pixels => different checksum/features
-    val other = {
-      val img = new java.awt.image.BufferedImage(32, 24,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", out)
-      Multimodal.ImageIoCodec.decode("image", out.toByteArray)
-    }
-    assert(other.checksum != d1.checksum)
-    // garbage bytes are rejected, not silently decoded
-    intercept[IllegalArgumentException] {
-      Multimodal.ImageIoCodec.decode("image", Array[Byte](1, 2, 3))
-    }
-  }
-
-  test("ImageIoCodec: resize re-encodes to the target dims; stills have one frame") {
-    val png = testPng()
-    val small = Multimodal.ImageIoCodec.resize("image", png, 8, 6)
-    val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(small))
-    assert(back.getWidth == 8 && back.getHeight == 6)
-    // deterministic re-encode
-    assert(small.sameElements(Multimodal.ImageIoCodec.resize("image", png, 8, 6)))
-    assert(Multimodal.ImageIoCodec.frameCount(png) == 1)
-    // frame 0 of a still re-encodes standalone: same pixels, same dims
-    val f0 = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(Multimodal.ImageIoCodec.frameAt(png, 0)))
-    val orig = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
-    assert(f0.getWidth == orig.getWidth && f0.getHeight == orig.getHeight)
-    assert((0 until f0.getHeight).forall(y => (0 until f0.getWidth).forall(x =>
-      (f0.getRGB(x, y) & 0xffffff) == (orig.getRGB(x, y) & 0xffffff))))
-    intercept[IllegalArgumentException](Multimodal.ImageIoCodec.frameAt(png, 1))
-  }
-
-  /** 3-frame animated GIF (8×6, one solid primary color per frame) via
-    * ImageIO's sequence writer — primaries survive GIF palettization
-    * exactly, so frame pixels are assertable.
-    */
-  private def testGif(colors: Seq[Int]): Array[Byte] = {
-    val baos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(baos)
-    val w = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    w.setOutput(ios)
-    w.prepareWriteSequence(null)
-    colors.foreach { c =>
-      val img = new java.awt.image.BufferedImage(8, 6,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = img.createGraphics()
-      try { g.setColor(new java.awt.Color(c)); g.fillRect(0, 0, 8, 6) }
-      finally g.dispose()
-      w.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-    }
-    w.endWriteSequence(); w.dispose(); ios.close()
-    baos.toByteArray
-  }
-
-  test("ImageIoCodec: animated GIF — real frameCount, each frame decodes standalone") {
-    val colors = Seq(0xff0000, 0x00ff00, 0x0000ff)
-    val gif = testGif(colors)
-    assert(Multimodal.ImageIoCodec.frameCount(gif) == 3)
-    colors.zipWithIndex.foreach { case (c, i) =>
-      val png = Multimodal.ImageIoCodec.frameAt(gif, i)
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
-      assert(img.getWidth == 8 && img.getHeight == 6, s"frame $i dims")
-      assert((img.getRGB(4, 3) & 0xffffff) == c, s"frame $i color")
-    }
-    intercept[IllegalArgumentException](Multimodal.ImageIoCodec.frameAt(gif, 3))
-    // and through the Spark frame-sampling operator: every frame out,
-    // indices and fps timestamps attached, payload column decodable
-    import spark.implicits._
-    val m = Seq((7L, "video", gif)).toDF("media_id", "kind", "payload")
-    val frames = Multimodal.sampleFrames(m, everyNth = 1, maxFrames = 8,
-      fps = 10.0, codec = Multimodal.ImageIoCodec).collect().sortBy(_.frame_idx)
-    assert(frames.map(f => (f.media_id, f.frame_idx, f.t_ms)).toSeq ==
-      Seq((7L, 0, 0L), (7L, 1, 100L), (7L, 2, 200L)))
-    frames.zip(colors).foreach { case (f, c) =>
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(f.frame))
-      assert((img.getRGB(4, 3) & 0xffffff) == c)
-    }
-    // every-2nd sampling takes frames 0 and 2
-    val sampled = Multimodal.sampleFrames(m, everyNth = 2, maxFrames = 8,
-      fps = 10.0, codec = Multimodal.ImageIoCodec).collect().map(_.frame_idx).sorted
-    assert(sampled.toSeq == Seq(0, 2))
-  }
-
-  test("ImageIoCodec: drives the Spark operators end-to-end on real PNG payloads") {
-    import spark.implicits._
-    val rows = (1L to 6L).map(i => (i, "image", testPng()))
-    val m = rows.toDF("media_id", "kind", "payload")
-    val feats = Multimodal.decodeAndFeaturize(m, Multimodal.ImageIoCodec).collect()
-    assert(feats.length == 6)
-    assert(feats.forall(f => f.width == 32 && f.height == 24))
-    assert(feats.map(_.checksum).distinct.length == 1) // identical payloads
-    val resized = Multimodal.resize(m, 16, 12, Multimodal.ImageIoCodec).collect()
-    assert(resized.length == 6 && resized.forall(_.width == 16))
-  }
-
   test("perceptual dHash: identical payloads pair at 0; near-identical low; disjoint none") {
     import spark.implicits._
     val base = Array.tabulate(130)(i => ((i * 37 + 11) % 251).toByte)

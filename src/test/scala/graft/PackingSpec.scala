@@ -185,21 +185,6 @@ class PackingSpec extends SparkSpec with Matchers {
     }
   }
 
-  test("packStats: totals, straddle count and tail padding are consistent") {
-    val L = 64
-    val packed = Packing.packConcatSplit(docs, $"doc_id", tokens, seqLen = L)
-    val s = Packing.packStats(packed, L).head()
-    val rows = packed.collect()
-    assert(s.getAs[Long]("n_docs") == rows.length)
-    val total = rows.map(_.getAs[Long]("n_tokens")).sum
-    assert(s.getAs[Long]("total_tokens") == total)
-    val nSeqs = rows.map(_.getAs[Long]("seq_last")).max + 1
-    assert(s.getAs[Long]("n_seqs") == nSeqs)
-    assert(s.getAs[Long]("n_straddling") ==
-      rows.count(_.getAs[Long]("n_seqs") > 1))
-    assert(s.getAs[Long]("tail_padding") == nSeqs * L - total)
-  }
-
   test("lengthGroupedBatches: full batches, length-contiguous, all docs kept") {
     val s = spark; import s.implicits._
     val rnd = new scala.util.Random(5)

@@ -5,20 +5,11 @@ import graft.ops.{Partitioning, WindowKernels}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Scale utilities: salted aggregation equivalence and overlap-chunked
-  * window parallelism (results must be identical to the unchunked run).
+/** Scale utilities: overlap-chunked window parallelism (results must be
+  * identical to the unchunked run) and the z-order key.
   */
 class PartitioningSpec extends SparkSpec {
   import spark.implicits._
-
-  test("salted sum/count equals plain groupBy") {
-    val df = (1 to 10000).map(i => (i % 3L, i.toDouble)).toDF("k", "v").repartition(8)
-    val plain = df.groupBy($"k").agg(sum($"v").as("sum_v"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
-    val salted = Partitioning.saltedSumCount(df, Seq("k"), "v")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
-    assert(salted == plain)
-  }
 
   test("chunked+overlap gradient equals single-partition gradient") {
     // one hot stream, 500 rows, 10 s cadence

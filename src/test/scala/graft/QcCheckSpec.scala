@@ -67,15 +67,6 @@ class QcCheckSpec extends SparkSpec {
     assert(got == Seq(Flags.NoQc, Flags.Bad, Flags.Bad, Flags.ProbablyGood))
   }
 
-  test("flagHistory counts per check in one pass (update_flag_history_series)") {
-    val df = Seq(1.0, 5.0, 50.0).toDF("x")
-    val checks = Seq(
-      QcCheck("gt10", $"x" > 10, Flags.Bad),
-      QcCheck("gt2", $"x" > 2, Flags.ProbablyBad))
-    val h = QcCheck.flagHistory(df, checks)
-    assert(h == Map("gt10" -> 1L, "gt2" -> 2L))
-  }
-
   test("point-in-polygon: ray casting on a literal polygon") {
     val tri = Seq((0.0, 0.0), (0.0, 10.0), (10.0, 0.0)) // (lat, lon) triangle
     val df = Seq((2.0, 2.0), (6.0, 6.0), (-1.0, 2.0)).toDF("lat", "lon")

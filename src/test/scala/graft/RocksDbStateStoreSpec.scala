@@ -15,15 +15,22 @@ import org.scalatest.matchers.should.Matchers
 class RocksDbStateStoreSpec extends SparkSpec with Matchers {
   import spark.implicits._
 
+  private def t(minutes: Int) = new java.sql.Timestamp(1700000000000L + minutes * 60000L)
+
+  /** The dedup StreamBench runs: first-seen-wins within a 1-hour horizon. */
+  private def dedup(mem: MemoryStream[(Long, String, java.sql.Timestamp)]) =
+    StreamingDedup.withinWatermark(mem.toDS().toDF("doc_id", "text", "ts"),
+      "text", "ts", "1 hour")
+
   test("streaming queries run on the RocksDB provider (custom metrics present)") {
     spark.conf.get("spark.sql.streaming.stateStore.providerClass") shouldBe
       Sessions.RocksDbProvider
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val out = StreamingDedup(mem.toDS().toDF("doc_id", "text"), "text")
+    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
+    val out = dedup(mem)
     var ops = Array.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
     val rows = runMemorySink(out)(
-      () => mem.addData((1L, "alpha"), (2L, "alpha"), (3L, "beta")),
+      () => mem.addData((1L, "alpha", t(0)), (2L, "alpha", t(1)), (3L, "beta", t(2))),
       // the batch's progress, read from the runner's (the one active) query
       () => ops = spark.streams.active.head.lastProgress.stateOperators)
     ops should not be empty
@@ -36,8 +43,8 @@ class RocksDbStateStoreSpec extends SparkSpec with Matchers {
   test("restart from checkpoint: dedup state survives, pre-restart dup still dropped") {
     implicit val sq = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("rocks_ckpt").toString
-    val mem = MemoryStream[(Long, String)]
-    val out = StreamingDedup(mem.toDS().toDF("doc_id", "text"), "text")
+    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
+    val out = dedup(mem)
 
     // memory sink can't recover from a checkpoint — use the file sink
     val outDir = java.nio.file.Files.createTempDirectory("rocks_out").toString
@@ -48,13 +55,13 @@ class RocksDbStateStoreSpec extends SparkSpec with Matchers {
 
     val q1 = start()
     try {
-      mem.addData((1L, "doc one"), (2L, "doc two"))
+      mem.addData((1L, "doc one", t(0)), (2L, "doc two", t(1)))
       q1.processAllAvailable()
     } finally q1.stop()
     seen() shouldBe Set(1L, 2L)
 
     // new data while the query is down: a dup of doc one + a fresh doc
-    mem.addData((3L, "doc one"), (4L, "doc three"))
+    mem.addData((3L, "doc one", t(2)), (4L, "doc three", t(3)))
     val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
     // only the fresh doc joined: the restarted store remembered "doc one"

@@ -15,24 +15,22 @@ class SamplingChunkingSpec extends SparkSpec with Matchers {
     (i, lang, s"document $i body with several words about topic ${i % 17}")
   }.toDF("doc_id", "lang", "text")
 
+  /** One rate for every stratum: a plain hash (Bernoulli) sample. */
+  private def hashSample(df: org.apache.spark.sql.DataFrame, rate: Double, salt: String) =
+    Sampling.stratifiedSample(df, $"doc_id", $"lang", Map.empty, rate, salt)
+      .select($"doc_id").collect().map(_.getLong(0)).toSet
+
   test("hash sample: deterministic, order-independent, ~rate sized") {
-    val a = Sampling.hashSample(docs, $"doc_id", 0.5, "s1")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    val b = Sampling.hashSample(docs.repartition(7), $"doc_id", 0.5, "s1")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
+    val a = hashSample(docs, 0.5, "s1")
+    val b = hashSample(docs.repartition(7), 0.5, "s1")
     assert(a == b) // membership is a pure function of (salt, key)
     assert(a.size > 120 && a.size < 280) // ~200 expected, md5-uniform
-    val c = Sampling.hashSample(docs, $"doc_id", 0.5, "s2")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
+    val c = hashSample(docs, 0.5, "s2")
     assert(a != c) // a different salt draws a different sample
   }
 
   test("hash sample: rate monotonicity — raising the rate only adds rows") {
-    val lo = Sampling.hashSample(docs, $"doc_id", 0.2, "s1")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    val hi = Sampling.hashSample(docs, $"doc_id", 0.6, "s1")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(lo.subsetOf(hi))
+    assert(hashSample(docs, 0.2, "s1").subsetOf(hashSample(docs, 0.6, "s1")))
   }
 
   test("stratified sample: per-stratum rates honored independently") {
@@ -151,36 +149,6 @@ class SamplingChunkingSpec extends SparkSpec with Matchers {
     assert(approxPlan.contains("approx_count_distinct"))
     assert(!approxPlan.contains("count(distinct"))
     assert("keys=\\[token#\\d+, id#".r.findFirstIn(approxPlan).isEmpty)
-  }
-
-  test("bloom contamination: never under-counts the exact check, " +
-    "over-count bounded by the false-positive rate") {
-    import graft.functions.Dedup
-    val evalSet = (1L to 50L)
-      .map(i => (i, s"evaluation benchmark question number $i with answer"))
-      .toDF("doc_id", "text")
-    // corpus: 30 docs verbatim from the eval set (leaks) + 200 clean
-    val leaks = (1L to 30L)
-      .map(i => (i, s"evaluation benchmark question number $i with answer"))
-    val clean = (100L to 299L)
-      .map(i => (i, s"ordinary corpus document $i about something else entirely unique$i"))
-    val corpus = (leaks ++ clean).toDF("doc_id", "text")
-
-    def byId(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("n_contaminated")).toMap
-    val exact = byId(Dedup.contaminationCheck(corpus, evalSet, "doc_id", "text"))
-    val bloom = byId(Dedup.contaminationCheckBloom(corpus, evalSet, "doc_id", "text",
-      expectedShingles = 1000L, fpp = 0.01))
-
-    assert(bloom.keySet == exact.keySet)
-    // one-sided error: bloom >= exact everywhere (no false negatives)
-    exact.foreach { case (id, n) => assert(bloom(id) >= n, s"doc $id under-counted") }
-    // leaked docs are fully flagged in both
-    (1L to 30L).foreach(id => assert(bloom(id) == exact(id) && exact(id) > 0))
-    // over-count across the clean corpus bounded well above fpp=1%
-    val extra = exact.keys.map(id => bloom(id) - exact(id)).sum.toDouble
-    val totalShingles = exact.size * 7.0 // ~7 shingles per ~9-word doc
-    assert(extra / totalShingles < 0.05, s"FP rate ${extra / totalShingles}")
   }
 
   test("quality select: exact per-source budget, best-first, deterministic ties") {

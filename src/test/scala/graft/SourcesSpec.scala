@@ -50,17 +50,4 @@ class SourcesSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(back == Seq((10L, 4L), (11L, 2L))) // ranks -> wire codes
   }
-
-  test("batch sink groups per partition and batch size") {
-    val flagged = (1L to 10L).map((_, Flags.Bad)).toDF(Obs.IotId, Obs.QcFlag)
-      .withColumn(Obs.QcFlag, col(Obs.QcFlag).cast("tinyint")).repartition(2)
-    val acc = spark.sparkContext.collectionAccumulator[Int]("batches")
-    PatchSink.foreachBatchSink(flagged, batchSize = 3)(batch => acc.add(batch.size))
-    val sizes = acc.value
-    assert(sizes.size >= 4 && sizes.asScala.sum == 10)
-  }
-
-  private implicit class JavaListOps[T](l: java.util.List[T]) {
-    def asScala: Seq[T] = { val b = Seq.newBuilder[T]; l.forEach(x => b += x); b.result() }
-  }
 }

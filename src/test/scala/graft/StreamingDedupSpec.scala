@@ -17,7 +17,7 @@ class StreamingDedupSpec extends SparkSpec with Matchers {
   test("duplicates dropped across micro-batches; first occurrence wins") {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[DocEvent]
-    val out = StreamingDedup(mem.toDF(), "text")
+    val out = StreamingDedup.withinWatermark(mem.toDF(), "text", "ts", "24 hours")
     val got = runMemorySink(out)(
       () => mem.addData(
         DocEvent(1L, "the quick brown fox", t(0)),
@@ -56,63 +56,11 @@ class StreamingDedupSpec extends SparkSpec with Matchers {
       .filter(!$"is_duplicate").select($"docId")
       .collect().map(_.getLong(0)).toSet
     val mem = MemoryStream[DocEvent]
-    val got = runMemorySink(StreamingDedup(mem.toDF(), "text"))(
+    val got = runMemorySink(
+        StreamingDedup.withinWatermark(mem.toDF(), "text", "ts", "24 hours"))(
       docs.grouped(2).map(g => () => mem.addData(g)).toSeq: _*)
       .map(_.getAs[Long]("docId")).toSet
     assert(got == batchCanonical) // min-id == first-arrival here (ordered feed)
-  }
-
-  test("stream substring windows: cross-batch window fps deduped; survivors = distinct fps") {
-    implicit val sq = spark.sqlContext
-    val docs = Seq(
-      (1L, "a b p q r s c d"),            // canonical holder of "p q r s"
-      (2L, "e f g h i p q r s j"),        // straddling dup, later batch
-      (3L, "fresh words only in here now")
-    )
-    val mem = MemoryStream[DocEvent]
-    val out = StreamingDedup.substringWindows(
-        mem.toDF().withColumnRenamed("docId", "doc_id"),
-        "doc_id", "text", windowLen = 4)
-    val kept = runMemorySink(out)(docs.map { case (i, s) =>
-      () => mem.addData(DocEvent(i, s, t(i.toInt)))
-    }: _*).map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("s"), r.getAs[String]("fp")))
-    // one survivor per distinct window text, corpus-wide
-    val batchWins = docs.toDF("doc_id", "text")
-    val allFps = graft.functions.Dedup.slidingWindows(
-        batchWins, "doc_id", "text", 4)
-      .select($"fp").distinct().collect().map(_.getString(0)).toSet
-    kept.map(_._3).toSet shouldBe allFps
-    kept.length shouldBe allFps.size
-    // doc 2's copy of the straddling span lost every window to doc 1
-    // (id-ordered arrival: doc 1's batch ran first)
-    val doc2Survivors = kept.filter(_._1 == 2L).map(_._2).toSet
-    doc2Survivors.intersect(Set(5)) shouldBe Set.empty // offset of "p q r s"
-  }
-
-  test("stream passage dedup == batch passageDedup under id-ordered arrival") {
-    implicit val sq = spark.sqlContext
-    // same dup matrix as PassageOpsSpec: cross-doc dup, emptied doc,
-    // within-doc repeat
-    val docs = Seq(
-      (1L, "a b c d e f g h"), (2L, "a b c d x y z w"),
-      (3L, "e f g h e f g h"), (4L, "q r s t q r s t"))
-    val batchDf = docs.toDF("doc_id", "text")
-    val mem = MemoryStream[DocEvent]
-    val out = StreamingDedup.passages(mem.toDF().withColumnRenamed("docId", "doc_id"),
-        "doc_id", "text", passageLen = 4)
-    // one doc per batch: cross-batch state does the dedup work
-    val kept = runMemorySink(out)(docs.map { case (i, s) =>
-      () => mem.addData(DocEvent(i, s, t(i.toInt)))
-    }: _*)
-    val streamKept = spark.createDataFrame(java.util.Arrays.asList(kept: _*), out.schema)
-      .select($"doc_id", $"pidx", $"passage")
-    val rebuilt = graft.functions.TextAnalysis.reassemblePassages(
-      graft.functions.TextAnalysis.passages(batchDf, "doc_id", "text", 4),
-      streamKept)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-    val batch = graft.functions.Dedup.passageDedup(batchDf, "doc_id", "text", 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-    assert(rebuilt == batch)
   }
 
   test("tuneStatefulIngest: commit-cost confs land; dedup parity survives the tuned session") {
@@ -170,19 +118,6 @@ class StreamingDedupSpec extends SparkSpec with Matchers {
     }
     intercept[IllegalArgumentException] {
       StreamingDedup.minBatchRows(100000.0, 2.0, 120000.0)
-    }
-  }
-
-  test("triggerIntervalSec: the interval keeps up with ingest") {
-    // stability: processing time of the sized batch fits in the interval
-    // whenever ingest <= target
-    val R = 144700.0; val C = 3.0; val tau = 50000.0
-    for (ingest <- Seq(10000.0, 30000.0, 50000.0)) {
-      val interval = StreamingDedup.triggerIntervalSec(ingest, R, C, tau)
-      val n = StreamingDedup.minBatchRows(R, C, tau).toDouble
-      val procSec = n / R + C
-      assert(interval >= procSec * (1 - 1e-9),
-        s"ingest=$ingest interval=$interval proc=$procSec")
     }
   }
 }

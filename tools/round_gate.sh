@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Round-end gate: the same seven signals every round, one PASS/FAIL line.
+# Round-end gate: the same eight signals every round, one PASS/FAIL line.
 #
 #   bash tools/round_gate.sh [sfDir] [outDir]
 #
@@ -27,6 +27,10 @@
 #      decade base, IF a fresh scaled-run artifact is supplied via
 #      GATE_SCALED_JSON (skipped otherwise: the decade sweep is hours,
 #      not a per-commit cost)
+#   8. spec-only defs — tools/spec_only_defs.py: its --self-test passes,
+#      then the scan reports no src/main definition that no entry point
+#      reaches (only specs, comments or nothing refer to it) and finds
+#      tools/spec_only_defs.allow well-formed
 #
 # Documented in BASELINE.md §"Round gate".
 set -u
@@ -42,13 +46,14 @@ LIFECYCLE_FLAG_HIST='{"1":4330,"4":5670}'
 # sbt test's succeeded count once every oracle text is pinned by
 # digest: 473, less StaSourceSpec's `$select` compilation test, plus
 # OracleDigestSpec's two tests (7 more cancel without their fixtures);
-# plus StaHttpSpec's five specs of the overlapped HTTP round trips
-TESTS_MIN_SUCCEEDED=479
+# plus StaHttpSpec's five specs of the overlapped HTTP round trips;
+# less the 31 tests deleted with the spec-only defs they exercised
+TESTS_MIN_SUCCEEDED=448
 
 declare -a RESULTS=()
 fail=0
 
-echo "[round_gate] 1/7 correctness: Verify @ $SF_DIR -> $OUT_DIR"
+echo "[round_gate] 1/8 correctness: Verify @ $SF_DIR -> $OUT_DIR"
 if sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" > /tmp/round_gate_verify.log 2>&1 \
    && python3 tools/compare.py "$SF_DIR" "$OUT_DIR" > /tmp/round_gate_compare.log 2>&1 \
    && python3 tools/manifest_check.py "$SF_DIR" "$OUT_DIR" > /tmp/round_gate_manifest.log 2>&1; then
@@ -58,7 +63,7 @@ else
   fail=1
 fi
 
-echo "[round_gate] 2/7 bench smoke: Bench w2_zscore, 1 rep @ $SF_DIR"
+echo "[round_gate] 2/8 bench smoke: Bench w2_zscore, 1 rep @ $SF_DIR"
 SMOKE_OUT=/tmp/round_gate_bench_full.json
 rm -f "$SMOKE_OUT"
 if SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_BENCH_ONLY=w2_zscore \
@@ -81,7 +86,7 @@ else
 fi
 
 if [ "$(basename "$SF_DIR")" = "sf0.01" ]; then
-  echo "[round_gate] 3/7 lifecycle smoke: QcLifecycle @ $SF_DIR"
+  echo "[round_gate] 3/8 lifecycle smoke: QcLifecycle @ $SF_DIR"
   LC_OUT=/tmp/round_gate_qc_lifecycle.json
   rm -f "$LC_OUT"
   if sbt -batch "runMain graft.QcLifecycle $SF_DIR $LC_OUT" > /tmp/round_gate_lifecycle.log 2>&1 \
@@ -105,7 +110,7 @@ else
 fi
 
 if [ "$(basename "$SF_DIR")" = "sf0.01" ]; then
-  echo "[round_gate] 4/7 stream smoke: StreamBench, 2 passes @ $SF_DIR"
+  echo "[round_gate] 4/8 stream smoke: StreamBench, 2 passes @ $SF_DIR"
   SB_OUT=/tmp/round_gate_stream_bench.json
   rm -f "$SB_OUT"
   if sbt -batch "runMain graft.StreamBench $SF_DIR 2 $SB_OUT" > /tmp/round_gate_stream.log 2>&1 \
@@ -127,7 +132,7 @@ else
   RESULTS+=("stream=SKIPPED(pinned at sf0.01)")
 fi
 
-echo "[round_gate] 5/7 tests: sbt test"
+echo "[round_gate] 5/8 tests: sbt test"
 if sbt -batch test > /tmp/round_gate_test.log 2>&1; then
   succeeded=$(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_gate_test.log | tail -1 | grep -Eo '[0-9]+$')
   if [ "${succeeded:-0}" -ge "$TESTS_MIN_SUCCEEDED" ]; then
@@ -141,7 +146,7 @@ else
   fail=1
 fi
 
-echo "[round_gate] 6/7 perfbench: cd perfbench && sbt test"
+echo "[round_gate] 6/8 perfbench: cd perfbench && sbt test"
 if (cd perfbench && sbt -batch test) > /tmp/round_gate_perfbench.log 2>&1; then
   RESULTS+=("perfbench=PASS($(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_gate_perfbench.log | tail -1))")
 else
@@ -150,7 +155,7 @@ else
 fi
 
 if [ -n "${GATE_SCALED_JSON:-}" ]; then
-  echo "[round_gate] 7/7 scale gate: ratio drift vs recorded decade base"
+  echo "[round_gate] 7/8 scale gate: ratio drift vs recorded decade base"
   BASE="${GATE_BASE_JSON:-bench_artifacts_r14/bench_full_sf01_swept.json}"
   REF="${GATE_REF_JSON:-bench_artifacts_r14/b_sf1_r14_swept.json}"
   if python3 tools/ratio_table.py --gate "$BASE" "$REF" "$GATE_SCALED_JSON" \
@@ -162,6 +167,15 @@ if [ -n "${GATE_SCALED_JSON:-}" ]; then
   fi
 else
   RESULTS+=("scale=SKIPPED(set GATE_SCALED_JSON to a fresh scaled-run artifact)")
+fi
+
+echo "[round_gate] 8/8 spec-only defs: tools/spec_only_defs.py --self-test, then the scan"
+if python3 tools/spec_only_defs.py --self-test > /tmp/round_gate_spec_only.log 2>&1 \
+   && python3 tools/spec_only_defs.py >> /tmp/round_gate_spec_only.log 2>&1; then
+  RESULTS+=("spec_only=PASS($(tail -1 /tmp/round_gate_spec_only.log | tr -d '\n'))")
+else
+  RESULTS+=("spec_only=FAIL(see /tmp/round_gate_spec_only.log)")
+  fail=1
 fi
 
 status=PASS; [ "$fail" -ne 0 ] && status=FAIL
