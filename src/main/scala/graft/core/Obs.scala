@@ -50,10 +50,10 @@ object Obs {
     * [[eventsAsObservationsBetween]], which inverts the bounds onto the
     * raw column.
     */
-  def rawTsToEpochUs(schema: StructType, tsField: String = "ts"): Column =
-    schema(tsField).dataType match {
-      case LongType => expr(s"$tsField DIV 1000")
-      case _ => unix_micros(col(tsField).cast("timestamp"))
+  def rawTsToEpochUs(schema: StructType): Column =
+    schema("ts").dataType match {
+      case LongType => expr("ts DIV 1000")
+      case _ => unix_micros(col("ts").cast("timestamp"))
     }
 
   /** Adapt the driver's `events` table to the observations shape:

@@ -111,6 +111,8 @@ object Sessions {
       "trackTotalNumberOfRows", "false")
   }
 
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession =
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+  }
 }

@@ -241,18 +241,17 @@ object Audio {
     * detector — and survive with n_matches ≥ `minMatches`.
     *
     * Scale shape: one partial-agg'd groupBy(frame, bits) inverts the
-    * fingerprint table; buckets larger than `maxBucket` streams are
+    * fingerprint table; buckets larger than 64 streams are
     * dropped before pairing (the df-cap discipline of the dedup
     * family: near-silence fingerprints are the boilerplate shingles of
     * audio, and an uncapped bucket pairs O(bucket²)). Pair volume is
     * then Σ capped-bucket² — bounded by construction.
     */
-  def fingerprintPairs(fps: Dataset[AudioFp], minMatches: Long,
-                       maxBucket: Long = 64L): DataFrame = {
+  def fingerprintPairs(fps: Dataset[AudioFp], minMatches: Long): DataFrame = {
     val df = fps.toDF()
     val buckets = df.groupBy(col("frame_idx"), col("fp_bits"))
       .agg(count(lit(1)).as("__bn"))
-      .filter(col("__bn") <= maxBucket)
+      .filter(col("__bn") <= 64L)
       .select(col("frame_idx"), col("fp_bits"))
     val hits = df.join(buckets, Seq("frame_idx", "fp_bits"))
     hits.as("x").join(hits.as("y"),

@@ -38,18 +38,18 @@ import org.apache.spark.sql.types._
   */
 object Cdc {
 
-  /** Explode each payload into its content-defined chunks.
+  /** Explode each `payload` into its content-defined chunks (16-byte
+    * window, 6 mask bits: ~64-byte chunks on average).
     * Output: the input columns minus the payload, plus
     * (chunk_off, chunk_len, chunk_fp). Payload bytes never leave the
     * map side — only the chunk coordinate rows continue downstream.
     */
-  def chunks(media: DataFrame, payloadCol: String = "payload",
-             w: Int = 16, maskBits: Int = 6): DataFrame = {
-    val keep = media.columns.filterNot(_ == payloadCol).map(col)
+  def chunks(media: DataFrame): DataFrame = {
+    val keep = media.columns.filterNot(_ == "payload").map(col)
     media
       .withColumn("__cdc", explode(GraftExpressionBridge.column(
-        CdcChunksExpr(GraftExpressionBridge.expression(col(payloadCol)),
-          w, maskBits))))
+        CdcChunksExpr(GraftExpressionBridge.expression(col("payload")),
+          w = 16, maskBits = 6))))
       .select(keep :+ col("__cdc.chunk_off") :+ col("__cdc.chunk_len") :+
         col("__cdc.chunk_fp"): _*)
   }
@@ -59,19 +59,17 @@ object Cdc {
     * occurrence of its fingerprint (min (media_id, chunk_off) order —
     * deterministic under any partitioning).
     */
-  def dedupStats(media: DataFrame, strata: Seq[String],
-                 idCol: String = "media_id", payloadCol: String = "payload",
-                 w: Int = 16, maskBits: Int = 6): DataFrame = {
+  def dedupStats(media: DataFrame, strata: Seq[String]): DataFrame = {
     // the chunking pass (rolling hash + per-chunk md5 over every payload
     // byte) feeds BOTH the first-occurrence aggregate and the join-back;
     // cache it so the compiled scan runs once (the ngram-pairs explode
     // argument — without this the plan re-derives the explode per consumer)
-    val ch = chunks(media, payloadCol, w, maskBits).cache()
+    val ch = chunks(media).cache()
     val first = ch.groupBy(col("chunk_fp"))
-      .agg(min(struct(col(idCol), col("chunk_off"))).as("__fo"))
+      .agg(min(struct(col("media_id"), col("chunk_off"))).as("__fo"))
     val marked = ch.join(first, "chunk_fp")
       .withColumn("__is_first",
-        col(idCol) === col("__fo").getField(idCol) &&
+        col("media_id") === col("__fo").getField("media_id") &&
           col("chunk_off") === col("__fo").getField("chunk_off"))
     marked.groupBy(strata.map(col): _*)
       .agg(count(lit(1)).as("n_chunks"),

@@ -22,13 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object Curriculum {
 
-  /** @param nBuckets width of the distributed scan (≈ executor count
-    *                 at cluster scale; the serial phase is
-    *                 O(bands·nBuckets) rows)
+  /** Width of the distributed scan (≈ executor count at cluster scale;
+    * the serial phase is O(bands·nBuckets) rows).
     */
-  def order(df: DataFrame, idCol: Column, bandCol: Column,
-            nBuckets: Int = 32, salt: String = "curr"): DataFrame = {
-    require(nBuckets >= 1)
+  private val nBuckets = 32
+
+  def order(df: DataFrame, idCol: Column, bandCol: Column): DataFrame = {
     // baseHash ∈ [0, 2^32): equal-width h ranges make bucket id a
     // MONOTONE function of h, so (band, hb, h) sorts like (band, h)
     val width = (4294967296L + nBuckets - 1) / nBuckets
@@ -41,7 +40,7 @@ object Curriculum {
     // (measured: two full scans + the quality chain twice).
     val base = df
       .select(idCol.cast("long").as("doc_id"), bandCol.cast("int").as("band"))
-      .withColumn("h", Dedup.baseHash(concat(lit(salt), col("doc_id"))))
+      .withColumn("h", Dedup.baseHash(concat(lit("curr"), col("doc_id"))))
       .withColumn("hb", expr(s"h DIV $width"))
       .localCheckpoint()
     val wIn = Window.partitionBy(col("band"), col("hb"))

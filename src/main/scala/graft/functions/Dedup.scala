@@ -343,7 +343,7 @@ object Dedup {
     *   Pass Long.MaxValue for fully-exact semantics.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        tau: Double, k: Int = 3,
+                        tau: Double,
                         maxShingleDf: Long = Long.MaxValue): DataFrame = {
     // exploded distinct shingles — the inverted index. Cached BEFORE the
     // df cap: [[SkewCap.dropOverCap]] plans its input twice (partial-agg
@@ -351,7 +351,7 @@ object Dedup {
     // the cache and every later pass — anti-join, prefix, verification
     // arrays — reads it; the explode is computed exactly once.
     val sh0 = graft.ops.Partitioning.spreadScan(df)
-      .select(col(idCol).as("id"), explode(shingles(col(textCol), k)).as("shingle"))
+      .select(col(idCol).as("id"), explode(shingles(col(textCol))).as("shingle"))
       .cache()
     // two-phase df cap: a boilerplate shingle's rows are dropped
     // map-side (broadcast anti-join) and never colocate
@@ -475,14 +475,15 @@ object Dedup {
   // raises on BIGINT overflow; Java wraps — neither may happen).
   val MinhashP = 4294967311L // smallest prime > 2^32
   val MinhashK = 16
+  val MinhashBands = 4
   def hashCoeffA(i: Int): Long = 1000003L + 7919L * i
   def hashCoeffB(i: Int): Long = 104729L + 524287L * i
 
   /** 32-bit portable base hash of a string column. */
   def baseHash(c: Column): Column = conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** LSH banding: split the K-wide signature into `bands` bands of
-    * K/bands rows each; band key = md5 of the joined band values. Docs
+  /** LSH banding: split the K-wide signature into [[MinhashBands]] bands
+    * of K/bands rows each; band key = md5 of the joined band values. Docs
     * sharing any (band_idx, band_key) are near-dup candidates — the
     * bucket-join is an equi-join, the scale path for 100 TB dedup.
     * Returns (id, band_idx, band_key).
@@ -493,19 +494,18 @@ object Dedup {
     * and blows up codegen; the explode form is one shuffle by doc id
     * with map-side partial mins.
     */
-  def minhashBands(df: DataFrame, idCol: String, textCol: String,
-                   k: Int = MinhashK, bands: Int = 4): DataFrame = {
-    val r = k / bands
+  def minhashBands(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val r = MinhashK / MinhashBands
     val sh = graft.ops.Partitioning.spreadScan(df)
       .select(col(idCol).as("id"), explode(shingles(col(textCol))).as("shingle"))
       .withColumn("h", baseHash(col("shingle")))
-    val minAggs = (0 until k).map { i =>
+    val minAggs = (0 until MinhashK).map { i =>
       min(pmod(col("h") * hashCoeffA(i) + hashCoeffB(i), lit(MinhashP))).as(s"m$i")
     }
     val sig = sh.groupBy(col("id")).agg(minAggs.head, minAggs.tail: _*)
     // one pass: posexplode the band-key array (a union of 4 selects would
     // recompute the whole signature aggregation per arm)
-    val bandKeys = array((0 until bands).map { b =>
+    val bandKeys = array((0 until MinhashBands).map { b =>
       md5(concat_ws("_", (0 until r).map(i => col(s"m${b * r + i}")): _*))
     }: _*)
     sig.select(col("id"), posexplode(bandKeys).as(Seq("band_idx", "band_key")))
@@ -513,8 +513,8 @@ object Dedup {
 
   /** Candidate pairs from shared LSH buckets, verified with exact Jaccard. */
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                          tau: Double, k: Int = MinhashK, bands: Int = 4): DataFrame = {
-    val b = minhashBands(df, idCol, textCol, k, bands).cache()
+                          tau: Double): DataFrame = {
+    val b = minhashBands(df, idCol, textCol).cache()
     val cand = b.as("x").join(b.as("y"), Seq("band_idx", "band_key"))
       .filter(col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
@@ -545,18 +545,17 @@ object Dedup {
     * Returns (id_a, id_b, est_matches, est_micro, jaccard_micro,
     * err_micro) with id_a < id_b.
     */
-  def minhashEstimatePairs(df: DataFrame, idCol: String, textCol: String,
-                           k: Int = MinhashK, bands: Int = 4): DataFrame = {
-    val r = k / bands
+  def minhashEstimatePairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val r = MinhashK / MinhashBands
     val sh = graft.ops.Partitioning.spreadScan(df)
       .select(col(idCol).as("id"), explode(shingles(col(textCol))).as("shingle"))
       .withColumn("h", baseHash(col("shingle")))
-    val minAggs = (0 until k).map { i =>
+    val minAggs = (0 until MinhashK).map { i =>
       min(pmod(col("h") * hashCoeffA(i) + hashCoeffB(i), lit(MinhashP))).as(s"m$i")
     }
     val sig = sh.groupBy(col("id")).agg(minAggs.head, minAggs.tail: _*).cache()
 
-    val bandKeys = array((0 until bands).map { b =>
+    val bandKeys = array((0 until MinhashBands).map { b =>
       md5(concat_ws("_", (0 until r).map(i => col(s"m${b * r + i}")): _*))
     }: _*)
     val bandsDf = sig.select(col("id"), posexplode(bandKeys).as(Seq("band_idx", "band_key")))
@@ -565,10 +564,10 @@ object Dedup {
       .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
 
     val sigA = sig.select(col("id").as("id_a") +:
-      (0 until k).map(i => col(s"m$i").as(s"a$i")): _*)
+      (0 until MinhashK).map(i => col(s"m$i").as(s"a$i")): _*)
     val sigB = sig.select(col("id").as("id_b") +:
-      (0 until k).map(i => col(s"m$i").as(s"b$i")): _*)
-    val estMatches = (0 until k).map(i =>
+      (0 until MinhashK).map(i => col(s"m$i").as(s"b$i")): _*)
+    val estMatches = (0 until MinhashK).map(i =>
       when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L)).reduce(_ + _)
 
     val shArr = df.select(col(idCol).as("id"), shingles(col(textCol)).as("sh"))
@@ -580,7 +579,7 @@ object Dedup {
       .withColumn("co", EvalOnce(size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")))
       .withColumn("un",
         (size(col("sh_a")) + size(col("sh_b"))).cast("long") - col("co"))
-      .withColumn("est_micro", expr(s"est_matches * 1000000 DIV $k"))
+      .withColumn("est_micro", expr(s"est_matches * 1000000 DIV $MinhashK"))
       .withColumn("jaccard_micro", expr("co * 1000000 DIV un"))
       .withColumn("err_micro", col("est_micro") - col("jaccard_micro"))
       .select(col("id_a"), col("id_b"), col("est_matches"), col("est_micro"),
@@ -599,9 +598,9 @@ object Dedup {
     */
   def crossNearDupPairs(dfNew: DataFrame, dfRef: DataFrame,
                         idCol: String, textCol: String,
-                        tau: Double, k: Int = MinhashK, bands: Int = 4): DataFrame = {
-    val bn = minhashBands(dfNew, idCol, textCol, k, bands)
-    val br = minhashBands(dfRef, idCol, textCol, k, bands)
+                        tau: Double): DataFrame = {
+    val bn = minhashBands(dfNew, idCol, textCol)
+    val br = minhashBands(dfRef, idCol, textCol)
     val cand = bn.as("x").join(br.as("y"), Seq("band_idx", "band_key"))
       .select(col("x.id").as("id_new"), col("y.id").as("id_ref")).distinct()
     val shNew = dfNew.select(col(idCol).as("id_new"), shingles(col(textCol), 3).as("sh_n"))
@@ -650,7 +649,6 @@ object Dedup {
     *   local/bench runs, not for a 1000-executor cluster.
     */
   def nearDupClusters(ids: DataFrame, pairs: DataFrame,
-                      idCol: String = "id",
                       aCol: String = "id_a", bCol: String = "id_b",
                       checkpointDir: Option[String] = None): DataFrame = {
     val sc = ids.sparkSession.sparkContext
@@ -724,7 +722,7 @@ object Dedup {
     // the final round's checkpoint backs the returned join; the edge
     // frame does not (labels is self-contained)
     graft.core.Checkpoints.release(edges)
-    ids.select(col(idCol).as("id"))
+    ids.select(col("id"))
       .join(labels.withColumnRenamed("cluster", "nbc"), Seq("id"), "left")
       .select(col("id"), coalesce(col("nbc"), col("id")).as("cluster"))
       .withColumn("is_canonical", col("id") === col("cluster"))
@@ -749,12 +747,12 @@ object Dedup {
     * [[minhashBands]]).
     */
   def contaminationCheck(corpus: DataFrame, evalSet: DataFrame,
-                         idCol: String, textCol: String, k: Int = 3): DataFrame = {
+                         idCol: String, textCol: String): DataFrame = {
     val evalSh = evalSet
-      .select(explode(shingles(col(textCol), k)).as("shingle")).distinct()
+      .select(explode(shingles(col(textCol))).as("shingle")).distinct()
       .withColumn("hit", lit(1L))
     corpus
-      .select(col(idCol).as("id"), explode(shingles(col(textCol), k)).as("shingle"))
+      .select(col(idCol).as("id"), explode(shingles(col(textCol))).as("shingle"))
       .join(broadcast(evalSh), Seq("shingle"), "left")
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_shingles"),
@@ -776,8 +774,8 @@ object Dedup {
     * the output (same semantics as [[minhashBands]]).
     * Returns (id, simhash).
     */
-  def simhash(df: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame = {
-    val sh = df.select(col(idCol).as("id"), explode(shingles(col(textCol), k)).as("shingle"))
+  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val sh = df.select(col(idCol).as("id"), explode(shingles(col(textCol))).as("shingle"))
       .withColumn("h", baseHash(col("shingle")))
     val voteAggs = (0 until 32).map { i =>
       sum(shiftright(col("h"), i).bitwiseAND(lit(1L)) * 2 - 1).as(s"s$i")

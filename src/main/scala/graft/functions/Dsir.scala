@@ -31,6 +31,9 @@ import org.apache.spark.sql.functions._
   */
 object Dsir {
 
+  /** Prefix of every hashed feature, shared with the DSIR oracle. */
+  val Salt = "dsir"
+
   /** Score every document and mark the selected raw subset.
     *
     * Returns one row per input doc: (doc_id, is_target, n_feats,
@@ -44,8 +47,7 @@ object Dsir {
     */
   def dsirSelect(docs: DataFrame, idCol: String, textCol: String,
                  isTarget: Column, buckets: Int = 4096,
-                 keepNum: Long = 1L, keepDen: Long = 4L,
-                 salt: String = "dsir"): DataFrame = {
+                 keepNum: Long = 1L, keepDen: Long = 4L): DataFrame = {
     require(buckets > 0 && keepNum >= 0 && keepDen > 0)
     // spreadScan: tokenize + per-occurrence hash is the heavy map work;
     // identity when the scan already has ≥ cores splits
@@ -69,7 +71,7 @@ object Dsir {
     val feats = base.select(col("doc_id"), col("is_target"),
       explode(concat(col("words"), bigrams)).as("g"))
       .select(col("doc_id"), col("is_target"),
-        pmod(Dedup.baseHash(concat(lit(salt), col("g"))), lit(buckets.toLong))
+        pmod(Dedup.baseHash(concat(lit(Salt), col("g"))), lit(buckets.toLong))
           .as("f"))
       .groupBy(col("doc_id"), col("is_target"), col("f"))
       .agg(count(lit(1)).as("n"))

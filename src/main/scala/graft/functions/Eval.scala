@@ -22,18 +22,15 @@ object Eval {
     * Scale shape — no global sort, no single-partition window over row
     * counts: (1) one groupBy(s) collapses rows to distinct scores with
     * map-side partials; (2) scores range-bucket by value into
-    * `nBuckets` coarse ranges; per-bucket negative totals (nBuckets
-    * rows) take the ONE intentionally-serial prefix-sum window and
+    * 32 coarse ranges; per-bucket negative totals (32 rows) take the ONE intentionally-serial prefix-sum window and
     * broadcast back as each bucket's base offset — the same two-phase
     * scan as [[Packing.packConcatSplit]]; (3) the within-bucket
     * cumulative window partitions BY BUCKET, so it parallelizes and no
-    * task ever windows more than ~|distinct scores|/nBuckets rows.
+    * task ever windows more than ~|distinct scores|/32 rows.
     *
     * `labelCol` must be a boolean Column (true = positive).
     */
-  def rocAuc(df: DataFrame, scoreCol: Column, labelCol: Column,
-             nBuckets: Int = 32): DataFrame = {
-    require(nBuckets > 0)
+  def rocAuc(df: DataFrame, scoreCol: Column, labelCol: Column): DataFrame = {
     val base = df.select(scoreCol.cast("long").as("s"),
       when(labelCol, 1L).otherwise(0L).as("y"))
     val g = base.groupBy(col("s")).agg(sum(col("y")).as("pos"),
@@ -41,7 +38,7 @@ object Eval {
     val mm = g.agg(min(col("s")).as("lo"), max(col("s")).as("hi"))
     val gb = g.crossJoin(broadcast(mm))
       .withColumn("bucket",
-        expr(s"(s - lo) DIV ((hi - lo) DIV $nBuckets + 1)"))
+        expr("(s - lo) DIV ((hi - lo) DIV 32 + 1)"))
       .drop("lo", "hi")
     val wB = Window.orderBy(col("bucket").asc)
       .rowsBetween(Window.unboundedPreceding, -1)

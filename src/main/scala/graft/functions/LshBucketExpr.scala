@@ -220,8 +220,8 @@ case class NearestCentroidExpr(child: Expression, cents: Array[Double], dim: Int
     }
     // all-NaN cosines (zero-norm input): fall back to centroid 0 — the
     // same choice the oracle's ORDER BY cos DESC, cent_id ASC makes
-    // (DuckDB sorts NaN above everything), and it keeps element_at(ids,
-    // best+1) in bounds instead of erroring the whole query
+    // (DuckDB sorts NaN above everything), and it keeps the result a
+    // valid centroid id
     if (best < 0) 0 else best
   }
 

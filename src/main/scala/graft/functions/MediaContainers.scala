@@ -314,19 +314,22 @@ object MediaContainers {
   // ------------------------------------------------------- deterministic
   // builders (structurally valid minimal files; fake frame payloads)
 
+  /** Payload bytes of each fake frame the two builders emit. */
+  private val FrameSize = 16
+
   /** Minimal valid MP4: ftyp + moov(mvhd, trak(tkhd, mdia(mdhd, hdlr,
     * minf(stbl(stts, stsc, stsz, stco, stss))))) + mdat holding
-    * `frameSize`-byte fake frames, one sample per chunk, a keyframe
+    * 16-byte fake frames, one sample per chunk, a keyframe
     * every `keyEvery` frames, `ticksPerFrame` at a 1000 Hz movie
     * timescale (so durationMs = nFrames × ticksPerFrame).
     */
   def buildMp4(width: Int, height: Int, nFrames: Int, ticksPerFrame: Int,
-               keyEvery: Int, frameSize: Int = 16): Array[Byte] = {
+               keyEvery: Int): Array[Byte] = {
     // bitwise-identical to the original fixed-size form: frame j is the
-    // [j*frameSize, (j+1)*frameSize) slice of the (i % 251) byte ramp
+    // [j*16, (j+1)*16) slice of the (i % 251) byte ramp
     buildMp4Samples(width, height,
-      (0 until nFrames).map(j => Array.tabulate(frameSize)(i =>
-        ((j * frameSize + i) % 251).toByte)),
+      (0 until nFrames).map(j => Array.tabulate(FrameSize)(i =>
+        ((j * FrameSize + i) % 251).toByte)),
       ticksPerFrame, keyEvery)
   }
 
@@ -464,15 +467,16 @@ object MediaContainers {
   }
 
   /** Minimal valid WebM: EBML header + Segment(Info(TimestampScale=1ms,
-    * Duration), Tracks(video TrackEntry), one Cluster of SimpleBlocks —
+    * Duration), Tracks(video TrackEntry), one Cluster of SimpleBlocks
+    * with 16-byte fake frames —
     * keyframe flag every `keyEvery`-th block).
     */
   def buildWebm(width: Int, height: Int, nFrames: Int, msPerFrame: Int,
-                keyEvery: Int, frameSize: Int = 16): Array[Byte] =
+                keyEvery: Int): Array[Byte] =
     // bitwise-identical to the original fixed-size form
     buildWebmSamples(width, height,
       (0 until nFrames).map(i =>
-        Array.tabulate(frameSize)(j => ((i * 31 + j) % 251).toByte)),
+        Array.tabulate(FrameSize)(j => ((i * 31 + j) % 251).toByte)),
       msPerFrame, keyEvery)
 
   /** [[buildWebm]] with CALLER-SUPPLIED frame payloads (variable sizes

@@ -5,10 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads ride as opaque
   * `binary` columns with typed metadata; decode / feature-extraction runs
-  * per-partition in batches behind the pluggable [[MediaCodec]]
-  * boundary. The sandbox ships only the deterministic [[StubMediaCodec]]
-  * (no media libraries in this environment); a deployment drops in a
-  * JavaCV/FFmpeg-backed codec without touching the operators.
+  * per-partition through the deterministic [[StubMediaCodec]] (the
+  * engine depends on no media library).
   *
   * Scale design: payloads never shuffle — metadata extraction and
   * featurization are map-side (`mapPartitions`), and downstream analytics
@@ -24,42 +22,20 @@ object Multimodal {
                                  checksum: String, width: Int, height: Int,
                                  feature: Array[Float])
 
-  /** The codec boundary: everything a media operator needs from the
-    * underlying decode library, per payload. Implementations MUST be
-    * serializable (shipped to executors) and thread-agnostic; per-task
-    * state (native decoder handles, scratch buffers) belongs in
-    * [[MediaCodec.init]], which each partition calls exactly once before
-    * its first payload.
+  /** The codec the media operators decode, resample and demux through:
+    * a deterministic stand-in with no media library behind it. Every
+    * output is pure integer arithmetic over the payload bytes, which
+    * keeps the operators oracle-checkable end to end (see `mm_features`'
+    * SQL mirror): n = byte count, s = unsigned byte sum, width = n % 640,
+    * height = s % 480, checksum = %08x of s, feature[i] =
+    * ((s + 31i) % 997) / 997. Frames are fixed 256-byte slices.
     */
-  trait MediaCodec extends Serializable {
-    /** Per-partition initialization (load native libs, allocate decoder
-      * state). Called once per partition before any decode.
-      */
-    def init(): Unit = ()
-    /** Decode one payload → dimensions, checksum, feature vector. */
-    def decode(kind: String, payload: Array[Byte]): Decoded
-    /** Decode + resample to (targetW, targetH) + re-encode. */
-    def resize(kind: String, payload: Array[Byte],
-               targetW: Int, targetH: Int): Array[Byte]
-    /** Number of decodable frames in a video payload (>= 1). */
-    def frameCount(payload: Array[Byte]): Int
-    /** Decoded bytes of frame `idx` (0-based, < frameCount). */
-    def frameAt(payload: Array[Byte], idx: Int): Array[Byte]
-  }
-
-  /** Deterministic stand-in codec — the only implementation available in
-    * this sandbox. Every output is pure integer arithmetic over the
-    * payload bytes, which keeps the operators oracle-checkable end to
-    * end (see `mm_features`' SQL mirror): n = byte count, s = unsigned
-    * byte sum, width = n % 640, height = s % 480, checksum = %08x of s,
-    * feature[i] = ((s + 31i) % 997) / 997. Frames are fixed 256-byte
-    * slices.
-    */
-  object StubMediaCodec extends MediaCodec {
+  object StubMediaCodec extends Serializable {
     private def byteSum(payload: Array[Byte]): Long =
       payload.foldLeft(0L)((a, b) => a + (b & 0xff))
 
-    override def decode(kind: String, payload: Array[Byte]): Decoded = {
+    /** Decode one payload → dimensions, checksum, feature vector. */
+    def decode(kind: String, payload: Array[Byte]): Decoded = {
       val n = payload.length.toLong
       val sum = byteSum(payload)
       Decoded(width = (n % 640).toInt, height = (sum % 480).toInt,
@@ -67,8 +43,9 @@ object Multimodal {
         feature = Array.tabulate(8)(i => ((sum + i * 31) % 997).toFloat / 997f))
     }
 
-    override def resize(kind: String, payload: Array[Byte],
-                        targetW: Int, targetH: Int): Array[Byte] = {
+    /** Decode + resample to (targetW, targetH) + re-encode. */
+    def resize(kind: String, payload: Array[Byte],
+               targetW: Int, targetH: Int): Array[Byte] = {
       val srcLen = math.max(payload.length, 1)
       val outLen = math.max(targetW * targetH / 64, 1)
       Array.tabulate(outLen)(i =>
@@ -77,10 +54,12 @@ object Multimodal {
 
     private val FrameSize = 256
 
-    override def frameCount(payload: Array[Byte]): Int =
+    /** Number of decodable frames in a video payload (>= 1). */
+    def frameCount(payload: Array[Byte]): Int =
       math.max(payload.length / FrameSize, 1)
 
-    override def frameAt(payload: Array[Byte], idx: Int): Array[Byte] = {
+    /** Decoded bytes of frame `idx` (0-based, < frameCount). */
+    def frameAt(payload: Array[Byte], idx: Int): Array[Byte] = {
       val from = math.min(idx * FrameSize, math.max(payload.length - 1, 0))
       val until = math.min(from + FrameSize, payload.length)
       java.util.Arrays.copyOfRange(payload, from, math.max(until, from))
@@ -110,17 +89,15 @@ object Multimodal {
       encode(col("text"), "UTF-8").as("payload"))
   }
 
-  /** Decode + featurize each payload through the codec — per-partition,
-    * so codec init cost amortizes over the batch.
+  /** Decode + featurize each payload through [[StubMediaCodec]],
+    * map-side.
     */
-  def decodeAndFeaturize(media: DataFrame,
-                         codec: MediaCodec = StubMediaCodec): Dataset[MediaFeatures] = {
+  def decodeAndFeaturize(media: DataFrame): Dataset[MediaFeatures] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.as[MediaRow].mapPartitions { rows =>
-      codec.init()
       rows.map { r =>
-        val d = codec.decode(r.kind, r.payload)
+        val d = StubMediaCodec.decode(r.kind, r.payload)
         MediaFeatures(r.media_id, r.kind, r.payload.length.toLong,
           d.checksum, d.width, d.height, d.feature)
       }
@@ -183,43 +160,22 @@ object Multimodal {
       .withColumn("is_duplicate", col("media_id") =!= col("canonical_id"))
   }
 
-  final case class ResizedMedia(media_id: Long, kind: String,
-                                width: Int, height: Int, payload: Array[Byte])
-
-  /** Resample every payload to (targetW, targetH) through the codec —
-    * one row in, one row out, map-side only (payloads never shuffle).
-    */
-  def resize(media: DataFrame, targetW: Int, targetH: Int,
-             codec: MediaCodec = StubMediaCodec): Dataset[ResizedMedia] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      codec.init()
-      rows.map { r =>
-        ResizedMedia(r.media_id, r.kind, targetW, targetH,
-          codec.resize(r.kind, r.payload, targetW, targetH))
-      }
-    }
-  }
-
   final case class PHashRow(media_id: Long, phash: Long)
 
   /** Perceptual difference-hash (dHash, Krawetz): resample the payload
     * to a 64+1-value row through the codec and take the 64 adjacent
     * unsigned greater-than bits — near-identical images differ in a few
-    * bits where a cryptographic hash differs in all of them. Map-side
-    * through the per-partition codec; only (id, 64-bit hash) moves on.
+    * bits where a cryptographic hash differs in all of them. Map-side;
+    * only (id, 64-bit hash) moves on.
     */
-  def perceptualHash(media: DataFrame,
-                     codec: MediaCodec = StubMediaCodec): Dataset[PHashRow] = {
+  def perceptualHash(media: DataFrame): Dataset[PHashRow] = {
     val spark = media.sparkSession
     import spark.implicits._
     // empty payloads carry no pixels to hash: they would all collide on
     // phash 0 and pair quadratically, and the oracle filters them too
     media.filter(length(col("payload")) > 0).as[MediaRow].mapPartitions { rows =>
-      codec.init()
       rows.map { r =>
-        val b = codec.resize(r.kind, r.payload, 64, 65) // 65 values
+        val b = StubMediaCodec.resize(r.kind, r.payload, 64, 65) // 65 values
         var h = 0L
         var i = 0
         while (i < 64 && i + 1 < b.length) {
@@ -360,21 +316,21 @@ object Multimodal {
         col("hamming_prev"), col("is_cut"), col("scene_idx"))
   }
 
-  /** Deterministic 65×`h` PNG intra frame whose column `x` is the flat
+  /** Deterministic 65×3 PNG intra frame whose column `x` is the flat
     * gray `(x * mult + add) % 256` — PNG is lossless, so decoding
     * replays the integer formula exactly (the fixture the video-phash
     * oracle recomputes algebraically).
     */
-  def pngColumnFrame(mult: Int, add: Int, h: Int = 3): Array[Byte] = {
+  def pngColumnFrame(mult: Int, add: Int): Array[Byte] = {
     noDiskImageCache()
-    val img = new java.awt.image.BufferedImage(65, h,
+    val img = new java.awt.image.BufferedImage(65, 3,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     var x = 0
     while (x < 65) {
       val l = ((x * mult + add) % 256 + 256) % 256
       val rgb = (l << 16) | (l << 8) | l
       var y = 0
-      while (y < h) { img.setRGB(x, y, rgb); y += 1 }
+      while (y < 3) { img.setRGB(x, y, rgb); y += 1 }
       x += 1
     }
     val out = new java.io.ByteArrayOutputStream()
@@ -388,9 +344,8 @@ object Multimodal {
     * bands, verify with bit_count(xor) ≤ `maxHamming`. Candidates are
     * band-bucket equi-joins, never all-pairs.
     */
-  def phashPairs(media: DataFrame, maxHamming: Int = 2,
-                 codec: MediaCodec = StubMediaCodec): DataFrame = {
-    val h = perceptualHash(media, codec).toDF()
+  def phashPairs(media: DataFrame, maxHamming: Int = 2): DataFrame = {
+    val h = perceptualHash(media).toDF()
     val bands = h.select(col("media_id"), col("phash"),
         explode(sequence(lit(0), lit(3))).as("band_idx"))
       .withColumn("band_key",
@@ -414,22 +369,20 @@ object Multimodal {
 
   /** Sample every `everyNth` frame up to `maxFrames` from each video —
     * the one-to-many explode shape, frame indexing, timestamping, and
-    * output bound live in the operator; the demux/decode lives in the
-    * codec.
+    * output bound live in the operator; the demux/decode lives in
+    * [[StubMediaCodec]].
     */
   def sampleFrames(media: DataFrame, everyNth: Int = 10, maxFrames: Int = 8,
-                   fps: Double = 25.0,
-                   codec: MediaCodec = StubMediaCodec): Dataset[MediaFrame] = {
+                   fps: Double = 25.0): Dataset[MediaFrame] = {
     require(everyNth >= 1 && maxFrames >= 1)
     val spark = media.sparkSession
     import spark.implicits._
     media.filter(col("kind") === "video").as[MediaRow].mapPartitions { rows =>
-      codec.init()
       rows.flatMap { r =>
-        val total = codec.frameCount(r.payload)
+        val total = StubMediaCodec.frameCount(r.payload)
         (0 until total by everyNth).take(maxFrames).map { idx =>
           MediaFrame(r.media_id, idx, math.round(idx / fps * 1000),
-            codec.frameAt(r.payload, idx))
+            StubMediaCodec.frameAt(r.payload, idx))
         }
       }
     }

@@ -67,12 +67,11 @@ object Retrieval {
 
   /** A deterministic query workload derived from the corpus itself
     * (docs with id % every == offset; query terms = bigrams of the
-    * first nWords words) — the oracle-reproducible stand-in for a real
+    * first 5 words) — the oracle-reproducible stand-in for a real
     * query log.
     */
   def queriesFromDocs(docs: DataFrame, idCol: String, textCol: String,
-                      every: Long = 29L, offset: Long = 3L,
-                      nWords: Int = 5): DataFrame = {
+                      every: Long = 29L, offset: Long = 3L): DataFrame = {
     val words = split(TextAnalysis.normalized(col(textCol)), " ")
     // EvalOnce pins the tokenize chain in THIS projection: the explode
     // downstream infers `size(terms) > 0 AND isnotnull(terms)`, and
@@ -84,7 +83,7 @@ object Retrieval {
     docs.filter(pmod(col(idCol), lit(every)) === lit(offset))
       .select(col(idCol).cast("long").as("query_id"),
         EvalOnce(bigramsOf(slice(words, lit(1),
-          least(size(words), lit(nWords))))).as("terms"))
+          least(size(words), lit(5))))).as("terms"))
   }
 
   /** BM25 top-k: for each (query_id, terms) row of `queries`, the k
@@ -218,11 +217,10 @@ object Retrieval {
   def bm25Prf(docs: DataFrame, idCol: String, textCol: String,
               queries: DataFrame, k: Int = 5, maxDf: Long = 40L,
               nFeedback: Int = 3, nExpand: Int = 2,
-              relDfDen: Option[Long] = None,
-              excludeSelf: Boolean = true): DataFrame = {
+              relDfDen: Option[Long] = None): DataFrame = {
     val (postings, stats, dfTab) = index(docs, idCol, textCol, maxDf, relDfDen)
     val r1 = scoreAndRank(postings, stats, dfTab, queries, nFeedback,
-      excludeSelf)
+      excludeSelf = true)
     val qTerms = queries
       .select(col("query_id").cast("long").as("query_id"),
         explode(col("terms")).as("term"))
@@ -241,7 +239,7 @@ object Retrieval {
     val q2 = qTerms.unionByName(expansion).distinct()
       .groupBy(col("query_id"))
       .agg(collect_list(col("term")).as("terms"))
-    scoreAndRank(postings, stats, dfTab, q2, k, excludeSelf)
+    scoreAndRank(postings, stats, dfTab, q2, k, excludeSelf = true)
   }
 
   /** Hard-negative mining — the training-triple construction pass of a
@@ -419,12 +417,15 @@ object Retrieval {
     stats.write.mode("overwrite").parquet(s"$path/stats")
   }
 
+  /** Most distinct workload terms [[searchIndex]] pushes into the scan. */
+  private val PushTermFilterUpTo = 64
+
   /** Serve BM25 from a persisted index ([[writeIndex]]) — bit-identical
     * to the train-in-query twin by construction (same integer
     * arithmetic over the same stored values).
     *
     * When the workload's distinct term set is small
-    * (<= pushTermFilterUpTo, the single-query / small-batch serving
+    * (<= PushTermFilterUpTo, the single-query / small-batch serving
     * shape), it is collected (bounded) and pushed as an In filter into
     * the postings scan — with the term-sorted layout that prunes row
     * groups, so one query reads its own posting lists, not the corpus.
@@ -436,13 +437,12 @@ object Retrieval {
     */
   def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                   queries: DataFrame, k: Int = 5,
-                  excludeSelf: Boolean = false,
-                  pushTermFilterUpTo: Int = 64): DataFrame = {
+                  excludeSelf: Boolean = false): DataFrame = {
     val postings0 = spark.read.parquet(s"$path/postings")
     val probe = queries.select(explode(col("terms")).as("term")).distinct()
-      .limit(pushTermFilterUpTo + 1).collect().map(_.getString(0))
+      .limit(PushTermFilterUpTo + 1).collect().map(_.getString(0))
     val postings =
-      if (probe.length <= pushTermFilterUpTo)
+      if (probe.length <= PushTermFilterUpTo)
         postings0.filter(col("term").isin(probe.toSeq: _*))
       else postings0
     scoreAndRank(postings,
@@ -483,26 +483,23 @@ object Retrieval {
           array(Seq.fill(dims)(lit(0L)): _*)).as("vec"))
   }
 
-  /** Deterministic phrase workload: the first `nWords` normalized words
-    * of docs with id % every == offset — the same oracle-reproducible
-    * corpus-derived scheme as [[queriesFromDocs]] — CAPPED at
-    * `maxPhrases` (drawn from the id-range prefix, deterministic). The
+  /** Deterministic phrase workload: the first 3 normalized words of
+    * docs with id % 41 == 5 — the same oracle-reproducible
+    * corpus-derived scheme as [[queriesFromDocs]] — CAPPED at 1024
+    * phrases (drawn from the id-range prefix, deterministic). The
     * cap models the real shape of a phrase watch-list: a fixed set of
     * phrases scanned against a growing corpus, NOT a workload that
     * grows with it. Without it the sf10 century measured 157× — the
     * corpus×phrases cross volume a saturated synthetic vocabulary
     * makes quadratic.
     */
-  def phrasesFromDocs(docs: DataFrame, idCol: String, textCol: String,
-                      every: Long = 41L, offset: Long = 5L,
-                      nWords: Int = 3,
-                      maxPhrases: Long = 1024L): DataFrame = {
+  def phrasesFromDocs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val words = split(TextAnalysis.normalized(col(textCol)), " ")
-    docs.filter(pmod(col(idCol), lit(every)) === lit(offset) &&
-        col(idCol).cast("long") < lit(every * maxPhrases) &&
-        size(words) >= nWords)
+    docs.filter(pmod(col(idCol), lit(41L)) === lit(5L) &&
+        col(idCol).cast("long") < lit(41L * 1024L) &&
+        size(words) >= 3)
       .select(col(idCol).cast("long").as("phrase_id"),
-        slice(words, 1, nWords).as("terms"))
+        slice(words, 1, 3).as("terms"))
   }
 
   /** Exact phrase-occurrence search via positional postings: a phrase

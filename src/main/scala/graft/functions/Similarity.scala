@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** Embedding width the vector operators assume unless told otherwise. */
+  val Dim = 64
+
   /** Cosine via the native single-loop [[CosineExpr]]: dot(a,b) /
     * (|a|·|b|) in double precision, each sum folded in element order
     * 1..d, so the result is bit-reproducible across engines (it matches
@@ -76,7 +79,7 @@ object Similarity {
   }
 
   /** Symmetric scalar quantization of an embedding column (the int8
-    * compression path of a vector index): q(x) = clamp(floor(x·scale),
+    * compression path of a vector index): q(x) = clamp(floor(x·200),
     * −127, 127). Emitted as integral-valued array<double> so the cosine
     * fold stays engine-portable — |q| ≤ 127 means every pairwise product
     * ≤ 16129 and every 64-term partial sum is an exact small integer in
@@ -86,9 +89,9 @@ object Similarity {
     * 1-byte values — 4× less storage/shuffle than float32 — and runs
     * the dot in int32; the arithmetic here is that dot, exactly.
     */
-  def scalarQuantize(emb: Column, scale: Int = 200): Column =
+  def scalarQuantize(emb: Column): Column =
     transform(emb, x =>
-      greatest(lit(-127.0), least(lit(127.0), floor(x.cast("double") * scale))))
+      greatest(lit(-127.0), least(lit(127.0), floor(x.cast("double") * 200))))
       .cast("array<double>")
 
   /** Quantized brute-force top-k: [[bruteForceTopK]] over
@@ -99,14 +102,14 @@ object Similarity {
     * exact-path plan.
     */
   def quantizedTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                    embCol: String, k: Int, scale: Int = 200,
+                    embCol: String, k: Int,
                     maxCorpus: Long = MaxBruteCorpus): DataFrame = {
     guardBrute(corpus, "quantizedTopK",
       "writeIvfPqIndex + searchIvfPqIndex", maxCorpus)
     val q = queries.select(col(idCol).as("query_id"),
-      scalarQuantize(col(embCol), scale).as("q_q"))
+      scalarQuantize(col(embCol)).as("q_q"))
     val c = corpus.select(col(idCol).as("match_id"),
-      scalarQuantize(col(embCol), scale).as("c_q"))
+      scalarQuantize(col(embCol)).as("c_q"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("match_id"))
       .withColumn("sim_q", cosine(col("q_q"), col("c_q")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim_q").desc, col("match_id").asc)
@@ -153,18 +156,18 @@ object Similarity {
     * broadcast; one shuffle for the per-query top-k.
     */
   def binaryTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 embCol: String, k: Int, dim: Int = 64,
+                 embCol: String, k: Int,
                  maxCorpus: Long = MaxBruteCorpus): DataFrame = {
     guardBrute(corpus, "binaryTopK",
       "writeIvfPqIndex + searchIvfPqIndex", maxCorpus)
     val q = withBinaryWords(
       queries.select(col(idCol).as("query_id"), col(embCol).as("e")),
-      "e", "q", dim).drop("e")
+      "e", "q", Dim).drop("e")
     val c = withBinaryWords(
       corpus.select(col(idCol).as("match_id"), col(embCol).as("e")),
-      "e", "c", dim).drop("e")
+      "e", "c", Dim).drop("e")
     val scored = c.join(broadcast(q), col("query_id") =!= col("match_id"))
-      .withColumn("hamming_sim", hammingSim(dim))
+      .withColumn("hamming_sim", hammingSim(Dim))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("hamming_sim").desc, col("match_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("int"))
@@ -184,18 +187,17 @@ object Similarity {
     */
   def binaryRerankTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                        embCol: String, k: Int, cand: Int = 40,
-                       dim: Int = 64,
                        maxCorpus: Long = MaxBruteCorpus): DataFrame = {
     guardBrute(corpus, "binaryRerankTopK",
       "writeIvfPqIndex + searchIvfPqIndex", maxCorpus)
     val q = withBinaryWords(
       queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb")),
-      "q_emb", "q", dim)
+      "q_emb", "q", Dim)
     val c = withBinaryWords(
       corpus.select(col(idCol).as("match_id"), col(embCol).as("c_emb")),
-      "c_emb", "c", dim)
+      "c_emb", "c", Dim)
     val scored = c.join(broadcast(q), col("query_id") =!= col("match_id"))
-      .withColumn("hamming_sim", hammingSim(dim))
+      .withColumn("hamming_sim", hammingSim(Dim))
     val wH = Window.partitionBy(col("query_id"))
       .orderBy(col("hamming_sim").desc, col("match_id").asc)
     val candidates = scored.withColumn("rank_h", row_number().over(wH))
@@ -530,7 +532,7 @@ object Similarity {
     * 10¹⁰ → 4; 10¹¹ → 32. At dim 1024 (maxLists 4096, maxShardN
     * ≈ 1.67×10⁷): 10⁹ → 64.
     */
-  def autoShards(n: Long, dim: Int = 64): Int = {
+  def autoShards(n: Long, dim: Int = Dim): Int = {
     require(n >= 1 && dim >= 1, "autoShards needs positive n and dim")
     val maxLists = math.min(MaxCoarseLists.toLong, MaxCentroidCells / dim)
     val maxShardN = maxLists * maxLists
@@ -565,7 +567,7 @@ object Similarity {
   def writeIvfPqIndex(corpus: DataFrame, idCol: String, embCol: String,
                       path: String, nCoarse: Int = 0, coarseIters: Int = 2,
                       m: Int = 8, subDim: Int = 8, nCentroids: Int = 8,
-                      pqIters: Int = 2, dim: Int = 64): Unit = {
+                      pqIters: Int = 2, dim: Int = Dim): Unit = {
     import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -724,7 +726,7 @@ object Similarity {
                              path: String, nShards: Int = 0, nCoarse: Int = 0,
                              coarseIters: Int = 2, m: Int = 8, subDim: Int = 8,
                              nCentroids: Int = 8, pqIters: Int = 2,
-                             dim: Int = 64): Unit = {
+                             dim: Int = Dim): Unit = {
     // nShards = 0: derive from corpus geometry (one count job), the
     // same contract nCoarse = 0 already has one level down
     val nShards0 = if (nShards > 0) nShards
@@ -811,7 +813,7 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 embCol: String, k: Int, nCoarse: Int = 8, coarseIters: Int = 2,
                 m: Int = 8, subDim: Int = 8, nCentroids: Int = 8,
-                pqIters: Int = 2, nProbe: Int = 2, dim: Int = 64,
+                pqIters: Int = 2, nProbe: Int = 2, dim: Int = Dim,
                 maxCorpus: Long = MaxBruteCorpus): DataFrame = {
     import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
     // same guard discipline as the brute scorers: this form trains a
@@ -875,6 +877,11 @@ object Similarity {
   // <plane_p, quantize(v)> where quantize(x) = floor(x·2^20) — all-integer
   // dot products: exact, associative, engine-portable.
 
+  /** Hyperplanes of [[lshBucket]] and [[lshBucketSql]] unless a caller
+    * picks another count.
+    */
+  val LshPlanes = 12
+
   def planeWeight(p: Int, d: Int): Int = ((p * 73 + d * 31) % 19) - 9
 
   /** LSH bucket id via the native [[LshBucketExpr]] — compact codegen'd
@@ -882,7 +889,7 @@ object Similarity {
     * nPlanes×dim element_at terms and blew up codegen — round-1 bench
     * spent ~4 s compiling the 768-term tree per query.)
     */
-  def lshBucket(emb: Column, nPlanes: Int = 12, dim: Int = 64): Column =
+  def lshBucket(emb: Column, nPlanes: Int = LshPlanes, dim: Int = Dim): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(
       LshBucketExpr(org.apache.spark.sql.GraftExpressionBridge.expression(emb),
         nPlanes, dim))
@@ -891,7 +898,7 @@ object Similarity {
     * arithmetic as [[LshBucketExpr]], any summation order — integer adds
     * are associative).
     */
-  def lshBucketSql(emb: String, nPlanes: Int = 12, dim: Int = 64): String = {
+  def lshBucketSql(emb: String, nPlanes: Int = LshPlanes, dim: Int = Dim): String = {
     val bits = (0 until nPlanes).map { p =>
       val terms = (0 until dim).map { d =>
         s"(CAST(floor(CAST($emb[${d + 1}] AS DOUBLE) * 1048576.0) AS BIGINT) * ${planeWeight(p, d)})"
@@ -908,7 +915,7 @@ object Similarity {
     * Spark side's np-plane bucket exactly (planes ≥ np contribute 0 on
     * both engines — Spark never computes them, SQL masks them).
     */
-  def lshBucketSqlDyn(emb: String, npSql: String, dim: Int = 64,
+  def lshBucketSqlDyn(emb: String, npSql: String, dim: Int = Dim,
                       maxPlanes: Int = 24): String = {
     val bits = (0 until maxPlanes).map { p =>
       val terms = (0 until dim).map { d =>
@@ -940,7 +947,7 @@ object Similarity {
     * colocated by a count-over-window before the filter can see them.
     */
   def cosineNearDupPairs(df: DataFrame, idCol: String, embCol: String,
-                         tau: Double, nPlanes: Int = 8, dim: Int = 64,
+                         tau: Double, nPlanes: Int = 8, dim: Int = Dim,
                          maxBucketSize: Long = Long.MaxValue): DataFrame = {
     val b0 = df.select(col(idCol).as("id"), col(embCol).as("emb"),
       lshBucket(col(embCol), nPlanes, dim).as("bucket"))
@@ -974,7 +981,7 @@ object Similarity {
     */
   def semanticDedup(df: DataFrame, idCol: String, embCol: String,
                     tau: Double, nCentroids: Int, iters: Int = 3,
-                    dim: Int = 64,
+                    dim: Int = Dim,
                     maxClusterSize: Long = Long.MaxValue): DataFrame = {
     import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
     val cents = trainIvfCentroids(df, idCol, embCol, nCentroids, iters, dim)
@@ -1006,7 +1013,7 @@ object Similarity {
     * matrix.
     */
   def trainIvfCentroids(corpus: DataFrame, idCol: String, embCol: String,
-                        k: Int, iters: Int = 5, dim: Int = 64): Array[Double] = {
+                        k: Int, iters: Int = 5, dim: Int = Dim): Array[Double] = {
     import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
     require(k >= 1 && iters >= 0)
     // seeds: the k smallest (md5(id), id) — deterministic, uniform over
@@ -1067,7 +1074,7 @@ object Similarity {
     */
   def ivfTopKTrained(corpus: DataFrame, queries: DataFrame, idCol: String,
                      embCol: String, k: Int, nCentroids: Int, iters: Int = 5,
-                     nProbe: Int = 2, dim: Int = 64): DataFrame = {
+                     nProbe: Int = 2, dim: Int = Dim): DataFrame = {
     import org.apache.spark.sql.GraftExpressionBridge.{column => exprCol, expression => colExpr}
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -1077,10 +1084,13 @@ object Similarity {
     val centDf = centIds.map(c =>
       (c, cents.slice(c.toInt * dim, (c.toInt + 1) * dim).toSeq))
       .toDF("cent_id", "cent_emb")
-    // map-side coarse assignment: centroid INDEX -> centroid id
+    // map-side coarse assignment: the centroid index is its id. A null
+    // embedding gets -1, which no centroid has, so its row drops at the
+    // probe join as a null id would; a nullable id would instead make
+    // Spark infer an isnotnull scan filter that runs the kernel twice
     val nearestIdx = exprCol(NearestCentroidExpr(colExpr(col(embCol)), cents, dim))
     val assigned = corpus.select(col(idCol).as("match_id"), col(embCol).as("c_emb"),
-      element_at(typedLit(centIds), nearestIdx + 1).as("cent_id"))
+      coalesce(nearestIdx, lit(-1)).cast("long").as("cent_id"))
 
     // query probes: tiny (queries × centroids), broadcast both ways
     val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"))
@@ -1101,15 +1111,15 @@ object Similarity {
   }
 
   /** LSH-bucketed ANN: candidates share a bucket; exact cosine re-rank
-    * inside the bucket. Recall is tunable via nPlanes (fewer planes =
-    * bigger buckets = higher recall, more work).
+    * inside the bucket, over [[lshBucket]]'s default [[LshPlanes]]
+    * planes.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              embCol: String, k: Int, nPlanes: Int = 12, dim: Int = 64): DataFrame = {
+              embCol: String, k: Int): DataFrame = {
     val c = corpus.select(col(idCol).as("match_id"), col(embCol).as("c_emb"),
-      lshBucket(col(embCol), nPlanes, dim).as("bucket"))
+      lshBucket(col(embCol)).as("bucket"))
     val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-      lshBucket(col(embCol), nPlanes, dim).as("bucket"))
+      lshBucket(col(embCol)).as("bucket"))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("match_id"))
       .withColumn("sim", cosine(col("q_emb"), col("c_emb")))

@@ -98,8 +98,14 @@ object Sketches {
       .drop("__n_present", "__present_q49")
   }
 
+  // Count-Min geometry shared by the sketch and its point queries: d
+  // hash rows × w columns, row j hashing `salt + j` ahead of the item
+  private val CmsD = 4
+  private val CmsW = 2048
+  private val CmsSalt = "cms"
+
   /** Count-Min sketch (Cormode & Muthukrishnan 2005) of `item`
-    * frequencies: `d` independent hash rows × `w` columns, each cell the
+    * frequencies: `d` (4) independent hash rows × `w` (2048) columns, each cell the
     * count of items landing on it. Returns (cms_row, cms_col, cms_cnt) —
     * ≤ d·w rows however many items flow in, all-integer, mergeable
     * across runs/engines by cell-wise sum.
@@ -110,11 +116,10 @@ object Sketches {
     * row per distinct token per partition (the Heaps-law tail). d·w is
     * the whole sketch: pick w ≥ e/ε for ±ε·N error at δ = e^−d.
     */
-  def cmsSketch(df: DataFrame, item: Column, d: Int = 4, w: Int = 2048,
-                salt: String = "cms"): DataFrame = {
-    val rows = explode(array((0 until d).map { j =>
+  def cmsSketch(df: DataFrame, item: Column): DataFrame = {
+    val rows = explode(array((0 until CmsD).map { j =>
       struct(lit(j).as("cms_row"),
-        pmod(hash60(concat(lit(s"$salt$j"), item.cast("string"))), lit(w.toLong))
+        pmod(hash60(concat(lit(s"$CmsSalt$j"), item.cast("string"))), lit(CmsW.toLong))
           .as("cms_col"))
     }: _*))
     df.select(rows.as("__c")).select(col("__c.cms_row"), col("__c.cms_col"))
@@ -128,13 +133,11 @@ object Sketches {
     * the sketch (≤ d·w rows) broadcasts, so probing any number of items
     * is map-side.
     */
-  def cmsEstimate(sketch: DataFrame, probes: DataFrame, item: Column,
-                  d: Int = 4, w: Int = 2048,
-                  salt: String = "cms"): DataFrame = {
+  def cmsEstimate(sketch: DataFrame, probes: DataFrame, item: Column): DataFrame = {
     val p = probes.select(item.cast("string").as("item")).distinct()
-    val cells = p.select(col("item"), explode(array((0 until d).map { j =>
+    val cells = p.select(col("item"), explode(array((0 until CmsD).map { j =>
       struct(lit(j).as("cms_row"),
-        pmod(hash60(concat(lit(s"$salt$j"), col("item"))), lit(w.toLong))
+        pmod(hash60(concat(lit(s"$CmsSalt$j"), col("item"))), lit(CmsW.toLong))
           .as("cms_col"))
     }: _*)).as("__c"))
       .select(col("item"), col("__c.cms_row").as("cms_row"),
@@ -179,9 +182,9 @@ object Sketches {
 
   /** Per-stratum approximate quantiles of a non-negative integer value
     * via the mergeable log-linear histogram: one row per stratum with
-    * `n_values` and a `p<q>_est` lower-quantile estimate per requested
-    * percentile (the bucket lower edge — all-integer, engine-portable,
-    * relative error ≤ 2^−subBits, small values exact).
+    * `n_values` and the lower-quantile estimates `p50_est`, `p90_est`
+    * and `p99_est` (the bucket lower edge — all-integer, engine-portable,
+    * relative error ≤ 2^−5, small values exact).
     *
     * Scale shape: `groupBy(strata, bucket)` partial-aggregates every
     * partition to ≤ #buckets rows (subBits=5 ⇒ at most ~1.9k buckets
@@ -194,12 +197,8 @@ object Sketches {
     * cell-wise sum. Rank rule: smallest bucket with 100·cum ≥ q·N — the
     * classic lower (type-1) quantile, exact integer comparison.
     */
-  def quantileProfile(df: DataFrame, strata: Seq[String], value: Column,
-                      subBits: Int = 5,
-                      percentiles: Seq[Int] = Seq(50, 90, 99)): DataFrame = {
-    require(subBits >= 1 && subBits <= 8, s"subBits=$subBits outside [1,8]")
-    require(percentiles.nonEmpty && percentiles.forall(q => q >= 1 && q <= 100),
-      "percentiles must be in [1,100]")
+  def quantileProfile(df: DataFrame, strata: Seq[String], value: Column): DataFrame = {
+    val subBits = 5
     import org.apache.spark.sql.expressions.Window
     val hist = df
       .select(strata.map(col) :+
@@ -212,7 +211,7 @@ object Sketches {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("__tot", sum(col("__cnt")).over(byStratum))
     val rep = histBucketLowerEdge(col("__qb"), subBits)
-    val aggs = percentiles.map { q =>
+    val aggs = Seq(50, 90, 99).map { q =>
       min(when(col("__cum") * 100 >= col("__tot") * q, rep)).as(s"p${q}_est")
     }
     cum.groupBy((strata :+ "__tot").map(col): _*)

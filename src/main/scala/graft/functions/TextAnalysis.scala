@@ -65,19 +65,22 @@ object TextAnalysis {
     */
   val WinnowB = 257L
   val WinnowP = 1000000007L
+  /** Gram length and window width of [[winnowingFingerprints]]. */
+  val WinnowK = 8
+  val WinnowW = 16
 
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    * SIGMOD'03): hash every k-char gram of the normalized text with a
-    * polynomial (Karp-Rabin) hash, then keep the minimum hash of each
-    * sliding window of `w` grams — the classic fingerprint set whose
-    * overlap estimates local similarity. Texts shorter than k are
-    * right-padded with spaces to yield exactly one gram.
+    * SIGMOD'03): hash every [[WinnowK]]-char gram of the normalized text
+    * with a polynomial (Karp-Rabin) hash, then keep the minimum hash of
+    * each sliding window of [[WinnowW]] grams — the classic fingerprint
+    * set whose overlap estimates local similarity. Texts shorter than a
+    * gram are right-padded with spaces to yield exactly one gram.
     * Returns a sorted distinct array<long>.
     */
-  def winnowingFingerprints(normText: Column, k: Int = 8, w: Int = 16): Column =
+  def winnowingFingerprints(normText: Column): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(
       WinnowFingerprintsExpr(
-        org.apache.spark.sql.GraftExpressionBridge.expression(normText), k, w))
+        org.apache.spark.sql.GraftExpressionBridge.expression(normText), WinnowK, WinnowW))
 
   /** Tiny per-language stopword lists for the n-gram/stopword language-ID
     * heuristic. Deliberately minimal and deterministic.
@@ -178,33 +181,27 @@ object TextAnalysis {
     * table A1's shape): per-document boolean verdicts for each rule
     * plus the combined keep decision. Unlike [[qualityScoreOnto]]'s soft
     * blend, these are the hard gates a corpus pipeline applies before
-    * any scoring: word-count band, mean-word-length band, minimum
-    * stopword evidence (a proxy for "is natural language at all"),
-    * and minimum alphabetic fraction (drops markup/number dumps).
+    * any scoring: 20-90 words, mean word length 3-10 characters, at
+    * least 2 English stopwords (a proxy for "is natural language at
+    * all"), and at least half the characters alphabetic (drops
+    * markup/number dumps).
     *
     * Pure map-side Column arithmetic over one EvalOnce'd token count —
     * no shuffle, rides the scan at any corpus size. Rule verdicts are
     * emitted individually (not just the conjunction) because pipeline
     * dashboards track WHICH rule kills documents per source.
     */
-  def gopherFilterOnto(df: DataFrame, textCol: Column,
-                       minWords: Int = 20, maxWords: Int = 90,
-                       minMeanWordLen: Double = 3.0,
-                       maxMeanWordLen: Double = 10.0,
-                       minStopwordHits: Int = 2,
-                       minAlphaFrac: Double = 0.5): DataFrame = {
+  def gopherFilterOnto(df: DataFrame, textCol: Column): DataFrame = {
     val n = col("__gf_n")
     val chars = length(textCol).cast("double")
     val meanWordLen = chars / greatest(n.cast("double"), lit(1.0))
     val alphaFrac = length(regexp_replace(textCol, "[^A-Za-z]", ""))
       .cast("double") / greatest(chars, lit(1.0))
     df.withColumn("__gf_n", EvalOnce(wsTokenCount(textCol)))
-      .withColumn("r_len_ok", n >= minWords && n <= maxWords)
-      .withColumn("r_mwl_ok",
-        meanWordLen >= minMeanWordLen && meanWordLen <= maxMeanWordLen)
-      .withColumn("r_sw_ok",
-        stopwordHits(textCol, Stopwords("en")) >= minStopwordHits)
-      .withColumn("r_alpha_ok", alphaFrac >= minAlphaFrac)
+      .withColumn("r_len_ok", n >= 20 && n <= 90)
+      .withColumn("r_mwl_ok", meanWordLen >= 3.0 && meanWordLen <= 10.0)
+      .withColumn("r_sw_ok", stopwordHits(textCol, Stopwords("en")) >= 2)
+      .withColumn("r_alpha_ok", alphaFrac >= 0.5)
       .withColumn("keep",
         col("r_len_ok") && col("r_mwl_ok") && col("r_sw_ok") && col("r_alpha_ok"))
       .drop("__gf_n")

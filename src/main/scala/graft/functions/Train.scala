@@ -37,15 +37,20 @@ object Train {
     "least(nc * 1000 DIV greatest(nt, 1), 4096) DIV 16 - 120",
     "abs(nt - 45) - 25")
 
+  // The teacher label's thresholds (MinTok ≤ tokens ≤ MaxTok AND
+  // alpha-ratio ≥ MinAlphaQ10/1024) and the schedule (Rounds rounds,
+  // learning rate 1/LrDen), read by the trainer and its oracle alike.
+  private val MinTok = 20L
+  private val MaxTok = 70L
+  private val MinAlphaQ10 = 700L
+  private val Rounds = 32
+  private val LrDen = 8L
+
   /** Train on `df`, teacher label = the integer heuristic
-    * (minTok ≤ tokens ≤ maxTok AND alpha-ratio ≥ minAlphaQ10/1024).
+    * (20 ≤ tokens ≤ 70 AND alpha-ratio ≥ 700/1024), 32 rounds.
     * Returns ONE row: (best_round, n_docs, n_correct, w0..w4).
     */
-  def pocketPerceptron(df: DataFrame, idCol: String, textCol: String,
-                       minTok: Long = 20L, maxTok: Long = 70L,
-                       minAlphaQ10: Long = 700L,
-                       rounds: Int = 32, lrDen: Long = 8L): DataFrame = {
-    require(rounds >= 1 && lrDen >= 1)
+  def pocketPerceptron(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val feats = FeatureExprs.zipWithIndex
@@ -57,8 +62,8 @@ object Train {
         length(regexp_replace(col(textCol), "[^A-Za-z]", ""))
           .cast("long").as("na"))
       .selectExpr(feats :+
-        (s"CASE WHEN nt >= $minTok AND nt <= $maxTok AND " +
-          s"na * 1024 DIV greatest(nc, 1) >= $minAlphaQ10 " +
+        (s"CASE WHEN nt >= $MinTok AND nt <= $MaxTok AND " +
+          s"na * 1024 DIV greatest(nc, 1) >= $MinAlphaQ10 " +
           "THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS y"): _*)
       .localCheckpoint()
     def zExpr(w: Array[Long]): String =
@@ -93,8 +98,8 @@ object Train {
     var bestW = w.clone()
     var bestRound = 0
     var grads = grads0
-    for (r <- 1 to rounds) {
-      (0 until 5).foreach(j => w(j) += grads(j) / lrDen)
+    for (r <- 1 to Rounds) {
+      (0 until 5).foreach(j => w(j) += grads(j) / LrDen)
       val (_, a, g) = roundStats(w)
       grads = g
       if (a > bestAcc) { bestAcc = a; bestW = w.clone(); bestRound = r }
@@ -108,10 +113,7 @@ object Train {
     * over the `documents` table — generated, because 32 rounds × (grad,
     * weight, accuracy) CTEs + the pocket CASE chain is mechanical.
     */
-  def pocketPerceptronOracleSql(minTok: Long = 20L, maxTok: Long = 70L,
-                                minAlphaQ10: Long = 700L,
-                                rounds: Int = 32, lrDen: Long = 8L,
-                                rawTokensSql: String): String = {
+  def pocketPerceptronOracleSql(rawTokensSql: String): String = {
     val fx = Seq(
       "256",
       "least(nt, 1024) - 45",
@@ -123,23 +125,23 @@ object Train {
       (0 until 5).map(j => s"(SELECT w$j FROM w$k) * x$j").mkString(" + ")
     def ok(k: Int): String =
       s"(CASE WHEN ${z(k)} >= 0 THEN 1 ELSE -1 END) = y"
-    val roundCtes = (1 to rounds).map { k =>
+    val roundCtes = (1 to Rounds).map { k =>
       val g = (0 until 5).map(j =>
         s"coalesce(sum(CASE WHEN NOT (${ok(k - 1)}) THEN y * x$j ELSE 0 END), 0) AS g$j")
         .mkString(", ")
       val wNew = (0 until 5).map(j =>
-        s"CAST((SELECT w$j FROM w${k - 1}) + (SELECT g$j FROM g$k) // $lrDen AS BIGINT) AS w$j")
+        s"CAST((SELECT w$j FROM w${k - 1}) + (SELECT g$j FROM g$k) // $LrDen AS BIGINT) AS w$j")
         .mkString(", ")
       s"""g$k AS MATERIALIZED (SELECT $g FROM feat),
          |w$k AS MATERIALIZED (SELECT $wNew),
          |a$k AS MATERIALIZED (SELECT coalesce(sum(CASE WHEN ${ok(k)} THEN 1 ELSE 0 END), 0) AS ok FROM feat)""".stripMargin
     }.mkString(",\n")
-    val accRows = (0 to rounds)
+    val accRows = (0 to Rounds)
       .map(k => s"SELECT $k AS r, (SELECT ok FROM a$k) AS ok")
       .mkString(" UNION ALL ")
     def pick(col: String): String =
       "CASE (SELECT r FROM best) " +
-        (0 to rounds).map(k => s"WHEN $k THEN (SELECT $col FROM w$k)")
+        (0 to Rounds).map(k => s"WHEN $k THEN (SELECT $col FROM w$k)")
           .mkString(" ") + " END"
     s"""WITH d AS MATERIALIZED (SELECT
        |    CAST(len($rawTokensSql) AS BIGINT) AS nt,
@@ -147,8 +149,8 @@ object Train {
        |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT) AS na
        |  FROM documents),
        |feat AS MATERIALIZED (SELECT ${fx.mkString(", ")},
-       |    CASE WHEN nt >= $minTok AND nt <= $maxTok AND
-       |      na * 1024 // greatest(nc, 1) >= $minAlphaQ10
+       |    CASE WHEN nt >= $MinTok AND nt <= $MaxTok AND
+       |      na * 1024 // greatest(nc, 1) >= $MinAlphaQ10
        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS y
        |  FROM d),
        |w0 AS MATERIALIZED (SELECT ${(0 until 5).map(j => s"CAST(0 AS BIGINT) AS w$j").mkString(", ")}),

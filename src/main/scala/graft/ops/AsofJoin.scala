@@ -27,13 +27,15 @@ import org.apache.spark.sql.functions._
   */
 object AsofJoin {
 
+  private val RightPrefix = "r_"
+
   /** @param left       dependent side
     * @param right      independent side
     * @param keys       equi keys (e.g. nothing, or a vessel/thing id)
     * @param leftTimeUs  left event-time column (epoch µs)
     * @param rightTimeUs right event-time column name on `right` (epoch µs)
     * @param toleranceUs max |Δt| in µs
-    * @param rightCols  right columns to carry (renamed with `rightPrefix`)
+    * @param rightCols  right columns to carry (renamed with the `r_` prefix)
     * @param leftIdCol  a UNIQUE left row-id column, used as the candidate
     *   dedup key. When absent, a deterministic tag is derived from all
     *   left columns (an extra all-columns window pass — pass the id when
@@ -42,7 +44,7 @@ object AsofJoin {
     */
   def nearest(left: DataFrame, right: DataFrame, keys: Seq[String],
               leftTimeUs: String, rightTimeUs: String, toleranceUs: Long,
-              rightCols: Seq[String], rightPrefix: String = "r_",
+              rightCols: Seq[String],
               rightIdCol: Option[String] = None,
               leftIdCol: Option[String] = None): DataFrame = {
     require(toleranceUs > 0, "tolerance must be positive")
@@ -71,9 +73,9 @@ object AsofJoin {
     // the right time column is always carried (bucketing + tiebreak need
     // it), even when the caller doesn't ask for it in rightCols
     val carried = (rightCols :+ rightTimeUs).distinct
-    val rTime = col(s"$rightPrefix$rightTimeUs")
+    val rTime = col(s"$RightPrefix$rightTimeUs")
     val rRenamed = right
-      .withColumnsRenamed(carried.map(c => c -> s"$rightPrefix$c").toMap)
+      .withColumnsRenamed(carried.map(c => c -> s"$RightPrefix$c").toMap)
       .withColumn("__bucket", floor(rTime / toleranceUs).cast("long"))
 
     val dt = abs(col(leftTimeUs) - rTime)
@@ -84,7 +86,7 @@ object AsofJoin {
     val tieBreak: Seq[Column] =
       Seq(when(coalesce(col("__ok"), lit(false)), lit(0)).otherwise(lit(1)), // in-tolerance first
         col("__dt"), rTime) ++
-        rightIdCol.map(c => col(s"$rightPrefix$c")).toSeq
+        rightIdCol.map(c => col(s"$RightPrefix$c")).toSeq
     val w = Window.partitionBy(col("__lid"))
       .orderBy(tieBreak.map(_.asc_nulls_last): _*)
     val matched = col("__ok") === true
@@ -92,7 +94,7 @@ object AsofJoin {
       .filter(col("__rn") === 1)
       // null out right columns of out-of-tolerance best candidates
       .select(left.columns.map(col) ++
-        rightCols.map(c => when(matched, col(s"$rightPrefix$c")).as(s"$rightPrefix$c")) :+
+        rightCols.map(c => when(matched, col(s"$RightPrefix$c")).as(s"$RightPrefix$c")) :+
         coalesce(matched, lit(false)).as("asof_matched"): _*)
   }
 

@@ -328,8 +328,8 @@ object Geo {
     * `src/main.py:535-542`): no region found => PROBABLY_GOOD benefit of
     * the doubt (the depth check refines it later).
     */
-  def nullRegionCheck(region: Column, onTrue: Byte = Flags.ProbablyGood): QcCheck =
-    QcCheck("null_region", region.isNull, onTrue)
+  def nullRegionCheck(region: Column): QcCheck =
+    QcCheck("null_region", region.isNull, Flags.ProbablyGood)
 
   /** Mainland check (reference `get_bool_land_region`, `src/main.py:548-555`,
     * pinned `tests/test_qc.py:62-68`): region containing "MAINLAND" => BAD.
@@ -376,16 +376,11 @@ object Geo {
   }
 
   /** Depth-above-threshold check (reference `src/main.py:561-571,595-608`):
-    * elevation above `threshold` (0.0 = sea level) => BAD; optional mask
-    * restricts the check to already-land-flagged rows; null elevation =>
-    * `onNan` (reference `flag_on_nan=NQC`).
+    * elevation above `threshold` (0.0 = sea level) => BAD; null
+    * elevation => `onNan` (reference `flag_on_nan=NQC`).
     */
-  def depthCheck(elevation: Column, threshold: Double = 0.0,
-                 mask: Option[Column] = None): QcCheck = {
-    val base = elevation > threshold
-    val v = mask.map(m => when(m, base)).getOrElse(base)
-    QcCheck("depth_above_threshold", v, Flags.Bad, onNan = Some(Flags.NoQc))
-  }
+  def depthCheck(elevation: Column, threshold: Double = 0.0): QcCheck =
+    QcCheck("depth_above_threshold", elevation > threshold, Flags.Bad, onNan = Some(Flags.NoQc))
 
   // ---------------------------------------------------------------------
   // Real reference-data paths (round-2: loaders behind the same engine

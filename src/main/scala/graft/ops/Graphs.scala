@@ -37,14 +37,17 @@ object Graphs {
       .distinct()
   }
 
+  /** Neighbors per adjacency segment in [[triangleStats]]. */
+  private val AdjSegSize = 4096
+
   /** One-row triangle statistics over distinct (a < b) edges:
     * (n_nodes, n_edges, n_wedges, n_triangles, closure_micro) with
     * closure = 3·triangles/wedges in integer micro-units (the global
     * clustering coefficient).
     */
-  def triangleStats(edges0: DataFrame, adjSegSize: Int = 4096,
+  def triangleStats(edges0: DataFrame,
                     probeEdgesPerBatch: Long = 200000000L): DataFrame = {
-    require(adjSegSize >= 1 && probeEdgesPerBatch >= 1)
+    require(probeEdgesPerBatch >= 1)
     // The (possibly expensive) edge construction is consumed FIVE times
     // across two separate actions (degree rollup twice via the union,
     // the rank join, the eager probe phase, and the returned frame's
@@ -77,7 +80,7 @@ object Graphs {
       when(col("ra") < col("rb"), col("b")).otherwise(col("a")).as("dst"))
       .localCheckpoint()
     // Spill-aware adjacency: split each vertex's out-neighbor list into
-    // fixed-size segments (≤ adjSegSize) AFTER the one groupBy, by
+    // fixed-size segments (≤ AdjSegSize) AFTER the one groupBy, by
     // slicing the collected array map-side — a hub with out-degree D
     // becomes ceil(D/S) bounded rows where it matters (the Σoutdeg²
     // probe joins below carry the arrays through the shuffle), while
@@ -89,8 +92,8 @@ object Graphs {
     // window-rank segmentation measured one extra data-scale sort.)
     val adj = o.groupBy(col("src")).agg(collect_list(col("dst")).as("all"))
       .select(col("src"), explode(expr(
-        s"transform(sequence(0, (size(all) - 1) DIV $adjSegSize)," +
-          s" i -> slice(all, i * $adjSegSize + 1, $adjSegSize))")).as("nbrs"))
+        s"transform(sequence(0, (size(all) - 1) DIV $AdjSegSize)," +
+          s" i -> slice(all, i * $AdjSegSize + 1, $AdjSegSize))")).as("nbrs"))
       .localCheckpoint()
     // ==Cluster sizing (the DOCUMENTED MACHINE BOUND, not a plan
     // defect)== The probe join's in-flight volume is the intersection
@@ -171,7 +174,7 @@ object Graphs {
     * removed set — edges touching survivors are never re-aggregated
     * (the full-recount formulation cost a corpus-scale groupBy per
     * round and ran 3× slower at sf1). The removal-set probe joins are
-    * broadcast ONLY when the measured count is ≤ `broadcastRemUpTo`
+    * broadcast ONLY when the measured count is ≤ 10⁶
     * (round 1 removes O(|V|) vertices on power-law graphs — an
     * unconditional broadcast there breaks past the driver limit at
     * cluster scale); bigger sets take a shuffled join under AQE.
@@ -182,8 +185,7 @@ object Graphs {
     * trap dd_clusters hit first). Early exit on a converged round is
     * output-identical (later rounds are no-ops).
     */
-  def kcoreRounds(edges: DataFrame, k: Int, rounds: Int,
-                  broadcastRemUpTo: Long = 1000000L): DataFrame = {
+  def kcoreRounds(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 0 && rounds >= 1)
     // ENDPOINT-EXPLODED incidence frame, hash-partitioned on the vertex
     // and materialized ONCE: every round's delta needs "the other
@@ -233,7 +235,7 @@ object Graphs {
         // convergence check): small set → broadcast probe; big set →
         // plain shuffled join and AQE decides.
         val remSide: DataFrame => DataFrame =
-          if (nRem <= broadcastRemUpTo) df => broadcast(df) else identity
+          if (nRem <= 1000000L) df => broadcast(df) else identity
         // decrement the OTHER endpoint of every edge that lost a
         // vertex this round; decrements landing on a vertex that is
         // itself removed (this round or earlier) vanish in the
@@ -274,13 +276,12 @@ object Graphs {
     * small), one groupBy (dst, label) whose map-side partials absorb
     * hot-community skew, and one |V|-scale argmin via min(struct) — no
     * window, no sort. Rounds build one lazy plan, each referencing its
-    * predecessor once. The labels of every `checkpointEvery`-th round
+    * predecessor once. The labels of every 8th round
     * are localCheckpoint'ed to bound the lineage at high round counts,
     * and so are the final round's (the result has several consumers).
     */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-                       checkpointEvery: Int = 8): DataFrame = {
-    require(rounds >= 1 && checkpointEvery >= 1)
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
+    require(rounds >= 1)
     // hash-partition AND sort on the join key once before the
     // checkpoint: LogicalRDD keeps both outputPartitioning and
     // outputOrdering, so every round's sort-merge join consumes the
@@ -293,8 +294,8 @@ object Graphs {
     // the per-round eager checkpoint was one driver job + barrier of
     // pure latency per round). The FINAL round is eagerly checkpointed:
     // it has multiple downstream consumers (q_modularity joins it
-    // twice), and it lets `e` be released here. `checkpointEvery` bounds
-    // lineage for high round counts.
+    // twice), and it lets `e` be released here. The checkpoint every 8th
+    // round bounds lineage for high round counts.
     var labels = e.select(col("src").as("v")).distinct()
       .withColumn("label", col("v"))
     var lastCkpt: DataFrame = null
@@ -312,7 +313,7 @@ object Graphs {
       var nextLabels = votes.groupBy(col("dst"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
         .select(col("dst").as("v"), col("m").getField("l").as("label"))
-      if (r == rounds || r % checkpointEvery == 0) {
+      if (r == rounds || r % 8 == 0) {
         nextLabels = nextLabels.localCheckpoint()
         if (lastCkpt != null) graft.core.Checkpoints.release(lastCkpt)
         lastCkpt = nextLabels

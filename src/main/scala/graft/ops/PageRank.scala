@@ -38,6 +38,8 @@ object PageRank {
 
   val TeleportMicro = 150000L // 0.15 in micro-units
   val DampingPct = 85L        // 0.85 as an integer percentage
+  /** Rounds between the lineage-bounding checkpoints of a long run. */
+  private val CheckpointEvery = 8
 
   /** Fixed-iteration integer PageRank over directed `edges` (columns
     * `src`, `dst`; parallel edges should be pre-deduped by the caller —
@@ -46,10 +48,8 @@ object PageRank {
     * a symmetrized edge list that is every node of the graph.
     */
   def ranks(edges: DataFrame, iters: Int = 3,
-            checkpointDir: Option[String] = None,
-            checkpointEvery: Int = 8): DataFrame = {
+            checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
-    require(checkpointEvery >= 1)
     val spark = edges.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def markEager(df: DataFrame): DataFrame =
@@ -70,7 +70,7 @@ object PageRank {
     // exactly ONCE (the contribution join), so the nested plan grows
     // LINEARLY in the round count — the per-round eager checkpoint
     // (one driver job + barrier each) bought nothing but latency at any
-    // scale. A periodic checkpoint (every `checkpointEvery` rounds)
+    // scale. A periodic checkpoint (every CheckpointEvery rounds)
     // stays as the lineage bound for high iteration counts; at the
     // default 3 iterations the whole computation is one action.
     var ranks = nodes.withColumn("rank_micro", lit(1000000L))
@@ -84,7 +84,7 @@ object PageRank {
           .select(col("node"),
             (lit(TeleportMicro) +
               expr(s"$DampingPct * coalesce(s, 0L) DIV 100")).as("rank_micro"))
-      if (i % checkpointEvery == 0 && i < iters) {
+      if (i % CheckpointEvery == 0 && i < iters) {
         next = markEager(next)
         // iterate-and-release: the new checkpoint is self-contained,
         // the superseded one is dead weight
@@ -115,11 +115,9 @@ object PageRank {
     */
   def personalizedRanks(edges: DataFrame, seedMod: Long = 20L,
                         iters: Int = 3,
-                        checkpointDir: Option[String] = None,
-                        checkpointEvery: Int = 8): DataFrame = {
+                        checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(seedMod >= 1)
-    require(checkpointEvery >= 1)
     val spark = edges.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def markEager(df: DataFrame): DataFrame =
@@ -154,7 +152,7 @@ object PageRank {
           .select(coalesce(col("node"), col("dst")).as("node"),
             (teleport(coalesce(col("node"), col("dst")), TeleportMicro) +
               expr(s"$DampingPct * coalesce(s, 0L) DIV 100")).as("rank_micro"))
-      if (i % checkpointEvery == 0 && i < iters) {
+      if (i % CheckpointEvery == 0 && i < iters) {
         next = markEager(next)
         if (lastCkpt != null) graft.core.Checkpoints.release(lastCkpt)
         lastCkpt = next
@@ -260,17 +258,6 @@ object PageRank {
         coalesce(col("a"), lit(0L)).as("auth_micro"))
   }
 
-  /** The curation-shaped instance: authority over the customer↔supplier
-    * bipartite graph (distinct trade pairs from orders⋈lineitem),
-    * symmetrized so rank flows both ways. Node keys are SIGN-SPLIT
-    * integers — customers keep their positive key, suppliers are
-    * negated — because the two id spaces overlap numerically. An 8-byte
-    * fixed-width key roughly halves shuffle bytes across the whole graph
-    * family versus the type-prefixed string form it replaces ("c123" /
-    * "s45"): every per-round join, degree groupBy and probe in
-    * PageRank / HITS / LPA / modularity / assortativity keys on this
-    * column, and string keys also hash and compare slower per row.
-    */
   /** Distinct customer→supplier pairs, each undirected edge ONCE (the
     * bipartite trade graph before symmetrization).
     */
@@ -282,6 +269,17 @@ object PageRank {
         (-col("l_suppkey")).cast("long").as("dst"))
       .distinct()
 
+  /** The curation-shaped instance: authority over the customer↔supplier
+    * bipartite graph (distinct trade pairs from orders⋈lineitem),
+    * symmetrized so rank flows both ways. Node keys are SIGN-SPLIT
+    * integers — customers keep their positive key, suppliers are
+    * negated — because the two id spaces overlap numerically. An 8-byte
+    * fixed-width key roughly halves shuffle bytes across the whole graph
+    * family versus the type-prefixed string form it replaces ("c123" /
+    * "s45"): every per-round join, degree groupBy and probe in
+    * PageRank / HITS / LPA / modularity / assortativity keys on this
+    * column, and string keys also hash and compare slower per row.
+    */
   def tradeGraphEdges(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val pairs = tradeGraphPairs(orders, lineitem)
     pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))

@@ -35,7 +35,7 @@ object PivotExport {
     * known catalog (keeps Catalyst from an extra distinct job).
     */
   def pivotWide(df: DataFrame, streams: Seq[Long],
-                timeRound: Column, missingFlag: Byte = Flags.Missing): DataFrame = {
+                timeRound: Column): DataFrame = {
     val agged = df
       .withColumn("time_round", timeRound)
       .groupBy(col("time_round"))
@@ -46,7 +46,7 @@ object PivotExport {
     // src/aums_data_request.py:121)
     streams.foldLeft(agged) { (d, s) =>
       d.withColumn(s"${s}_qc",
-        coalesce(col(s"${s}_qc"), lit(missingFlag).cast("tinyint")))
+        coalesce(col(s"${s}_qc"), lit(Flags.Missing).cast("tinyint")))
     }
   }
 

@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * Semantics: compute a boolean verdict per row; map true→`onTrue`,
   * false→`onFalse` (None = leave untouched), null verdict→`onNan`;
   * merge the verdict flag into the running flag column worst-wins
-  * (`Series.combine(max)`), or overwrite for feature-flag resets
-  * (reference `src/main.py:573-575`).
+  * (`Series.combine(max)`, reference `src/main.py:573-575`).
   *
   * Spark-first: the whole combinator is a pure Column expression —
   * `greatest(flag, coalesce(when(...), onNan))` — so an arbitrarily long
@@ -24,8 +23,7 @@ final case class QcCheck(
     verdict: Column, // boolean column: true = check failed
     onTrue: Byte,
     onFalse: Option[Byte] = None,
-    onNan: Option[Byte] = None,
-    overwrite: Boolean = false
+    onNan: Option[Byte] = None
 ) {
 
   /** The flag this check contributes (nullable: null = no opinion). */
@@ -42,9 +40,7 @@ final case class QcCheck(
   }
 
   /** Merge this check into an existing flag column. */
-  def mergedInto(flag: Column): Column =
-    if (overwrite) coalesce(flagCol, flag).cast("tinyint")
-    else Flags.worstWins(flag, flagCol)
+  def mergedInto(flag: Column): Column = Flags.worstWins(flag, flagCol)
 }
 
 object QcCheck {

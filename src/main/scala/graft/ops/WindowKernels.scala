@@ -202,14 +202,12 @@ object WindowKernels {
     * null rather than an ANSI divide error; a stream with fewer than 2
     * known samples cannot define a segment and also yields null.
     */
-  def interpSlinear(df: DataFrame, out: String, value: Column, epochUs: Column,
-                    partCols: Seq[String] = Seq(Obs.DatastreamId),
-                    tieBreak: Column = col(Obs.IotId)): DataFrame = {
-    val wAsc = Window.partitionBy(partCols.map(col): _*)
-      .orderBy(epochUs.asc, tieBreak.asc)
+  def interpSlinear(df: DataFrame, out: String, value: Column, epochUs: Column): DataFrame = {
+    val wAsc = Window.partitionBy(col(Obs.DatastreamId))
+      .orderBy(epochUs.asc, col(Obs.IotId).asc)
       .rowsBetween(1, Window.unboundedFollowing)
-    val wDesc = Window.partitionBy(partCols.map(col): _*)
-      .orderBy(epochUs.desc, tieBreak.desc)
+    val wDesc = Window.partitionBy(col(Obs.DatastreamId))
+      .orderBy(epochUs.desc, col(Obs.IotId).desc)
       .rowsBetween(1, Window.unboundedFollowing)
     val t = epochUs.cast("double")
     // time-of-known-sample: null wherever the value is null, so the same

@@ -96,22 +96,21 @@ object ConfigLoader {
     } else over
 
   /** Full composition pipeline: read files in order, interpolate env
-    * resolvers, deep-merge, then parse/validate with CLI overrides last.
+    * resolvers, deep-merge, then parse/validate.
     * An unreadable file, an unset env var or malformed JSON is a
     * [[ValidationError]] at the file's path.
     */
-  def loadFiles(paths: Seq[String], overrides: Map[String, String] = Map.empty,
-                env: Map[String, String] = sys.env): Either[Seq[ValidationError], Loaded] = {
+  def loadFiles(paths: Seq[String]): Either[Seq[ValidationError], Loaded] = {
     val docs = paths.map { p =>
       Try(interpolateEnv(new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8"), env))
+          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")))
         .toEither.left.map(e => ValidationError(p, e.toString))
     }
     val unread = docs.collect { case Left(e) => e }
     if (unread.nonEmpty) Left(unread)
     else Try(compose(docs.collect { case Right(d) => d })).toEither
       .left.map(e => Seq(ValidationError(paths.mkString(","), e.toString)))
-      .flatMap(load(_, overrides))
+      .flatMap(load(_))
   }
 
   /** Entry point of the CLI mains: the loaded config, or each error on

@@ -45,10 +45,6 @@ object Q {
       }
     }
 
-  /** Content-fingerprinted persisted-index path for `table` under this
-    * sf dir: neither a regenerated dataset nor a parameter change can
-    * silently reuse a stale index (the sim_*_search cache-key rule).
-    */
   /** Content signature of a testdata table: file names, lengths and
     * mtimes — cheap (no data read) and invalidated by any regeneration.
     */
@@ -60,6 +56,10 @@ object Q {
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
   }
 
+  /** Content-fingerprinted persisted-index path for `table` under this
+    * sf dir: neither a regenerated dataset nor a parameter change can
+    * silently reuse a stale index (the sim_*_search cache-key rule).
+    */
   def indexDir(kind: String, dir: String, table: String,
                params: String): String = {
     val md5 = java.security.MessageDigest.getInstance("MD5")

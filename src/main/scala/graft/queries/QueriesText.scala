@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.functions.{Bpe, Dedup, Portable, Retrieval, Sampling, TextAnalysis, Train}
+import graft.functions.{Bpe, Dedup, Dsir, Portable, Retrieval, Sampling, TextAnalysis, Train}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis + deduplication queries over the `documents` table.
@@ -76,31 +76,33 @@ object QueriesText {
 
   /** Winnowing-fingerprint CTE chain over documents, ending in
     * `m (doc_id, wf)` — mirrors [[TextAnalysis.winnowingFingerprints]]
-    * (k=8 char grams, window 16, Karp-Rabin Horner fold, identical
+    * (k-char grams, window w, Karp-Rabin Horner fold, identical
     * integer arithmetic both engines).
     */
   private val winnowCte: String = {
     val B = TextAnalysis.WinnowB
     val P = TextAnalysis.WinnowP
+    val k = TextAnalysis.WinnowK
+    val w = TextAnalysis.WinnowW
     // identical Horner fold: (((c0*B + c1) % P)*B + c2) % P ...
-    val horner = (0 until 8).foldLeft("CAST(0 AS BIGINT)") { (h, j) =>
+    val horner = (0 until k).foldLeft("CAST(0 AS BIGINT)") { (h, j) =>
       s"(($h * $B + codes[i + $j]) % $P)"
     }
     s"""wn AS (SELECT doc_id,
-       |    rpad($normSql, CAST(greatest(length($normSql), 8) AS INTEGER), ' ') AS norm
+       |    rpad($normSql, CAST(greatest(length($normSql), $k) AS INTEGER), ' ') AS norm
        |  FROM documents),
        |wc AS (SELECT doc_id,
        |  list_transform(range(1, length(norm) + 1),
        |    i -> CAST(ascii(substr(norm, i, 1)) AS BIGINT)) AS codes
        |  FROM wn),
        |wg AS (SELECT doc_id,
-       |  list_transform(range(1, len(codes) - 7 + 1),
+       |  list_transform(range(1, len(codes) - ${k - 1} + 1),
        |    i -> $horner) AS grams
        |  FROM wc),
        |m AS (SELECT doc_id,
        |  list_sort(list_distinct(
-       |    list_transform(range(1, greatest(len(grams) - 15, 1) + 1),
-       |      i -> list_min(list_slice(grams, i, i + 15))))) AS wf
+       |    list_transform(range(1, greatest(len(grams) - ${w - 1}, 1) + 1),
+       |      i -> list_min(list_slice(grams, i, i + ${w - 1}))))) AS wf
        |  FROM wg)""".stripMargin
   }
 
@@ -137,7 +139,7 @@ object QueriesText {
     */
   private def minhashBandsCteGen(materializedSig: Boolean): String = {
     val k = Dedup.MinhashK
-    val bands = 4
+    val bands = Dedup.MinhashBands
     val r = k / bands
     val h = baseHashSql("shingle")
     val minCols = (0 until k).map { i =>
@@ -420,7 +422,7 @@ object QueriesText {
        |        source IN ('src0', 'src1', 'src2', 'src3') AS is_t
        |      FROM documents),
        |fe AS (SELECT doc_id, is_t,
-       |         ${baseHashSql("'dsir' || g")} % 4096 AS fb
+       |         ${baseHashSql(s"'${Dsir.Salt}' || g")} % 4096 AS fb
        |       FROM (SELECT doc_id, is_t,
        |               unnest(list_concat(words,
        |                 list_transform(range(1, len(words)),
@@ -1809,7 +1811,7 @@ object QueriesText {
     QDef("t_train_classifier",
       (s, dir) => Train.pocketPerceptron(Q.table(s, dir, "documents"),
         "doc_id", "text"),
-      Some(Train.pocketPerceptronOracleSql(rawTokensSql = rawTokensSql))),
+      Some(Train.pocketPerceptronOracleSql(rawTokensSql))),
 
     // longest repeated substring — the suffix-array statistic via
     // doubling + binary search on "any duplicated L-window" (bounded

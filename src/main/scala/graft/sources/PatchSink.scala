@@ -20,21 +20,20 @@ import scala.jdk.CollectionConverters._
 object PatchSink {
 
   /** (id, flag) pairs as OData PATCH bodies; flags leave as L20 wire codes. */
-  def patchBodies(flagged: DataFrame, idCol: String = Obs.IotId,
-                  flagCol: String = Obs.QcFlag): DataFrame =
-    flagged.select(col(idCol).as("id"),
-      Flags.rankToWireCol(col(flagCol)).as("resultQuality"))
+  def patchBodies(flagged: DataFrame): DataFrame =
+    flagged.select(col(Obs.IotId).as("id"),
+      Flags.rankToWireCol(col(Obs.QcFlag)).as("resultQuality"))
 
   /** S5 — file sink (mirrors `write_patch_to_file`). */
   def writePatchFile(flagged: DataFrame, outDir: String): Unit =
     patchBodies(flagged).write.mode("overwrite").json(outDir)
 
-  /** A partition's (id, wire code) pairs in groups of `batchSize`. */
-  private def batches(rows: Iterator[Row], batchSize: Int): Iterator[Seq[(Long, Int)]] =
-    rows.map(r => (r.getLong(0), r.getInt(1))).grouped(batchSize)
+  /** A partition's (id, wire code) pairs in groups of 100. */
+  private def batches(rows: Iterator[Row]): Iterator[Seq[(Long, Int)]] =
+    rows.map(r => (r.getLong(0), r.getInt(1))).grouped(100)
 
-  /** One OData JSON-batch body (FROST `$batch` shape): `batchSize` PATCH
-    * sub-requests keyed Observations(id).
+  /** One OData JSON-batch body (FROST `$batch` shape): one PATCH
+    * sub-request per pair, keyed Observations(id).
     */
   def batchBody(batch: Seq[(Long, Int)]): String =
     batch.zipWithIndex.map { case ((id, wire), i) =>
@@ -60,17 +59,17 @@ object PatchSink {
       }.toSeq
 
   /** S4 — live HTTP write-back (reference `patch_qc_flags`
-    * `src/main.py:854-859`): per partition, flag upserts are grouped into
-    * `$batch` POSTs — idempotent last-writer-wins keyed on observation id,
+    * `src/main.py:854-859`): per partition, flag upserts are grouped 100
+    * to a `$batch` POST — idempotent last-writer-wins keyed on observation id,
     * which is what makes the overlapping-window backfill (§3.3) safe to
     * re-run. Runs on executors: up to 8 of a partition's POSTs are in
     * flight at once ([[StaHttp.inFlight]]), holding at most 8 batches,
     * with retry/backoff via [[StaHttp]]. A sub-request the service
     * rejects fails the task with [[StaHttp.HttpFailure]].
     */
-  def httpBatchSink(flagged: DataFrame, batchUrl: String, batchSize: Int = 100): Unit =
+  def httpBatchSink(flagged: DataFrame, batchUrl: String): Unit =
     patchBodies(flagged).foreachPartition { (rows: Iterator[Row]) =>
-      StaHttp.inFlight(batches(rows, batchSize).map { batch => () =>
+      StaHttp.inFlight(batches(rows).map { batch => () =>
         val rejected = rejectedIds(StaHttp.postJson(batchUrl, batchBody(batch)), batch)
         if (rejected.nonEmpty)
           throw new StaHttp.HttpFailure(

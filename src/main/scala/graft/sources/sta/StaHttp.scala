@@ -33,24 +33,26 @@ object StaHttp {
     .connectTimeout(Duration.ofSeconds(10))
     .build()
 
+  // retries after the first attempt, and the linear backoff step
+  private val Retries = 3
+  private val BackoffMs = 100L
+
   /** GET with retry: 5xx/429 and connection errors retry with linear
     * backoff; other non-2xx codes fail fast (a 404 won't heal).
     */
-  def get(url: String, retries: Int = 3, backoffMs: Long = 100L): String =
-    new String(getBytes(url, retries, backoffMs), "UTF-8")
+  def get(url: String): String = new String(getBytes(url), "UTF-8")
 
   /** [[get]]'s retry loop returning the raw body (binary downloads such
     * as [[graft.sources.ResourceCache]]'s); `timeoutMs` bounds each
     * attempt, from sending the request to the last byte of the body.
     */
-  def getBytes(url: String, retries: Int = 3, backoffMs: Long = 100L,
+  def getBytes(url: String, retries: Int = Retries, backoffMs: Long = BackoffMs,
                timeoutMs: Int = 60000): Array[Byte] =
     withRetry(url, retries, backoffMs, timeoutMs)(_.GET())
 
   /** POST a JSON body (the `$batch` patch payload). */
-  def postJson(url: String, body: String, retries: Int = 3,
-               backoffMs: Long = 100L): String = {
-    val resp = withRetry(url, retries, backoffMs, timeoutMs = 60000) {
+  def postJson(url: String, body: String): String = {
+    val resp = withRetry(url, Retries, BackoffMs, timeoutMs = 60000) {
       _.header("Content-Type", "application/json")
         .POST(HttpRequest.BodyPublishers.ofString(body))
     }

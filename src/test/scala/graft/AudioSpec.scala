@@ -127,13 +127,16 @@ class AudioSpec extends SparkSpec {
     assert(pairs.contains((10L, 11L)), s"planted dup missing: $pairs")
     assert(!pairs.exists(p => p._1 == 12L || p._2 == 12L))
     // the three silent streams share identical all-zero fingerprints:
-    // with the cap at >= their bucket size they pair; capped at 2 the
-    // silence bucket (3 streams) is dropped entirely
-    val capped = Audio.fingerprintPairs(fps, minMatches = 3L, maxBucket = 2L)
+    // a bucket within the 64-stream cap pairs them
+    assert(pairs.contains((20L, 21L)) && pairs.contains((21L, 22L)))
+    // 65 silent streams overflow the cap: the silence bucket is dropped
+    // entirely and only the planted duplicate remains
+    val crowded = media.filter($"media_id" < 20L).union(
+      (100L until 165L).map(i => (i, Audio.buildWav(8000, Array.fill[Short](128)(0))))
+        .toDF("media_id", "payload"))
+    val capped = Audio.fingerprintPairs(
+        Audio.subFingerprints(crowded, segSamples = 4, segs = 8), minMatches = 3L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((10L, 11L)), s"cap failed: $capped")
-    val uncapped = Audio.fingerprintPairs(fps, 3L, maxBucket = 64L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(uncapped.contains((20L, 21L)) && uncapped.contains((21L, 22L)))
   }
 }

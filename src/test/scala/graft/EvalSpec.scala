@@ -7,8 +7,8 @@ import org.scalatest.matchers.should.Matchers
 class EvalSpec extends SparkSpec with Matchers {
   import spark.implicits._
 
-  private def auc(rows: Seq[(Long, Boolean)], buckets: Int = 4) = {
-    val r = Eval.rocAuc(rows.toDF("s", "y"), col("s"), col("y"), buckets)
+  private def auc(rows: Seq[(Long, Boolean)]) = {
+    val r = Eval.rocAuc(rows.toDF("s", "y"), col("s"), col("y"))
       .collect()(0)
     (r.getLong(0), r.getLong(1), r.getLong(2),
       if (r.isNullAt(3)) -1L else r.getLong(3))
@@ -38,12 +38,15 @@ class EvalSpec extends SparkSpec with Matchers {
     auc(Seq((1L, true), (2L, true))) shouldBe ((2L, 0L, 0L, -1L))
   }
 
-  test("bucketing is invisible: 1, 4 and 64 buckets agree on skewed scores") {
+  test("bucketing is invisible: matches the pairwise count on skewed scores") {
     val rows = (1 to 500).map(i =>
       ((i * i).toLong % 997, i % 3 == 0)) // clustered score distribution
-    val expect = auc(rows, 1)
-    auc(rows, 4) shouldBe expect
-    auc(rows, 64) shouldBe expect
+    val pos = rows.filter(_._2).map(_._1)
+    val neg = rows.filterNot(_._2).map(_._1)
+    val u2 = (for (p <- pos; n <- neg) yield if (p > n) 2L else if (p == n) 1L else 0L).sum
+    val nPos = pos.size.toLong
+    val nNeg = neg.size.toLong
+    auc(rows) shouldBe ((nPos, nNeg, u2, u2 * 500000L / (nPos * nNeg)))
   }
 
   test("calibration bins: hand-computed widths, means, positive rates") {

@@ -12,7 +12,7 @@ class MediaContainersSpec extends AnyFunSuite with Matchers {
 
   test("MP4 round-trip: dims, duration, frames, keyframes, byte offsets") {
     val b = MC.buildMp4(width = 320, height = 176, nFrames = 10,
-      ticksPerFrame = 40, keyEvery = 4, frameSize = 32)
+      ticksPerFrame = 40, keyEvery = 4)
     MC.isMp4(b) shouldBe true
     val ci = MC.parse(b)
     ci.format shouldBe "mp4"
@@ -23,16 +23,16 @@ class MediaContainersSpec extends AnyFunSuite with Matchers {
     ci.keyframes shouldBe Seq(0, 4, 8)
     // one sample per chunk => keyframe byte offsets are chunk offsets;
     // the builder packs frame i's bytes as (j % 251) starting at
-    // i*frameSize of the frame block — check the bytes at each offset
+    // i*16 of the frame block — check the bytes at each offset
     ci.keyframeOffsets should have size 3
     ci.keyframes.zip(ci.keyframeOffsets).foreach { case (k, off) =>
-      b(off.toInt) shouldBe ((k * 32) % 251).toByte
+      b(off.toInt) shouldBe ((k * 16) % 251).toByte
     }
   }
 
   test("WebM round-trip: dims, duration, frames, keyframes point at blocks") {
     val b = MC.buildWebm(width = 640, height = 360, nFrames = 12,
-      msPerFrame = 33, keyEvery = 5, frameSize = 24)
+      msPerFrame = 33, keyEvery = 5)
     MC.isWebm(b) shouldBe true
     val ci = MC.parse(b)
     ci.format shouldBe "webm"
@@ -95,7 +95,7 @@ class MediaContainersSpec extends AnyFunSuite with Matchers {
       mp4.slice(off.toInt, off.toInt + len).toSeq shouldBe frames(k).toSeq
     }
     // fixed-size legacy form still yields exact spans
-    val fixed = MC.buildMp4(100, 80, 5, 25, 2, frameSize = 16)
+    val fixed = MC.buildMp4(100, 80, 5, 25, 2)
     MC.mp4KeyframeSpans(fixed).map(s => (s._1, s._3)) shouldBe
       Seq((0, 16), (2, 16), (4, 16))
   }

@@ -26,14 +26,11 @@ class QcCheckSpec extends SparkSpec {
     assert(got(0).getByte(0) == Flags.Bad && got(1).isNullAt(0))
   }
 
-  test("merge is worst-wins; overwrite replaces (src/main.py:573-575)") {
+  test("merge is worst-wins (src/main.py:573-575)") {
     val df = Seq((Flags.ProbablyBad, true), (Flags.Bad, false)).toDF("flag", "b")
     val worst = QcCheck("t", $"b", Flags.Good, onFalse = Some(Flags.Good))
-    val over = worst.copy(overwrite = true)
-    val m = df.select(worst.mergedInto($"flag".cast("tinyint")).as("w"),
-      over.mergedInto($"flag".cast("tinyint")).as("o")).collect()
-    assert(m.map(_.getByte(0)).toSeq == Seq(Flags.ProbablyBad, Flags.Bad)) // worst wins
-    assert(m.map(_.getByte(1)).toSeq == Seq(Flags.Good, Flags.Good)) // overwritten
+    val m = df.select(worst.mergedInto($"flag".cast("tinyint")).as("w")).collect()
+    assert(m.map(_.getByte(0)).toSeq == Seq(Flags.ProbablyBad, Flags.Bad))
   }
 
   test("out-of-range: (2.0, 9.2) over [0, 2.345, 4.69, 7.035, 9.38] => [T,F,F,F,T] (658-668)") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Flags
-import graft.ops.Geo
+import graft.ops.{Geo, QcCheck}
 import org.apache.spark.sql.functions._
 
 /** The reference's synthetic `df_testing` region matrix
@@ -22,7 +22,9 @@ class RegionMatrixSpec extends SparkSpec {
     val df = (for (ds <- 0L to 1L; (r, i) <- regions.zipWithIndex)
       yield (ds, i.toLong, r)).toDF("datastream_id", "idx", "region")
     val checks = Seq(
-      Geo.nullRegionCheck($"region", onTrue = Flags.ProbablyBad), // test's standalone config
+      // the reference test's standalone config flags a null region
+      // PROBABLY_BAD, not nullRegionCheck's PROBABLY_GOOD
+      QcCheck("null_region", $"region".isNull, Flags.ProbablyBad),
       Geo.mainlandCheck($"region"))
     val flagged = checks.foldLeft(df.withColumn("flag", lit(Flags.NoQc).cast("tinyint"))) {
       (d, c) => d.withColumn("flag", c.mergedInto($"flag"))

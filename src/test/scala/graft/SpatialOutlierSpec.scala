@@ -54,25 +54,4 @@ class SpatialOutlierSpec extends SparkSpec {
   test("small perturbation below threshold does not flag") {
     assert(outliers(Map(30 -> (0.001, 0.0))).isEmpty) // ~111 m < 2 km
   }
-
-  test("percentile_approx scale path (exact=false) flags the same points " +
-    "on the whole perturbation matrix") {
-    // the declared 100 TB path: percentile_approx's rank error at
-    // accuracy 10000 is far below the km-scale separation of the
-    // fixtures, so the flag SETS must be identical even though the
-    // median values may differ in low bits
-    val cases: Seq[Map[Int, (Double, Double)]] = Seq(
-      Map.empty,                                   // clean
-      Map(30 -> (0.1, 0.0)),                       // single spike
-      Map(30 -> (0.1, 0.0), 31 -> (0.1, 0.0)),     // double spike
-      Map(10 -> (-51.001, -3.001)),                // zeroed coords
-      Map(30 -> (0.001, 0.0)))                     // below threshold
-    cases.foreach { p =>
-      val approx = SpatialOutlier(track(p), $"lat", $"lon", $"t_us",
-        windowSec = 300L, maxDxDt = 2000.0 / 300.0, exact = false)
-        .filter($"is_spatial_outlier").select($"id")
-        .collect().map(_.getLong(0)).toSeq.sorted
-      assert(approx == outliers(p), s"approx != exact for perturbation $p")
-    }
-  }
 }

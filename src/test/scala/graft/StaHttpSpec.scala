@@ -230,13 +230,14 @@ class StaHttpSpec extends SparkSpec {
   test("$batch PATCH write-back batches per partition with wire codes") {
     withServer { (base, patched, _, _) =>
       import spark.implicits._
-      val flagged = Seq((11L, graft.core.Flags.Bad), (12L, graft.core.Flags.Good),
-        (13L, graft.core.Flags.Bad)).toDF(Obs.IotId, Obs.QcFlag)
+      val flagged = (1L to 150L).map(id =>
+          (id, if (id % 2 == 1) graft.core.Flags.Bad else graft.core.Flags.Good))
+        .toDF(Obs.IotId, Obs.QcFlag)
         .withColumn(Obs.QcFlag, col(Obs.QcFlag).cast("tinyint"))
         .repartition(1)
-      PatchSink.httpBatchSink(flagged, base.replace("/sta", "/batch"), batchSize = 2)
+      PatchSink.httpBatchSink(flagged, base.replace("/sta", "/batch"))
       val bodies = patched.toArray.map(_.toString)
-      assert(bodies.length == 2, s"expected 2 batches, got ${bodies.length}") // 3 rows, batchSize 2
+      assert(bodies.length == 2, s"expected 2 batches, got ${bodies.length}") // 150 rows, 100 a batch
       val all = bodies.mkString
       assert(all.contains("Observations(11)") && all.contains("Observations(13)"))
       assert(all.contains("\"method\":\"patch\""))
@@ -277,7 +278,7 @@ class StaHttpSpec extends SparkSpec {
       // ---- live sink: the same flagged frame PATCHes back via $batch
       PatchSink.httpBatchSink(
         flaggedLive.withColumn(Obs.QcFlag, col("flag")).repartition(1),
-        base.replace("/sta", "/batch"), batchSize = 2)
+        base.replace("/sta", "/batch"))
       val patchOps = "\"url\":\"Observations\\((\\d+)\\)\",\"body\":\\{\"resultQuality\":(\\d+)".r
         .findAllMatchIn(patched.toArray.mkString)
         .map(m => m.group(1).toLong -> m.group(2).toInt).toMap
@@ -363,16 +364,15 @@ class StaHttpSpec extends SparkSpec {
     val d = 400L
     withSlowServer(d) { (base, t) =>
       import spark.implicits._
-      val flagged = (1L to 16L).map(id => (id, graft.core.Flags.Good)).toDF(Obs.IotId, Obs.QcFlag)
+      val flagged = (1L to 800L).map(id => (id, graft.core.Flags.Good)).toDF(Obs.IotId, Obs.QcFlag)
         .withColumn(Obs.QcFlag, col(Obs.QcFlag).cast("tinyint"))
         .repartition(1)
-      val (_, ms) = timed(PatchSink.httpBatchSink(flagged, base.replace("/sta", "/batch"),
-        batchSize = 2))
+      val (_, ms) = timed(PatchSink.httpBatchSink(flagged, base.replace("/sta", "/batch")))
       assert(t.batches.size == 8)
       assert(ms < 4 * d, s"8 batches took $ms ms, d = $d ms") // one after another: 8·d
       val sent = "Observations\\((\\d+)\\)".r.findAllMatchIn(t.batches.toArray.mkString)
         .map(_.group(1).toLong).toSeq
-      assert(sent.sorted == (1L to 16L))
+      assert(sent.sorted == (1L to 800L))
       info(s"at most ${t.peak.get} POSTs at once, ${t.connections.size} client connections")
     }
   }
@@ -388,11 +388,12 @@ class StaHttpSpec extends SparkSpec {
     }
     withSlowServer(0L, reply) { (base, t) =>
       import spark.implicits._
-      val flagged = Seq(11L, 12L, 13L).map(id => (id, graft.core.Flags.Bad)).toDF(Obs.IotId, Obs.QcFlag)
+      // 150 rows: two batches of at most 100, id 12 in the first
+      val flagged = (11L to 160L).map(id => (id, graft.core.Flags.Bad)).toDF(Obs.IotId, Obs.QcFlag)
         .withColumn(Obs.QcFlag, col(Obs.QcFlag).cast("tinyint"))
         .repartition(1)
       val e = intercept[org.apache.spark.SparkException](
-        PatchSink.httpBatchSink(flagged, base.replace("/sta", "/batch"), batchSize = 2))
+        PatchSink.httpBatchSink(flagged, base.replace("/sta", "/batch")))
       val failure = causes(e).collectFirst { case f: StaHttp.HttpFailure => f }
       assert(failure.exists(_.getMessage.endsWith("observations 12")), e)
       assert(t.batches.size == 2)

@@ -170,7 +170,7 @@ class StreamingSpec extends SparkSpec {
       var sunk = Seq.empty[(Long, Byte)]
       def run(): Unit = {
         val q = IncrementalQc.stream(spark, dir, cfg) { (batch, _) =>
-          PatchSink.httpBatchSink(batch, url, batchSize = 5)
+          PatchSink.httpBatchSink(batch, url)
           sunk = flagsOf(batch, Obs.QcFlag)
         }.start()
         q.awaitTermination(60000)

@@ -126,11 +126,10 @@ class WindowKernelsSpec extends SparkSpec with Matchers {
       // stream 3: no known samples at all
       (3L, 0L, 11L, None)
     )
-    val df = rows.toDF("ds", "t", "id", "v")
+    val df = rows.toDF(Obs.DatastreamId, "t", Obs.IotId, "v")
       .withColumn("v", $"v".cast("double"))
-    val got = WindowKernels.interpSlinear(df, "fill", $"v", $"t",
-        partCols = Seq("ds"), tieBreak = $"id")
-      .select($"id", $"fill").collect()
+    val got = WindowKernels.interpSlinear(df, "fill", $"v", $"t")
+      .select(col(Obs.IotId), $"fill").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
       .toMap
     got(1L) shouldBe Some(0.0)    // leading extrapolation along (0,10)-(2,30)

@@ -28,8 +28,10 @@
 #      GATE_SCALED_JSON (skipped otherwise: the decade sweep is hours,
 #      not a per-commit cost)
 #   8. spec-only defs — tools/spec_only_defs.py: its --self-test passes,
-#      then the scan reports no src/main definition that no entry point
-#      reaches (only specs, comments or nothing refer to it) and finds
+#      then the scan reports no src/main definition (object, class or
+#      trait member, or type) that no entry point reaches (only specs,
+#      comments or nothing refer to it), no default-valued parameter of
+#      a reached public def that no reached call sets, and finds
 #      tools/spec_only_defs.allow well-formed
 #
 # Documented in BASELINE.md §"Round gate".
@@ -47,8 +49,10 @@ LIFECYCLE_FLAG_HIST='{"1":4330,"4":5670}'
 # digest: 473, less StaSourceSpec's `$select` compilation test, plus
 # OracleDigestSpec's two tests (7 more cancel without their fixtures);
 # plus StaHttpSpec's five specs of the overlapped HTTP round trips;
-# less the 31 tests deleted with the spec-only defs they exercised
-TESTS_MIN_SUCCEEDED=448
+# less the 31 tests deleted with the spec-only defs they exercised;
+# less the 3 tests of the knobs and the spec-only resize that went once
+# the scan covered parameters and class members
+TESTS_MIN_SUCCEEDED=445
 
 declare -a RESULTS=()
 fail=0
